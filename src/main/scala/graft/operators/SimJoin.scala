@@ -24,19 +24,23 @@ import graft.functions.Trigrams
  *                               100× size rule on Catalyst plan statistics, see [[SimJoin.autoBroadcastSide]])
  * @param strategy               "dedup" | "direct" | "kernel" | "auto" — physical plan choice, see
  *                               [[SimJoin]]; "kernel" is the broadcast dense-accumulator fast path
- *                               ([[SimKernel]], requires Long id columns). auto picks dedup when keys
- *                               repeat (distinct-key ratio ≤ 0.5), else the kernel when the right side
- *                               fits the 512 MB broadcast guard and ids are Long, else direct
+ *                               ([[SimKernel]], requires Long id columns). auto takes the kernel
+ *                               whenever both ids are Long and the right side's plan-size estimate
+ *                               fits the 512 MB broadcast guard (repeated keys or not — its index
+ *                               holds one entry per trigram set); only otherwise does it count
+ *                               keys, picking dedup when they repeat (distinct-key ratio ≤ 0.5),
+ *                               else direct
  * @param indexBy                for the positional APIs ([[SimJoin.pairs]]/[[SimJoin.simJoin]]):
  *                               a UNIQUE column per side whose ascending order defines the dense
  *                               0-based row index. Deterministic and avoids the RDD zipWithIndex
  *                               pass (ids computed on a slim projection + joined back). When None,
  *                               falls back to physical-order zipWithIndex (localCheckpoint'd so
  *                               both plan subtrees see one consistent id assignment).
- * @param maxTokenFrequency      if > 0, drop tokens whose RIGHT-side posting list exceeds this
- *                               cap before the candidate join (skew guard; the reference's own
- *                               tf-idf TODO, /root/reference/src/cossim.rs:45-48). RESULT-CHANGING:
- *                               off (0) by default.
+ * @param maxTokenFrequency      if > 0, drop tokens that occur in more than this many RIGHT-side
+ *                               rows (rows with a null id or no trigram are not counted) before
+ *                               the candidate join — every strategy counts rows, not distinct
+ *                               keys (skew guard; the reference's own tf-idf TODO in its
+ *                               `src/cossim.rs`). RESULT-CHANGING: off (0) by default.
  * @param threads                reference API parity (`threads`, /root/reference/python/
  *                               polars_sim/dataframe/join.py:22). Spark manages parallelism via
  *                               partitioning, not a thread pool, so this maps to a repartition of
@@ -98,7 +102,19 @@ case class SimJoinOptions(
  * (sim desc, right-id asc) — a strict refinement of the reference's unspecified
  * tie order (/root/reference/src/cossim.rs:124).
  *
- * Physical strategies (both shuffle-based, no driver-side loops):
+ * Physical strategies, in the order strategy="auto" considers them:
+ *
+ *  - "kernel": when both ids are Long and the right side's plan-size estimate
+ *    fits [[MaxBroadcastBytes]], tokenize the right side once (grouped by
+ *    trigram set within each partition, so the driver collects per distinct
+ *    set, not per row), broadcast a primitive inverted index with one entry
+ *    per distinct trigram set, and scan the left side's partitions with a
+ *    dense accumulator and a bounded per-row top-n ([[SimKernel]], planned as
+ *    [[graft.plans.SimKernelExec]]). No shuffle; the eligibility check reads
+ *    plan statistics and runs no job.
+ *
+ * When the kernel cannot run, auto counts keys and takes "dedup" if they
+ * repeat, else "direct". Both are shuffle-based relational plans:
  *
  *  - "direct": tokenize → explode → token equi-join (the sparse-candidate pruning
  *    of the reference's SpGEMM kernel, /root/reference/src/cossim.rs:88-138, for
@@ -106,7 +122,7 @@ case class SimJoinOptions(
  *    accumulator) → per-row top-n window (WindowGroupLimit pushes the limit
  *    below the shuffle on Spark ≥3.5, ≙ its quickselect).
  *
- *  - "dedup" (default): similarity depends only on the KEY STRING, so score
+ *  - "dedup": similarity depends only on the KEY STRING, so score
  *    DISTINCT keys, not rows. distinct(leftKey) × distinct(rightKey) run the
  *    direct plan; per right key only its topN smallest right ids can ever be in
  *    any top-n result, so candidates per left key ≤ matchedKeys × topN; the final
@@ -140,12 +156,12 @@ object SimJoin {
       opts: SimJoinOptions = SimJoinOptions(),
       outLeft: String = "row", outRight: String = "col", outSim: String = "sim"): DataFrame = {
     val left = if (opts.threads > 0) left0.repartition(opts.threads) else left0
+    // the kernel check reads plan statistics only; the key-count jobs of
+    // autoStrategy run only when the kernel cannot take the join
     val strategy =
-      if (opts.strategy == "auto") {
-        if (autoStrategy(left, leftKey, right, rightKey) == "dedup") "dedup"
-        else if (kernelEligible(left, leftId, right, rightId)) "kernel"
-        else "direct"
-      } else opts.strategy
+      if (opts.strategy != "auto") opts.strategy
+      else if (kernelEligible(left, leftId, right, rightId)) "kernel"
+      else autoStrategy(left, leftKey, right, rightKey)
     strategy match {
       case "direct" => directPairs(left, leftId, leftKey, right, rightId, rightKey, opts, outLeft, outRight, outSim)
       case "dedup"  => dedupPairs(left, leftId, leftKey, right, rightId, rightKey, opts, outLeft, outRight, outSim)
@@ -196,12 +212,20 @@ object SimJoin {
   private[graft] val MaxBroadcastBytes: BigInt = BigInt(512L << 20)
 
   /**
-   * Kernel dispatch guard for strategy="auto": the [[SimKernel]] broadcast path
-   * is ~10× the relational plan when the whole right side fits in executor
-   * memory (BASELINE.md), so take it whenever the right side's Catalyst size
-   * estimate is under the 512 MB broadcast guard AND both id columns are
-   * LongType (the kernel's output id type — dispatching on other id types
-   * would silently change the result schema).
+   * Kernel dispatch guard for strategy="auto", checked before any other
+   * strategy: take the [[SimKernel]] broadcast path whenever the right side's
+   * Catalyst size estimate is under the 512 MB broadcast guard AND both id
+   * columns are LongType (the kernel's output id type — dispatching on other
+   * id types would silently change the result schema). Reads plan statistics
+   * only; runs no Spark job.
+   *
+   * Repeated keys do not send the join to "dedup" first, on either side. A
+   * repeated RIGHT key is one index entry, and the driver collects at most
+   * topN of its ids per right partition. A repeated LEFT key is scored once
+   * per row, where dedup scores it once; measured on the perfbench
+   * `names_dup` inputs with the sides swapped (100k left rows over 4,096
+   * distinct names, 5k right rows; ten alternating pairs on 4 vCPUs), the
+   * kernel still took a median 0.63 s per join against dedup's 5.0 s.
    */
   private[graft] def kernelEligible(
       left: DataFrame, leftId: String, right: DataFrame, rightId: String): Boolean = {
@@ -211,18 +235,19 @@ object SimJoin {
       isLong(left, leftId) && isLong(right, rightId)
   }
 
-  /** Tokenize side: (id, nTokens, token) exploded relation. Rows with a null
-    * id or an empty token set are pruned — the null-id drop is the UNIFORM id
-    * contract across all three physical strategies (the kernel's primitive
-    * arrays cannot carry null ids, so the relational plans must agree for
-    * strategy="auto" to be a pure physical choice). */
+  /** Tokenize side: (id, nTokens, token) exploded relation, plus the `carry`
+    * columns of `df`. Rows with a null id or an empty token set are pruned —
+    * the null-id drop is the UNIFORM id contract across all three physical
+    * strategies (the kernel's primitive arrays cannot carry null ids, so the
+    * relational plans must agree for strategy="auto" to be a pure physical
+    * choice). */
   private def tokenRelation(df: DataFrame, id: String, key: String,
-      idOut: String, nOut: String): DataFrame =
-    df.select(col(id).as(idOut), Trigrams.trigramTokens(col(key)).as("__toks"))
+      idOut: String, nOut: String, carry: Seq[String] = Nil): DataFrame =
+    df.select((col(id).as(idOut) +: Trigrams.trigramTokens(col(key)).as("__toks") +: carry.map(col)): _*)
       .filter(col(idOut).isNotNull)
       .withColumn(nOut, size(col("__toks")))
       .filter(col(nOut) > 0)
-      .select(col(idOut), col(nOut), explode(col("__toks")).as("__tok"))
+      .select((col(idOut) +: col(nOut) +: explode(col("__toks")).as("__tok") +: carry.map(col)): _*)
 
   /**
    * PERSISTED trigram postings index — the encode-once layout for the
@@ -271,20 +296,24 @@ object SimJoin {
       .select(col("__row").as(outLeft), col("__col").as(outRight), col("__sim").as(outSim))
   }
 
-  /** Unranked scored candidates: all (left id, right id, sim) sharing ≥1 trigram. */
+  /** Unranked scored candidates: all (left id, right id, sim) sharing ≥1 trigram.
+    * `rightRows`, when set, names a column of `right` holding how many right
+    * rows each of its rows stands for (dedup scores distinct keys), so that
+    * the `maxTokenFrequency` cap still counts rows. */
   private def scoredPairs(
       left: DataFrame, leftId: String, leftKey: String,
       right: DataFrame, rightId: String, rightKey: String,
-      opts: SimJoinOptions): DataFrame = {
+      opts: SimJoinOptions, rightRows: Option[String] = None): DataFrame = {
     val lt0 = tokenRelation(left, leftId, leftKey, "__row", "__nl")
-    // Skew guard (off by default): drop tokens with oversized RIGHT posting lists
-    // before the candidate join — a stop-trigram's postings join is quadratic in
-    // its row counts. Result-changing, mirrors the reference's tf-idf TODO.
-    val rt1 = tokenRelation(right, rightId, rightKey, "__col", "__nr")
+    // Skew guard (off by default): drop tokens in too many RIGHT rows before
+    // the candidate join — a stop-trigram's postings join is quadratic in its
+    // row counts. Result-changing, mirrors the reference's tf-idf TODO.
+    val rt1 = tokenRelation(right, rightId, rightKey, "__col", "__nr", rightRows.toSeq)
     val rt0 =
       if (opts.maxTokenFrequency <= 0) rt1
       else {
-        val freq = rt1.groupBy(col("__tok")).agg(count(lit(1)).as("__tf"))
+        val rows = rightRows.fold(count(lit(1)))(c => sum(col(c)))
+        val freq = rt1.groupBy(col("__tok")).agg(rows.as("__tf"))
           .filter(col("__tf") <= opts.maxTokenFrequency).select(col("__tok"))
         rt1.join(broadcast(freq), "__tok")
       }
@@ -327,7 +356,9 @@ object SimJoin {
     val rKeys = right.select(col(rightId).as("__col"), col(rightKey).as("__rkey"))
       .filter(col("__col").isNotNull)
     val distinctL = lKeys.select(col("__lkey")).filter(col("__lkey").isNotNull).distinct()
-    val distinctR = rKeys.select(col("__rkey")).filter(col("__rkey").isNotNull).distinct()
+    // per distinct right key, its row count: the maxTokenFrequency cap counts rows
+    val distinctR = rKeys.filter(col("__rkey").isNotNull)
+      .groupBy(col("__rkey")).agg(count(lit(1)).as("__rrows"))
     // Score DISTINCT keys with the direct plan (candidate space: distinct × distinct).
     // Safe cap: a right key with ≥ topN strictly-better-sim rival keys (each rival
     // has ≥1 row, every one of which outranks every row of this key) can never
@@ -336,7 +367,7 @@ object SimJoin {
     val wk = Window.partitionBy(col("__row")).orderBy(col("__sim").desc)
     val keyPairs = scoredPairs(
       distinctL, "__lkey", "__lkey", distinctR, "__rkey", "__rkey",
-      opts.copy(strategy = "direct"))
+      opts.copy(strategy = "direct"), rightRows = Some("__rrows"))
       .withColumn("__krank", rank().over(wk))
       .filter(col("__krank") <= opts.topN)
       .select(col("__row").as("__lkey"), col("__col").as("__rkey"), col("__sim"))
@@ -458,9 +489,10 @@ object SimJoin {
   }
 
   /**
-   * strategy="auto": score distinct keys ("dedup") only when keys actually repeat.
-   * One slim aggregation per side (key column only — parquet-pruned) pays for
-   * itself whenever duplication ≥ 2×; explicit strategy skips the stats pass.
+   * strategy="auto" when the kernel cannot take the join ([[kernelEligible]]
+   * is false): score distinct keys ("dedup") only when keys actually repeat.
+   * One slim aggregation job per side (key column only — parquet-pruned) pays
+   * for itself whenever duplication ≥ 2×; explicit strategy skips the stats pass.
    */
   private[graft] def autoStrategy(
       left: DataFrame, leftKey: String, right: DataFrame, rightKey: String): String = {

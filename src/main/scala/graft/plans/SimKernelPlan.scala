@@ -29,11 +29,12 @@ import graft.operators.{SimJoinOptions, SimKernelCore}
  *    or per-session via `spark.experimental.extraStrategies` (what
  *    [[SimKernelPlan.keyedPairs]] does, idempotently).
  *  - [[SimKernelExec]]: the physical node — tokenizes the right child
- *    DISTRIBUTED and collects only compact token arrays, broadcasts the
+ *    DISTRIBUTED and collects only compact token arrays, grouped by token
+ *    set per partition (row count plus ≤ topN smallest ids), broadcasts the
  *    primitive inverted index, and streams the left child's partitions
- *    through the shared dense-accumulator core ([[SimKernelCore]] — the same
- *    code the DataFrame-API face runs, so the two faces are result-identical
- *    by construction; hash-gated against the same oracle).
+ *    through the dense-accumulator core ([[SimKernelCore]]). It is the one
+ *    kernel execution path: [[graft.operators.SimKernel.keyedPairs]] and
+ *    strategy="auto" both plan it.
  *
  * Output attributes are constructor parameters (not freshly minted per
  * instantiation), so optimizer copies of the node keep stable expression ids
@@ -89,17 +90,21 @@ case class SimKernelExec(
     copy(left = newLeft, right = newRight)
 
   override protected def doExecute(): RDD[InternalRow] = {
-    // distributed tokenize; only (id, token-ids) reach the driver
-    val tokenized: Array[(Long, Array[Int])] = right.execute().mapPartitions { it =>
-      it.flatMap { r =>
+    // distributed tokenize, grouped by token set per partition: the driver
+    // collects at most topN ids per distinct set and partition, so repeated
+    // right keys do not grow what it holds
+    val keep = topN
+    val groups: Array[SimKernelCore.Group] = right.execute().mapPartitions { it =>
+      val rows = it.flatMap { r =>
         if (r.isNullAt(0) || r.isNullAt(1)) None
         else {
           val toks = Trigrams.tokenIds(r.getUTF8String(1).toString)
-          if (toks.isEmpty) None else Some((r.getLong(0), toks))
+          if (toks.isEmpty) None else Some(SimKernelCore.Group(toks, 1L, Array(r.getLong(0))))
         }
       }
+      SimKernelCore.mergeGroups(rows, keep).iterator
     }.collect()
-    val bc = sparkContext.broadcast(SimKernelCore.buildIndex(tokenized, maxTokenFrequency))
+    val bc = sparkContext.broadcast(SimKernelCore.buildIndex(groups, maxTokenFrequency))
     val (n, norm) = (topN, l2)
     left.execute().mapPartitions { rows =>
       val proj = UnsafeProjection.create(Array[org.apache.spark.sql.types.DataType](
@@ -126,9 +131,9 @@ object SimKernelPlan {
       spark.experimental.extraStrategies = cur :+ SimKernelStrategy
   }
 
-  /** The planner-operator face of [[graft.operators.SimKernel.keyedPairs]]:
-    * same arguments, same results, but the kernel enters the query as a
-    * logical node the planner turns into [[SimKernelExec]]. */
+  /** The kernel similarity join ([[graft.operators.SimKernel.keyedPairs]]
+    * delegates here): the kernel enters the query as a logical node the
+    * planner turns into [[SimKernelExec]]. */
   def keyedPairs(
       left: DataFrame, leftId: String, leftKey: String,
       right: DataFrame, rightId: String, rightKey: String,

@@ -356,14 +356,38 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("kernel index groups right rows by token set, keeping row counts and topN smallest ids") {
+    import graft.operators.SimKernelCore
+    // 1,000 rows over 3 keys, ids descending so the trim must sort
+    val keys = Seq("name alpha", "name bravo", "name charlie")
+    val rows = (0 until 1000).map(i => ((999 - i).toLong, Trigrams.tokenIds(keys(i % 3))))
+    val perPartition = rows.grouped(250).flatMap { part =>
+      SimKernelCore.mergeGroups(part.iterator.map { case (id, t) =>
+        SimKernelCore.Group(t, 1L, Array(id)) }, 4)
+    }.toArray
+    assert(perPartition.length == 4 * 3 && perPartition.forall(_.ids.length == 4))
+    val merged = SimKernelCore.mergeGroups(perPartition.iterator, 4)
+    assert(merged.map(_.rows).sorted.toSeq == Seq(333L, 333L, 334L))
+    val want = rows.groupBy(_._2.toSeq).values.map(_.map(_._1).sorted.take(4).toSeq).toSet
+    assert(merged.map(_.ids.toSeq).toSet == want)
+    // the index has one entry per token set; the cap counts rows, not groups
+    val idx = SimKernelCore.buildIndex(perPartition, 0L)
+    assert(idx.nTokens.length == 3 && idx.ids.length == 4 * 4 * 3)
+    val nameTok = keys.map(k => Trigrams.tokenIds(k).toSet).reduce(_ & _).min
+    assert(idx.postings(nameTok).length == 3)
+    assert(SimKernelCore.buildIndex(perPartition, 999L).postings(nameTok) == null)
+    assert(SimKernelCore.buildIndex(perPartition, 1000L).postings(nameTok).length == 3)
+  }
+
   test("strategy=auto dispatches the kernel for a broadcastable unique-key right side") {
     val left = strDf((1 to 400).map(i => s"name $i"))
     val right = strDf((1 to 400).map(i => s"name $i"))
     val auto = SimJoin.keyedPairs(left, "id", "s", right, "id", "s",
       SimJoinOptions(topN = 2, strategy = "auto"))
-    // kernel output is an RDD scan — no joins/aggregates in the plan
-    val plan = auto.queryExecution.executedPlan.toString
-    assert(plan.contains("Scan ExistingRDD") && !plan.contains("SortMergeJoin")
+    // kernel output comes from the SimKernelExec node — no joins/aggregates in the plan
+    val exec = auto.queryExecution.executedPlan
+    val plan = exec.toString
+    assert(exec.exists(_.isInstanceOf[graft.plans.SimKernelExec]) && !plan.contains("SortMergeJoin")
       && !plan.contains("HashAggregate"), plan)
     // and results are identical to the explicit relational plan
     def collect(df: DataFrame) =
@@ -374,6 +398,53 @@ class PlanSpec extends AnyFunSuite {
     // non-Long ids must NOT dispatch (schema would change): int ids -> relational
     val intIds = left.withColumn("id", col("id").cast("int"))
     assert(!SimJoin.kernelEligible(intIds, "id", right, "id"))
+  }
+
+  test("strategy=auto takes the kernel for a repeated-key right side and runs no job to choose") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+    val left = strDf((1 to 300).map(i => s"name ${i % 10}"))
+    // 7 keys, each on ~43 rows: far past topN, and autoStrategy would say dedup
+    val right = strDf((1 to 300).map(i => s"name ${i % 7}"))
+    assert(SimJoin.autoStrategy(left, "s", right, "s") == "dedup")
+    val sc = spark.sparkContext
+    // listener events arrive asynchronously but in order: once a marker job's
+    // start is seen, every job started before it has been seen too
+    val groups = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.put(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    def jobsBeforeMarker(): Int = {
+      sc.setJobGroup("plan-spec-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      var n = 0
+      var g = groups.poll(60, TimeUnit.SECONDS)
+      while (g != "plan-spec-marker") {
+        assert(g != null, "marker job start never arrived")
+        n += 1
+        g = groups.poll(60, TimeUnit.SECONDS)
+      }
+      n
+    }
+    sc.addSparkListener(listener)
+    val auto = try {
+      jobsBeforeMarker()
+      val df = SimJoin.keyedPairs(left, "id", "s", right, "id", "s",
+        SimJoinOptions(topN = 3, strategy = "auto"))
+      assert(jobsBeforeMarker() == 0, "keyedPairs ran a Spark job before any action")
+      df
+    } finally sc.removeSparkListener(listener)
+    val exec = auto.queryExecution.executedPlan
+    val plan = exec.toString
+    assert(exec.exists(_.isInstanceOf[graft.plans.SimKernelExec]) && !plan.contains("SortMergeJoin")
+      && !plan.contains("HashAggregate"), plan)
+    def collect(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val direct = collect(SimJoin.keyedPairs(left, "id", "s", right, "id", "s",
+      SimJoinOptions(topN = 3, strategy = "direct")))
+    assert(collect(auto) == direct && direct.size == 300 * 3)
   }
 
   test("threads option repartitions the left side without changing results") {
@@ -440,6 +511,15 @@ class PlanSpec extends AnyFunSuite {
     val kernelGuarded = graft.operators.SimKernel.keyedPairs(l, "id", "s", r, "id", "s",
       SimJoinOptions(topN = 10, maxTokenFrequency = 1)).count()
     assert(kernelGuarded == 1L)
+    // the cap counts right ROWS in every strategy, also when dedup scores
+    // distinct keys: "aaa" is in 3 rows but only 2 distinct keys
+    val dupRight = strDf(Seq("aaab", "aaab", "aaax"))
+    def capped(strategy: String) = SimJoin.keyedPairs(l, "id", "s", dupRight, "id", "s",
+        SimJoinOptions(topN = 10, strategy = strategy, maxTokenFrequency = 2))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val cappedDirect = capped("direct")
+    assert(cappedDirect.map(_._2) == Set(0L, 1L)) // "aaax" shared only the dropped "aaa"
+    assert(capped("dedup") == cappedDirect && capped("kernel") == cappedDirect)
   }
 
   test("RewriteTrigramUdf swaps the ScalaUDF for the codegen'd expression, null-exact") {

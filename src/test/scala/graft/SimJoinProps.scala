@@ -14,7 +14,8 @@ import graft.operators.{SimJoin, SimJoinOptions, SimKernel}
  *   - l2 sim ∈ (0, 1]; count sim ≥ 1 (integer dot of sets sharing ≥ 1 token)
  *   - result size ≤ |L|·topN and ≤ topN per left row
  *   - partitioning invariance (values can't depend on physical layout)
- *   - physical-strategy parity: direct ≡ dedup ≡ kernel
+ *   - physical-strategy parity: direct ≡ dedup ≡ kernel ≡ auto, also on
+ *     repeated keys, shared trigram sets, topN up to 12 and the token cap
  *   - symmetry: with no top-n truncation, pairs(L,R) is the mirror of pairs(R,L)
  */
 object SimJoinProps extends Properties("SimJoin") {
@@ -39,6 +40,14 @@ object SimJoinProps extends Properties("SimJoin") {
     Gen.choose(1, 4).flatMap(n => Gen.listOfN(n, wordGen)).map(_.mkString(" "))
   private val namesGen: Gen[List[String]] =
     Gen.choose(2, 20).flatMap(n => Gen.listOfN(n, nameGen))
+  // few distinct keys, each often repeated past topN; "x" and "x x" are
+  // different strings with one trigram set
+  private val pooledGen: Gen[List[String]] = for {
+    bases <- Gen.listOfN(3, nameGen)
+    pool = bases ++ bases.map(b => s"$b $b")
+    n <- Gen.choose(2, 40)
+    names <- Gen.listOfN(n, Gen.oneOf(pool))
+  } yield names
   private val partsGen: Gen[Int] = Gen.choose(1, 5)
   private val topNGen: Gen[Int] = Gen.choose(1, 6)
 
@@ -83,6 +92,17 @@ object SimJoinProps extends Properties("SimJoin") {
         SimJoinOptions(topN = topN, normalization = norm)).collect()
         .map(x => (x.getLong(0), x.getLong(1), x.getDouble(2))).toSet
       direct == dedup && direct == kernel
+    }
+
+  property("strategies agree on repeated keys, shared trigram sets, topN to 12, token cap") =
+    forAll(Gen.oneOf(namesGen, pooledGen), pooledGen, Gen.choose(1, 12), Gen.oneOf("l2", "count"),
+        Gen.oneOf(0L, 1L, 2L, 3L, 6L)) { (ls, rs, topN, norm, maxTf) =>
+      val (l, r) = (df(ls, 2), df(rs, 3))
+      val opts = SimJoinOptions(topN = topN, normalization = norm, maxTokenFrequency = maxTf)
+      val direct = run(l, r, opts.copy(strategy = "direct"))
+      direct == run(l, r, opts.copy(strategy = "dedup")) &&
+        direct == run(l, r, opts.copy(strategy = "kernel")) &&
+        direct == run(l, r, opts) // auto
     }
 
   property("pairs(L,R) with no truncation is the mirror of pairs(R,L)") =
