@@ -111,7 +111,10 @@ case class SimJoinOptions(
  *    per distinct trigram set, and scan the left side's partitions with a
  *    dense accumulator and a bounded per-row top-n ([[SimKernel]], planned as
  *    [[graft.plans.SimKernelExec]]). No shuffle; the eligibility check reads
- *    plan statistics and runs no job.
+ *    plan statistics and runs no job. A later query over an unchanged right
+ *    side (same canonical plan, topN and maxTokenFrequency, same local rows
+ *    or same listed files, deterministic) reuses the latest broadcast index
+ *    and runs the left scan only; see [[graft.plans.SimKernelIndexMemo]].
  *
  * When the kernel cannot run, auto counts keys and takes "dedup" if they
  * repeat, else "direct". Both are shuffle-based relational plans:

@@ -30,6 +30,19 @@ import graft.plans.SimKernelPlan
  * The kernel runs as the custom physical operator
  * [[graft.plans.SimKernelExec]]; its index/scan core lives in
  * [[SimKernelCore]].
+ *
+ * The broadcast index is reused across queries whose right side has not
+ * changed ([[graft.plans.SimKernelIndexMemo]]): the key is the
+ * SparkContext, the right plan's canonical form, `topN`,
+ * `maxTokenFrequency`, and each file-source leaf's listed files (path,
+ * length, modification time), re-stat'ed when the query runs. A file that
+ * is gone or changed, a nondeterministic expression or subquery, or a leaf
+ * other than a file scan or local rows (RDD, DSv2, cached scans) bypasses
+ * reuse, and the index is built as before. Only the latest index is held,
+ * through a soft reference, so the memo pins at most the one index the
+ * previous query already needed. Reuse is snapshot semantics: a DataFrame
+ * still reads the files it listed, and an overwritten path must be read
+ * again to be seen, with or without reuse.
  */
 object SimKernel {
 
@@ -54,7 +67,7 @@ object SimKernel {
    * contract as keyedPairs with Long ids. Planned as
    * [[graft.plans.SimKernelExec]] ([[graft.plans.SimKernelPlan.keyedPairs]]),
    * so building the DataFrame runs no job; the right side is collected when
-   * the query runs.
+   * the query runs, unless the previous build's index can be reused.
    */
   def keyedPairs(
       left: DataFrame, leftId: String, leftKey: String,

@@ -400,13 +400,11 @@ class PlanSpec extends AnyFunSuite {
     assert(!SimJoin.kernelEligible(intIds, "id", right, "id"))
   }
 
-  test("strategy=auto takes the kernel for a repeated-key right side and runs no job to choose") {
+  /** Runs `body` with a job counter: the function it is given returns the
+    * number of Spark jobs started since its previous call. */
+  def withJobCounter[T](body: (() => Int) => T): T = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-    val left = strDf((1 to 300).map(i => s"name ${i % 10}"))
-    // 7 keys, each on ~43 rows: far past topN, and autoStrategy would say dedup
-    val right = strDf((1 to 300).map(i => s"name ${i % 7}"))
-    assert(SimJoin.autoStrategy(left, "s", right, "s") == "dedup")
     val sc = spark.sparkContext
     // listener events arrive asynchronously but in order: once a marker job's
     // start is seen, every job started before it has been seen too
@@ -429,13 +427,23 @@ class PlanSpec extends AnyFunSuite {
       n
     }
     sc.addSparkListener(listener)
-    val auto = try {
+    try {
       jobsBeforeMarker()
+      body(() => jobsBeforeMarker())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("strategy=auto takes the kernel for a repeated-key right side and runs no job to choose") {
+    val left = strDf((1 to 300).map(i => s"name ${i % 10}"))
+    // 7 keys, each on ~43 rows: far past topN, and autoStrategy would say dedup
+    val right = strDf((1 to 300).map(i => s"name ${i % 7}"))
+    assert(SimJoin.autoStrategy(left, "s", right, "s") == "dedup")
+    val auto = withJobCounter { jobs =>
       val df = SimJoin.keyedPairs(left, "id", "s", right, "id", "s",
         SimJoinOptions(topN = 3, strategy = "auto"))
-      assert(jobsBeforeMarker() == 0, "keyedPairs ran a Spark job before any action")
+      assert(jobs() == 0, "keyedPairs ran a Spark job before any action")
       df
-    } finally sc.removeSparkListener(listener)
+    }
     val exec = auto.queryExecution.executedPlan
     val plan = exec.toString
     assert(exec.exists(_.isInstanceOf[graft.plans.SimKernelExec]) && !plan.contains("SortMergeJoin")
@@ -445,6 +453,128 @@ class PlanSpec extends AnyFunSuite {
     val direct = collect(SimJoin.keyedPairs(left, "id", "s", right, "id", "s",
       SimJoinOptions(topN = 3, strategy = "direct")))
     assert(collect(auto) == direct && direct.size == 300 * 3)
+  }
+
+  def pairSet(df: DataFrame): Set[(Long, Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  /** The kernel join of `left` and `right`, its pairs, and how many
+    * executions of its `SimKernelExec` reused an earlier index. */
+  def kernelRun(left: DataFrame, right: DataFrame,
+      opts: SimJoinOptions = SimJoinOptions(topN = 3)): (Set[(Long, Long, Double)], Long) = {
+    val df = SimJoin.keyedPairs(left, "id", "s", right, "id", "s", opts.copy(strategy = "kernel"))
+    val pairs = pairSet(df)
+    val exec = df.queryExecution.executedPlan.collectFirst { case k: graft.plans.SimKernelExec => k }
+    (pairs, exec.get.metrics("indexReused").value)
+  }
+
+  def directPairs(left: DataFrame, right: DataFrame,
+      opts: SimJoinOptions = SimJoinOptions(topN = 3)): Set[(Long, Long, Double)] =
+    pairSet(SimJoin.keyedPairs(left, "id", "s", right, "id", "s", opts.copy(strategy = "direct")))
+
+  def tempDir(): String = java.nio.file.Files.createTempDirectory("plan-spec-memo").resolve("r").toString
+
+  def wordNames(words: Seq[String], seed: Int): Seq[String] = {
+    val rng = new scala.util.Random(seed)
+    Seq.fill(200)(Seq.fill(2 + rng.nextInt(2))(words(rng.nextInt(words.length))).mkString(" "))
+  }
+  val namesA: Seq[String] =
+    wordNames(Seq("small", "ring", "cold", "widget", "blue", "bolt", "plate", "steel"), 11)
+  val namesB: Seq[String] = wordNames(Seq("alpha", "beta", "gamma", "delta", "omega", "sigma"), 12)
+  val memoLeft: Seq[String] =
+    Seq("small ring", "blue bolt plate", "alpha beta", "gamma steel", "widget", "omega")
+
+  test("kernel index memo: a second left side over the same parquet right runs one job") {
+    val path = tempDir()
+    strDf(namesA).write.parquet(path)
+    val right = spark.read.parquet(path)
+    val left1 = strDf(memoLeft.take(3))
+    val left2 = strDf(memoLeft.drop(3))
+    val (r1, r2) = withJobCounter { jobs =>
+      val first = kernelRun(left1, right)
+      assert(jobs() == 2, "a build runs the right-side job and the scan")
+      val second = kernelRun(left2, right)
+      assert(jobs() == 1, "a reused index runs the scan only")
+      (first, second)
+    }
+    assert(r1._2 == 0L && r2._2 == 1L)
+    assert(r1._1 == directPairs(left1, right) && r2._1 == directPairs(left2, right))
+    // the build time metric is only paid by the first execution
+    val df = SimJoin.keyedPairs(left1, "id", "s", right, "id", "s", SimJoinOptions(topN = 3))
+    df.collect()
+    val exec = df.queryExecution.executedPlan.collectFirst { case k: graft.plans.SimKernelExec => k }.get
+    assert(exec.metrics("indexReused").value == 1L && exec.metrics("indexBuildTime").value == 0L)
+  }
+
+  test("kernel index memo: an overwritten path re-read builds anew; the old frame still fails") {
+    val path = tempDir()
+    val left = strDf(memoLeft)
+    strDf(namesA).write.parquet(path)
+    val v1 = spark.read.parquet(path)
+    val (p1, _) = kernelRun(left, v1)
+    assert(p1 == directPairs(left, v1))
+    // same path, same schema, different names: equal canonical plans
+    strDf(namesB).write.mode("overwrite").parquet(path)
+    val v2 = spark.read.parquet(path)
+    val (p2, reused) = kernelRun(left, v2)
+    assert(p2 == directPairs(left, v2) && p2 != p1)
+    assert(reused == 0L)
+    // the old frame lists the deleted v1 files: it fails as every strategy
+    // does, and never answers from an index
+    val kernelErr = intercept[Exception](kernelRun(left, v1))
+    intercept[Exception](directPairs(left, v1))
+    assert(kernelErr.getMessage.contains("does not exist") ||
+      kernelErr.getMessage.contains("FileNotFound"), kernelErr.getMessage)
+  }
+
+  test("kernel index memo: a nondeterministic right side builds on every execution") {
+    val path = tempDir()
+    strDf(namesA).write.parquet(path)
+    // Spark folds `rand(7) >= 0` to true; this filter stays in the plan
+    val right = spark.read.parquet(path).filter(rand(7) < 0.9)
+    val left = strDf(memoLeft)
+    assert(SimJoin.keyedPairs(left, "id", "s", right, "id", "s", SimJoinOptions(strategy = "kernel"))
+      .queryExecution.executedPlan.exists(_.expressions.exists(!_.deterministic)))
+    val runs = withJobCounter { jobs =>
+      (1 to 2).map { _ =>
+        val run = kernelRun(left, right)
+        assert(jobs() == 2)
+        run
+      }
+    }
+    assert(runs.forall(_._2 == 0L))
+    assert(runs.forall(_._1 == directPairs(left, right)))
+  }
+
+  test("kernel index memo: topN and maxTokenFrequency are in the key, normalization is not") {
+    val path = tempDir()
+    strDf(namesA).write.parquet(path)
+    val right = spark.read.parquet(path)
+    val left = strDf(memoLeft)
+    val cells = Seq(
+      (SimJoinOptions(topN = 3), 0L),
+      (SimJoinOptions(topN = 3, normalization = "count"), 1L),
+      (SimJoinOptions(topN = 5), 0L),
+      (SimJoinOptions(topN = 5, maxTokenFrequency = 50), 0L),
+      (SimJoinOptions(topN = 5, maxTokenFrequency = 50), 1L),
+      (SimJoinOptions(topN = 5, maxTokenFrequency = 70), 0L),
+      (SimJoinOptions(topN = 3), 0L))
+    cells.foreach { case (opts, wantReused) =>
+      val (pairs, reused) = kernelRun(left, right, opts)
+      assert(reused == wantReused, opts.toString)
+      assert(pairs == directPairs(left, right, opts), opts.toString)
+    }
+  }
+
+  test("kernel index memo: local right sides with one schema and different rows never collide") {
+    val left = strDf(memoLeft)
+    val rightA = strDf(namesA)
+    val rightB = strDf(namesB)
+    val (pa, _) = kernelRun(left, rightA)
+    val (pb, reused) = kernelRun(left, rightB)
+    assert(reused == 0L && pb != pa)
+    assert(pa == directPairs(left, rightA) && pb == directPairs(left, rightB))
+    assert(kernelRun(left, rightB)._2 == 1L)
   }
 
   test("threads option repartitions the left side without changing results") {

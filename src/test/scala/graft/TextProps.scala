@@ -3,7 +3,7 @@ package graft
 import org.scalacheck.{Gen, Properties, Test => SCTest}
 import org.scalacheck.Prop.forAll
 
-import graft.functions.TextFunctions
+import graft.functions.{TextFunctions, Trigrams}
 import graft.operators.Embeddings
 
 /**
@@ -129,6 +129,18 @@ object TextProps extends Properties("TextFunctions") {
         c.toLong * TextFunctions.HashWeights(i % 8)
       }.sum
       TextFunctions.tHash(k) == charSum
+    }
+
+  property("Trigrams.tokenIdsBytes over UTF-8 bytes equals tokenIds over chars") =
+    forAll(Gen.listOf(Gen.frequency(
+        4 -> Gen.alphaLowerChar.map(_.toString),
+        1 -> Gen.oneOf(Gen.alphaUpperChar, Gen.numChar, Gen.const(' ')).map(_.toString),
+        1 -> Gen.choose(0x80, 0xD7FF).map(_.toChar.toString),             // BMP non-ASCII
+        1 -> Gen.choose(0x10000, 0x10FFFF).map(cp => new String(Character.toChars(cp))),
+        1 -> Gen.choose(0xD800, 0xDFFF).map(_.toChar.toString)))) { parts => // lone surrogates
+      val s = parts.mkString
+      Trigrams.tokenIdsBytes(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toSeq ==
+        Trigrams.tokenIds(s).toSeq
     }
 
   property("hash bucket stability: same key same bucket across invocations") =
