@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession.{hygiene, jsonString}
 
 /**
  * Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and prints
@@ -51,18 +51,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "1").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: hygiene() unpersists locally-checkpointed RDDs, and each
+    val spark = GraftSession.local(32)
+    // ERROR, not WARN: hygiene unpersists locally-checkpointed RDDs, and each
     // emits a harmless "WARN MapPartitionsRDD ... cannot be recomputed" line —
     // hundreds per run, enough to clip the driver's tail-limited log capture.
     spark.sparkContext.setLogLevel("ERROR")
@@ -84,21 +75,6 @@ object Bench {
     val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
     val warmT = scala.collection.mutable.LinkedHashMap[String, Double]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // Session hygiene between runs (outside the timed window): cached
-    // blocks left registered by one query would degrade every later one —
-    // the r3 driver bench ran 2-9× slower than isolated reruns from exactly
-    // this (CC/CleanCorpus stage caches compounding across 50 queries).
-    // ...and the RDD-level residue clearCache() cannot see: DenseRank/CC
-    // localCheckpoints and operator persists pin executor blocks until the
-    // ContextCleaner GCs them, which a large idle heap may never trigger —
-    // by query ~80 of 124 the accumulated blocks inflated tail queries
-    // 3-5× over their isolated warm receipts (r9 measurement: full-run
-    // dedup_canonical 14.4 s vs 3.0 s isolated). The finished query's RDDs
-    // are never recomputed, so dropping truncated-lineage blocks is safe.
-    def hygiene(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     val coldIdx = scala.collection.mutable.LinkedHashMap[String, Int]()
     val warmIdx = scala.collection.mutable.LinkedHashMap[String, Int]()
@@ -113,7 +89,7 @@ object Bench {
         case e: Throwable =>
           errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
       }
-      hygiene()
+      hygiene(spark) // outside the timed window
     }
     // Optional warm passes: best (min) over full-suite sweeps 2..N, each
     // sweep in a DIFFERENT seeded-shuffled order (deterministic across
@@ -142,7 +118,7 @@ object Bench {
             case scala.util.control.NonFatal(e) =>
               errors(name + "_warm") = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
           }
-          hygiene()
+          hygiene(spark)
         }
       }
     }
@@ -153,30 +129,25 @@ object Bench {
     // truncation that made the alphabetically-first ~21 queries invisible.
     try spark.stop() catch { case _: Throwable => () }
 
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"; case '\r' => "\\r"
-        case '\t' => "\\t"; case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
-    val qs = timings.map { case (k, v) => s"${jstr(k)}:${"%.3f".format(v)}" }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
+    val qs = timings.map { case (k, v) => s"${jsonString(k)}:${"%.3f".format(v)}" }.mkString("{", ",", "}")
+    val es = errors.map { case (k, v) => s"${jsonString(k)}:${jsonString(v)}" }.mkString("{", ",", "}")
     val total = timings.values.sum
     val warmPart =
       if (warmT.isEmpty) ""
       else {
-        val wq = warmT.map { case (k, v) => s"${jstr(k)}:${"%.3f".format(v)}" }.mkString("{", ",", "}")
-        val wi = warmIdx.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
-        val wr = warmRep.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
+        val wq = warmT.map { case (k, v) => s"${jsonString(k)}:${"%.3f".format(v)}" }.mkString("{", ",", "}")
+        val wi = warmIdx.map { case (k, v) => s"${jsonString(k)}:$v" }.mkString("{", ",", "}")
+        val wr = warmRep.map { case (k, v) => s"${jsonString(k)}:$v" }.mkString("{", ",", "}")
         s""","total_warm":${"%.3f".format(warmT.values.sum)},"queries_warm":$wq,"warm_run_index":$wi,"warm_run_rep":$wr"""
       }
     val idxPart = {
-      val ci = coldIdx.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
+      val ci = coldIdx.map { case (k, v) => s"${jsonString(k)}:$v" }.mkString("{", ",", "}")
       s""","run_index":$ci"""
     }
     val controlPart =
       s""","control_first_sec":${"%.3f".format(controlFirst)},"control_last_sec":${"%.3f".format(controlLast)}"""
     val line =
-      s"""{"metric":"total","value":${"%.3f".format(total)},"unit":"sec","queries":$qs,"errors":$es,"n_ok":${timings.size},"n_err":${errors.size},"sf":${jstr(sfDir)}$warmPart$idxPart$controlPart}"""
+      s"""{"metric":"total","value":${"%.3f".format(total)},"unit":"sec","queries":$qs,"errors":$es,"n_ok":${timings.size},"n_err":${errors.size},"sf":${jsonString(sfDir)}$warmPart$idxPart$controlPart}"""
 
     // Receipt runs (SPARK_GRAFT_BENCH_OUT set — the driver never sets it)
     // write ONLY their round-pinned path; the contract file BENCH_LOCAL.json
@@ -197,13 +168,13 @@ object Bench {
     //      last stdout line, the last parseable JSON line, or the unique
     //      metric:total line gets the same complete object.
     timings.toSeq.grouped(20).toSeq.reverse.foreach { chunk =>
-      val c = chunk.map { case (k, v) => s"${jstr(k)}:${"%.3f".format(v)}" }.mkString("{", ",", "}")
+      val c = chunk.map { case (k, v) => s"${jsonString(k)}:${"%.3f".format(v)}" }.mkString("{", ",", "}")
       println(s"""{"bench_chunk":$c}""")
     }
     val slowest = timings.toSeq.sortBy(-_._2).take(40)
-      .map { case (k, v) => s"${jstr(k)}:${"%.3f".format(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}:${"%.3f".format(v)}" }.mkString("{", ",", "}")
     println(
-      s"""{"metric":"total_preview","value":${"%.3f".format(total)},"unit":"sec","queries":$slowest,"errors":$es,"n_ok":${timings.size},"n_err":${errors.size},"sf":${jstr(sfDir)},"queries_note":"preview: 40 slowest of ${timings.size}; the FULL map is the final stdout line and $outPath"}""")
+      s"""{"metric":"total_preview","value":${"%.3f".format(total)},"unit":"sec","queries":$slowest,"errors":$es,"n_ok":${timings.size},"n_err":${errors.size},"sf":${jsonString(sfDir)},"queries_note":"preview: 40 slowest of ${timings.size}; the FULL map is the final stdout line and $outPath"}""")
     println(line)
   }
 }

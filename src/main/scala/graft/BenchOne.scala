@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query micro-bench: `runMain graft.BenchOne <name> [reps]` on
   * SPARK_GRAFT_SF_DIR — repeats the registered query and prints per-rep seconds,
   * for isolating one query's cost from full-suite noise. */
@@ -10,16 +8,7 @@ object BenchOne {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(32)
     spark.sparkContext.setLogLevel("WARN")
     try spark.read.parquet(s"$sfDir/part.parquet").count()
     catch { case _: Throwable => () }
@@ -28,7 +17,7 @@ object BenchOne {
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()
       println(f"[benchone] $name rep$i: ${(System.nanoTime() - t0) / 1e9}%.3f s rows=$n")
-      spark.sharedState.cacheManager.clearCache()
+      GraftSession.hygiene(spark)
     }
     spark.stop()
   }

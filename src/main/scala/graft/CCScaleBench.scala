@@ -2,7 +2,6 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -25,14 +24,7 @@ import org.apache.spark.sql.functions._
 object CCScaleBench {
   def main(args: Array[String]): Unit = {
     val maxN = args.headOption.map(_.toLong).getOrElse(4000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(32)
     spark.sparkContext.setLogLevel("ERROR")
     import graft.operators.ConnectedComponents
 
@@ -58,8 +50,7 @@ object CCScaleBench {
         val wrong = labels.filter(col("component") =!= 0L).count()
         val sec = (System.nanoTime() - t0) / 1e9
         require(wrong == 0L, s"chain n=$n rep$rep: $wrong nodes mislabeled")
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        GraftSession.hygiene(spark)
         out.append(
           f"""{"graph":"chain","n":$n,"rep":$rep,"rounds":${rounds.get},"sec":$sec%.3f}%n""")
         println(f"[ccscale] chain n=$n rep$rep: rounds=${rounds.get} $sec%.3f s")

@@ -2,7 +2,6 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -56,14 +55,7 @@ object CCSkewBench {
     val maxN = args.headOption.map(_.toLong).getOrElse(4000000L)
     val fixtureFilter = if (args.length > 1) Some(args(1)) else None
     val outPath = if (args.length > 2) args(2) else "CC_SKEW.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(32)
     spark.sparkContext.setLogLevel("ERROR")
     import graft.operators.ConnectedComponents
 
@@ -103,8 +95,7 @@ object CCSkewBench {
           val wrong = labels.filter(col("component") =!= 0L).count()
           val sec = (System.nanoTime() - t0) / 1e9
           require(wrong == 0L, s"$graph n=$n $shape rep$rep: $wrong mislabeled")
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+          GraftSession.hygiene(spark)
           out.append(
             f"""{"graph":"$graph","n":$n,"shape":"$shape","rep":$rep,"rounds":${rounds.get},"sec":$sec%.3f}%n""")
           println(f"[ccskew] $graph n=$n $shape rep$rep: rounds=${rounds.get} $sec%.3f s")

@@ -1,21 +1,13 @@
 package graft
 import java.nio.file.{Files, Paths}
+import graft.GraftSession.jsonString
 /** Writes SparkEntry.oracleSql as JSON (no Spark session) so tooling can
   * lint every oracle's DuckDB result types without running the board. */
 object DumpOracles {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "/tmp/oracles.json"
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(out), json)
     println(s"wrote ${SparkEntry.oracleSql.size} oracles to $out")
   }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Writes `.explain("formatted")` output for named queries to
  * `<outDir>/<query>_<suffix>.txt` — the before/after plan receipts of the
@@ -18,16 +16,7 @@ object DumpPlans {
     val suffix = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(32)
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     for (name <- names) {
@@ -41,11 +30,9 @@ object DumpPlans {
         w.println(s"== $name ($suffix) @ $sfDir ==")
         w.println(plan)
       } finally w.close()
-      // Clear per-query caches like Bench.hygiene(): some query constructors
-      // persist intermediates; leaking them across dumps would change later
-      // queries' plans (InMemoryRelation nodes).
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      // some query constructors persist intermediates; leaking them across
+      // dumps would change later queries' plans (InMemoryRelation nodes)
+      GraftSession.hygiene(spark)
       println(s"[plans] wrote $outDir/${name}_$suffix.txt")
     }
     spark.stop()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -35,15 +35,7 @@ object HotKeyBench {
     // control that attributes the window-vs-aggjoin gap to the hot key
     // rather than to the window form itself.
     val mode = if (args.length > 4) args(4) else "hot"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(32)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
@@ -98,7 +90,7 @@ object HotKeyBench {
       (w, a)
     }
     val line =
-      s"""{"bench":"hotkey_window_vs_aggjoin","mode":"$mode","cpus":$cpus,"n_docs":$nDocs,""" +
+      s"""{"bench":"hotkey_window_vs_aggjoin","mode":"$mode","cpus":${spark.sparkContext.defaultParallelism},"n_docs":$nDocs,""" +
       s""""lines_per_doc":$linesPerDoc,"hot_row_fraction":${if (mode == "unique") 0.0 else 1.0 / linesPerDoc},""" +
       s""""window_sec":[${res.map(r => f"${r._1}%.3f").mkString(",")}],""" +
       s""""aggjoin_sec":[${res.map(r => f"${r._2}%.3f").mkString(",")}]}"""

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -26,20 +25,14 @@ import org.apache.spark.sql.functions._
 object SkewSplitProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(4000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus(32)
     val receipt = new StringBuilder
+    // broadcast would bypass the SMJ under probe — pin the join physical
+    def session(extra: Map[String, String]) = GraftSession.builder(cpus, cpus)
+      .config("spark.sql.autoBroadcastJoinThreshold", "-1").config(extra).getOrCreate()
 
     def run(tag: String, extra: Map[String, String]): Unit = {
-      val b = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        // broadcast would bypass the SMJ under probe — pin the join physical
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .config("spark.ui.enabled", "false")
-      extra.foreach { case (k, v) => b.config(k, v) }
-      val spark = b.getOrCreate()
+      val spark = session(extra)
       spark.sparkContext.setLogLevel("ERROR")
       try {
         // one large-star round, join shape, on a pure star: sym has 2n rows,
@@ -75,15 +68,7 @@ object SkewSplitProbe {
     // control: a textbook skewed fact⋈dim SMJ (99% of fact rows on one key)
     // — isolates whether a non-split is about OUR star shape or the env
     def runControl(tag: String, extra: Map[String, String]): Unit = {
-      val b = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .config("spark.ui.enabled", "false")
-      extra.foreach { case (k, v) => b.config(k, v) }
-      val spark = b.getOrCreate()
+      val spark = session(extra)
       spark.sparkContext.setLogLevel("ERROR")
       try {
         val fact = spark.range(n).select(

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.{SimJoin, SimJoinOptions}
 
 /**
@@ -12,13 +10,9 @@ import graft.operators.{SimJoin, SimJoinOptions}
 object Smoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
+    val spark = GraftSession.builder(GraftSession.cpus(4), 8)
       .appName("graft-smoke")
-      .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -189,7 +189,7 @@ object ConnectedComponents {
     * over the symmetrized edges — the previous groupBy-min + shuffle-join +
     * distinct formulation paid THREE exchanges per star, and on small graphs
     * the per-round stage scheduling (not data) was the measured floor
-    * (FloorProbe, r15). Dropping the distinct is safe because the star
+    * (BASELINE.md round-15 receipt). Dropping the distinct is safe because the star
     * transforms are per-row maps whose minimum is duplicate-insensitive:
     * each input row produces at most one output row, so the row count is
     * NON-increasing round over round (duplicates never multiply — that only
@@ -308,7 +308,7 @@ object ConnectedComponents {
    *
    * The check runs every `checkEvery` rounds (default 2), not every round:
    * on small graphs the per-action job submission is the measured floor
-   * (FloorProbe, r15 — ~0.4 s/round of pure scheduling), and a lazy
+   * (BASELINE.md round-15 receipt: ~0.4 s/round of pure scheduling), and a lazy
    * checkpoint chain of `checkEvery` rounds materializes in the ONE check
    * job. The trade is up to `checkEvery - 1` extra (cheap, already-fixed-
    * point) rounds after convergence in exchange for half the driver

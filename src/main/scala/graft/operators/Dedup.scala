@@ -326,23 +326,6 @@ object Dedup {
       .withColumn("jaccard",
         col("__i").cast("double") / (col("__na") + col("__nb") - col("__i")).cast("double"))
 
-  /**
-   * Brute-force near-dup pairs: 3-word-shingle Jaccard ≥ threshold, candidates
-   * from the shingle inverted index (docs sharing ≥ 1 shingle). Output:
-   * (id_a, id_b, jaccard) with id_a < id_b, jaccard rounded to 6 decimals.
-   *
-   * @param maxDocFrequency drop shingles present in more than this many
-   *        documents before the inverted-index self-join (the same stop-token
-   *        rule as [[winnowPairs]]: a shingle shared by thousands of docs joins
-   *        quadratically but carries almost no Jaccard mass at any useful
-   *        threshold). 0 (default) disables. RESULT-CHANGING when on: hot
-   *        shingles no longer count toward intersections (denominators still
-   *        use full set sizes), so reported jaccard is a LOWER BOUND and pairs
-   *        held together only by stop-shingles are missed — exactly the pairs a
-   *        near-dup threshold shouldn't keep. Without a cap this operator is
-   *        correctness-grade only; at corpus scale use the cap or
-   *        [[minHashLshPairs]].
-   */
   /** Internal: the shared inverted-index core of [[jaccardPairs]] and
     * [[containmentPairs]] — returns (inter, cnt): per-pair intersection
     * counts (__a < __b, __i) and per-doc set sizes (__id, __n). */
@@ -381,6 +364,23 @@ object Dedup {
     (inter, cnt)
   }
 
+  /**
+   * Brute-force near-dup pairs: 3-word-shingle Jaccard ≥ threshold, candidates
+   * from the shingle inverted index (docs sharing ≥ 1 shingle). Output:
+   * (id_a, id_b, jaccard) with id_a < id_b, jaccard rounded to 6 decimals.
+   *
+   * @param maxDocFrequency drop shingles present in more than this many
+   *        documents before the inverted-index self-join (the same stop-token
+   *        rule as [[winnowPairs]]: a shingle shared by thousands of docs joins
+   *        quadratically but carries almost no Jaccard mass at any useful
+   *        threshold). 0 (default) disables. RESULT-CHANGING when on: hot
+   *        shingles no longer count toward intersections (denominators still
+   *        use full set sizes), so reported jaccard is a LOWER BOUND and pairs
+   *        held together only by stop-shingles are missed — exactly the pairs a
+   *        near-dup threshold shouldn't keep. Without a cap this operator is
+   *        correctness-grade only; at corpus scale use the cap or
+   *        [[minHashLshPairs]].
+   */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String, threshold: Double,
       maxDocFrequency: Long = 0L): DataFrame = {
     val (inter, cnt) = shinglePairCore(df, idCol, textCol, maxDocFrequency)
@@ -413,22 +413,6 @@ object Dedup {
         round(col("containment"), 6).as("containment"))
   }
 
-  /**
-   * MinHash + LSH near-dup pairs — identical OUTPUT CONTRACT to [[jaccardPairs]]
-   * (verified pairs with exact Jaccard ≥ threshold) but with LSH-banded candidate
-   * generation: K=32 hashes in 8 bands of 4; docs colliding on any band are
-   * candidates. False-positive bands are removed by the exact verification; the
-   * (tunable) false-negative probability at Jaccard j is (1-j^4)^8 — < 1e-7 for
-   * j ≥ 0.97. This is the operator that survives 100 TB: no inverted-index
-   * blowup on common shingles, candidate count bounded by bucket collisions.
-   */
-  /**
-   * @param bandRows rows per LSH band (must divide K=32; default 4 → 8 bands).
-   *        The recall/cost knob: false-negative probability at Jaccard j is
-   *        (1-j^bandRows)^(32/bandRows) — raise it with the threshold for
-   *        fewer, higher-precision candidates (bandRows=8 at j=0.9: fn ~0.84
-   *        vs bandRows=4's ~0.04 — tune to the operating point).
-   */
   /**
    * In-engine LSH-banding recall audit — [[graft.operators.SimSearch.recallReport]]'s
    * stance applied to near-dup dedup: how many TRUE near-duplicate pairs
@@ -471,6 +455,21 @@ object Dedup {
           .as("precision"))
   }
 
+  /**
+   * MinHash + LSH near-dup pairs — identical OUTPUT CONTRACT to [[jaccardPairs]]
+   * (verified pairs with exact Jaccard ≥ threshold) but with LSH-banded candidate
+   * generation: K=32 hashes in 8 bands of 4; docs colliding on any band are
+   * candidates. False-positive bands are removed by the exact verification; the
+   * (tunable) false-negative probability at Jaccard j is (1-j^4)^8 — < 1e-7 for
+   * j ≥ 0.97. This is the operator that survives 100 TB: no inverted-index
+   * blowup on common shingles, candidate count bounded by bucket collisions.
+   *
+   * @param bandRows rows per LSH band (must divide K=32; default 4 → 8 bands).
+   *        The recall/cost knob: false-negative probability at Jaccard j is
+   *        (1-j^bandRows)^(32/bandRows) — raise it with the threshold for
+   *        fewer, higher-precision candidates (bandRows=8 at j=0.9: fn ~0.84
+   *        vs bandRows=4's ~0.04 — tune to the operating point).
+   */
   def minHashLshPairs(df: DataFrame, idCol: String, textCol: String, threshold: Double,
       bandRows: Int = graft.functions.TextFunctions.MinHashBandRows): DataFrame = {
     // fail fast at plan time — inside the UDF the same require surfaces only
@@ -882,17 +881,6 @@ object Dedup {
         col("span_start"), col("span_end"), col("n_grams"))
   }
 
-  /** Source-compatibility overload for the r15 `materializeGrams` knob that
-    * r17 removed with the window rewrite (the knob was a measured dead end:
-    * the window shape has ONE gram consumer, so there is nothing left to
-    * materialize). The argument is ignored. */
-  @deprecated("materializeGrams is a no-op since the r17 window rewrite " +
-    "removed the second gram consumer; call the overload without it", "r18")
-  def duplicateSpans(
-      df: DataFrame, idCol: String, textCol: String,
-      k: Int, minDocs: Long, materializeGrams: Boolean): DataFrame =
-    duplicateSpans(df, idCol, textCol, k, minDocs)
-
   /**
    * [[duplicateSpans]] counting TOTAL occurrences instead of distinct docs:
    * a gram is duplicated when it appears ≥ `minOccurrences` times anywhere
@@ -992,8 +980,9 @@ object Dedup {
     * is `min(__id) ≠ max(__id)` over the hash partition — no ordering
     * beyond the partition sort; the general rule sums lag-based
     * first-occurrence markers ordered by __id (null ids contribute 0,
-    * matching count_distinct). */
-  /** Skew hazard (r18, documented per ADVICE r17): the dup verdict is a
+    * matching count_distinct).
+    *
+    * Skew hazard (r18, documented per ADVICE r17): the dup verdict is a
     * window over one hash(__h) exchange — a single gram hash shared by a
     * large row fraction (whole-corpus boilerplate) lands in ONE window
     * partition that AQE cannot split (measured shape cost in
@@ -1262,6 +1251,21 @@ object Dedup {
         simHash1Udf(col("__shs")).as("simhash1"),
         simHash2Udf(col("__shs")).as("simhash2"))
 
+  /** Internal: (__id, simhash1, simhash2, __bi, __bv) band rows for a
+    * fingerprint frame — one generator pass, nBands rows per doc (a union of
+    * per-band projections would re-evaluate the fingerprint lineage once per
+    * branch). Shared by [[simHashPairs]] and
+    * [[graft.streaming.StreamNearDup]]; works on streaming frames. */
+  private[graft] def simHashBands(fp: DataFrame, bandBits: Int): DataFrame = {
+    require(bandBits == 8 || bandBits == 16, s"bandBits must be 8 or 16, got $bandBits")
+    val nPerHalf = 32 / bandBits
+    val modulus = 1L << bandBits
+    val bandVals = (0 until nPerHalf).map(i => shiftright(col("simhash1"), bandBits * i) % modulus) ++
+      (0 until nPerHalf).map(i => shiftright(col("simhash2"), bandBits * i) % modulus)
+    fp.select(col("__id"), col("simhash1"), col("simhash2"),
+      posexplode(array(bandVals: _*)).as(Seq("__bi", "__bv")))
+  }
+
   /**
    * SimHash near-dup pairs: Hamming distance over the 64-bit fingerprint ≤
    * maxHamming. Candidates via banding: any pair with Hamming < nBands shares
@@ -1283,21 +1287,6 @@ object Dedup {
    *        docs all hash near 0). RESULT-CHANGING like any stop rule: pairs
    *        whose only shared band is a dropped bucket are missed. 0 disables.
    */
-  /** Internal: (__id, simhash1, simhash2, __bi, __bv) band rows for a
-    * fingerprint frame — one generator pass, nBands rows per doc (a union of
-    * per-band projections would re-evaluate the fingerprint lineage once per
-    * branch). Shared by [[simHashPairs]] and
-    * [[graft.streaming.StreamNearDup]]; works on streaming frames. */
-  private[graft] def simHashBands(fp: DataFrame, bandBits: Int): DataFrame = {
-    require(bandBits == 8 || bandBits == 16, s"bandBits must be 8 or 16, got $bandBits")
-    val nPerHalf = 32 / bandBits
-    val modulus = 1L << bandBits
-    val bandVals = (0 until nPerHalf).map(i => shiftright(col("simhash1"), bandBits * i) % modulus) ++
-      (0 until nPerHalf).map(i => shiftright(col("simhash2"), bandBits * i) % modulus)
-    fp.select(col("__id"), col("simhash1"), col("simhash2"),
-      posexplode(array(bandVals: _*)).as(Seq("__bi", "__bv")))
-  }
-
   def simHashPairs(df: DataFrame, idCol: String, textCol: String, maxHamming: Int,
       bandBits: Int = 8, maxBandFrequency: Long = 0L): DataFrame = {
     require(bandBits == 8 || bandBits == 16, s"bandBits must be 8 or 16, got $bandBits")
@@ -1571,33 +1560,6 @@ object Dedup {
   }
 
   /**
-   * CHUNK-LEVEL CROSS-DOCUMENT DEDUP — the CCNet/RefinedWeb "paragraph dedup"
-   * primitive (Wenzek et al. 2020 dedup web text at paragraph granularity;
-   * here the unit is a fixed window of words, the natural analogue for
-   * unstructured text without line breaks). Each document is split into
-   * NON-overlapping `chunkWords`-word chunks (lowercased `[a-z]+` word runs);
-   * a chunk is duplicated iff its exact content occurs in ≥ `minDocs`
-   * DISTINCT documents; the cleaned text is the space-join of the surviving
-   * chunks in original order.
-   *
-   * Scale shape: the duplicated-chunk decision is ONE aggregation keyed by
-   * the chunk's md5 digest — the exchange carries (16-byte digest, doc id)
-   * pairs, never chunk text twice — and reassembly is doc-keyed. No pair
-   * join anywhere, so cost is linear in corpus size (the same argument as
-   * [[exact]], applied per chunk). At 100 TB both shuffles are slim:
-   * digests+ids for the verdict, and each chunk's text exactly once for the
-   * doc-side regroup.
-   *
-   * Determinism: md5 of exact chunk text; counts are integers; reassembly
-   * sorts by chunk index. 1:1 DuckDB oracle (`Oracles.chunkDedupSql`).
-   *
-   * @param keepFirst false (CCNet): every copy of a duplicated chunk is cut;
-   *                  true (RefinedWeb-style): the canonical occurrence —
-   *                  (min doc id, then min chunk index there) — survives
-   * @return one row per input doc: (idCol, clean_text, n_chunks, dup_chunks);
-   *         docs with no `[a-z]` word → ('', 0, 0).
-   */
-  /**
    * PARAGRAPH-level cross-doc dedup — the CCNet move on the document's OWN
    * structure (newline-delimited paragraphs) rather than fixed word windows
    * ([[chunkDedup]]'s grid): any non-empty line whose md5 appears in at
@@ -1648,6 +1610,33 @@ object Dedup {
       .select(col("__id").as(idCol), col("n_lines"), col("n_cut"), col("clean_md5"))
   }
 
+  /**
+   * CHUNK-LEVEL CROSS-DOCUMENT DEDUP — the CCNet/RefinedWeb "paragraph dedup"
+   * primitive (Wenzek et al. 2020 dedup web text at paragraph granularity;
+   * here the unit is a fixed window of words, the natural analogue for
+   * unstructured text without line breaks). Each document is split into
+   * NON-overlapping `chunkWords`-word chunks (lowercased `[a-z]+` word runs);
+   * a chunk is duplicated iff its exact content occurs in ≥ `minDocs`
+   * DISTINCT documents; the cleaned text is the space-join of the surviving
+   * chunks in original order.
+   *
+   * Scale shape: the duplicated-chunk decision is ONE aggregation keyed by
+   * the chunk's md5 digest — the exchange carries (16-byte digest, doc id)
+   * pairs, never chunk text twice — and reassembly is doc-keyed. No pair
+   * join anywhere, so cost is linear in corpus size (the same argument as
+   * [[exact]], applied per chunk). At 100 TB both shuffles are slim:
+   * digests+ids for the verdict, and each chunk's text exactly once for the
+   * doc-side regroup.
+   *
+   * Determinism: md5 of exact chunk text; counts are integers; reassembly
+   * sorts by chunk index. 1:1 DuckDB oracle (`Oracles.chunkDedupSql`).
+   *
+   * @param keepFirst false (CCNet): every copy of a duplicated chunk is cut;
+   *                  true (RefinedWeb-style): the canonical occurrence —
+   *                  (min doc id, then min chunk index there) — survives
+   * @return one row per input doc: (idCol, clean_text, n_chunks, dup_chunks);
+   *         docs with no `[a-z]` word → ('', 0, 0).
+   */
   def chunkDedup(
       df: DataFrame, idCol: String, textCol: String,
       chunkWords: Int = 40, minDocs: Int = 2, keepFirst: Boolean = false,
@@ -1744,24 +1733,6 @@ object Dedup {
           expr("((docs_with_text - __uniq) * 1000L) DIV docs_with_text"))
           .otherwise(0L).as("dup_milli"))
 
-  /**
-   * MUTUAL-kNN NEAR-DUP CLUSTERS over an embedding column: an undirected edge
-   * joins a and b iff EACH appears in the other's approximate k-nearest-
-   * neighbor list ([[knnGraph]] — LSH-bucketed candidates, rank by rounded
-   * cosine); clusters are the connected components of that graph. The mutual
-   * constraint is the classic density filter (mutual-kNN graphs drop hub
-   * edges that one-directional kNN keeps), giving tighter semantic-dup
-   * groups than a raw threshold on cosine.
-   *
-   * Scale shape: [[knnGraph]] is bucket-joined (never all-pairs) and emits
-   * ≤ k rows per vector, so the mutuality self-join runs on an O(N·k) edge
-   * relation keyed by (src, nbr) — slim integers — and
-   * [[ConnectedComponents.run]] is the O(log² n)-round star contraction.
-   * Nothing is collected to the driver.
-   *
-   * @return (idCol, component) for EVERY input row — vectors with no mutual
-   *         neighbor are singletons (component = own id).
-   */
   /**
    * Per-cluster diverse exemplar selection — the data-pruning complement of
    * [[semDedup]] (SSL-prototypes / coreset extraction): k-means-cluster the
@@ -1924,11 +1895,29 @@ object Dedup {
       .select(col("id_a"), col("id_b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-  /** @param skewSafe passed through to
-    *        [[graft.operators.ConnectedComponents.runStar]] — result-identical
-    *        join-shaped star rounds whose exchanges AQE skew-join can split;
-    *        set it when one semantic cluster may hold a large share of all
-    *        mutual-kNN edges (boilerplate megaclusters). */
+  /**
+   * MUTUAL-kNN NEAR-DUP CLUSTERS over an embedding column: an undirected edge
+   * joins a and b iff EACH appears in the other's approximate k-nearest-
+   * neighbor list ([[knnGraph]] — LSH-bucketed candidates, rank by rounded
+   * cosine); clusters are the connected components of that graph. The mutual
+   * constraint is the classic density filter (mutual-kNN graphs drop hub
+   * edges that one-directional kNN keeps), giving tighter semantic-dup
+   * groups than a raw threshold on cosine.
+   *
+   * Scale shape: [[knnGraph]] is bucket-joined (never all-pairs) and emits
+   * ≤ k rows per vector, so the mutuality self-join runs on an O(N·k) edge
+   * relation keyed by (src, nbr) — slim integers — and
+   * [[ConnectedComponents.run]] is the O(log² n)-round star contraction.
+   * Nothing is collected to the driver.
+   *
+   * @param skewSafe passed through to
+   *        [[graft.operators.ConnectedComponents.runStar]] — result-identical
+   *        join-shaped star rounds whose exchanges AQE skew-join can split;
+   *        set it when one semantic cluster may hold a large share of all
+   *        mutual-kNN edges (boilerplate megaclusters).
+   * @return (idCol, component) for EVERY input row — vectors with no mutual
+   *         neighbor are singletons (component = own id).
+   */
   def mutualKnnClusters(
       df: DataFrame, idCol: String, vecCol: String, k: Int,
       nPlanes: Int = 8, nTables: Int = 2, skewSafe: Boolean = false): DataFrame = {

@@ -2,22 +2,14 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{AsOfJoin, Sampling}
 
 /** Specs for the as-of join and stratified sampling. */
-class AsOfJoinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("asof-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class AsOfJoinSpec extends AnyFunSuite with LocalSpark {
 
   private def ts(s: Long) = new Timestamp(s * 1000L)
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Gen, Properties, Test => SCTest}
 import org.scalacheck.Prop.forAll
 
@@ -14,19 +13,11 @@ import graft.operators.AsOfJoin
  * ts ≤ / smallest ts ≥ / smallest |Δ| with backward ties; largest right id on
  * (key, ts) ties; null when out of tolerance or no candidate).
  */
-object AsOfProps extends Properties("AsOfJoin") {
+object AsOfProps extends Properties("AsOfJoin") with LocalSpark {
 
   // each trial runs several Spark jobs — keep the trial count small
   override def overrideParameters(p: SCTest.Parameters): SCTest.Parameters =
     p.withMinSuccessfulTests(8).withWorkers(1)
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("asof-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
 
   private val tablesGen: Gen[(List[(Long, Long, Long)], List[(Long, Long, Long)])] = for {
     nl <- Gen.choose(1, 20)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Gen, Properties, Test => SCTest}
 import org.scalacheck.Prop.forAll
 
@@ -14,19 +13,11 @@ import graft.operators.ConnectedComponents
  * [[ConnectedComponents.runStar]] must produce exactly the min-reachable-id
  * labeling.
  */
-object CCProps extends Properties("ConnectedComponents") {
+object CCProps extends Properties("ConnectedComponents") with LocalSpark {
 
   // each trial runs several Spark jobs — keep the trial count small
   override def overrideParameters(p: SCTest.Parameters): SCTest.Parameters =
     p.withMinSuccessfulTests(8).withWorkers(1)
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("cc-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
 
   private val graphGen: Gen[(Int, List[(Long, Long)])] = for {
     n <- Gen.choose(1, 25)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalacheck.{Gen, Properties, Test => SCTest}
 import org.scalacheck.Prop.forAll
 
@@ -16,18 +16,10 @@ import graft.operators.Dedup
  *     chunk is untouched
  *   - conservation: surviving chunks are a subsequence of the doc's chunks
  */
-object ChunkDedupProps extends Properties("ChunkDedup") {
+object ChunkDedupProps extends Properties("ChunkDedup") with LocalSpark {
 
   override def overrideParameters(p: SCTest.Parameters): SCTest.Parameters =
     p.withMinSuccessfulTests(10).withWorkers(1)
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("chunk-dedup-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
 
   private val W = 3
   // 4-word vocabulary, 0..14 words per doc — many identical aligned chunks

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,15 +10,7 @@ import graft.operators.CorpusStats
   * the one-sided estimate bound (est ≥ exact, always), exactness when a
   * word collides with nothing in some hash row, and merge algebra
   * (sketch(A ∪ B) = cell-wise sum of sketch(A) + sketch(B)). */
-class CmsProps extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("cms-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class CmsProps extends AnyFunSuite with LocalSpark {
 
   private def docsDf(rows: Seq[(Long, String)]): DataFrame = {
     val s = spark

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Gen, Properties, Test => SCTest}
 import org.scalacheck.Prop.forAll
 
@@ -14,18 +13,10 @@ import graft.operators.{Funnel, Packing}
  * in-memory models over randomized inputs (timestamp collisions included
  * on purpose: equal-ts events exercise the strict-`>` tie rule).
  */
-object FunnelPackProps extends Properties("FunnelPack") {
+object FunnelPackProps extends Properties("FunnelPack") with LocalSpark {
 
   override def overrideParameters(p: SCTest.Parameters): SCTest.Parameters =
     p.withMinSuccessfulTests(8).withWorkers(1)
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("funnel-pack-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
 
   private val steps = Seq("s1", "s2", "s3")
   private val types = Seq("s1", "s2", "s3", "x")

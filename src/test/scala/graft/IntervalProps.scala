@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalacheck.{Gen, Properties, Test => SCTest}
 import org.scalacheck.Prop.forAll
 
@@ -14,18 +14,10 @@ import graft.operators.IntervalJoin
  * broadcast path, and the first-shared-bucket exactly-once rule (each
  * qualifying pair exactly ONCE, no dedup pass to hide double emission).
  */
-object IntervalProps extends Properties("IntervalJoin") {
+object IntervalProps extends Properties("IntervalJoin") with LocalSpark {
 
   override def overrideParameters(p: SCTest.Parameters): SCTest.Parameters =
     p.withMinSuccessfulTests(10).withWorkers(1)
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("interval-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
 
   private val keyGen: Gen[String] = Gen.oneOf("u", "v", "w")
   private val valGen: Gen[Long] = Gen.chooseNum(-20L, 60L)

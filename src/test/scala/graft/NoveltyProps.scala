@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 
@@ -9,14 +8,7 @@ import graft.operators.Dedup
 /** Model properties for the shingle-attribution scores
   * ([[Dedup.noveltyScores]], [[Dedup.boilerplateScores]]): checked against a
   * brute-force in-memory reference over small generated corpora. */
-object NoveltyProps extends Properties("NoveltyScores") {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("novelty-props")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+object NoveltyProps extends Properties("NoveltyScores") with LocalSpark {
 
   private val wordGen: Gen[String] = Gen.oneOf("aa", "bb", "cc", "dd", "ee")
   private val docGen: Gen[String] =

@@ -2,7 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,15 +12,7 @@ import graft.streaming.EventWindows
 
 /** Specs for the LLM-pipeline operators: text analysis, dedup family,
   * similarity search, connected components, multimodal plumbing, streaming. */
-class PipelineOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("pipeline-ops-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class PipelineOpsSpec extends AnyFunSuite with LocalSpark {
 
   def docsDf(rows: Seq[(Long, String)]): DataFrame = {
     val s = spark

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.scalacheck.{Gen, Properties, Test => SCTest}
 import org.scalacheck.Prop.forAll
@@ -17,18 +17,10 @@ import graft.operators.SimSearch
  *   - ivfPqEncode → ivfPqSearchEncoded ≡ fused topKIvfPq (same params)
  *   - pqEncode drops exactly the null/zero-norm/wrong-dim rows
  */
-object PqProps extends Properties("PqIndex") {
+object PqProps extends Properties("PqIndex") with LocalSpark {
 
   override def overrideParameters(p: SCTest.Parameters): SCTest.Parameters =
     p.withMinSuccessfulTests(10).withWorkers(1)
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("pq-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
 
   // dim 4 corpora with occasional degenerate rows: nulls, zero vectors and a
   // wrong-dimension straggler — the eligibility edge cases

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,15 +8,7 @@ import graft.operators._
 
 /** Specs for the round-10 additions: within-doc line dedup, line-repetition
   * fractions, and content-defined chunking. */
-class Round10OpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("round10-ops-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class Round10OpsSpec extends AnyFunSuite with LocalSpark {
 
   def docsDf(rows: Seq[(Long, String)]): DataFrame = {
     val s = spark

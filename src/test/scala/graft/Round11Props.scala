@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test => SCTest}
 import org.scalacheck.Prop.forAll
@@ -13,18 +13,10 @@ import graft.operators.{Dedup, GraphRank, Packing, Sampling, SimSearch}
  * budget/cap contracts, peel monotonicity, sketch bounds, and
  * partitioning-invariance of every hash-deterministic op.
  */
-object Round11Props extends Properties("Round11") {
+object Round11Props extends Properties("Round11") with LocalSpark {
 
   override def overrideParameters(p: SCTest.Parameters): SCTest.Parameters =
     p.withMinSuccessfulTests(10).withWorkers(1)
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("round11-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
 
   private val srcGen: Gen[String] = Gen.oneOf("a", "b", "c", "d")
   private val rowsGen: Gen[List[(String, Long)]] =

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,15 +9,7 @@ import graft.operators._
 /** Specs for the round-12 additions: MaxScore-pruned BM25, time-decay
   * attribution, the per-source decontamination rollup, and the TPC-H
   * Q14/Q18 shapes' building blocks. */
-class Round12OpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("round12-ops-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class Round12OpsSpec extends AnyFunSuite with LocalSpark {
 
   def docsDf(rows: Seq[(Long, String)]): DataFrame = {
     val s = spark

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test => SCTest}
 import org.scalacheck.Prop.forAll
@@ -15,18 +15,10 @@ import graft.operators.{Bm25, EventStats, GraphRank}
  * touched conversion, label propagation must be row-order-invariant, and
  * one-community modularity must be exactly zero.
  */
-object Round12Props extends Properties("Round12") {
+object Round12Props extends Properties("Round12") with LocalSpark {
 
   override def overrideParameters(p: SCTest.Parameters): SCTest.Parameters =
     p.withMinSuccessfulTests(8).withWorkers(1)
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("round12-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
 
   private val wordGen: Gen[String] =
     Gen.oneOf("alpha", "beta", "gamma", "delta", "echo", "fox", "golf", "hotel")

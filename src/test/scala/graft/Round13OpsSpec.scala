@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,15 +9,7 @@ import graft.operators._
 
 /** Specs for the round-13 additions: Unicode NFC/NFKC canonicalization
   * (UnicodeNormExpr) and its compose-with-exact-dedup contract. */
-class Round13OpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("round13-ops-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class Round13OpsSpec extends AnyFunSuite with LocalSpark {
 
   // ---- UnicodeNormExpr ----------------------------------------------------
 

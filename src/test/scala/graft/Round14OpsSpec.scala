@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,15 +7,7 @@ import graft.operators._
 
 /** Specs for the round-14 additions: incremental IVF assignment against a
   * persisted trained quantizer. */
-class Round14OpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("round14-ops-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class Round14OpsSpec extends AnyFunSuite with LocalSpark {
 
   private def emb(rows: (Long, Seq[Float])*) = {
     val sp = spark

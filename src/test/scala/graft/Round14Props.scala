@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test => SCTest}
 import org.scalacheck.Prop.forAll
@@ -14,18 +14,10 @@ import graft.operators.SimSearch
  * floored cosine), and assignment must be a total function over eligible
  * rows (one output per non-null non-zero input, lists within range).
  */
-object Round14Props extends Properties("Round14") {
+object Round14Props extends Properties("Round14") with LocalSpark {
 
   override def overrideParameters(p: SCTest.Parameters): SCTest.Parameters =
     p.withMinSuccessfulTests(8).withWorkers(1)
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("round14-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
 
   // small integer-grid components keep cosines well-conditioned (no
   // denormals, deterministic across IEEE engines)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,15 +8,7 @@ import graft.operators._
 /** Specs for the round-15 additions: the Catalyst-expression IVF probe
   * (no-RDD plan shape), the ivfDrift retrain-trigger monitor, and the
   * streaming IVF assignment face. */
-class Round15OpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("round15-ops-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class Round15OpsSpec extends AnyFunSuite with LocalSpark {
 
   private def emb(rows: (Long, Seq[Float])*) = {
     val sp = spark

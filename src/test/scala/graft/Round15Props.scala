@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test => SCTest}
 import org.scalacheck.Prop.forAll
@@ -18,18 +18,10 @@ import graft.operators.SimSearch
  *   exactly the union of both sides' assigned lists, its counts sum to the
  *   sides' eligible row counts, and delta is present iff both sides are.
  */
-object Round15Props extends Properties("Round15") {
+object Round15Props extends Properties("Round15") with LocalSpark {
 
   override def overrideParameters(p: SCTest.Parameters): SCTest.Parameters =
     p.withMinSuccessfulTests(8).withWorkers(1)
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("round15-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
 
   // (key, id) pairs with a DETERMINISTIC score per pair, each replicated
   // 1-3x — duplicates always agree on the score, as the aggregator requires

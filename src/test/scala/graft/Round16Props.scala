@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test => SCTest}
 import org.scalacheck.Prop.forAll
@@ -14,18 +13,10 @@ import org.scalacheck.Prop.forAll
  *  - the splittable Avro read returns the same multiset for ANY split size
  *    (split boundaries are invisible — every block is read exactly once).
  */
-object Round16Props extends Properties("Round16") {
+object Round16Props extends Properties("Round16") with LocalSpark {
 
   override def overrideParameters(p: SCTest.Parameters): SCTest.Parameters =
     p.withMinSuccessfulTests(8).withWorkers(1)
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("round16-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
 
   private val urlGen: Gen[String] = for {
     scheme <- Gen.oneOf("http", "HTTP", "https", "HtTpS")

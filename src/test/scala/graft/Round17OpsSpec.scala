@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,15 +8,7 @@ import graft.operators.Dedup
 
 /** Round-17 operator units: PII detection counts, mixed-language halves,
   * and the skew-safe star-CC face of mutual-kNN clustering. */
-class Round17OpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("round17-ops")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class Round17OpsSpec extends AnyFunSuite with LocalSpark {
 
   test("matchCount: zero, single and repeated occurrences per PII class") {
     val s = spark; import s.implicits._

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,15 +9,7 @@ import graft.operators._
 /** Round-17 optimization specs: internals that moved (distributed power loop
   * → driver-side integer loop over the collected ≤ dims² co-moment cells)
   * must keep the exact result and edge semantics of the former shape. */
-class Round17OptSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("round17-opt-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class Round17OptSpec extends AnyFunSuite with LocalSpark {
 
   private def vecs(rows: Seq[(Long, Seq[Float])]): DataFrame = {
     val s = spark

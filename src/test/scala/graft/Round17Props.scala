@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalacheck.{Gen, Properties, Test => SCTest}
 import org.scalacheck.Prop.forAll
@@ -13,18 +12,10 @@ import org.scalacheck.Prop.forAll
  * whitespace collapses, so a second pass would redact what the first
  * pass's normalize exposed).
  */
-object Round17Props extends Properties("Round17") {
+object Round17Props extends Properties("Round17") with LocalSpark {
 
   override def overrideParameters(p: SCTest.Parameters): SCTest.Parameters =
     p.withMinSuccessfulTests(20).withWorkers(1)
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("round17-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
 
   // fragments that stress every redaction class plus the whitespace/control
   // characters the normalize step folds — including PII SPLIT ACROSS

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,15 +11,7 @@ import graft.operators._
   * counts must be row-identical to the window form on every consumer, and
   * the compiled CDC boundary loop must agree with the former expression
   * shape's arithmetic on edge inputs. */
-class Round18OptSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("round18-opt-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class Round18OptSpec extends AnyFunSuite with LocalSpark {
 
   private def docs(rows: Seq[(Long, String)]): DataFrame = {
     val s = spark

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,15 +10,7 @@ import graft.sources.BucketedTable
 /** Specs for the round-9 additions: chunk-level dedup, per-source dedup rate,
   * temperature mixture shares, SRP projection, mutual-kNN clusters, and the
   * bucketed sink/source layout. */
-class Round9OpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("round9-ops-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class Round9OpsSpec extends AnyFunSuite with LocalSpark {
 
   def docsDf(rows: Seq[(Long, String)]): DataFrame = {
     val s = spark
@@ -1439,15 +1431,5 @@ class Round9OpsSpec extends AnyFunSuite {
     assert(got == Map(
       ("2024-01-01", 0L) -> 2L, ("2024-01-01", 1L) -> 1L,
       ("2024-01-01", 2L) -> 1L, ("2024-01-02", 0L) -> 1L))
-  }
-
-  private def withConf(kvs: (String, String)*)(body: => Unit): Unit = {
-    val olds = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.scalacheck.{Gen, Properties, Test => SCTest}
 import org.scalacheck.Prop.forAll
@@ -16,18 +16,10 @@ import graft.operators.Dedup
  * via array slices of the persisted signature), and the estimate must be
  * symmetric and self-consistent.
  */
-object SigProps extends Properties("MinHashSig") {
+object SigProps extends Properties("MinHashSig") with LocalSpark {
 
   override def overrideParameters(p: SCTest.Parameters): SCTest.Parameters =
     p.withMinSuccessfulTests(10).withWorkers(1)
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("sig-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
 
   private val wordGen: Gen[String] = Gen.oneOf(
     "alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta",

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Gen, Properties, Test => SCTest}
 import org.scalacheck.Prop.forAll
 
@@ -18,20 +17,12 @@ import graft.operators.{SimJoin, SimJoinOptions, SimKernel}
  *     repeated keys, shared trigram sets, topN up to 12 and the token cap
  *   - symmetry: with no top-n truncation, pairs(L,R) is the mirror of pairs(R,L)
  */
-object SimJoinProps extends Properties("SimJoin") {
+object SimJoinProps extends Properties("SimJoin") with LocalSpark {
 
   // Each trial runs several Spark jobs on tiny frames — 10 successful trials
   // per property keeps the suite seconds-scale while still randomizing.
   override def overrideParameters(p: SCTest.Parameters): SCTest.Parameters =
     p.withMinSuccessfulTests(10).withWorkers(1)
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("simjoin-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
 
   private val wordGen: Gen[String] = Gen.oneOf(
     "small", "ring", "cold", "widget", "blue", "bolt", "plate", "ringed",

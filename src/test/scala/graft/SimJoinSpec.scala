@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Trigrams
@@ -12,15 +12,7 @@ import graft.operators.{SimJoin, SimJoinOptions}
  * (/root/reference/README.md:38-66). Each case runs under BOTH physical
  * strategies ("direct", "dedup") — they must agree exactly.
  */
-class SimJoinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("simjoin-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class SimJoinSpec extends AnyFunSuite with LocalSpark {
 
   def strDf(name: String, vals: Seq[String]): DataFrame = {
     val s = spark

@@ -1,21 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source/sink coverage: the engine's operators compose with Spark's built-in
   * readers/writers (parquet, csv, json, binaryFile) — the reference has no I/O
   * layer at all (SURVEY §2.2), so Spark's is the engine's. */
-class SourcesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("sources-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class SourcesSpec extends AnyFunSuite with LocalSpark {
 
   test("csv/json round-trip feeds simJoin identically to parquet") {
     val part = spark.read.parquet("/root/testdata/sf0.001/part.parquet")
@@ -108,9 +99,7 @@ class SourcesSpec extends AnyFunSuite {
   test("bucketed tables co-locate the join: no shuffle exchange in the plan") {
     val part = spark.read.parquet("/root/testdata/sf0.001/part.parquet")
       .select("p_partkey", "p_name")
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") { // force SMJ
       // the warehouse dir outlives the in-memory catalog across JVM runs
       spark.sql("DROP TABLE IF EXISTS part_bucketed")
       val loc = new java.io.File(
@@ -128,7 +117,7 @@ class SourcesSpec extends AnyFunSuite {
       // both sides pre-partitioned on the join key by the bucketing layout
       assert(!plan.contains("Exchange"), plan)
       assert(joined.count() == part.count())
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("binaryFile source feeds the multimodal pipeline") {

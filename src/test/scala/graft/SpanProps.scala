@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalacheck.{Gen, Properties, Test => SCTest}
 import org.scalacheck.Prop.forAll
 
@@ -15,18 +15,10 @@ import graft.operators.Dedup
  *   - conservation: removed_chars = len(text) − len(clean_text), and docs
  *     without spans pass through byte-identical
  */
-object SpanProps extends Properties("SpanDedup") {
+object SpanProps extends Properties("SpanDedup") with LocalSpark {
 
   override def overrideParameters(p: SCTest.Parameters): SCTest.Parameters =
     p.withMinSuccessfulTests(10).withWorkers(1)
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("span-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
 
   private val K = 6
   // tiny alphabet, docs of 0..40 chars — k-gram collisions are common

@@ -1,21 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.GraftFunctions
 import graft.operators.SimDedup
 
 /** The SQL-callable surface + similarity dedup operator. */
-class SqlSurfaceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("sql-surface-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class SqlSurfaceSpec extends AnyFunSuite with LocalSpark {
 
   test("registered SQL functions are callable from spark.sql") {
     GraftFunctions.registerAll(spark)

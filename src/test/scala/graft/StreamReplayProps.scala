@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,15 +20,7 @@ import org.scalatest.funsuite.AnyFunSuite
  *   hash emits exactly ONCE, the same hash set every replay, and each
  *   emitted id is one of that hash's candidate ids.
  */
-class StreamReplayProps extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("stream-replay-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class StreamReplayProps extends AnyFunSuite with LocalSpark {
 
   /** Deterministic Fisher–Yates shuffle (no Math.random — replayable). */
   private def shuffled[T: scala.reflect.ClassTag](xs: Vector[T], seed: Long): Vector[T] = {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,15 +8,7 @@ import graft.operators.{SimJoin, SimJoinOptions}
 /** Stream-static similarity scoring: the SAME thresholdPairs operator code runs
   * over a streaming left side (stateless tokenize/explode + stream-static join
   * + streaming aggregation in update mode) and agrees with the batch result. */
-class StreamingSimSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("streaming-sim-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class StreamingSimSpec extends AnyFunSuite with LocalSpark {
 
   test("thresholdPairs over a file stream matches the batch result") {
     val s = spark
