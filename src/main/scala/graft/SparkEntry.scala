@@ -96,8 +96,8 @@ object SparkEntry {
     }),
     "simjoin_kernel" -> ((s, dir) => {
       val part = rd(s, dir, "part").filter(col("p_partkey") < 300)
-      SimKernel.keyedPairs(part, "p_partkey", "p_name", part, "p_partkey", "p_name",
-          SimJoinOptions(topN = 3, normalization = "l2"),
+      SimJoin.keyedPairs(part, "p_partkey", "p_name", part, "p_partkey", "p_name",
+          SimJoinOptions(topN = 3, normalization = "l2", strategy = "kernel"),
           outLeft = "lid", outRight = "rid")
         .select(col("lid"), col("rid"), round(col("sim"), 6).as("sim"))
     }),

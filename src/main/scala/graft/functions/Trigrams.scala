@@ -1,5 +1,7 @@
 package graft.functions
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
@@ -30,40 +32,19 @@ object Trigrams {
   val VocabSize: Int = 26 * 26 * 26
 
   /** Distinct token ids of `s`, ascending. Never null; empty for null/short input. */
-  def tokenIds(s: String): Array[Int] = {
-    if (s == null || s.length < 3) return Array.emptyIntArray
-    val n = s.length
-    // Bitset over the 17,576-token vocabulary: dedup without hashing.
-    val seen = new java.util.BitSet(VocabSize)
-    var count = 0
-    var i = 0
-    while (i <= n - 3) {
-      val c0 = s.charAt(i); val c1 = s.charAt(i + 1); val c2 = s.charAt(i + 2)
-      if (c0 >= 'a' && c0 <= 'z' && c1 >= 'a' && c1 <= 'z' && c2 >= 'a' && c2 <= 'z') {
-        val id = (c0 - 'a') * 676 + (c1 - 'a') * 26 + (c2 - 'a')
-        if (!seen.get(id)) { seen.set(id); count += 1 }
-      }
-      i += 1
-    }
-    if (count == 0) return Array.emptyIntArray
-    val out = new Array[Int](count)
-    var id = seen.nextSetBit(0)
-    var j = 0
-    while (id >= 0) {
-      out(j) = id; j += 1
-      id = seen.nextSetBit(id + 1)
-    }
-    out
-  }
+  def tokenIds(s: String): Array[Int] =
+    if (s == null) Array.emptyIntArray else tokenIdsBytes(s.getBytes(UTF_8))
 
   /**
-   * Byte-level variant of [[tokenIds]] over raw UTF-8 bytes (no decode).
-   * Equivalent: only 'a'..'z' bytes can form a token, and non-ASCII chars
-   * contribute only bytes ≥ 0x80 — see [[TrigramTokensExpr]] scaladoc.
+   * [[tokenIds]] over raw UTF-8 bytes (no decode), the one tokenizer scan.
+   * Equivalent to a scan over chars: only 'a'..'z' bytes can form a token,
+   * and non-ASCII chars contribute only bytes ≥ 0x80 — see
+   * [[TrigramTokensExpr]] scaladoc.
    */
   def tokenIdsBytes(b: Array[Byte]): Array[Int] = {
     if (b == null || b.length < 3) return Array.emptyIntArray
     val n = b.length
+    // Bitset over the 17,576-token vocabulary: dedup without hashing.
     val seen = new java.util.BitSet(VocabSize)
     var count = 0
     var i = 0

@@ -38,7 +38,7 @@ object SimDedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val edges = SimJoin.thresholdPairs(
         keys, "__key", "__key", keys, "__key", "__key", threshold,
-        SimJoinOptions(normalization = normalization, strategy = "direct"),
+        SimJoinOptions(normalization = normalization),
         outLeft = "__ka", outRight = "__kb")
       .filter(col("__ka") =!= col("__kb"))
       .join(keyIds.select(col("__key").as("__ka"), col("__kid").as("__ea")), "__ka")

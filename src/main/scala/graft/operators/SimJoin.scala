@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{FloatType, LongType}
 
 import graft.functions.Trigrams
+import graft.plans.SimKernelPlan
 
 /**
  * Options for [[SimJoin]] — API parity with the reference's `join_sim`
@@ -24,12 +25,12 @@ import graft.functions.Trigrams
  *                               100× size rule on Catalyst plan statistics, see [[SimJoin.autoBroadcastSide]])
  * @param strategy               "dedup" | "direct" | "kernel" | "auto" — physical plan choice, see
  *                               [[SimJoin]]; "kernel" is the broadcast dense-accumulator fast path
- *                               ([[SimKernel]], requires Long id columns). auto takes the kernel
- *                               whenever both ids are Long and the right side's plan-size estimate
- *                               fits the 512 MB broadcast guard (repeated keys or not — its index
- *                               holds one entry per trigram set); only otherwise does it count
- *                               keys, picking dedup when they repeat (distinct-key ratio ≤ 0.5),
- *                               else direct
+ *                               ([[graft.plans.SimKernelPlan]], requires Long id columns).
+ *                               auto takes the kernel whenever both ids are Long and the right
+ *                               side's plan-size estimate fits the 512 MB broadcast guard
+ *                               (repeated keys or not — its index holds one entry per trigram
+ *                               set); only otherwise does it count keys, picking dedup when
+ *                               they repeat (distinct-key ratio ≤ 0.5), else direct
  * @param indexBy                for the positional APIs ([[SimJoin.pairs]]/[[SimJoin.simJoin]]):
  *                               a UNIQUE column per side whose ascending order defines the dense
  *                               0-based row index. Deterministic and avoids the RDD zipWithIndex
@@ -109,12 +110,12 @@ case class SimJoinOptions(
  *    trigram set within each partition, so the driver collects per distinct
  *    set, not per row), broadcast a primitive inverted index with one entry
  *    per distinct trigram set, and scan the left side's partitions with a
- *    dense accumulator and a bounded per-row top-n ([[SimKernel]], planned as
+ *    dense accumulator and a bounded per-row top-n
+ *    ([[graft.plans.SimKernelPlan.keyedPairs]], planned as
  *    [[graft.plans.SimKernelExec]]). No shuffle; the eligibility check reads
  *    plan statistics and runs no job. A later query over an unchanged right
- *    side (same canonical plan, topN and maxTokenFrequency, same local rows
- *    or same listed files, deterministic) reuses the latest broadcast index
- *    and runs the left scan only; see [[graft.plans.SimKernelIndexMemo]].
+ *    side may reuse the broadcast index; [[graft.plans.SimKernelIndexMemo]]
+ *    holds the rule.
  *
  * When the kernel cannot run, auto counts keys and takes "dedup" if they
  * repeat, else "direct". Both are shuffle-based relational plans:
@@ -142,7 +143,7 @@ object SimJoin {
     df.withColumn(column + "_normalized",
       lower(regexp_replace(col(column), "[^a-zA-Z0-9]", "")))
 
-  /** Score expression — shared by both strategies and mirrored 1:1 in oracle SQL. */
+  /** Score expression — shared by every relational plan and mirrored 1:1 in oracle SQL. */
   private def simExpr(dot: Column, nl: Column, nr: Column, normalization: String): Column =
     if (normalization == "l2") dot.cast("double") / (sqrt(nl) * sqrt(nr))
     else dot.cast("double")
@@ -166,9 +167,11 @@ object SimJoin {
       else if (kernelEligible(left, leftId, right, rightId)) "kernel"
       else autoStrategy(left, leftKey, right, rightKey)
     strategy match {
-      case "direct" => directPairs(left, leftId, leftKey, right, rightId, rightKey, opts, outLeft, outRight, outSim)
+      case "direct" =>
+        topNPerRow(trigramPairs(left, leftId, leftKey, right, rightId, rightKey, opts),
+          opts.topN, outLeft, outRight, outSim)
       case "dedup"  => dedupPairs(left, leftId, leftKey, right, rightId, rightKey, opts, outLeft, outRight, outSim)
-      case "kernel" => SimKernel.keyedPairs(left, leftId, leftKey, right, rightId, rightKey, opts, outLeft, outRight, outSim)
+      case "kernel" => SimKernelPlan.keyedPairs(left, leftId, leftKey, right, rightId, rightKey, opts, outLeft, outRight, outSim)
     }
   }
 
@@ -189,25 +192,10 @@ object SimJoin {
       right: DataFrame, rightId: String, rightTokens: String,
       topN: Int = 10, normalization: String = "l2",
       outLeft: String = "row", outRight: String = "col", outSim: String = "sim"): DataFrame = {
-    require(topN > 0, s"topN must be positive, got $topN")
-    require(Set("l2", "count")(normalization),
-      s"normalization must be l2|count, got $normalization")
-    def rel(df: DataFrame, id: String, toks: String, idOut: String, nOut: String) =
-      df.select(col(id).as(idOut), array_distinct(col(toks)).as("__toks"))
-        .filter(col(idOut).isNotNull && col("__toks").isNotNull)
-        .withColumn(nOut, size(col("__toks")))
-        .filter(col(nOut) > 0)
-        .select(col(idOut), col(nOut), explode(col("__toks")).as("__tok"))
-    val lt = rel(left, leftId, leftTokens, "__row", "__nl")
-    val rt = rel(right, rightId, rightTokens, "__col", "__nr")
-    val dots = lt.join(rt, "__tok")
-      .groupBy(col("__row"), col("__col"))
-      .agg(count(lit(1)).as("__dot"), first(col("__nl")).as("__nl"), first(col("__nr")).as("__nr"))
-      .withColumn("__sim", simExpr(col("__dot"), col("__nl"), col("__nr"), normalization))
-    val w = Window.partitionBy(col("__row")).orderBy(col("__sim").desc, col("__col").asc)
-    dots.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= topN)
-      .select(col("__row").as(outLeft), col("__col").as(outRight), col("__sim").as(outSim))
+    val opts = SimJoinOptions(topN = topN, normalization = normalization)
+    val lt = tokenRelation(left, leftId, array_distinct(col(leftTokens)), "__row", "__nl")
+    val rt = tokenRelation(right, rightId, array_distinct(col(rightTokens)), "__col", "__nr")
+    topNPerRow(scoredPairs(left, lt, right, rt, count(lit(1)), opts), topN, outLeft, outRight, outSim)
   }
 
   /** Shared broadcast/collect bound for kernel dispatch and the SimSearch
@@ -216,7 +204,7 @@ object SimJoin {
 
   /**
    * Kernel dispatch guard for strategy="auto", checked before any other
-   * strategy: take the [[SimKernel]] broadcast path whenever the right side's
+   * strategy: take the kernel broadcast path whenever the right side's
    * Catalyst size estimate is under the 512 MB broadcast guard AND both id
    * columns are LongType (the kernel's output id type — dispatching on other
    * id types would silently change the result schema). Reads plan statistics
@@ -238,15 +226,15 @@ object SimJoin {
       isLong(left, leftId) && isLong(right, rightId)
   }
 
-  /** Tokenize side: (id, nTokens, token) exploded relation, plus the `carry`
-    * columns of `df`. Rows with a null id or an empty token set are pruned —
-    * the null-id drop is the UNIFORM id contract across all three physical
-    * strategies (the kernel's primitive arrays cannot carry null ids, so the
-    * relational plans must agree for strategy="auto" to be a pure physical
-    * choice). */
-  private def tokenRelation(df: DataFrame, id: String, key: String,
+  /** Tokenize side: (id, nTokens, token) exploded relation over the token
+    * array `tokens` of each row, plus the `carry` columns of `df`. Rows with
+    * a null id or an empty or null token set are pruned — the null-id drop
+    * is the UNIFORM id contract across all three physical strategies (the
+    * kernel's primitive arrays cannot carry null ids, so the relational
+    * plans must agree for strategy="auto" to be a pure physical choice). */
+  private def tokenRelation(df: DataFrame, id: String, tokens: Column,
       idOut: String, nOut: String, carry: Seq[String] = Nil): DataFrame =
-    df.select((col(id).as(idOut) +: Trigrams.trigramTokens(col(key)).as("__toks") +: carry.map(col)): _*)
+    df.select((col(id).as(idOut) +: tokens.as("__toks") +: carry.map(col)): _*)
       .filter(col(idOut).isNotNull)
       .withColumn(nOut, size(col("__toks")))
       .filter(col(nOut) > 0)
@@ -265,7 +253,7 @@ object SimJoin {
    *         tf = occurrences of `token` in it.
    */
   def trigramIndex(df: DataFrame, idCol: String, keyCol: String): DataFrame =
-    tokenRelation(df, idCol, keyCol, "id", "n")
+    tokenRelation(df, idCol, Trigrams.trigramTokens(col(keyCol)), "id", "n")
       .groupBy(col("id"), col("n"), col("__tok"))
       .agg(count(lit(1)).as("tf"))
       .select(col("id"), col("n"), col("__tok").as("token"), col("tf"))
@@ -275,50 +263,48 @@ object SimJoin {
    * to `strategy="direct"` on the original text: the occurrence-pair count
    * that join computes is exactly `Σ_token tf_l·tf_r`, so scoring from
    * aggregated postings reproduces the dot product (and the l2/count
-   * normalizations read only the persisted `n`). Same token-blocked join +
-   * `WindowGroupLimit` top-n shape as the direct strategy.
+   * normalizations read only the persisted `n`), and the
+   * `maxTokenFrequency` cap counts a token's right rows as `Σ tf`. Same
+   * scoring core and `WindowGroupLimit` top-n as the direct strategy.
    * @return (outLeft, outRight, outSim) ranked top-`opts.topN` per left id.
    */
   def pairsFromIndex(
       leftIdx: DataFrame, rightIdx: DataFrame, opts: SimJoinOptions,
       outLeft: String = "lid", outRight: String = "rid",
       outSim: String = "sim"): DataFrame = {
-    require(opts.topN > 0, s"topN must be positive, got ${opts.topN}")
     val lt = leftIdx.select(col("id").as("__row"), col("n").as("__nl"),
       col("token").as("__tok"), col("tf").as("__tfl"))
     val rt = rightIdx.select(col("id").as("__col"), col("n").as("__nr"),
       col("token").as("__tok"), col("tf").as("__tfr"))
-    val dots = lt.join(rt, "__tok")
-      .groupBy(col("__row"), col("__col"))
-      .agg(sum(col("__tfl") * col("__tfr")).cast("long").as("__dot"),
-        first(col("__nl")).as("__nl"), first(col("__nr")).as("__nr"))
-      .withColumn("__sim", simExpr(col("__dot"), col("__nl"), col("__nr"), opts.normalization))
-    val w = Window.partitionBy(col("__row")).orderBy(col("__sim").desc, col("__col").asc)
-    dots.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= opts.topN)
-      .select(col("__row").as(outLeft), col("__col").as(outRight), col("__sim").as(outSim))
+    val dots = scoredPairs(leftIdx, lt, rightIdx, rt, sum(col("__tfl") * col("__tfr")), opts,
+      rightRows = Some("__tfr"))
+    topNPerRow(dots, opts.topN, outLeft, outRight, outSim)
   }
 
-  /** Unranked scored candidates: all (left id, right id, sim) sharing ≥1 trigram.
-    * `rightRows`, when set, names a column of `right` holding how many right
-    * rows each of its rows stands for (dedup scores distinct keys), so that
-    * the `maxTokenFrequency` cap still counts rows. */
+  /**
+   * The scoring core of every relational plan: unranked candidates
+   * `(__row, __col, __sim)`, one per pair of the token relations `lt`
+   * (`__row, __nl, __tok`) and `rt` (`__col, __nr, __tok`) sharing ≥1 token,
+   * with `dot` the per-pair aggregate (`count(1)` over token sets).
+   * `rightRows`, when set, names a column of `rt` holding how many right
+   * rows each of its rows stands for (dedup scores distinct keys, postings
+   * carry `tf`), so that the `maxTokenFrequency` cap still counts rows.
+   * `left` and `right` are the frames the relations come from; the
+   * broadcastSide rule reads their size estimates.
+   */
   private def scoredPairs(
-      left: DataFrame, leftId: String, leftKey: String,
-      right: DataFrame, rightId: String, rightKey: String,
-      opts: SimJoinOptions, rightRows: Option[String] = None): DataFrame = {
-    val lt0 = tokenRelation(left, leftId, leftKey, "__row", "__nl")
+      left: DataFrame, lt: DataFrame, right: DataFrame, rt: DataFrame,
+      dot: Column, opts: SimJoinOptions, rightRows: Option[String] = None): DataFrame = {
     // Skew guard (off by default): drop tokens in too many RIGHT rows before
     // the candidate join — a stop-trigram's postings join is quadratic in its
     // row counts. Result-changing, mirrors the reference's tf-idf TODO.
-    val rt1 = tokenRelation(right, rightId, rightKey, "__col", "__nr", rightRows.toSeq)
-    val rt0 =
-      if (opts.maxTokenFrequency <= 0) rt1
+    val capped =
+      if (opts.maxTokenFrequency <= 0) rt
       else {
         val rows = rightRows.fold(count(lit(1)))(c => sum(col(c)))
-        val freq = rt1.groupBy(col("__tok")).agg(rows.as("__tf"))
+        val freq = rt.groupBy(col("__tok")).agg(rows.as("__tf"))
           .filter(col("__tf") <= opts.maxTokenFrequency).select(col("__tok"))
-        rt1.join(broadcast(freq), "__tok")
+        rt.join(broadcast(freq), "__tok")
       }
     // broadcastSide ≙ the reference's threading_dimension: replicate one side,
     // partition the other (/root/reference/src/cossim.rs:143-201). "auto" applies
@@ -327,25 +313,35 @@ object SimJoin {
       case "auto" => autoBroadcastSide(left, right)
       case s      => s
     }
-    val (lt, rt) = side match {
-      case "left"  => (broadcast(lt0), rt0)
-      case "right" => (lt0, broadcast(rt0))
-      case _       => (lt0, rt0)
+    val (l, r) = side match {
+      case "left"  => (broadcast(lt), capped)
+      case "right" => (lt, broadcast(capped))
+      case _       => (lt, capped)
     }
-    lt.join(rt, "__tok")
+    l.join(r, "__tok")
       .groupBy(col("__row"), col("__col"))
-      .agg(count(lit(1)).as("__dot"), first(col("__nl")).as("__nl"), first(col("__nr")).as("__nr"))
+      .agg(dot.as("__dot"), first(col("__nl")).as("__nl"), first(col("__nr")).as("__nr"))
       .withColumn("__sim", simExpr(col("__dot"), col("__nl"), col("__nr"), opts.normalization))
   }
 
-  private def directPairs(
+  /** [[scoredPairs]] over the character trigrams of two keyed string frames. */
+  private def trigramPairs(
       left: DataFrame, leftId: String, leftKey: String,
       right: DataFrame, rightId: String, rightKey: String,
-      opts: SimJoinOptions, outLeft: String, outRight: String, outSim: String): DataFrame = {
-    val dots = scoredPairs(left, leftId, leftKey, right, rightId, rightKey, opts)
+      opts: SimJoinOptions, rightRows: Option[String] = None): DataFrame = {
+    val lt = tokenRelation(left, leftId, Trigrams.trigramTokens(col(leftKey)), "__row", "__nl")
+    val rt = tokenRelation(right, rightId, Trigrams.trigramTokens(col(rightKey)), "__col", "__nr",
+      rightRows.toSeq)
+    scoredPairs(left, lt, right, rt, count(lit(1)), opts, rightRows)
+  }
+
+  /** The ranking step of every top-n plan: per `__row`, the `topN` best
+    * candidates by (`__sim` desc, `__col` asc), renamed to the output names. */
+  private def topNPerRow(dots: DataFrame, topN: Int,
+      outLeft: String, outRight: String, outSim: String): DataFrame = {
     val w = Window.partitionBy(col("__row")).orderBy(col("__sim").desc, col("__col").asc)
     dots.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= opts.topN)
+      .filter(col("__rn") <= topN)
       .select(col("__row").as(outLeft), col("__col").as(outRight), col("__sim").as(outSim))
   }
 
@@ -368,12 +364,11 @@ object SimJoin {
     // reach any per-left-row top-n — rank() keeps whole tie groups, so this drops
     // only provably-dead keys.
     val wk = Window.partitionBy(col("__row")).orderBy(col("__sim").desc)
-    val keyPairs = scoredPairs(
-      distinctL, "__lkey", "__lkey", distinctR, "__rkey", "__rkey",
-      opts.copy(strategy = "direct"), rightRows = Some("__rrows"))
+    val keyPairs = trigramPairs(
+      distinctL, "__lkey", "__lkey", distinctR, "__rkey", "__rkey", opts, rightRows = Some("__rrows"))
       .withColumn("__krank", rank().over(wk))
       .filter(col("__krank") <= opts.topN)
-      .select(col("__row").as("__lkey"), col("__col").as("__rkey"), col("__sim"))
+      .select(col("__row"), col("__col").as("__rkey"), col("__sim"))
     // Per right key, only its topN smallest ids can appear in ANY per-left-row
     // top-n (within a sim tie group, selection is id-ascending), so cap here.
     val wr = Window.partitionBy(col("__rkey")).orderBy(col("__col").asc)
@@ -381,12 +376,10 @@ object SimJoin {
       .filter(col("__rrn") <= opts.topN)
       .select(col("__rkey"), col("__col"))
     // Expand key-pairs to right ids, take top-n PER LEFT KEY (all left rows with
-    // the same key share one result set), then expand to left rows.
-    val wl = Window.partitionBy(col("__lkey")).orderBy(col("__sim").desc, col("__col").asc)
-    val topPerKey = keyPairs.join(rightTop, "__rkey")
-      .withColumn("__rn", row_number().over(wl))
-      .filter(col("__rn") <= opts.topN)
-      .select(col("__lkey"), col("__col"), col("__sim"))
+    // the same key share one result set; `__row` is the left key here), then
+    // expand to left rows.
+    val topPerKey = topNPerRow(keyPairs.join(rightTop, "__rkey"), opts.topN,
+      "__lkey", "__col", "__sim")
     lKeys.join(topPerKey, "__lkey")
       .select(col("__row").as(outLeft), col("__col").as(outRight), col("__sim").as(outSim))
   }
@@ -401,7 +394,7 @@ object SimJoin {
       right: DataFrame, rightId: String, rightKey: String,
       threshold: Double, opts: SimJoinOptions = SimJoinOptions(),
       outLeft: String = "row", outRight: String = "col", outSim: String = "sim"): DataFrame =
-    scoredPairs(left, leftId, leftKey, right, rightId, rightKey, opts)
+    trigramPairs(left, leftId, leftKey, right, rightId, rightKey, opts)
       .filter(col("__sim") >= threshold)
       .select(col("__row").as(outLeft), col("__col").as(outRight), col("__sim").as(outSim))
 
@@ -423,8 +416,10 @@ object SimJoin {
       right: DataFrame, rightId: String, rightKey: String,
       topN: Int,
       outLeft: String = "row", outRight: String = "col", outSim: String = "sim"): DataFrame = {
-    val lt = tokenRelation(left, leftId, leftKey, "__row", "__nl").drop("__nl")
-    val rt = tokenRelation(right, rightId, rightKey, "__col", "__nr").drop("__nr")
+    val lt = tokenRelation(left, leftId, Trigrams.trigramTokens(col(leftKey)), "__row", "__nl")
+      .drop("__nl")
+    val rt = tokenRelation(right, rightId, Trigrams.trigramTokens(col(rightKey)), "__col", "__nr")
+      .drop("__nr")
     val nDf = rt.select(col("__col")).distinct().agg(count(lit(1)).as("__N"))
     val idf = rt.groupBy(col("__tok")).agg(count_distinct(col("__col")).as("__df"))
     val w0 = nDf.select(
@@ -439,16 +434,14 @@ object SimJoin {
       .crossJoin(broadcast(w0))
       .select(col("__row"), col("__tok"), coalesce(col("__w"), col("__w0")).as("__w"))
     val rtW = rt.join(broadcast(idfW), Seq("__tok"))
-    val lNorm = ltW.groupBy(col("__row")).agg(sum(col("__w") * col("__w")).as("__ln"))
-    val rNorm = rtW.groupBy(col("__col")).agg(sum(col("__w") * col("__w")).as("__rn"))
+    val lNorm = ltW.groupBy(col("__row")).agg(sum(col("__w") * col("__w")).as("__lnorm"))
+    val rNorm = rtW.groupBy(col("__col")).agg(sum(col("__w") * col("__w")).as("__rnorm"))
     val dots = ltW.join(rtW.select(col("__col"), col("__tok")), "__tok")
       .groupBy(col("__row"), col("__col")).agg(sum(col("__w") * col("__w")).as("__dot"))
     val sims = dots.join(lNorm, "__row").join(rNorm, "__col")
       .withColumn("__sim",
-        col("__dot").cast("double") / (sqrt(col("__ln")) * sqrt(col("__rn"))))
-    val w = Window.partitionBy(col("__row")).orderBy(col("__sim").desc, col("__col").asc)
-    sims.withColumn("__rnk", row_number().over(w)).filter(col("__rnk") <= topN)
-      .select(col("__row").as(outLeft), col("__col").as(outRight), col("__sim").as(outSim))
+        col("__dot").cast("double") / (sqrt(col("__lnorm")) * sqrt(col("__rnorm"))))
+    topNPerRow(sims, topN, outLeft, outRight, outSim)
   }
 
   /**

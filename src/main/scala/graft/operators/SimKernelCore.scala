@@ -4,10 +4,11 @@ import graft.functions.Trigrams
 
 /**
  * Engine-internal core of the broadcast similarity kernel, run by the
- * physical operator [[graft.plans.SimKernelExec]] (which both
- * [[SimKernel.keyedPairs]] and [[graft.plans.SimKernelPlan.keyedPairs]]
- * plan): the right-side inverted index in primitive-array form (the
- * broadcast payload) and the dense-accumulator scan.
+ * physical operator [[graft.plans.SimKernelExec]] (which
+ * `SimJoin.keyedPairs(strategy = "kernel")` plans through
+ * [[graft.plans.SimKernelPlan.keyedPairs]]): the right-side inverted index
+ * in primitive-array form (the broadcast payload) and the dense-accumulator
+ * scan.
  *
  * The index is grouped by trigram set: right rows with identical token-id
  * sets score identically against every left row, so they share ONE entry

@@ -40,17 +40,11 @@ import graft.operators.{SimJoinOptions, SimKernelCore}
  *    set per partition (row count plus ≤ topN smallest ids), broadcasts the
  *    primitive inverted index, and streams the left child's partitions
  *    through the dense-accumulator core ([[SimKernelCore]]). It is the one
- *    kernel execution path: [[graft.operators.SimKernel.keyedPairs]] and
- *    strategy="auto" both plan it.
- *  - Index reuse: an execution whose right child would produce the same
- *    rows as the previous build's (same canonical plan, `topN` and
- *    `maxTokenFrequency`, same local rows or same listed files, unchanged
- *    on the file system) reuses that broadcast and runs only the left
- *    scan. Right sides with nondeterministic expressions, subqueries or
- *    other leaves (RDD, DSv2, cached scans) build per execution. One index
- *    is kept, softly referenced. The rule lives in [[SimKernelIndexMemo]];
- *    the node's "index reused" and "index build time" SQL metrics show
- *    whether an execution paid for the build.
+ *    kernel execution path: [[SimKernelPlan.keyedPairs]] plans it, for
+ *    `SimJoin.keyedPairs` with strategy "kernel" or an eligible "auto".
+ *  - Index reuse: an execution may reuse the previous build's broadcast
+ *    under the rule of [[SimKernelIndexMemo]]; the node's "index reused"
+ *    and "index build time" SQL metrics show whether it paid for the build.
  *
  * Output attributes are constructor parameters (not freshly minted per
  * instantiation), so optimizer copies of the node keep stable expression ids
@@ -248,9 +242,17 @@ object SimKernelPlan {
       spark.experimental.extraStrategies = cur :+ SimKernelStrategy
   }
 
-  /** The kernel similarity join ([[graft.operators.SimKernel.keyedPairs]]
-    * delegates here): the kernel enters the query as a logical node the
-    * planner turns into [[SimKernelExec]]. */
+  /**
+   * The kernel similarity join, the one entry of `SimJoin.keyedPairs`'
+   * "kernel" strategy — the Spark analogue of the reference's
+   * `sparse_dot_topn` kernel with a dense per-row accumulator (its
+   * `src/cossim.rs:62-141`): replicate the tokenized right
+   * side, scan the partitioned left side. The kernel enters the query as a
+   * logical node the planner turns into [[SimKernelExec]], so building the
+   * DataFrame runs no job. Results are identical to strategy="direct" (same
+   * `dot / (√nl·√nr)` Double arithmetic, same (sim desc, right-id asc)
+   * tie-break); ids come out as Long.
+   */
   def keyedPairs(
       left: DataFrame, leftId: String, leftKey: String,
       right: DataFrame, rightId: String, rightKey: String,

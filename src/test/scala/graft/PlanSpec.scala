@@ -315,7 +315,7 @@ class PlanSpec extends AnyFunSuite with LocalSpark {
     assert(SimJoin.autoStrategy(unique, "s", unique, "s") == "direct")
   }
 
-  test("SimKernel.keyedPairs is identical to relational keyedPairs (both modes)") {
+  test("strategy kernel is identical to relational keyedPairs (both modes)") {
     val rng = new scala.util.Random(7)
     val words = Seq("small", "ring", "cold", "widget", "blue", "bolt", "xyz", "plate")
     def name() = Seq.fill(2 + rng.nextInt(2))(words(rng.nextInt(words.length))).mkString(" ")
@@ -331,7 +331,7 @@ class PlanSpec extends AnyFunSuite with LocalSpark {
       val relational = collect(
         SimJoin.keyedPairs(left, "id", "s", right, "id", "s", opts))
       val kernel = collect(
-        graft.operators.SimKernel.keyedPairs(left, "id", "s", right, "id", "s", opts))
+        SimJoin.keyedPairs(left, "id", "s", right, "id", "s", opts.copy(strategy = "kernel")))
       assert(kernel == relational, s"kernel != relational in $mode mode")
     }
   }
@@ -579,8 +579,7 @@ class PlanSpec extends AnyFunSuite with LocalSpark {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val direct = collect("direct")
     assert(collect("dedup") == direct)
-    assert(graft.operators.SimKernel.keyedPairs(withNull, "id", "s", withNull, "id", "s",
-        SimJoinOptions(topN = 5)).collect().map(r => (r.getLong(0), r.getLong(1))).toSet == direct)
+    assert(collect("kernel") == direct)
     assert(direct.forall { case (a, b) => Set(1L, 3L)(a) && Set(1L, 3L)(b) })
     // kernel-based search ops reject non-integral ids instead of silently
     // returning empty results
@@ -618,8 +617,8 @@ class PlanSpec extends AnyFunSuite with LocalSpark {
     assert(unguarded == 4L) // all rows share token "aaa"
     assert(guarded == 1L)   // only the exact "aab" partner survives the cap
     // kernel honors the same cap (required for safe auto-dispatch)
-    val kernelGuarded = graft.operators.SimKernel.keyedPairs(l, "id", "s", r, "id", "s",
-      SimJoinOptions(topN = 10, maxTokenFrequency = 1)).count()
+    val kernelGuarded = SimJoin.keyedPairs(l, "id", "s", r, "id", "s",
+      SimJoinOptions(topN = 10, strategy = "kernel", maxTokenFrequency = 1)).count()
     assert(kernelGuarded == 1L)
     // the cap counts right ROWS in every strategy, also when dedup scores
     // distinct keys: "aaa" is in 3 rows but only 2 distinct keys

@@ -641,7 +641,7 @@ class Round9OpsSpec extends AnyFunSuite with LocalSpark {
 
   // ---- custom planner operator --------------------------------------------
 
-  test("SimKernelPlan plans through SimKernelExec and equals the kernel face") {
+  test("SimKernelPlan plans through SimKernelExec and equals strategy direct") {
     val s = spark
     import s.implicits._
     val df = Seq((1L, "spark kernel"), (2L, "spark kennel"), (3L, "plan node"),
@@ -656,8 +656,8 @@ class Round9OpsSpec extends AnyFunSuite with LocalSpark {
     assert(execs.nonEmpty,
       s"plan was:\n${viaPlan.queryExecution.executedPlan.treeString.take(3000)}")
     val got = viaPlan.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val want = graft.operators.SimKernel.keyedPairs(
-      df, "id", "name", df, "id", "name", opts)
+    val want = graft.operators.SimJoin.keyedPairs(
+      df, "id", "name", df, "id", "name", opts.copy(strategy = "direct"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got == want && got.nonEmpty)
   }

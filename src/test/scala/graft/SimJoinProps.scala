@@ -1,10 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, split}
 import org.scalacheck.{Gen, Properties, Test => SCTest}
 import org.scalacheck.Prop.forAll
 
-import graft.operators.{SimJoin, SimJoinOptions, SimKernel}
+import graft.operators.{SimJoin, SimJoinOptions}
 
 /**
  * ScalaCheck property suite (SURVEY §5): randomized strings + partitionings
@@ -12,9 +13,11 @@ import graft.operators.{SimJoin, SimJoinOptions, SimKernel}
  * pin only pointwise —
  *   - l2 sim ∈ (0, 1]; count sim ≥ 1 (integer dot of sets sharing ≥ 1 token)
  *   - result size ≤ |L|·topN and ≤ topN per left row
- *   - partitioning invariance (values can't depend on physical layout)
- *   - physical-strategy parity: direct ≡ dedup ≡ kernel ≡ auto, also on
- *     repeated keys, shared trigram sets, topN up to 12 and the token cap
+ *   - partitioning invariance (values can't depend on physical layout:
+ *     input partitions or shuffle partitions)
+ *   - physical-strategy parity: direct ≡ dedup ≡ kernel ≡ auto ≡ postings
+ *     index, also on repeated keys, shared trigram sets, topN up to 12 and
+ *     the token cap
  *   - symmetry: with no top-n truncation, pairs(L,R) is the mirror of pairs(R,L)
  */
 object SimJoinProps extends Properties("SimJoin") with LocalSpark {
@@ -48,9 +51,22 @@ object SimJoinProps extends Properties("SimJoin") with LocalSpark {
       .repartition(parts)
   }
 
+  private def rows(pairs: DataFrame): Set[(Long, Long, Double)] =
+    pairs.collect().map(x => (x.getLong(0), x.getLong(1), x.getDouble(2))).toSet
+
   private def run(l: DataFrame, r: DataFrame, opts: SimJoinOptions): Set[(Long, Long, Double)] =
-    SimJoin.keyedPairs(l, "id", "s", r, "id", "s", opts).collect()
-      .map(x => (x.getLong(0), x.getLong(1), x.getDouble(2))).toSet
+    rows(SimJoin.keyedPairs(l, "id", "s", r, "id", "s", opts))
+
+  /** The same join from persisted trigram postings. */
+  private def indexed(l: DataFrame, r: DataFrame, opts: SimJoinOptions): Set[(Long, Long, Double)] =
+    rows(SimJoin.pairsFromIndex(
+      SimJoin.trigramIndex(l, "id", "s"), SimJoin.trigramIndex(r, "id", "s"), opts))
+
+  /** Word-token join over the names split on spaces. */
+  private def words(l: DataFrame, r: DataFrame, topN: Int): Set[(Long, Long, Double)] = {
+    def toks(d: DataFrame) = d.select(col("id"), split(col("s"), " ").as("t"))
+    rows(SimJoin.keyedPairsTokens(toks(l), "id", "t", toks(r), "id", "t", topN = topN))
+  }
 
   property("l2 sim in (0,1]; count sim >= 1") =
     forAll(namesGen, namesGen, topNGen) { (ls, rs, topN) =>
@@ -70,8 +86,14 @@ object SimJoinProps extends Properties("SimJoin") with LocalSpark {
 
   property("results are invariant under input partitioning") =
     forAll(namesGen, namesGen, partsGen, partsGen, topNGen) { (ls, rs, p1, p2, topN) =>
-      val opts = SimJoinOptions(topN = topN, strategy = "direct")
-      run(df(ls, p1), df(rs, p1), opts) == run(df(ls, p2), df(rs, p2), opts)
+      val opts = SimJoinOptions(topN = topN)
+      def all(parts: Int, shufflePartitions: Int) =
+        withConf("spark.sql.shuffle.partitions" -> shufflePartitions.toString) {
+          val (l, r) = (df(ls, parts), df(rs, parts))
+          Seq("direct", "dedup", "kernel").map(st => run(l, r, opts.copy(strategy = st))) :+
+            words(l, r, topN) :+ indexed(l, r, opts)
+        }
+      all(p1, 1) == all(p2, 7)
     }
 
   property("direct, dedup, and kernel strategies agree") =
@@ -79,9 +101,7 @@ object SimJoinProps extends Properties("SimJoin") with LocalSpark {
       val (l, r) = (df(ls, 2), df(rs, 3))
       val direct = run(l, r, SimJoinOptions(topN = topN, normalization = norm, strategy = "direct"))
       val dedup = run(l, r, SimJoinOptions(topN = topN, normalization = norm, strategy = "dedup"))
-      val kernel = SimKernel.keyedPairs(l, "id", "s", r, "id", "s",
-        SimJoinOptions(topN = topN, normalization = norm)).collect()
-        .map(x => (x.getLong(0), x.getLong(1), x.getDouble(2))).toSet
+      val kernel = run(l, r, SimJoinOptions(topN = topN, normalization = norm, strategy = "kernel"))
       direct == dedup && direct == kernel
     }
 
@@ -93,7 +113,8 @@ object SimJoinProps extends Properties("SimJoin") with LocalSpark {
       val direct = run(l, r, opts.copy(strategy = "direct"))
       direct == run(l, r, opts.copy(strategy = "dedup")) &&
         direct == run(l, r, opts.copy(strategy = "kernel")) &&
-        direct == run(l, r, opts) // auto
+        direct == run(l, r, opts) && // auto
+        direct == indexed(l, r, opts)
     }
 
   property("pairs(L,R) with no truncation is the mirror of pairs(R,L)") =

@@ -139,8 +139,12 @@ object TextProps extends Properties("TextFunctions") {
         1 -> Gen.choose(0x10000, 0x10FFFF).map(cp => new String(Character.toChars(cp))),
         1 -> Gen.choose(0xD800, 0xDFFF).map(_.toChar.toString)))) { parts => // lone surrogates
       val s = parts.mkString
-      Trigrams.tokenIdsBytes(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toSeq ==
-        Trigrams.tokenIds(s).toSeq
+      // char-window reference: tokenIds itself runs the byte scan
+      val overChars = s.sliding(3)
+        .filter(w => w.length == 3 && w.forall(c => c >= 'a' && c <= 'z'))
+        .map(w => (w(0) - 'a') * 676 + (w(1) - 'a') * 26 + (w(2) - 'a')).toSeq.distinct.sorted
+      val bytes = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      Trigrams.tokenIdsBytes(bytes).toSeq == overChars && Trigrams.tokenIds(s).toSeq == overChars
     }
 
   property("hash bucket stability: same key same bucket across invocations") =
