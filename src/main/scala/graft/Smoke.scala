@@ -82,7 +82,7 @@ object Smoke {
       .map(r => r.getString(0) + "=" + r.getLong(1)).sorted.mkString(" ")
     println("split " + sp)
 
-    // round-4 surfaces: left-join assembly, star components, guard knob
+    // round-4 surfaces: left-join assembly, star components, size guard
     val lj = SimJoin.simJoin(
       part.select("p_partkey", "p_name"),
       part.filter(col("p_partkey") < 100).select("p_partkey", "p_brand"),
@@ -96,11 +96,12 @@ object Smoke {
         .select(col("p_partkey").as("a"), (col("p_partkey") + 1L).as("b")), "a", "b")
     println("runStar components=" + starComp.select("component").distinct().count())
     val guardMsg = try {
-      graft.operators.SimSearch.topK(emb, "vec_id", "embedding",
-        emb, "vec_id", "embedding", 1, maxQueryBytes = 1L).count().toString
+      graft.operators.SizeGuard.requireFits(emb.select("vec_id", "embedding"), "query side",
+        "probe", bound = 1, exactBytes = Some(graft.operators.SimSearch.queryBytes("embedding")))
+      "fits"
     } catch { case e: IllegalArgumentException =>
       "error: " + Option(e.getMessage).getOrElse("").take(60) }
-    println("PROBE maxQueryBytes=1 -> " + guardMsg)
+    println("PROBE SizeGuard.requireFits bound=1 -> " + guardMsg)
 
     // round-15 surfaces: incremental IVF faces + Avro round trip
     val ivfModel = graft.operators.SimSearch.ivfTrainModel(

@@ -812,10 +812,7 @@ object SparkEntry {
       val o = rd(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
         date_format(col("o_orderdate"), "yyyy-MM-dd").as("o_date"))
       val c = rd(s, dir, "customer").select(col("c_custkey"), col("c_name"))
-      val bigHinted =
-        if (big.queryExecution.optimizedPlan.stats.sizeInBytes <=
-            graft.operators.SimJoin.MaxBroadcastBytes) broadcast(big)
-        else big
+      val bigHinted = if (graft.operators.SizeGuard.fits(big)) broadcast(big) else big
       bigHinted.join(o, col("l_orderkey") === col("o_orderkey"))
         .join(c, col("o_custkey") === col("c_custkey"))
         .select(col("c_custkey"), col("c_name"), col("o_orderkey"), col("o_date"),

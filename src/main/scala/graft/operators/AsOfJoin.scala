@@ -188,19 +188,14 @@ object AsOfJoin {
    * on the native type; this path orders on exact Long casts — a
    * TimestampType cast("long") would truncate to seconds and silently
    * reorder sub-second data; convert to epoch micros first, e.g.
-   * [[graft.streaming.EventTime.tsMicros]]). Fails fast otherwise.
-   *
-   * @param maxRightBytes guard on the right side's Catalyst size estimate
-   *        before collecting (0 disables) — the [[SimSearch]] collect-guard
-   *        posture; raise it deliberately, or use [[asofJoin]] when the
-   *        right side is genuinely large.
+   * [[graft.streaming.EventTime.tsMicros]]). Fails fast otherwise, and
+   * when the right side does not fit the broadcast bound ([[SizeGuard]]).
    */
   def asofJoinBroadcast(
       left: DataFrame, right: DataFrame, keyCol: String,
       leftTs: String, rightTs: String,
       payload: Seq[(String, String)], tieCol: String,
-      direction: String = "backward", tolerance: Long = 0L,
-      maxRightBytes: Long = SimJoin.MaxBroadcastBytes.toLong): DataFrame = {
+      direction: String = "backward", tolerance: Long = 0L): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     require(Set("backward", "forward", "nearest")(direction),
@@ -232,13 +227,8 @@ object AsOfJoin {
       s"left/right key column '$keyCol' types differ (${lKeyDt.catalogString} vs " +
         s"${rKeyDt.catalogString}) — align them first, or use asofJoin (shuffle path)")
     requireAtomicProbeKey(lKeyDt, s"key column '$keyCol'", "asofJoin")
-    require(maxRightBytes >= 0L, s"maxRightBytes must be >= 0, got $maxRightBytes")
-    if (maxRightBytes > 0L) {
-      val est = right.queryExecution.optimizedPlan.stats.sizeInBytes
-      require(est <= BigInt(maxRightBytes),
-        s"right side estimate $est bytes exceeds the $maxRightBytes-byte broadcast guard — " +
-          "use asofJoin (shuffle path), or raise maxRightBytes deliberately")
-    }
+    SizeGuard.requireFits(right, "asofJoinBroadcast right side",
+      "use asofJoin, the shuffle path")
     val spark = left.sparkSession
     val nPay = payload.length
     require(!leftCols.contains("__asof_probe"),

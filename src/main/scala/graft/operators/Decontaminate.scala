@@ -89,6 +89,36 @@ object Decontaminate {
   }
 
   /**
+   * BENCHMARK COVERAGE — the aggregate complement of span decontamination:
+   * what fraction of the benchmark's distinct k-grams appear ANYWHERE in the
+   * corpus (1.0-ish = the eval set is memorizable from training data; ~0 =
+   * clean). One number per run, suitable for a release gate.
+   *
+   * Direction matters at scale: the corpus' gram relation is only ever
+   * FILTERED by the broadcast bench-gram set — the distinct() runs on the
+   * matched (bench-bounded) grams, never on the corpus' full gram space.
+   * Same broadcast-size guard as [[contaminatedSpans]].
+   *
+   * @return one row: (n_bench, n_found, coverage_micro = found·10⁶ div bench)
+   */
+  def benchCoverage(
+      corpus: DataFrame, textCol: String,
+      bench: DataFrame, benchTextCol: String, k: Int = 20): DataFrame = {
+    SizeGuard.requireFits(bench.select(col(benchTextCol)), "benchCoverage bench side",
+      "pass the smaller frame as bench, or split the bench set into shards that fit and " +
+        "report coverage per shard")
+    val bh = bench.select(explode(Dedup.charGrams(col(benchTextCol), k)).as("__h"))
+      .distinct().localCheckpoint() // consumed twice: the count and the join
+    val nb = bh.agg(count(lit(1)).as("n_bench"))
+    val nf = corpus.select(explode(Dedup.charGrams(col(textCol), k)).as("__h"))
+      .join(broadcast(bh), "__h").distinct()
+      .agg(count(lit(1)).as("n_found"))
+    nb.crossJoin(nf)
+      .select(col("n_bench"), col("n_found"),
+        expr("n_found * 1000000L div n_bench").as("coverage_micro"))
+  }
+
+  /**
    * SPAN-LEVEL decontamination — surgical form of [[flagged]]: instead of
    * naming whole contaminated documents, report the exact char spans of the
    * corpus that appear in the benchmark set, as maximal runs of k-code-point
@@ -106,57 +136,12 @@ object Decontaminate {
    * @return (idCol, span_start, span_end, n_grams) — 1-based inclusive
    *         code-point positions in the corpus document.
    */
-  /**
-   * BENCHMARK COVERAGE — the aggregate complement of span decontamination:
-   * what fraction of the benchmark's distinct k-grams appear ANYWHERE in the
-   * corpus (1.0-ish = the eval set is memorizable from training data; ~0 =
-   * clean). One number per run, suitable for a release gate.
-   *
-   * Direction matters at scale: the corpus' gram relation is only ever
-   * FILTERED by the broadcast bench-gram set — the distinct() runs on the
-   * matched (bench-bounded) grams, never on the corpus' full gram space.
-   * Same broadcast-size guard as [[contaminatedSpans]].
-   *
-   * @return one row: (n_bench, n_found, coverage_micro = found·10⁶ div bench)
-   */
-  def benchCoverage(
-      corpus: DataFrame, textCol: String,
-      bench: DataFrame, benchTextCol: String, k: Int = 20,
-      maxBenchBytes: Long = graft.operators.SimJoin.MaxBroadcastBytes.toLong): DataFrame = {
-    require(maxBenchBytes >= 0L,
-      s"maxBenchBytes must be >= 0 (0 disables the guard), got $maxBenchBytes")
-    if (maxBenchBytes > 0L) {
-      val est = bench.select(col(benchTextCol)).queryExecution.optimizedPlan.stats.sizeInBytes
-      require(est <= BigInt(maxBenchBytes),
-        s"benchmark side estimate $est bytes exceeds the $maxBenchBytes-byte broadcast guard")
-    }
-    val bh = bench.select(explode(Dedup.charGrams(col(benchTextCol), k)).as("__h"))
-      .distinct().localCheckpoint() // consumed twice: the count and the join
-    val nb = bh.agg(count(lit(1)).as("n_bench"))
-    val nf = corpus.select(explode(Dedup.charGrams(col(textCol), k)).as("__h"))
-      .join(broadcast(bh), "__h").distinct()
-      .agg(count(lit(1)).as("n_found"))
-    nb.crossJoin(nf)
-      .select(col("n_bench"), col("n_found"),
-        expr("n_found * 1000000L div n_bench").as("coverage_micro"))
-  }
-
   def contaminatedSpans(
       corpus: DataFrame, idCol: String, textCol: String,
-      bench: DataFrame, benchTextCol: String, k: Int = 20,
-      maxBenchBytes: Long = graft.operators.SimJoin.MaxBroadcastBytes.toLong): DataFrame = {
-    // fail fast instead of OOMing the broadcast when someone passes a
-    // corpus-sized frame as `bench` (same guard posture as asofJoinBroadcast /
-    // SimSearch.requireCollectableQueries); raise or pass 0 deliberately
-    require(maxBenchBytes >= 0L,
-      s"maxBenchBytes must be >= 0 (0 disables the guard), got $maxBenchBytes")
-    if (maxBenchBytes > 0L) {
-      val est = bench.select(col(benchTextCol)).queryExecution.optimizedPlan.stats.sizeInBytes
-      require(est <= BigInt(maxBenchBytes),
-        s"benchmark side estimate $est bytes exceeds the $maxBenchBytes-byte broadcast " +
-          "guard — contaminatedSpans broadcasts the BENCH gram set; pass the smaller " +
-          "frame as bench, or raise maxBenchBytes deliberately")
-    }
+      bench: DataFrame, benchTextCol: String, k: Int = 20): DataFrame = {
+    SizeGuard.requireFits(bench.select(col(benchTextCol)), "contaminatedSpans bench side",
+      "pass the smaller frame as bench, or use contaminatedSpansBloom, which never " +
+        "broadcasts the bench set")
     val g = corpus.select(col(idCol).as("__id"),
         posexplode(Dedup.charGrams(col(textCol), k)).as(Seq("__i", "__h")))
       .select(col("__id"), (col("__i") + 1).cast("long").as("__p"), col("__h"))
@@ -185,21 +170,19 @@ object Decontaminate {
    *
    * The driver-side filter is LINEAR in the distinct bench gram count —
    * ~1.2 bytes/gram at fpp 0.01 (≈1.2 GB per 10⁹ grams), NOT constant —
-   * so its size is guarded by `maxFilterBytes` (fail fast rather than OOM
-   * the driver; 0 disables, raise deliberately and size the driver to
-   * match). The bench gram relation is persisted once and reused by the
-   * count, the Bloom aggregate, and the verify join (it stays cached until
-   * the session clears it — Bench's inter-query clearCache covers the gate).
+   * so its size is guarded by [[SizeGuard.requireBloomFits]] (fail fast
+   * rather than OOM the driver). The bench gram relation is persisted once
+   * and reused by the count, the Bloom aggregate, and the verify join (it
+   * stays cached until the session clears it — Bench's inter-query
+   * clearCache covers the gate).
    *
    * @return (idCol, span_start, span_end, n_grams) — as [[contaminatedSpans]]
    */
   def contaminatedSpansBloom(
       corpus: DataFrame, idCol: String, textCol: String,
       bench: DataFrame, benchTextCol: String, k: Int = 20,
-      fpp: Double = 0.01, maxFilterBytes: Long = 256L << 20): DataFrame = {
+      fpp: Double = 0.01): DataFrame = {
     require(fpp > 0.0 && fpp < 1.0, s"fpp must be in (0, 1), got $fpp")
-    require(maxFilterBytes >= 0L,
-      s"maxFilterBytes must be >= 0 (0 disables the guard), got $maxFilterBytes")
     val spark = corpus.sparkSession
     val bh = bench
       .select(explode(Dedup.charGrams(col(benchTextCol), k)).as("__h"))
@@ -209,15 +192,8 @@ object Decontaminate {
     // relation; its expectedNumItems comes from the same pass's distinct
     // count, so no caller-supplied cardinality guess can undersize the filter
     val nGrams = math.max(bh.count(), 1L)
-    if (maxFilterBytes > 0L) {
-      // optimal Bloom bits = -n·ln(p)/ln(2)², bytes = bits/8
-      val estBytes = math.ceil(-nGrams * math.log(fpp) /
-        (math.log(2) * math.log(2)) / 8.0).toLong
-      require(estBytes <= maxFilterBytes,
-        s"Bloom filter for $nGrams distinct bench grams at fpp=$fpp needs ~$estBytes " +
-          s"driver-side bytes, over the $maxFilterBytes-byte guard — raise fpp, raise " +
-          "maxFilterBytes deliberately (and size the driver), or pre-shard the bench set")
-    }
+    SizeGuard.requireBloomFits(nGrams, fpp, "distinct bench grams",
+      "raise fpp, or pre-shard the bench set and run one call per shard")
     val bloom = bh.stat.bloomFilter("__h1", nGrams, fpp)
     val bloomBc = spark.sparkContext.broadcast(bloom)
     val mightContain = udf((h1: Long) => bloomBc.value.mightContainLong(h1))

@@ -274,29 +274,21 @@ object Dedup {
    * unchanged. Null-text rows are excluded, as in [[exactIncrement]].
    *
    * @param fpp            Bloom false-positive rate (cost knob only — FPs are
-   *                       verified away, they just ride the exchange)
-   * @param maxFilterBytes guard on the driver-side filter size (0 disables)
+   *                       verified away, they just ride the exchange); the
+   *                       driver-side filter must fit [[SizeGuard.MaxBloomBytes]]
    * @return (idCol, content_hash, kept) — kept ∈ {0, 1}, = [[exactIncrement]]
    */
   def exactIncrementBloom(
       batch: DataFrame, idCol: String, textCol: String,
       seenDigests: DataFrame, digestCol: String = "content_hash",
-      fpp: Double = 0.01, maxFilterBytes: Long = 256L << 20): DataFrame = {
+      fpp: Double = 0.01): DataFrame = {
     require(fpp > 0.0 && fpp < 1.0, s"fpp must be in (0, 1), got $fpp")
-    require(maxFilterBytes >= 0L,
-      s"maxFilterBytes must be >= 0 (0 disables the guard), got $maxFilterBytes")
     val spark = batch.sparkSession
     val seen = seenDigests.select(col(digestCol).as("content_hash")).distinct()
       .persist()
     val nSeen = math.max(seen.count(), 1L)
-    if (maxFilterBytes > 0L) {
-      val estBytes = math.ceil(-nSeen * math.log(fpp) /
-        (math.log(2) * math.log(2)) / 8.0).toLong
-      require(estBytes <= maxFilterBytes,
-        s"Bloom filter for $nSeen seen digests at fpp=$fpp needs ~$estBytes driver-side " +
-          s"bytes, over the $maxFilterBytes-byte guard — raise fpp, raise maxFilterBytes " +
-          "deliberately (and size the driver), or shard the seen set")
-    }
+    SizeGuard.requireBloomFits(nSeen, fpp, "seen digests",
+      "raise fpp, or shard the seen set and run one call per shard")
     val bloom = seen.stat.bloomFilter("content_hash", nSeen, fpp)
     val bloomBc = spark.sparkContext.broadcast(bloom)
     val mightContain = udf((h: String) => bloomBc.value.mightContainString(h))

@@ -101,14 +101,13 @@ object IntervalJoin {
    * Restrictions (the [[AsOfJoin.asofJoinBroadcast]] posture, fail-fast):
    * point/start/end columns must be INTEGRAL (probes compare exact Longs);
    * at most ONE key column, with identical types on both sides (the
-   * broadcast map probes with raw JVM equality); `maxRightBytes` guards the
-   * collect (0 disables).
+   * broadcast map probes with raw JVM equality); the interval side must fit
+   * the broadcast bound ([[SizeGuard]]).
    */
   def pointInIntervalBroadcast(
       points: DataFrame, pointCol: String,
       intervals: DataFrame, startCol: String, endCol: String,
-      keyCols: Seq[String] = Nil,
-      maxRightBytes: Long = SimJoin.MaxBroadcastBytes.toLong): DataFrame = {
+      keyCols: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -138,13 +137,8 @@ object IntervalJoin {
         s"${r.catalogString}) — align them first, or use pointInInterval")
       AsOfJoin.requireAtomicProbeKey(l, s"key column '$k'", "pointInInterval")
     }
-    require(maxRightBytes >= 0L, s"maxRightBytes must be >= 0, got $maxRightBytes")
-    if (maxRightBytes > 0L) {
-      val est = intervals.queryExecution.optimizedPlan.stats.sizeInBytes
-      require(est <= BigInt(maxRightBytes),
-        s"interval side estimate $est bytes exceeds the $maxRightBytes-byte broadcast " +
-          "guard — use pointInInterval (bucketed shuffle path), or raise maxRightBytes")
-    }
+    SizeGuard.requireFits(intervals, "pointInIntervalBroadcast interval side",
+      "use pointInInterval, the bucketed shuffle path")
     val spark = points.sparkSession
     val keyOpt = keyCols.headOption
     // payload = every interval column except the key copy (the output keeps

@@ -27,7 +27,8 @@ import graft.plans.SimKernelPlan
  *                               [[SimJoin]]; "kernel" is the broadcast dense-accumulator fast path
  *                               ([[graft.plans.SimKernelPlan]], requires Long id columns).
  *                               auto takes the kernel whenever both ids are Long and the right
- *                               side's plan-size estimate fits the 512 MB broadcast guard
+ *                               side's plan-size estimate fits the broadcast bound
+ *                               ([[SizeGuard.MaxBroadcastBytes]], 512 MB)
  *                               (repeated keys or not — its index holds one entry per trigram
  *                               set); only otherwise does it count keys, picking dedup when
  *                               they repeat (distinct-key ratio ≤ 0.5), else direct
@@ -106,11 +107,11 @@ case class SimJoinOptions(
  * Physical strategies, in the order strategy="auto" considers them:
  *
  *  - "kernel": when both ids are Long and the right side's plan-size estimate
- *    fits [[MaxBroadcastBytes]], tokenize the right side once (grouped by
- *    trigram set within each partition, so the driver collects per distinct
- *    set, not per row), broadcast a primitive inverted index with one entry
- *    per distinct trigram set, and scan the left side's partitions with a
- *    dense accumulator and a bounded per-row top-n
+ *    fits [[SizeGuard.MaxBroadcastBytes]], tokenize the right side once
+ *    (grouped by trigram set within each partition, so the driver collects
+ *    per distinct set, not per row), broadcast a primitive inverted index
+ *    with one entry per distinct trigram set, and scan the left side's
+ *    partitions with a dense accumulator and a bounded per-row top-n
  *    ([[graft.plans.SimKernelPlan.keyedPairs]], planned as
  *    [[graft.plans.SimKernelExec]]). No shuffle; the eligibility check reads
  *    plan statistics and runs no job. A later query over an unchanged right
@@ -198,14 +199,10 @@ object SimJoin {
     topNPerRow(scoredPairs(left, lt, right, rt, count(lit(1)), opts), topN, outLeft, outRight, outSim)
   }
 
-  /** Shared broadcast/collect bound for kernel dispatch and the SimSearch
-    * collect guards — one knob if a deployment retunes it. */
-  private[graft] val MaxBroadcastBytes: BigInt = BigInt(512L << 20)
-
   /**
    * Kernel dispatch guard for strategy="auto", checked before any other
    * strategy: take the kernel broadcast path whenever the right side's
-   * Catalyst size estimate is under the 512 MB broadcast guard AND both id
+   * Catalyst size estimate fits [[SizeGuard.MaxBroadcastBytes]] AND both id
    * columns are LongType (the kernel's output id type — dispatching on other
    * id types would silently change the result schema). Reads plan statistics
    * only; runs no Spark job.
@@ -222,8 +219,7 @@ object SimJoin {
       left: DataFrame, leftId: String, right: DataFrame, rightId: String): Boolean = {
     def isLong(df: DataFrame, c: String): Boolean =
       df.schema(df.schema.fieldIndex(c)).dataType == LongType
-    right.queryExecution.optimizedPlan.stats.sizeInBytes <= MaxBroadcastBytes &&
-      isLong(left, leftId) && isLong(right, rightId)
+    SizeGuard.fits(right) && isLong(left, leftId) && isLong(right, rightId)
   }
 
   /** Tokenize side: (id, nTokens, token) exploded relation over the token
@@ -473,14 +469,14 @@ object SimJoin {
    * Reference `threading_dimension="auto"`: parallelize right iff `100·|L| ≤ |R|`
    * (/root/reference/python/polars_sim/dataframe/join.py:107-114). Parallelizing
    * right ≙ replicating (broadcasting) LEFT. We apply the rule on Catalyst's
-   * size-in-bytes estimates and only hint when the broadcast side is plausibly
-   * broadcastable (< 512 MB estimated) — at 100 TB an unconditional hint would OOM.
+   * size-in-bytes estimates and only hint when the broadcast side fits
+   * [[SizeGuard.MaxBroadcastBytes]] — at 100 TB an unconditional hint would OOM.
    */
   private[graft] def autoBroadcastSide(left: DataFrame, right: DataFrame): String = {
-    val l = left.queryExecution.optimizedPlan.stats.sizeInBytes
-    val r = right.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (l * 100 <= r && l <= MaxBroadcastBytes) "left"
-    else if (r * 100 <= l && r <= MaxBroadcastBytes) "right"
+    val l = SizeGuard.estimate(left)
+    val r = SizeGuard.estimate(right)
+    if (l * 100 <= r && l <= SizeGuard.MaxBroadcastBytes) "left"
+    else if (r * 100 <= l && r <= SizeGuard.MaxBroadcastBytes) "right"
     else "none"
   }
 

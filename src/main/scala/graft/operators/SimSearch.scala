@@ -57,53 +57,35 @@ object SimSearch {
         s"got ${dt.catalogString}; map your ids to Long first")
   }
 
-  /** Fail fast BEFORE collecting the query side to the driver: its Catalyst
-    * size estimate must be under the same bound as
-    * [[SimJoin.kernelEligible]]'s broadcast guard ([[SimJoin.MaxBroadcastBytes]]).
-    * The kernel search operators are shaped for queries ≪ corpus; without
-    * this, a user passing a corpus-sized frame as `queries` gets a slow driver
-    * OOM instead of an actionable error.
+  /** Fail fast BEFORE collecting the query side to the driver
+    * ([[SizeGuard.requireFits]]). The kernel search operators are shaped for
+    * queries ≪ corpus; without this, a user passing a corpus-sized frame as
+    * `queries` gets a slow driver OOM instead of an actionable error.
     *
-    * Spark's size-only estimator (no CBO) passes a Filter's child size
-    * through UNCHANGED, so a slim filtered slice of a huge table (e.g.
-    * `corpus.filter(id < 50)`) carries the full table's estimate. To keep the
-    * guard from firing spuriously on exactly that common pattern, an
-    * over-bound estimate is REFINED before rejecting: ONE exact aggregation
-    * `sum(16 + 4·size(vec))` over the (slim, two-column) query projection —
-    * not a sampled mean row width, which under-counts heterogeneous vector
-    * widths and would let a frame past the guard only to OOM the collect.
-    * The single bounded job runs only on the (previously hard-failing)
-    * over-estimate path, scans id+length (never vector values), and rejects
-    * on ACTUAL bytes. `maxQueryBytes` stays a parameter: raise it for
-    * genuinely big query sides, or pass 0 to disable. */
+    * A slim filtered slice of a huge table (e.g. `corpus.filter(id < 50)`)
+    * carries the whole table's filter-blind estimate, so an over-bound
+    * estimate is refined by [[queryBytes]] before rejecting. */
   private[operators] def requireCollectableQueries(
-      queries: DataFrame, qId: String, qVec: String,
-      maxQueryBytes: Long): Unit = {
-    require(maxQueryBytes >= 0L,
-      s"maxQueryBytes must be >= 0 (0 disables the guard), got $maxQueryBytes")
-    if (maxQueryBytes > 0L) {
-      val est = queries.select(col(qId), col(qVec))
-        .queryExecution.optimizedPlan.stats.sizeInBytes
-      if (est > BigInt(maxQueryBytes)) {
-        // exact bytes: 16 per-row overhead (id + header) + 4 per float element;
-        // null vectors count as bare rows (explicit when(): size(null) is
-        // -1 or null depending on spark.sql.legacy.sizeOfNull — use neither).
-        // sum() is null on an empty frame.
-        val actualBytes = queries
-          .agg(coalesce(
-            sum(lit(16L) + lit(4L) *
-              when(col(qVec).isNull, lit(0L)).otherwise(size(col(qVec)).cast("long"))),
-            lit(0L)))
-          .head().getLong(0)
-        require(actualBytes <= maxQueryBytes,
-          s"query side too large to collect to the driver: $actualBytes bytes exceed the " +
-            s"$maxQueryBytes-byte guard (filter-blind Catalyst estimate was $est). These " +
-            "operators broadcast the QUERY side — pass the smaller frame as queries, raise " +
-            "maxQueryBytes (or 0 to disable), or use the fully-relational " +
-            "Dedup.embeddingPairsLsh path which never collects either side")
-      }
-    }
-  }
+      queries: DataFrame, qId: String, qVec: String): Unit =
+    SizeGuard.requireFits(queries.select(col(qId), col(qVec)), "query side",
+      "these operators broadcast the query side: pass the smaller frame as queries, or use " +
+        "the fully-relational Dedup.embeddingPairsLsh path, which never collects either side",
+      exactBytes = Some(queryBytes(qVec)))
+
+  /** Exact collect size of a query side: ONE aggregation `sum(16 + 4·size(vec))`
+    * over the slim projection — 16 bytes per row (id + header) plus 4 per
+    * float element. It scans id and length, never vector values; a sampled
+    * mean row width would under-count heterogeneous vector widths. Null
+    * vectors count as bare rows (explicit when(): size(null) is -1 or null
+    * depending on spark.sql.legacy.sizeOfNull — use neither); sum() is null
+    * on an empty frame. */
+  private[graft] def queryBytes(qVec: String)(queries: DataFrame): Long =
+    queries
+      .agg(coalesce(
+        sum(lit(16L) + lit(4L) *
+          when(col(qVec).isNull, lit(0L)).otherwise(size(col(qVec)).cast("long"))),
+        lit(0L)))
+      .head().getLong(0)
 
   /** Codegen'd native form of [[cosineCol]] ([[graft.functions.CosineSimExpr]])
     * — same arithmetic/null semantics, no ScalaUDF boxing; use in relational
@@ -136,13 +118,12 @@ object SimSearch {
       minCos: Double = Double.NegativeInfinity,
       onlyQueryLess: Boolean = false,
       excludeSelf: Boolean = false,
-      maxQueryBytes: Long = SimJoin.MaxBroadcastBytes.toLong,
       excludeLabelMatch: Option[(String, String)] = None): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     requireIntegralId(corpus, cId, "corpus")
     requireIntegralId(queries, qId, "queries")
-    requireCollectableQueries(queries, qId, qVec, maxQueryBytes)
+    requireCollectableQueries(queries, qId, qVec)
     val spark = corpus.sparkSession
     // label exclusion (the hard-negative shape): a (query, corpus) pair is
     // skipped when BOTH labels are non-null and equal — the label rides the
@@ -211,17 +192,16 @@ object SimSearch {
    * Plan shape: [[broadcastCosine]] — queries broadcast, ONE corpus scan,
    * no shuffle at all (no window: unlike [[topK]] there is no per-query
    * ranking step, so the 100-TB plan is a pure map). Queries side is
-   * collect-guarded by `maxQueryBytes`.
+   * collect-guarded ([[requireCollectableQueries]]).
    *
    * @return (query_id, neighbor_id, cosine rounded to 4)
    */
   def rangeSearch(
       queries: DataFrame, qId: String, qVec: String,
       corpus: DataFrame, cId: String, cVec: String,
-      minCosine: Double, excludeSelf: Boolean = false,
-      maxQueryBytes: Long = SimJoin.MaxBroadcastBytes.toLong): DataFrame =
+      minCosine: Double, excludeSelf: Boolean = false): DataFrame =
     broadcastCosine(corpus, cId, cVec, queries, qId, qVec,
-      minCos = minCosine, excludeSelf = excludeSelf, maxQueryBytes = maxQueryBytes)
+      minCos = minCosine, excludeSelf = excludeSelf)
       .select(col("query_id"), col("neighbor_id"), round(col("__cos"), 4).as("cosine"))
 
   /**
@@ -234,10 +214,8 @@ object SimSearch {
   def topK(
       queries: DataFrame, qId: String, qVec: String,
       corpus: DataFrame, cId: String, cVec: String,
-      k: Int, excludeSelf: Boolean = false,
-      maxQueryBytes: Long = SimJoin.MaxBroadcastBytes.toLong): DataFrame = {
-    val scored = broadcastCosine(corpus, cId, cVec, queries, qId, qVec,
-      excludeSelf = excludeSelf, maxQueryBytes = maxQueryBytes)
+      k: Int, excludeSelf: Boolean = false): DataFrame = {
+    val scored = broadcastCosine(corpus, cId, cVec, queries, qId, qVec, excludeSelf = excludeSelf)
     val w = Window.partitionBy(col("query_id")).orderBy(col("__cos").desc, col("neighbor_id").asc)
     scored.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
       .select(col("query_id"), col("neighbor_id"), round(col("__cos"), 4).as("cosine"))
@@ -410,10 +388,9 @@ object SimSearch {
   def hardNegatives(
       queries: DataFrame, qId: String, qVec: String, qLabel: String,
       corpus: DataFrame, cId: String, cVec: String, cLabel: String,
-      k: Int, excludeSelf: Boolean = true,
-      maxQueryBytes: Long = SimJoin.MaxBroadcastBytes.toLong): DataFrame = {
+      k: Int, excludeSelf: Boolean = true): DataFrame = {
     val scored = broadcastCosine(corpus, cId, cVec, queries, qId, qVec,
-      excludeSelf = excludeSelf, maxQueryBytes = maxQueryBytes,
+      excludeSelf = excludeSelf,
       excludeLabelMatch = Some((qLabel, cLabel)))
     val w = Window.partitionBy(col("query_id")).orderBy(col("__cos").desc, col("neighbor_id").asc)
     scored.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
@@ -440,13 +417,11 @@ object SimSearch {
   def recallReport(
       queries: DataFrame, qId: String, qVec: String,
       corpus: DataFrame, cId: String, cVec: String,
-      k: Int, nPlanes: Int = 8, nTables: Int = 2, excludeSelf: Boolean = false,
-      maxQueryBytes: Long = SimJoin.MaxBroadcastBytes.toLong): DataFrame = {
-    val brute = topK(queries, qId, qVec, corpus, cId, cVec, k,
-        excludeSelf, maxQueryBytes)
+      k: Int, nPlanes: Int = 8, nTables: Int = 2, excludeSelf: Boolean = false): DataFrame = {
+    val brute = topK(queries, qId, qVec, corpus, cId, cVec, k, excludeSelf)
       .select(col("query_id"), col("neighbor_id"))
     val lsh = topKLsh(queries, qId, qVec, corpus, cId, cVec, k,
-        nPlanes, nTables, excludeSelf, maxQueryBytes)
+        nPlanes, nTables, excludeSelf)
       .select(col("query_id"), col("neighbor_id"), lit(1).as("__hit"))
     brute.join(lsh, Seq("query_id", "neighbor_id"), "left")
       .groupBy(col("query_id"))
@@ -519,15 +494,14 @@ object SimSearch {
   def topKLsh(
       queries: DataFrame, qId: String, qVec: String,
       corpus: DataFrame, cId: String, cVec: String,
-      k: Int, nPlanes: Int = 8, nTables: Int = 1, excludeSelf: Boolean = false,
-      maxQueryBytes: Long = SimJoin.MaxBroadcastBytes.toLong): DataFrame = {
+      k: Int, nPlanes: Int = 8, nTables: Int = 1, excludeSelf: Boolean = false): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     require(nPlanes > 0 && nPlanes <= 32, s"need 0 < nPlanes <= 32, got $nPlanes")
     require(nTables > 0, s"need nTables > 0, got $nTables")
     requireIntegralId(corpus, cId, "corpus")
     requireIntegralId(queries, qId, "queries")
-    requireCollectableQueries(queries, qId, qVec, maxQueryBytes)
+    requireCollectableQueries(queries, qId, qVec)
     val spark = corpus.sparkSession
     // one shared map over all tables, keyed (t << nPlanes) | bucket
     val qByBucket: Map[Long, Array[(Long, Array[Float], Double)]] =
@@ -742,8 +716,7 @@ object SimSearch {
       queries: DataFrame, qId: String, qVec: String,
       corpus: DataFrame, cId: String, cVec: String,
       k: Int, nList: Int = 16, nProbe: Int = 4, nIters: Int = 0,
-      excludeSelf: Boolean = false,
-      maxQueryBytes: Long = SimJoin.MaxBroadcastBytes.toLong): DataFrame = {
+      excludeSelf: Boolean = false): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     require(nList > 0 && nProbe > 0 && nProbe <= nList,
@@ -751,7 +724,7 @@ object SimSearch {
     require(nIters >= 0, s"nIters must be >= 0, got $nIters")
     requireIntegralId(corpus, cId, "corpus")
     requireIntegralId(queries, qId, "queries")
-    requireCollectableQueries(queries, qId, qVec, maxQueryBytes)
+    requireCollectableQueries(queries, qId, qVec)
     val spark = corpus.sparkSession
     def withNorm(r: Row): Option[(Long, Array[Float], Double)] = {
       if (r.isNullAt(0) || r.isNullAt(1)) None
@@ -845,7 +818,7 @@ object SimSearch {
    *
    * Plan shape at 100 TB: codebooks ride the closure (nSub·ksub·subDim
    * doubles — KBs); queries collect+broadcast as ADC tables (guarded by
-   * `maxQueryBytes`); ONE corpus scan encodes and scores with no shuffle of
+   * [[requireCollectableQueries]]); ONE corpus scan encodes and scores with no shuffle of
    * the corpus; per-query top-k via the usual window. At petabyte scale the
    * natural extension is persisting the encoded corpus and re-scanning only
    * codes — that split is [[pqEncode]] → [[pqSearchEncoded]]; this fused
@@ -857,12 +830,11 @@ object SimSearch {
       queries: DataFrame, qId: String, qVec: String,
       corpus: DataFrame, cId: String, cVec: String,
       k: Int, nSub: Int = 8, ksub: Int = 16, nIters: Int = 0,
-      excludeSelf: Boolean = false,
-      maxQueryBytes: Long = SimJoin.MaxBroadcastBytes.toLong): DataFrame = {
+      excludeSelf: Boolean = false): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     requireIntegralId(queries, qId, "queries")
-    requireCollectableQueries(queries, qId, qVec, maxQueryBytes)
+    requireCollectableQueries(queries, qId, qVec)
     val spark = corpus.sparkSession
     val model = pqTrainModel(corpus, cId, cVec, nSub, ksub, nIters)
     val slim = corpus.select(col(cId).cast("long"), col(cVec))
@@ -932,11 +904,10 @@ object SimSearch {
       queries: DataFrame, qId: String, qVec: String,
       corpus: DataFrame, cId: String, cVec: String,
       k: Int, shortlist: Int, nSub: Int = 8, ksub: Int = 16, nIters: Int = 0,
-      excludeSelf: Boolean = false,
-      maxQueryBytes: Long = SimJoin.MaxBroadcastBytes.toLong): DataFrame = {
+      excludeSelf: Boolean = false): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
     val sl = topKPq(queries, qId, qVec, corpus, cId, cVec, shortlist,
-        nSub, ksub, nIters, excludeSelf, maxQueryBytes)
+        nSub, ksub, nIters, excludeSelf)
       .select(col("query_id"), col("neighbor_id"))
     exactRerank(sl, queries, qId, qVec, corpus, cId, cVec, k)
   }
@@ -1191,13 +1162,12 @@ object SimSearch {
   def pqSearchEncoded(
       encoded: DataFrame, eId: String, eCodes: String,
       queries: DataFrame, qId: String, qVec: String,
-      model: PqModel, k: Int, excludeSelf: Boolean = false,
-      maxQueryBytes: Long = SimJoin.MaxBroadcastBytes.toLong): DataFrame = {
+      model: PqModel, k: Int, excludeSelf: Boolean = false): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     requireIntegralId(encoded, eId, "encoded corpus")
     requireIntegralId(queries, qId, "queries")
-    requireCollectableQueries(queries, qId, qVec, maxQueryBytes)
+    requireCollectableQueries(queries, qId, qVec)
     val spark = encoded.sparkSession
     val qRows = pqAdcTables(queries, qId, qVec, model)
       .map { case (qid, _, tbl, qSqrt) => (qid, tbl, qSqrt) }
@@ -1267,8 +1237,7 @@ object SimSearch {
       queries: DataFrame, qId: String, qVec: String,
       corpus: DataFrame, cId: String, cVec: String,
       k: Int, nList: Int = 16, nProbe: Int = 4, nIters: Int = 0,
-      nSub: Int = 8, ksub: Int = 16, pqIters: Int = 0, excludeSelf: Boolean = false,
-      maxQueryBytes: Long = SimJoin.MaxBroadcastBytes.toLong): DataFrame = {
+      nSub: Int = 8, ksub: Int = 16, pqIters: Int = 0, excludeSelf: Boolean = false): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     require(nList > 0 && nProbe > 0 && nProbe <= nList,
@@ -1279,7 +1248,7 @@ object SimSearch {
     require(pqIters >= 0, s"pqIters must be >= 0, got $pqIters")
     requireIntegralId(corpus, cId, "corpus")
     requireIntegralId(queries, qId, "queries")
-    requireCollectableQueries(queries, qId, qVec, maxQueryBytes)
+    requireCollectableQueries(queries, qId, qVec)
     val spark = corpus.sparkSession
     val slim = corpus.select(col(cId).cast("long"), col(cVec))
     // one id-ranked collect feeds both seed pools; eligibility filters AFTER
@@ -1380,11 +1349,10 @@ object SimSearch {
       queries: DataFrame, qId: String, qVec: String,
       corpus: DataFrame, cId: String, cVec: String,
       k: Int, shortlist: Int, nList: Int = 16, nProbe: Int = 4, nIters: Int = 0,
-      nSub: Int = 8, ksub: Int = 16, pqIters: Int = 0, excludeSelf: Boolean = false,
-      maxQueryBytes: Long = SimJoin.MaxBroadcastBytes.toLong): DataFrame = {
+      nSub: Int = 8, ksub: Int = 16, pqIters: Int = 0, excludeSelf: Boolean = false): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
     val sl = topKIvfPq(queries, qId, qVec, corpus, cId, cVec, shortlist,
-        nList, nProbe, nIters, nSub, ksub, pqIters, excludeSelf, maxQueryBytes)
+        nList, nProbe, nIters, nSub, ksub, pqIters, excludeSelf)
       .select(col("query_id"), col("neighbor_id"))
     exactRerank(sl, queries, qId, qVec, corpus, cId, cVec, k)
   }
@@ -1422,13 +1390,11 @@ object SimSearch {
   def topKMmr(
       queries: DataFrame, qId: String, qVec: String,
       corpus: DataFrame, cId: String, cVec: String,
-      k: Int, shortlist: Int, lambda: Double = 0.5, excludeSelf: Boolean = false,
-      maxQueryBytes: Long = SimJoin.MaxBroadcastBytes.toLong): DataFrame = {
+      k: Int, shortlist: Int, lambda: Double = 0.5, excludeSelf: Boolean = false): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
     require(lambda >= 0.0 && lambda <= 1.0, s"lambda must be in [0,1], got $lambda")
-    val scored = broadcastCosine(corpus, cId, cVec, queries, qId, qVec,
-      excludeSelf = excludeSelf, maxQueryBytes = maxQueryBytes)
+    val scored = broadcastCosine(corpus, cId, cVec, queries, qId, qVec, excludeSelf = excludeSelf)
     val w = Window.partitionBy(col("query_id")).orderBy(col("__cos").desc, col("neighbor_id").asc)
     val sl = scored.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= shortlist)
       .select(col("query_id"), col("neighbor_id"), col("__cos"))
@@ -1468,14 +1434,12 @@ object SimSearch {
   def topKMrlRerank(
       queries: DataFrame, qId: String, qVec: String,
       corpus: DataFrame, cId: String, cVec: String,
-      k: Int, shortlist: Int, prefixDim: Int, excludeSelf: Boolean = false,
-      maxQueryBytes: Long = SimJoin.MaxBroadcastBytes.toLong): DataFrame = {
+      k: Int, shortlist: Int, prefixDim: Int, excludeSelf: Boolean = false): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
     require(prefixDim > 0, s"prefixDim must be positive, got $prefixDim")
     val qPre = queries.select(col(qId), slice(col(qVec), 1, prefixDim).as(qVec))
     val cPre = corpus.select(col(cId), slice(col(cVec), 1, prefixDim).as(cVec))
-    val sl = topK(qPre, qId, qVec, cPre, cId, cVec, shortlist,
-        excludeSelf, maxQueryBytes)
+    val sl = topK(qPre, qId, qVec, cPre, cId, cVec, shortlist, excludeSelf)
       .select(col("query_id"), col("neighbor_id"))
     exactRerank(sl, queries, qId, qVec, corpus, cId, cVec, k)
   }
@@ -1576,11 +1540,9 @@ object SimSearch {
   def topKSq(
       queries: DataFrame, qId: String, qVec: String,
       corpus: DataFrame, cId: String, cVec: String,
-      k: Int, excludeSelf: Boolean = false,
-      maxQueryBytes: Long = SimJoin.MaxBroadcastBytes.toLong): DataFrame = {
+      k: Int, excludeSelf: Boolean = false): DataFrame = {
     val quantized = Embeddings.quantizeInt8(corpus, cId, cVec)
-    sqSearchEncoded(quantized, cId, "q", queries, qId, qVec, k,
-      excludeSelf, maxQueryBytes)
+    sqSearchEncoded(quantized, cId, "q", queries, qId, qVec, k, excludeSelf)
   }
 
   /**
@@ -1593,13 +1555,12 @@ object SimSearch {
   def sqSearchEncoded(
       encoded: DataFrame, eId: String, eCodes: String,
       queries: DataFrame, qId: String, qVec: String,
-      k: Int, excludeSelf: Boolean = false,
-      maxQueryBytes: Long = SimJoin.MaxBroadcastBytes.toLong): DataFrame = {
+      k: Int, excludeSelf: Boolean = false): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     requireIntegralId(encoded, eId, "encoded corpus")
     requireIntegralId(queries, qId, "queries")
-    requireCollectableQueries(queries, qId, qVec, maxQueryBytes)
+    requireCollectableQueries(queries, qId, qVec)
     val spark = encoded.sparkSession
     val qRows = queries.select(col(qId).cast("long"), col(qVec)).collect()
       .flatMap(vecWithNorm)
@@ -1875,8 +1836,7 @@ object SimSearch {
       encoded: DataFrame, eId: String, eList: String, eCodes: String,
       queries: DataFrame, qId: String, qVec: String,
       ivf: IvfModel, pq: PqModel, k: Int, nProbe: Int = 4,
-      excludeSelf: Boolean = false,
-      maxQueryBytes: Long = SimJoin.MaxBroadcastBytes.toLong): DataFrame = {
+      excludeSelf: Boolean = false): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     // nProbe may exceed the trained list count (null seeds shrink the seed
@@ -1885,7 +1845,7 @@ object SimSearch {
     require(nProbe > 0, s"nProbe must be positive, got $nProbe")
     requireIntegralId(encoded, eId, "encoded corpus")
     requireIntegralId(queries, qId, "queries")
-    requireCollectableQueries(queries, qId, qVec, maxQueryBytes)
+    requireCollectableQueries(queries, qId, qVec)
     val spark = encoded.sparkSession
     val qByList: Map[Int, Array[(Long, Array[Array[Double]], Double)]] =
       pqAdcTables(queries, qId, qVec, pq)
@@ -1969,8 +1929,7 @@ object SimSearch {
       queries: DataFrame, qId: String, qVec: String,
       corpus: DataFrame, cId: String, cVec: String,
       k: Int, nList: Int = 16, nProbe: Int = 4, nIters: Int = 0,
-      nSub: Int = 8, ksub: Int = 16, pqIters: Int = 0, excludeSelf: Boolean = false,
-      maxQueryBytes: Long = SimJoin.MaxBroadcastBytes.toLong): DataFrame = {
+      nSub: Int = 8, ksub: Int = 16, pqIters: Int = 0, excludeSelf: Boolean = false): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     require(nList > 0 && nProbe > 0 && nProbe <= nList,
@@ -1980,7 +1939,7 @@ object SimSearch {
     require(ksub > 0 && ksub <= 256, s"need 0 < ksub <= 256, got $ksub")
     requireIntegralId(corpus, cId, "corpus")
     requireIntegralId(queries, qId, "queries")
-    requireCollectableQueries(queries, qId, qVec, maxQueryBytes)
+    requireCollectableQueries(queries, qId, qVec)
     val spark = corpus.sparkSession
     val slim = corpus.select(col(cId).cast("long"), col(cVec))
     val seedPool = slim.orderBy(col(cId).cast("long"))

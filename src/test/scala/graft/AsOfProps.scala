@@ -1,7 +1,7 @@
 package graft
 
 import org.scalacheck.{Gen, Properties, Test => SCTest}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.operators.AsOfJoin
 
@@ -84,18 +84,18 @@ object AsOfProps extends Properties("AsOfJoin") with LocalSpark {
 
   for (direction <- Seq("backward", "forward", "nearest")) {
     property(s"$direction matches the brute-force oracle (no tolerance)") =
-      forAll(tablesGen) { case (ls, rs) =>
+      forAllNoShrink(tablesGen) { case (ls, rs) =>
         runSpark(ls, rs, direction, 0L) == oracle(ls, rs, direction, 0L)
       }
   }
 
   property("nearest with tolerance matches the brute-force oracle") =
-    forAll(tablesGen, Gen.choose(1L, 8L)) { case ((ls, rs), tol) =>
+    forAllNoShrink(tablesGen, Gen.choose(1L, 8L)) { case ((ls, rs), tol) =>
       runSpark(ls, rs, "nearest", tol) == oracle(ls, rs, "nearest", tol)
     }
 
   property("backward with tolerance matches the brute-force oracle") =
-    forAll(tablesGen, Gen.choose(1L, 8L)) { case ((ls, rs), tol) =>
+    forAllNoShrink(tablesGen, Gen.choose(1L, 8L)) { case ((ls, rs), tol) =>
       runSpark(ls, rs, "backward", tol) == oracle(ls, rs, "backward", tol)
     }
 
@@ -103,14 +103,14 @@ object AsOfProps extends Properties("AsOfJoin") with LocalSpark {
   // the shuffle path) on the same adversarial inputs
   for (direction <- Seq("backward", "forward", "nearest")) {
     property(s"broadcast path: $direction matches the oracle (no tolerance)") =
-      forAll(tablesGen) { case (ls, rs) =>
+      forAllNoShrink(tablesGen) { case (ls, rs) =>
         runSpark(ls, rs, direction, 0L, broadcastPath = true) ==
           oracle(ls, rs, direction, 0L)
       }
   }
 
   property("broadcast path: nearest with tolerance matches the oracle") =
-    forAll(tablesGen, Gen.choose(1L, 8L)) { case ((ls, rs), tol) =>
+    forAllNoShrink(tablesGen, Gen.choose(1L, 8L)) { case ((ls, rs), tol) =>
       runSpark(ls, rs, "nearest", tol, broadcastPath = true) ==
         oracle(ls, rs, "nearest", tol)
     }

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalacheck.{Gen, Properties, Test => SCTest}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.operators.ConnectedComponents
 
@@ -40,7 +40,7 @@ object CCProps extends Properties("ConnectedComponents") with LocalSpark {
   }
 
   property("run and runStar both match the union-find min-label oracle") =
-    forAll(graphGen) { case (n, edgeList) =>
+    forAllNoShrink(graphGen) { case (n, edgeList) =>
       val s = spark; import s.implicits._
       val nodes = (0L until n.toLong).toDF("id")
       val edges = edgeList.toDF("a", "b")
@@ -58,7 +58,7 @@ object CCProps extends Properties("ConnectedComponents") with LocalSpark {
   // flow through every round — and the per-round convergence cadence must
   // both be label-invariant.
   property("runStar: duplicated edges and checkEvery=1 leave labels unchanged") =
-    forAll(graphGen) { case (n, edgeList) =>
+    forAllNoShrink(graphGen) { case (n, edgeList) =>
       val s = spark; import s.implicits._
       val nodes = (0L until n.toLong).toDF("id")
       val expected = unionFind(n, edgeList)
@@ -76,7 +76,7 @@ object CCProps extends Properties("ConnectedComponents") with LocalSpark {
   // trades physical plan (AQE-splittable exchanges vs one window exchange),
   // never labels.
   property("runStar: skewSafe join shape matches the union-find oracle") =
-    forAll(graphGen) { case (n, edgeList) =>
+    forAllNoShrink(graphGen) { case (n, edgeList) =>
       val s = spark; import s.implicits._
       val nodes = (0L until n.toLong).toDF("id")
       val edges = edgeList.toDF("a", "b")

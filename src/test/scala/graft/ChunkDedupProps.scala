@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.scalacheck.{Gen, Properties, Test => SCTest}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.operators.Dedup
 
@@ -45,7 +45,7 @@ object ChunkDedupProps extends Properties("ChunkDedup") with LocalSpark {
       .groupBy(_._1).collect { case (c, occ) if occ.size >= minDocs => c }.toSet
 
   property("CCNet mode matches the brute-force model per doc") =
-    forAll(docsGen) { docs =>
+    forAllNoShrink(docsGen) { docs =>
       val dup = dupKeys(docs, 2)
       val got = Dedup.chunkDedup(df(docs), "doc_id", "text", W, 2)
         .collect().map(r => r.getLong(0).toInt ->
@@ -59,7 +59,7 @@ object ChunkDedupProps extends Properties("ChunkDedup") with LocalSpark {
     }
 
   property("keep-first leaves exactly one corpus-wide copy of each dup key") =
-    forAll(docsGen) { docs =>
+    forAllNoShrink(docsGen) { docs =>
       val dup = dupKeys(docs, 2)
       val got = Dedup.chunkDedup(df(docs), "doc_id", "text", W, 2, keepFirst = true)
         .collect().map(r => r.getLong(0).toInt -> r.getString(1)).toMap

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalacheck.{Gen, Properties, Test => SCTest}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.operators.{Funnel, Packing}
 
@@ -45,7 +45,7 @@ object FunnelPackProps extends Properties("FunnelPack") with LocalSpark {
   }
 
   property("userStages == chained-min model under ts collisions") =
-    forAll(eventsGen) { evs =>
+    forAllNoShrink(eventsGen) { evs =>
       val s = spark
       import s.implicits._
       val df = evs.toDF("event_id", "tsec", "user_id", "event_type")
@@ -66,7 +66,7 @@ object FunnelPackProps extends Properties("FunnelPack") with LocalSpark {
     } yield (g, tok))
   } yield (cap, rows.zipWithIndex.map { case ((g, t), i) => (g, i.toLong, t) })
 
-  property("packGreedy == sequential fold model") = forAll(packGen) { case (cap, rows) =>
+  property("packGreedy == sequential fold model") = forAllNoShrink(packGen) { case (cap, rows) =>
     val s = spark
     import s.implicits._
     val got = Packing.packGreedy(rows.toDF("source", "doc_id", "n"), "source", "doc_id", "n", cap)

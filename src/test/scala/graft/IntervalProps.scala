@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.scalacheck.{Gen, Properties, Test => SCTest}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.operators.IntervalJoin
 
@@ -42,7 +42,7 @@ object IntervalProps extends Properties("IntervalJoin") with LocalSpark {
   }
 
   property("bucketed and broadcast containment equal brute force at any width") =
-    forAll(pointsGen, ivsGen, widthGen) { (ps, ivs, width) =>
+    forAllNoShrink(pointsGen, ivsGen, widthGen) { (ps, ivs, width) =>
       val points = pdf(ps)
       val intervals = idf(ivs)
       val brute = (for {
@@ -62,7 +62,7 @@ object IntervalProps extends Properties("IntervalJoin") with LocalSpark {
     }
 
   property("interval overlap equals brute force exactly once at any width") =
-    forAll(ivsGen, ivsGen, widthGen) { (as, bs, width) =>
+    forAllNoShrink(ivsGen, ivsGen, widthGen) { (as, bs, width) =>
       val s = spark; import s.implicits._
       val a = as.zipWithIndex.map { case ((k, x, y), i) => (i.toLong, k, x, y) }
         .toDF("aid", "k", "as", "ae")

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalacheck.{Gen, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.operators.Dedup
 
@@ -28,7 +28,7 @@ object NoveltyProps extends Properties("NoveltyScores") with LocalSpark {
   }
 
   property("noveltyScores equals the brute first-occurrence model") =
-    forAll(corpusGen) { docs =>
+    forAllNoShrink(corpusGen) { docs =>
       val sh = docs.zipWithIndex.map { case (t, i) => i.toLong -> shingles(t) }
       val first = sh.flatMap { case (id, ss) => ss.map(_ -> id) }
         .groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2).min }
@@ -43,7 +43,7 @@ object NoveltyProps extends Properties("NoveltyScores") with LocalSpark {
     }
 
   property("boilerplateScores equals the brute doc-frequency model") =
-    forAll(corpusGen, Gen.choose(1L, 3L)) { (docs, minDocs) =>
+    forAllNoShrink(corpusGen, Gen.choose(1L, 3L)) { (docs, minDocs) =>
       val sh = docs.zipWithIndex.map { case (t, i) => i.toLong -> shingles(t) }
       val freq = sh.flatMap { case (id, ss) => ss.map(_ -> id) }
         .groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2).distinct.size.toLong }

@@ -730,6 +730,57 @@ class PipelineOpsSpec extends AnyFunSuite with LocalSpark {
     assert(ok.count() == 3)
   }
 
+  test("broadcast operators fail fast on an over-bound side and name the scalable path") {
+    val s = spark
+    import s.implicits._
+    // ~80 GB estimated from spark.range's exact size statistics; no row is read
+    val huge = s.range(10000000000L)
+    def failsNaming(alternative: String)(op: => DataFrame): Unit = {
+      val e = intercept[IllegalArgumentException](op)
+      assert(e.getMessage.contains("too large") && e.getMessage.contains(alternative),
+        e.getMessage)
+    }
+    val events = Seq((1L, 5L)).toDF("k", "ts")
+    val hugeRight = huge.select(lit(1L).as("k"), col("id").as("rts"), col("id").as("v"))
+    failsNaming("use asofJoin") {
+      AsOfJoin.asofJoinBroadcast(events, hugeRight, "k", "ts", "rts", Seq("v" -> "v"), "rts")
+    }
+    val hugeIntervals = huge.select(col("id").as("s"), (col("id") + 1).as("e"))
+    failsNaming("use pointInInterval") {
+      IntervalJoin.pointInIntervalBroadcast(events.select(col("ts")), "ts", hugeIntervals, "s", "e")
+    }
+    val docs = docsDf(Seq((1L, "a document long enough to have one twenty-char gram")))
+    val hugeBench = huge.select(col("id").cast("string").as("text"))
+    failsNaming("report coverage per shard") {
+      Decontaminate.benchCoverage(docs, "text", hugeBench, "text")
+    }
+    failsNaming("use contaminatedSpansBloom") {
+      Decontaminate.contaminatedSpans(docs, "doc_id", "text", hugeBench, "text")
+    }
+    // the Bloom form is linear in its item count (~1.2 bytes per item at
+    // fpp 0.01, so the 256 MB bound lies near 2.2e8 items); the exact-bytes
+    // refinement, with a small bound, judges an over-bound estimate on the
+    // bytes it returns
+    SizeGuard.requireBloomFits(1000L, 0.01, "items", "shard")
+    val bloom = intercept[IllegalArgumentException] {
+      SizeGuard.requireBloomFits(1000000000L, 0.01, "items", "shard the item set")
+    }
+    assert(bloom.getMessage.contains("1000000000 items") &&
+      bloom.getMessage.contains("shard the item set"), bloom.getMessage)
+    // one 2-float row is 16 + 4·2 = 24 bytes; its filter-blind estimate is
+    // that of the 1000-row range it was filtered from
+    val small = s.range(1000L)
+      .select(col("id").as("vec_id"), array(lit(1.0f), lit(2.0f)).as("embedding"))
+      .filter(col("vec_id") < 1)
+    assert(SizeGuard.estimate(small) > BigInt(24))
+    val exact = Some(SimSearch.queryBytes("embedding") _)
+    SizeGuard.requireFits(small, "query side", "probe", bound = 24, exactBytes = exact)
+    val refined = intercept[IllegalArgumentException] {
+      SizeGuard.requireFits(small, "query side", "probe", bound = 23, exactBytes = exact)
+    }
+    assert(refined.getMessage.contains("24 bytes exceed the 23-byte bound"), refined.getMessage)
+  }
+
   test("topKIvf Lloyd refinement: beats the seed quantizer's recall on clustered data") {
     val s = spark
     import s.implicits._

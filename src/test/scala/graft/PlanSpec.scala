@@ -702,7 +702,7 @@ class PlanSpec extends AnyFunSuite with LocalSpark {
   }
 
   test("orders_top_volume broadcasts the HAVING survivors into both joins") {
-    // the hint is SIZE-GUARDED (SimJoin.MaxBroadcastBytes): at test scale the
+    // the hint is SIZE-GUARDED (SizeGuard.fits): at test scale the
     // survivor aggregate fits, so the broadcast must fire; at a scale where
     // the estimate blows the budget the hint is dropped for AQE instead of
     // force-broadcasting an unbounded frame

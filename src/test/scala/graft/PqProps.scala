@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.scalacheck.{Gen, Properties, Test => SCTest}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.operators.SimSearch
 
@@ -43,7 +43,7 @@ object PqProps extends Properties("PqIndex") with LocalSpark {
     out.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
 
   property("pqSearchEncoded over pqEncode equals fused topKPq") =
-    forAll(corpusGen, partsGen, Gen.choose(0, 1)) { (vecs, parts, nIters) =>
+    forAllNoShrink(corpusGen, partsGen, Gen.choose(0, 1)) { (vecs, parts, nIters) =>
       val corpus = df(vecs, parts)
       // the seed rule filters AFTER the id-ranked LIMIT, so training fails
       // fast (documented) unless an ELIGIBLE vector sits in the seed prefix
@@ -64,7 +64,7 @@ object PqProps extends Properties("PqIndex") with LocalSpark {
     }
 
   property("ivfPqSearchEncoded over ivfPqEncode equals fused topKIvfPq") =
-    forAll(corpusGen, partsGen) { (vecs, parts) =>
+    forAllNoShrink(corpusGen, partsGen) { (vecs, parts) =>
       val corpus = df(vecs, parts)
       // ivf seeds from the 2 smallest ids, pq from the 4 smallest (both
       // filter after the LIMIT) — guard the stricter prefix
@@ -93,7 +93,7 @@ object PqProps extends Properties("PqIndex") with LocalSpark {
     Gen.choose(6, 24).flatMap(n => Gen.listOfN(n, posVecGen))
 
   property("topKPqRerank with full-corpus shortlist equals brute-force topK") =
-    forAll(posCorpusGen, partsGen, Gen.choose(0, 1)) { (vecs, parts, nIters) =>
+    forAllNoShrink(posCorpusGen, partsGen, Gen.choose(0, 1)) { (vecs, parts, nIters) =>
       val corpus = df(vecs, parts)
       val q = corpus.filter(col("id") < 4)
       val rerank = resultMap(SimSearch.topKPqRerank(q, "id", "vec",
@@ -105,7 +105,7 @@ object PqProps extends Properties("PqIndex") with LocalSpark {
     }
 
   property("topKIvfPqRerank with full probe + full-corpus shortlist equals brute-force topK") =
-    forAll(posCorpusGen, partsGen, Gen.choose(0, 1)) { (vecs, parts, nIters) =>
+    forAllNoShrink(posCorpusGen, partsGen, Gen.choose(0, 1)) { (vecs, parts, nIters) =>
       val corpus = df(vecs, parts)
       val q = corpus.filter(col("id") < 4)
       val rerank = resultMap(SimSearch.topKIvfPqRerank(q, "id", "vec",
@@ -118,7 +118,7 @@ object PqProps extends Properties("PqIndex") with LocalSpark {
     }
 
   property("rangeSearch with threshold -2 equals the full brute-force pair set") =
-    forAll(posCorpusGen, partsGen) { (vecs, parts) =>
+    forAllNoShrink(posCorpusGen, partsGen) { (vecs, parts) =>
       val corpus = df(vecs, parts)
       val q = corpus.filter(col("id") < 4)
       val range = SimSearch.rangeSearch(q, "id", "vec", corpus, "id", "vec",
@@ -131,7 +131,7 @@ object PqProps extends Properties("PqIndex") with LocalSpark {
     }
 
   property("pqEncode keeps exactly the eligible rows") =
-    forAll(corpusGen, partsGen) { (vecs, parts) =>
+    forAllNoShrink(corpusGen, partsGen) { (vecs, parts) =>
       val corpus = df(vecs, parts)
       val hasEligible = vecs.take(4).exists(v =>
         v != null && v.length == 4 && v.exists(_ != 0.0f))

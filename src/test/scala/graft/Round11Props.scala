@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test => SCTest}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.operators.{Dedup, GraphRank, Packing, Sampling, SimSearch}
 
@@ -30,7 +30,7 @@ object Round11Props extends Properties("Round11") with LocalSpark {
   }
 
   property("cappedQuota: quota <= cap, sum(quota) <= budget, raw preserved") =
-    forAll(rowsGen, Gen.choose(10L, 2000L), Gen.choose(5L, 500L)) {
+    forAllNoShrink(rowsGen, Gen.choose(10L, 2000L), Gen.choose(5L, 500L)) {
       (rows, budget, cap) =>
         val out = Sampling.cappedQuota(wdf(rows), "src", "w", budget, cap).collect()
         out.forall(_.getAs[Long]("quota") <= cap) &&
@@ -39,7 +39,7 @@ object Round11Props extends Properties("Round11") with LocalSpark {
     }
 
   property("quotaFill: per-source selected weight never exceeds the quota") =
-    forAll(rowsGen, Gen.choose(50L, 2000L), Gen.choose(20L, 800L)) {
+    forAllNoShrink(rowsGen, Gen.choose(50L, 2000L), Gen.choose(20L, 800L)) {
       (rows, budget, cap) =>
         val df = wdf(rows)
         val quotas = Sampling.cappedQuota(df, "src", "w", budget, cap)
@@ -51,7 +51,7 @@ object Round11Props extends Properties("Round11") with LocalSpark {
     }
 
   property("bootstrapCounts: partitioning-invariant and replicate-stable") =
-    forAll(Gen.choose(20, 120), Gen.choose(2, 5)) { (n, reps) =>
+    forAllNoShrink(Gen.choose(20, 120), Gen.choose(2, 5)) { (n, reps) =>
       val s = spark; import s.implicits._
       val df = (1L to n.toLong).map(i => (i, "x")).toDF("id", "t")
       val a = Sampling.bootstrapCounts(df, "id", reps)
@@ -67,7 +67,7 @@ object Round11Props extends Properties("Round11") with LocalSpark {
         yield (math.min(a, b), math.max(a, b))))
 
   property("kCorePeel: survivors shrink with rounds; converged peel is a core") =
-    forAll(edgeGen, Gen.choose(1, 3)) { (edges, kcore) =>
+    forAllNoShrink(edgeGen, Gen.choose(1, 3)) { (edges, kcore) =>
       val s = spark; import s.implicits._
       val nodes = (1L to 12L).toDF("id")
       val e = if (edges.isEmpty) List((1L, 2L)) else edges
@@ -90,7 +90,7 @@ object Round11Props extends Properties("Round11") with LocalSpark {
       .map(_.mkString(" ")))
 
   property("groupSignatureSim: estimate in [0,1], matching in [0,32]") =
-    forAll(Gen.choose(2, 8).flatMap(n => Gen.listOfN(n, textGen))) { docs =>
+    forAllNoShrink(Gen.choose(2, 8).flatMap(n => Gen.listOfN(n, textGen))) { docs =>
       val s = spark; import s.implicits._
       val df = docs.zipWithIndex
         .map { case (t, i) => (i.toLong, t, s"g${i % 3}") }
@@ -102,7 +102,7 @@ object Round11Props extends Properties("Round11") with LocalSpark {
     }
 
   property("signFingerprints: hamming(x,x)=0 and symmetric") =
-    forAll(Gen.choose(2, 6), Gen.choose(2, 16)) { (nv, dim) =>
+    forAllNoShrink(Gen.choose(2, 6), Gen.choose(2, 16)) { (nv, dim) =>
       val s = spark; import s.implicits._
       val vecs = (1L to nv.toLong).map { i =>
         (i, Array.tabulate(dim)(d => (((i * 31 + d * 7) % 13) - 6).toFloat))
@@ -116,7 +116,7 @@ object Round11Props extends Properties("Round11") with LocalSpark {
     }
 
   property("rakeTopPhrase: partitioning-invariant, scores positive") =
-    forAll(Gen.choose(2, 8).flatMap(n => Gen.listOfN(n, textGen))) { docs =>
+    forAllNoShrink(Gen.choose(2, 8).flatMap(n => Gen.listOfN(n, textGen))) { docs =>
       val s = spark; import s.implicits._
       val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
@@ -128,7 +128,7 @@ object Round11Props extends Properties("Round11") with LocalSpark {
     }
 
   property("lengthBucketBatches: batches are order-contiguous within bucket") =
-    forAll(Gen.choose(5, 40), Gen.choose(50L, 500L)) { (n, budget) =>
+    forAllNoShrink(Gen.choose(5, 40), Gen.choose(50L, 500L)) { (n, budget) =>
       val s = spark; import s.implicits._
       val df = (1L to n.toLong).map(i => (i, (i * 37L) % 200L + 1L)).toDF("id", "len")
       val out = Packing.lengthBucketBatches(df, "id", "len", 4, budget)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test => SCTest}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.operators.{Bm25, EventStats, GraphRank}
 
@@ -33,7 +33,7 @@ object Round12Props extends Properties("Round12") with LocalSpark {
   }
 
   property("topKMaxScore ≡ topKIndexed on random corpora and queries") =
-    forAll(corpusGen, Gen.choose(1, 3), Gen.choose(1, 6)) { (texts, nq, k) =>
+    forAllNoShrink(corpusGen, Gen.choose(1, 3), Gen.choose(1, 6)) { (texts, nq, k) =>
       val docs = docsDf(texts)
       val queries = docs.filter(col("doc_id") < nq)
       val idx = Bm25.index(docs, "doc_id", "text")
@@ -62,7 +62,7 @@ object Round12Props extends Properties("Round12") with LocalSpark {
   }
 
   property("decayAttribution conserves 1000 milli per touched conversion") =
-    forAll(eventsGen, Gen.choose(1, 6)) { (rows, hl) =>
+    forAllNoShrink(eventsGen, Gen.choose(1, 6)) { (rows, hl) =>
       val ev = evDf(rows)
       val out = EventStats.decayAttribution(ev, "user_id", "event_type",
         "buy", lookbackDays = 7, halfLifeDays = hl).collect()
@@ -77,7 +77,7 @@ object Round12Props extends Properties("Round12") with LocalSpark {
         yield (math.min(a, b), math.max(a, b)))).map(_.distinct)
 
   property("labelPropagation is input-row-order invariant") =
-    forAll(edgesGen, Gen.choose(1, 3)) { (edges, rounds) =>
+    forAllNoShrink(edgesGen, Gen.choose(1, 3)) { (edges, rounds) =>
       val s = spark; import s.implicits._
       val nodes = (1L to 12L).toDF("id")
       def run(es: List[(Long, Long)]): Map[Long, Long] =
@@ -87,7 +87,7 @@ object Round12Props extends Properties("Round12") with LocalSpark {
     }
 
   property("modularity of the one-blob assignment is exactly zero") =
-    forAll(edgesGen.suchThat(_.nonEmpty)) { edges =>
+    forAllNoShrink(edgesGen.suchThat(_.nonEmpty)) { edges =>
       val s = spark; import s.implicits._
       val labels = (1L to 12L).map(n => (n, 1L)).toDF("id", "label")
       val out = GraphRank.modularity(edges.toDF("a", "b"), "a", "b",

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test => SCTest}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.operators.SimSearch
 
@@ -32,7 +32,7 @@ object Round14Props extends Properties("Round14") with LocalSpark {
   }
 
   property("ivfAssign(train slice) == fused kmeansAssign, any vectors") =
-    forAll(setGen, Gen.choose(1, 4), Gen.choose(0, 2)) { (vs, k, iters) =>
+    forAllNoShrink(setGen, Gen.choose(1, 4), Gen.choose(0, 2)) { (vs, k, iters) =>
       val d = df(vs)
       // guard: training needs >= 1 eligible (non-zero) seed among the k
       // smallest ids — mirror the operator's own precondition (the seed
@@ -50,7 +50,7 @@ object Round14Props extends Properties("Round14") with LocalSpark {
     }
 
   property("ivfAssign is total over eligible rows with in-range lists") =
-    forAll(setGen) { vs =>
+    forAllNoShrink(setGen) { vs =>
       val eligibleIds = vs.zipWithIndex.collect {
         case (v, i) if v.exists(_ != 0f) => i.toLong
       }.toSet

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test => SCTest}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.operators.SimSearch
 
@@ -35,7 +35,7 @@ object Round15Props extends Properties("Round15") with LocalSpark {
   }
 
   property("perKeyDistinct == dropDuplicates + window, any partitioning") =
-    forAll(rowsGen, Gen.choose(1, 6), Gen.choose(1, 13)) { (rows, k, nPart) =>
+    forAllNoShrink(rowsGen, Gen.choose(1, 6), Gen.choose(1, 13)) { (rows, k, nPart) =>
       val s = spark
       import s.implicits._
       val df = rows.toDF("key", "id", "score").repartition(nPart)
@@ -57,7 +57,7 @@ object Round15Props extends Properties("Round15") with LocalSpark {
     2 -> Gen.listOf(Gen.oneOf('é', '中', '\n', '\t', '"', '\\', 'a')).map(cs => Some(cs.mkString)))
 
   property("AvroTable round-trips arbitrary nullable string/long rows exactly") =
-    forAll(Gen.choose(1, 30).flatMap(n =>
+    forAllNoShrink(Gen.choose(1, 30).flatMap(n =>
         Gen.listOfN(n, Gen.zip(Gen.choose(-1000L, 1000L), cellGen))),
       Gen.choose(1, 5)) { (rows, nPart) =>
       val s = spark
@@ -82,7 +82,7 @@ object Round15Props extends Properties("Round15") with LocalSpark {
   }
 
   property("ivfDrift lists/counts are exactly the two assignment relations'") =
-    forAll(setGen, setGen) { (trainVs, batchVs) =>
+    forAllNoShrink(setGen, setGen) { (trainVs, batchVs) =>
       // seed window: ivfTrainModel(nList = 3) seeds from the 3 smallest ids
       !trainVs.take(3).exists(_.exists(_ != 0f)) || {
         val train = df(trainVs, 0L)

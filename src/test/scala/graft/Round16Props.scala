@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test => SCTest}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 /**
  * ScalaCheck properties for the round-16 additions:
@@ -29,7 +29,7 @@ object Round16Props extends Properties("Round16") with LocalSpark {
     punct <- Gen.oneOf("", ").", ",", "]!?")
   } yield s"$scheme://$www$host$port$path$query$frag$punct"
 
-  property("urlNormalizeCol is idempotent") = forAll(Gen.listOfN(6, urlGen)) { urls =>
+  property("urlNormalizeCol is idempotent") = forAllNoShrink(Gen.listOfN(6, urlGen)) { urls =>
     val s = spark
     import s.implicits._
     import graft.functions.TextFunctions
@@ -51,7 +51,7 @@ object Round16Props extends Properties("Round16") with LocalSpark {
   } yield rows
 
   property("Avro split size is invisible: any maxSplitBytes reads the same multiset") =
-    forAll(rowsGen, Gen.oneOf(512L, 4096L, 1L << 20)) { (rows, splitBytes) =>
+    forAllNoShrink(rowsGen, Gen.oneOf(512L, 4096L, 1L << 20)) { (rows, splitBytes) =>
       val s = spark
       import s.implicits._
       val df = rows.toDF("id", "t").coalesce(1)

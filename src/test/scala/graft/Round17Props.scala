@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions.col
 import org.scalacheck.{Gen, Properties, Test => SCTest}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 /**
  * Round-17 properties: the scrub-at-the-door transform is IDEMPOTENT —
@@ -36,7 +36,7 @@ object Round17Props extends Properties("Round17") with LocalSpark {
     Gen.listOf(fragGen).map(_.mkString(" ")).map(_.take(400))
 
   property("StreamScrub.scrubbedCol is idempotent on arbitrary PII-ish text") =
-    forAll(Gen.listOfN(8, textGen)) { texts =>
+    forAllNoShrink(Gen.listOfN(8, textGen)) { texts =>
       val s = spark; import s.implicits._
       val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "t")
       val once = graft.streaming.StreamScrub.scrubbedCol(col("t"))

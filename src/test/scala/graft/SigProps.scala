@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.scalacheck.{Gen, Properties, Test => SCTest}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.functions.TextFunctions
 import graft.operators.Dedup
@@ -35,7 +35,7 @@ object SigProps extends Properties("MinHashSig") with LocalSpark {
   }
 
   property("signature-slice band keys equal the UDF band keys") =
-    forAll(docsGen) { docs =>
+    forAllNoShrink(docsGen) { docs =>
       val sigs = Dedup.minHashSignatures(df(docs), "doc_id", "text")
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
       sigs.forall { case (id, sig) =>
@@ -48,7 +48,7 @@ object SigProps extends Properties("MinHashSig") with LocalSpark {
     }
 
   property("estimate is symmetric and ids are ordered") =
-    forAll(docsGen) { docs =>
+    forAllNoShrink(docsGen) { docs =>
       val sigs = Dedup.minHashSignatures(df(docs), "doc_id", "text")
       val out = Dedup.nearDupFromSignatures(sigs, "doc_id", "sig", 0.0)
         .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
@@ -56,7 +56,7 @@ object SigProps extends Properties("MinHashSig") with LocalSpark {
     }
 
   property("self-estimate of any signed doc is 1 (sanity of the estimator)") =
-    forAll(docsGen) { docs =>
+    forAllNoShrink(docsGen) { docs =>
       val base = df(docs)
       val sigs = Dedup.minHashSignatures(base, "doc_id", "text")
       // pair each doc with an offset copy of itself across "corpora"

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, split}
 import org.scalacheck.{Gen, Properties, Test => SCTest}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.operators.{SimJoin, SimJoinOptions}
 
@@ -69,7 +69,7 @@ object SimJoinProps extends Properties("SimJoin") with LocalSpark {
   }
 
   property("l2 sim in (0,1]; count sim >= 1") =
-    forAll(namesGen, namesGen, topNGen) { (ls, rs, topN) =>
+    forAllNoShrink(namesGen, namesGen, topNGen) { (ls, rs, topN) =>
       val (l, r) = (df(ls, 2), df(rs, 2))
       val l2 = run(l, r, SimJoinOptions(topN = topN, strategy = "direct"))
       val cnt = run(l, r, SimJoinOptions(topN = topN, normalization = "count", strategy = "direct"))
@@ -78,14 +78,14 @@ object SimJoinProps extends Properties("SimJoin") with LocalSpark {
     }
 
   property("result size <= |L|*topN and <= topN per left row") =
-    forAll(namesGen, namesGen, topNGen) { (ls, rs, topN) =>
+    forAllNoShrink(namesGen, namesGen, topNGen) { (ls, rs, topN) =>
       val got = run(df(ls, 3), df(rs, 2), SimJoinOptions(topN = topN, strategy = "direct"))
       got.size <= ls.size * topN &&
         got.groupBy(_._1).values.forall(_.size <= topN)
     }
 
   property("results are invariant under input partitioning") =
-    forAll(namesGen, namesGen, partsGen, partsGen, topNGen) { (ls, rs, p1, p2, topN) =>
+    forAllNoShrink(namesGen, namesGen, partsGen, partsGen, topNGen) { (ls, rs, p1, p2, topN) =>
       val opts = SimJoinOptions(topN = topN)
       def all(parts: Int, shufflePartitions: Int) =
         withConf("spark.sql.shuffle.partitions" -> shufflePartitions.toString) {
@@ -97,7 +97,7 @@ object SimJoinProps extends Properties("SimJoin") with LocalSpark {
     }
 
   property("direct, dedup, and kernel strategies agree") =
-    forAll(namesGen, namesGen, topNGen, Gen.oneOf("l2", "count")) { (ls, rs, topN, norm) =>
+    forAllNoShrink(namesGen, namesGen, topNGen, Gen.oneOf("l2", "count")) { (ls, rs, topN, norm) =>
       val (l, r) = (df(ls, 2), df(rs, 3))
       val direct = run(l, r, SimJoinOptions(topN = topN, normalization = norm, strategy = "direct"))
       val dedup = run(l, r, SimJoinOptions(topN = topN, normalization = norm, strategy = "dedup"))
@@ -106,7 +106,7 @@ object SimJoinProps extends Properties("SimJoin") with LocalSpark {
     }
 
   property("strategies agree on repeated keys, shared trigram sets, topN to 12, token cap") =
-    forAll(Gen.oneOf(namesGen, pooledGen), pooledGen, Gen.choose(1, 12), Gen.oneOf("l2", "count"),
+    forAllNoShrink(Gen.oneOf(namesGen, pooledGen), pooledGen, Gen.choose(1, 12), Gen.oneOf("l2", "count"),
         Gen.oneOf(0L, 1L, 2L, 3L, 6L)) { (ls, rs, topN, norm, maxTf) =>
       val (l, r) = (df(ls, 2), df(rs, 3))
       val opts = SimJoinOptions(topN = topN, normalization = norm, maxTokenFrequency = maxTf)
@@ -118,7 +118,7 @@ object SimJoinProps extends Properties("SimJoin") with LocalSpark {
     }
 
   property("pairs(L,R) with no truncation is the mirror of pairs(R,L)") =
-    forAll(namesGen, namesGen) { (ls, rs) =>
+    forAllNoShrink(namesGen, namesGen) { (ls, rs) =>
       val noCut = math.max(ls.size, rs.size) + 1
       val fwd = run(df(ls, 2), df(rs, 2), SimJoinOptions(topN = noCut, strategy = "direct"))
       val bwd = run(df(rs, 2), df(ls, 2), SimJoinOptions(topN = noCut, strategy = "direct"))

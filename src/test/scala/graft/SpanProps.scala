@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.scalacheck.{Gen, Properties, Test => SCTest}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.operators.Dedup
 
@@ -40,7 +40,7 @@ object SpanProps extends Properties("SpanDedup") with LocalSpark {
   }
 
   property("every gram inside a span is corpus-duplicated; flanking grams are not") =
-    forAll(docsGen) { docs =>
+    forAllNoShrink(docsGen) { docs =>
       val spans = Dedup.duplicateSpans(df(docs), "doc_id", "text", k = K)
         .collect().map(r => (r.getLong(0).toInt, r.getLong(1).toInt, r.getLong(2).toInt))
       spans.forall { case (id, s0, e0) =>
@@ -53,7 +53,7 @@ object SpanProps extends Properties("SpanDedup") with LocalSpark {
     }
 
   property("exactIncrement keeps exactly the novel min-id digest holders") =
-    forAll(docsGen, docsGen) { (seenDocs, batchDocs) =>
+    forAllNoShrink(docsGen, docsGen) { (seenDocs, batchDocs) =>
       def md5hex(s: String): String =
         java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
           .map("%02x".format(_)).mkString
@@ -71,7 +71,7 @@ object SpanProps extends Properties("SpanDedup") with LocalSpark {
     }
 
   property("removal conserves length and leaves span-free docs untouched") =
-    forAll(docsGen) { docs =>
+    forAllNoShrink(docsGen) { docs =>
       val spanned = Dedup.duplicateSpans(df(docs), "doc_id", "text", k = K)
         .collect().map(_.getLong(0)).toSet
       val out = Dedup.removeDuplicateSpans(df(docs), "doc_id", "text", k = K)
@@ -84,7 +84,7 @@ object SpanProps extends Properties("SpanDedup") with LocalSpark {
     }
 
   property("hot-document skew: one body shared by many docs stays exact, O(copies) output") =
-    forAll(Gen.choose(50, 150)) { copies0 =>
+    forAllNoShrink(Gen.choose(50, 150)) { copies0 =>
       // Pathological repeated-passage corpus (the SkewBench shape, small):
       // every doc shares one long hot body wrapped in per-doc flanks. A
       // pair-join design would build copies^2 candidates on this input; the
