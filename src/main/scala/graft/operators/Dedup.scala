@@ -1465,27 +1465,14 @@ object Dedup {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val spark = df.sparkSession
-    def withNorm(r: Row): Option[(Long, Array[Float], Double)] = {
-      if (r.isNullAt(0) || r.isNullAt(1)) None
-      else {
-        val v = r.getSeq[Float](1).toArray
-        var n = 0.0; var i = 0
-        while (i < v.length) { n += v(i).toDouble * v(i).toDouble; i += 1 }
-        if (n == 0.0) None else Some((r.getLong(0), v, math.sqrt(n)))
-      }
-    }
     val slim = df.select(col(idCol).cast("long"), col(vecCol))
-    val seeds: Array[(Array[Double], Double)] = slim
-      .orderBy(col(idCol).cast("long")).limit(nList)
-      .collect().flatMap(withNorm).map { case (_, v, n) => (v.map(_.toDouble), n) }
-    require(seeds.nonEmpty, "input has no non-null non-zero vectors to seed centroids")
-    val cents = SimSearch.lloydRefine(slim, seeds, nIters)
+    val cents = SimSearch.trainCentroids(slim, idCol, nList, nIters, side = "input")._1
     val outSchema = StructType(Seq(
       StructField("__cid", LongType), StructField("__cl", IntegerType),
       StructField("__v", ArrayType(FloatType))))
     val rdd = slim.rdd.mapPartitions { rows =>
       rows.flatMap { r =>
-        withNorm(r).map { case (id, v, n) =>
+        SimSearch.vecWithNorm(r).map { case (id, v, n) =>
           Row(id, SimSearch.ivfNearest(cents, v, n), v.toSeq)
         }
       }
@@ -1763,10 +1750,7 @@ object Dedup {
     import org.apache.spark.sql.types._
     val spark = df.sparkSession
     val slim = df.select(col(idCol).cast("long"), col(vecCol))
-    val seeds = slim.orderBy(col(idCol).cast("long")).limit(nList).collect()
-      .flatMap(SimSearch.vecWithNorm).map { case (_, v, n) => (v.map(_.toDouble), n) }
-    require(seeds.nonEmpty, "input has no non-null non-zero vectors to seed centroids")
-    val cents = SimSearch.lloydRefine(slim, seeds, nIters)
+    val cents = SimSearch.trainCentroids(slim, idCol, nList, nIters, side = "input")._1
     val schema = StructType(Seq(
       StructField("cluster", IntegerType), StructField("__id", LongType),
       StructField("__rel", DoubleType), StructField("__v", ArrayType(FloatType))))
@@ -1774,9 +1758,8 @@ object Dedup {
       rows.flatMap { r =>
         SimSearch.vecWithNorm(r).map { case (id, v, n) =>
           val cos = SimSearch.ivfCentroidCos(cents, v, n)
-          var bj = 0; var j = 1
-          while (j < cos.length) { if (cos(j) > cos(bj)) bj = j; j += 1 }
-          Row(bj, id, cos(bj), v.toSeq)
+          val j = SimSearch.argmax(cos)
+          Row(j, id, cos(j), v.toSeq)
         }
       }
     }

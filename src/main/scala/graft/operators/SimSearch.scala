@@ -1,32 +1,41 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.reflect.ClassTag
 
 /**
  * Similarity search over embedding columns (`array<float>`) and strings.
  *
- * ID CONTRACT (kernel-based operators [[topK]]/[[topKLsh]]/[[topKIvf]] and
- * [[broadcastCosine]]): id columns must be integral (castable to Long without
- * nulling) — the kernels carry ids in primitive arrays. Non-integral id
- * columns are rejected at plan time rather than silently nulled to empty
- * results by the cast.
+ * Most vector searches here share one plan, the reference kernel's
+ * "replicate one side, partition the other" (its `src/cossim.rs`):
+ * the (small) query side is collected and broadcast, and ONE scan of the
+ * corpus scores each row against it inside a mapPartitions kernel — no
+ * shuffle of the corpus ([[broadcastQueryScan]] states the id and
+ * eligibility contract they share). They differ only in what they broadcast
+ * and how a corpus row scores:
  *
- *  - [[topK]]     — brute-force cosine top-k: broadcast the (small) query side,
- *                   linear-scan the corpus, per-query top-k via window (Spark
- *                   pushes the rank filter down as WindowGroupLimit). The
- *                   correctness baseline and the right plan when queries ≪ corpus.
- *  - [[topKLsh]]  — the scale path: sign-random-hyperplane LSH buckets on both
- *                   sides; only same-bucket pairs are scored, then per-query
- *                   top-k. Approximate (bucket boundary misses); deterministic
- *                   (hyperplanes derived from a fixed integer formula).
+ *  - [[topK]] / [[rangeSearch]] / [[hardNegatives]] — exact cosine against
+ *                   every query; the correctness baseline and the right plan
+ *                   when queries ≪ corpus.
+ *  - [[topKLsh]]  — sign-random-hyperplane buckets: only same-bucket pairs
+ *                   are scored. Approximate (bucket boundary misses);
+ *                   deterministic (hyperplanes from a fixed integer formula).
+ *  - [[topKIvf]]  — id-seeded Lloyd centroids: each query scores only the
+ *                   inverted lists it probes.
+ *  - [[topKPq]] / [[topKIvfPq]] / [[topKIvfPqResidual]] and the persisted
+ *                   [[pqSearchEncoded]] / [[ivfPqSearchEncoded]] — product
+ *                   quantization, asymmetric-distance (ADC) table lookups.
+ *  - [[topKSq]] / [[sqSearchEncoded]] — int8 scalar-quantized codes.
  *  - [[topKStrings]] — string similarity search = thin wrapper over
  *                   [[SimJoin.keyedPairs]] with the query side broadcast.
  *
- * Cosine is computed as a sequential left-to-right fold in Double (UDF with a
- * tight while-loop — same result as SQL `aggregate`/`list_sum` folds, mirrored
- * in the DuckDB oracle; outputs are rounded before comparison).
+ * Ranked searches cut per query with one window, (score desc, neighbor id
+ * asc) on the unrounded score ([[topKPerQuery]]; Spark pushes the rank filter
+ * down as WindowGroupLimit). Cosine is computed as a sequential left-to-right
+ * fold in Double (the same result as SQL `aggregate`/`list_sum` folds,
+ * mirrored in the DuckDB oracle; outputs are rounded before comparison).
  */
 object SimSearch {
 
@@ -48,13 +57,22 @@ object SimSearch {
 
   def cosineCol(a: Column, b: Column): Column = cosineUdf(a, b)
 
-  /** Enforce the integral-id contract (see object scaladoc). */
-  private[operators] def requireIntegralId(df: DataFrame, idCol: String, side: String): Unit = {
+  /** Enforce the integral-id contract (see [[broadcastQueryScan]]). */
+  private[operators] def requireIntegralId(df: DataFrame, idCol: String, side: String): Unit =
+    requireIntegral(df, idCol, side, "id", "kernel ids are primitive Longs")
+
+  /** Labels compare as Longs inside the kernels: a double label would merge
+    * 1.2 and 1.7, and a string one would fail mid-job under ANSI casts. */
+  private def requireIntegralLabel(df: DataFrame, labelCol: String, side: String): Unit =
+    requireIntegral(df, labelCol, side, "label", "labels compare as Longs")
+
+  private def requireIntegral(
+      df: DataFrame, c: String, side: String, kind: String, why: String): Unit = {
     import org.apache.spark.sql.types._
-    val dt = df.schema(df.schema.fieldIndex(idCol)).dataType
+    val dt = df.schema(df.schema.fieldIndex(c)).dataType
     require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
-      s"$side id column '$idCol' must be an integral type (kernel ids are primitive Longs), " +
-        s"got ${dt.catalogString}; map your ids to Long first")
+      s"$side $kind column '$c' must be an integral type ($why), " +
+        s"got ${dt.catalogString}; map your ${kind}s to Long first")
   }
 
   /** Fail fast BEFORE collecting the query side to the driver
@@ -96,20 +114,100 @@ object SimSearch {
         org.apache.spark.sql.GraftBridge.expression(a),
         org.apache.spark.sql.GraftBridge.expression(b)))
 
+  /** A corpus or query row as the kernels read it: (id, vector, L2 norm). */
+  private type Vec = (Long, Array[Float], Double)
+
+  /** Schema of every [[broadcastQueryScan]]: the unrounded score `__cos`. */
+  private val ScanSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(
+      StructField("query_id", LongType), StructField("neighbor_id", LongType),
+      StructField("__cos", DoubleType)))
+  }
+
   /**
-   * Broadcast cosine kernel — the fast path for all-pairs scoring: collect the
-   * (small) query side as primitive float arrays with precomputed norms,
-   * broadcast it, and scan the corpus with tight primitive loops in
-   * mapPartitions (no per-pair boxing). The double arithmetic is the exact
-   * sequential fold of [[cosineUdf]], so results are bit-identical.
+   * THE broadcast-query scan every kernel search runs: check the ids, guard
+   * and collect the query side into `payload`, broadcast it, and scan the
+   * corpus once in mapPartitions, where `score` turns each corpus row into
+   * (query_id, neighbor_id, __cos) rows. Tight primitive loops, no per-pair
+   * boxing, no shuffle of the corpus.
    *
-   * This is the Spark analogue of the reference's "replicate one side,
-   * partition the other" drivers (/root/reference/src/cossim.rs:143-201) —
-   * per-executor dense kernels under a partitioned outer relation.
+   * ID CONTRACT: both id columns must be integral (castable to Long without
+   * nulling) — the kernels carry ids in primitive arrays. A non-integral id
+   * column is rejected at plan time rather than silently nulled to an empty
+   * result by the cast.
+   *
+   * ELIGIBILITY CONTRACT, shared by every scorer: a row with a null id, a
+   * null vector (or codes), or a zero norm (no defined angle) never scores
+   * on either side; a pair scores only when the two vectors share a
+   * dimension (PQ paths: the codebook's); `excludeSelf` drops query_id =
+   * neighbor_id.
+   *
+   * The query side is guarded by [[requireCollectableQueries]] before
+   * `payload` runs, so an oversized query side fails before any job.
+   *
+   * @param corpusCols the scanned columns after the id (cast to Long), which
+   *        the scorer reads as `r(1)`, `r(2)`, …; a row with a null id or
+   *        null first column is skipped before `score` sees it
+   * @return (query_id: Long, neighbor_id: Long, __cos: Double)
+   */
+  private def broadcastQueryScan[P: ClassTag](
+      queries: DataFrame, qId: String, qVec: String,
+      corpus: DataFrame, cId: String, corpusSide: String, corpusCols: Column*)(
+      payload: => P)(score: (P, Row) => Iterator[Row]): DataFrame = {
+    requireIntegralId(corpus, cId, corpusSide)
+    requireIntegralId(queries, qId, "queries")
+    requireCollectableQueries(queries, qId, qVec)
+    val spark = corpus.sparkSession
+    val bc = spark.sparkContext.broadcast(payload)
+    val slim = corpus.select(col(cId).cast("long") +: corpusCols: _*)
+    val rdd = slim.rdd.mapPartitions { rows =>
+      val p = bc.value
+      rows.flatMap(r => if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty else score(p, r))
+    }
+    spark.createDataFrame(rdd, ScanSchema)
+  }
+
+  /** The exact sequential cosine fold of [[cosineUdf]], norms precomputed
+    * (callers check the dimensions match). */
+  private def cosine(qv: Array[Float], qSqrt: Double, cv: Array[Float], cSqrt: Double): Double = {
+    var dot = 0.0; var d = 0
+    while (d < qv.length) { dot += qv(d).toDouble * cv(d).toDouble; d += 1 }
+    dot / (qSqrt * cSqrt)
+  }
+
+  /** The queries of a float-vector search, read by [[vecWithNorm]]. */
+  private def queryVecs(queries: DataFrame, qId: String, qVec: String): Array[Vec] =
+    queries.select(col(qId).cast("long"), col(qVec)).collect().flatMap(vecWithNorm)
+
+  /**
+   * THE per-query top-k: rank each query's scan rows by (__cos desc,
+   * neighbor_id asc) — the unrounded score with id ties, so the cut is
+   * bit-stable across engines — keep the first k, and select `score`, the
+   * caller's name and rounding of `__cos`.
+   */
+  private def topKPerQuery(scored: DataFrame, k: Int, score: Column): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(col("__cos").desc, col("neighbor_id").asc)
+    scored.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
+      .select(col("query_id"), col("neighbor_id"), score)
+  }
+
+  /** `__cos` rounded to 4 decimals as `name` — the ranked outputs' score. */
+  private def rounded(name: String): Column = round(col("__cos"), 4).as(name)
+
+  /**
+   * Broadcast cosine kernel — the fast path for all-pairs scoring: exact
+   * cosine of every (query, corpus) pair over [[broadcastQueryScan]]. The
+   * double arithmetic is the exact sequential fold of [[cosineUdf]], so
+   * results are bit-identical.
    *
    * @param minCos        emit only pairs with cosine ≥ minCos
    * @param onlyQueryLess emit only pairs with query_id < corpus id (unordered
    *                      pairs exactly once — the near-dup shape)
+   * @param excludeLabelMatch (query, corpus) label columns: a pair is skipped
+   *                      when BOTH labels are non-null and equal — the label
+   *                      rides the broadcast/scan, so the exclusion costs
+   *                      nothing extra in the plan
    * @return (query_id: Long, neighbor_id: Long, __cos: Double)
    */
   private[operators] def broadcastCosine(
@@ -119,65 +217,30 @@ object SimSearch {
       onlyQueryLess: Boolean = false,
       excludeSelf: Boolean = false,
       excludeLabelMatch: Option[(String, String)] = None): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    requireIntegralId(corpus, cId, "corpus")
-    requireIntegralId(queries, qId, "queries")
-    requireCollectableQueries(queries, qId, qVec)
-    val spark = corpus.sparkSession
-    // label exclusion (the hard-negative shape): a (query, corpus) pair is
-    // skipped when BOTH labels are non-null and equal — the label rides the
-    // broadcast/scan, so the exclusion costs nothing extra in the plan
-    val qLabelSel = excludeLabelMatch.map(lc => col(lc._1).cast("long"))
-      .getOrElse(lit(null).cast("long"))
-    val qRows = queries.select(col(qId).cast("long"), col(qVec), qLabelSel)
-      .collect().flatMap { r =>
-      if (r.isNullAt(0) || r.isNullAt(1)) None
-      else {
-        val v = r.getSeq[Float](1).toArray
-        var n = 0.0; var i = 0
-        while (i < v.length) { n += v(i).toDouble * v(i).toDouble; i += 1 }
-        val lbl: java.lang.Long = if (r.isNullAt(2)) null else r.getLong(2)
-        if (n == 0.0) None else Some((r.getLong(0), v, math.sqrt(n), lbl))
-      }
-    }
-    val bc = spark.sparkContext.broadcast(qRows)
-    val outSchema = StructType(Seq(
-      StructField("query_id", LongType), StructField("neighbor_id", LongType),
-      StructField("__cos", DoubleType)))
-    val cLabelSel = excludeLabelMatch.map(lc => col(lc._2).cast("long"))
-      .getOrElse(lit(null).cast("long"))
-    val slim = corpus.select(col(cId).cast("long"), col(cVec), cLabelSel)
-    val rdd = slim.rdd.mapPartitions { rows =>
-      val qs = bc.value
-      rows.flatMap { r =>
-        if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
-        else {
-          val cid = r.getLong(0)
-          val cv = r.getSeq[Float](1).toArray
-          val clbl: java.lang.Long = if (r.isNullAt(2)) null else r.getLong(2)
-          var cn = 0.0; var i = 0
-          while (i < cv.length) { cn += cv(i).toDouble * cv(i).toDouble; i += 1 }
-          if (cn == 0.0) Iterator.empty
-          else {
-            val cSqrt = math.sqrt(cn)
-            qs.iterator.flatMap { case (qid, qv, qSqrt, qlbl) =>
-              if (qv.length != cv.length) None
-              else if (excludeSelf && qid == cid) None
-              else if (onlyQueryLess && qid >= cid) None
-              else if (qlbl != null && clbl != null && qlbl.longValue == clbl.longValue) None
-              else {
-                var dot = 0.0; var d = 0
-                while (d < qv.length) { dot += qv(d).toDouble * cv(d).toDouble; d += 1 }
-                val cos = dot / (qSqrt * cSqrt)
-                if (cos >= minCos) Some(Row(qid, cid, cos)) else None
-              }
+    def label(c: Option[String]): Column =
+      c.map(col(_).cast("long")).getOrElse(lit(null).cast("long"))
+    def labelOf(r: Row): java.lang.Long = if (r.isNullAt(2)) null else r.getLong(2)
+    broadcastQueryScan(queries, qId, qVec, corpus, cId, "corpus",
+        col(cVec), label(excludeLabelMatch.map(_._2))) {
+      queries.select(col(qId).cast("long"), col(qVec), label(excludeLabelMatch.map(_._1)))
+        .collect().flatMap(r => vecWithNorm(r).map(v => (v, labelOf(r))))
+    } { (qs, r) =>
+      vecWithNorm(r) match {
+        case None => Iterator.empty
+        case Some((cid, cv, cSqrt)) =>
+          val clbl = labelOf(r)
+          qs.iterator.flatMap { case ((qid, qv, qSqrt), qlbl) =>
+            if (qv.length != cv.length) None
+            else if (excludeSelf && qid == cid) None
+            else if (onlyQueryLess && qid >= cid) None
+            else if (qlbl != null && clbl != null && qlbl.longValue == clbl.longValue) None
+            else {
+              val cos = cosine(qv, qSqrt, cv, cSqrt)
+              if (cos >= minCos) Some(Row(qid, cid, cos)) else None
             }
           }
-        }
       }
     }
-    spark.createDataFrame(rdd, outSchema)
   }
 
   /**
@@ -191,8 +254,7 @@ object SimSearch {
    *
    * Plan shape: [[broadcastCosine]] — queries broadcast, ONE corpus scan,
    * no shuffle at all (no window: unlike [[topK]] there is no per-query
-   * ranking step, so the 100-TB plan is a pure map). Queries side is
-   * collect-guarded ([[requireCollectableQueries]]).
+   * ranking step, so the 100-TB plan is a pure map).
    *
    * @return (query_id, neighbor_id, cosine rounded to 4)
    */
@@ -202,7 +264,7 @@ object SimSearch {
       minCosine: Double, excludeSelf: Boolean = false): DataFrame =
     broadcastCosine(corpus, cId, cVec, queries, qId, qVec,
       minCos = minCosine, excludeSelf = excludeSelf)
-      .select(col("query_id"), col("neighbor_id"), round(col("__cos"), 4).as("cosine"))
+      .select(col("query_id"), col("neighbor_id"), rounded("cosine"))
 
   /**
    * Brute-force cosine top-k: for each query row, the k corpus rows with highest
@@ -214,12 +276,9 @@ object SimSearch {
   def topK(
       queries: DataFrame, qId: String, qVec: String,
       corpus: DataFrame, cId: String, cVec: String,
-      k: Int, excludeSelf: Boolean = false): DataFrame = {
-    val scored = broadcastCosine(corpus, cId, cVec, queries, qId, qVec, excludeSelf = excludeSelf)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("__cos").desc, col("neighbor_id").asc)
-    scored.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("__cos"), 4).as("cosine"))
-  }
+      k: Int, excludeSelf: Boolean = false): DataFrame =
+    topKPerQuery(broadcastCosine(corpus, cId, cVec, queries, qId, qVec, excludeSelf = excludeSelf),
+      k, rounded("cosine"))
 
   /**
    * FILTERED vector search — top-k among corpus vectors satisfying a
@@ -257,7 +316,8 @@ object SimSearch {
    *
    * Scale shape: [[topK]]'s broadcast-query scoring pass (queries bounded,
    * corpus never shuffled), one label join on the k·|queries| neighbor
-   * relation, one windowed argmax, one confusion rollup.
+   * relation, one windowed argmax, one confusion rollup. Both label columns
+   * must be integral (rejected when the plan is built).
    *
    * @return (label_true, label_pred, n) — BIGINT labels, one row per
    *         confusion cell with ≥ 1 query
@@ -266,6 +326,8 @@ object SimSearch {
       queries: DataFrame, qId: String, qVec: String, qLabel: String,
       corpus: DataFrame, cId: String, cVec: String, cLabel: String,
       k: Int): DataFrame = {
+    requireIntegralLabel(queries, qLabel, "queries")
+    requireIntegralLabel(corpus, cLabel, "corpus")
     val nn = topK(queries, qId, qVec,
       corpus.filter(col(cLabel).isNotNull), cId, cVec, k, excludeSelf = true)
     val votes = nn.join(
@@ -360,12 +422,8 @@ object SimSearch {
       .select(col("query_id"), col("neighbor_id"))
     val qv = queries.select(col(qId).as("query_id"), col(qVec).as("__qv"))
     val cv = corpus.select(col(cId).as("neighbor_id"), col(cVec).as("__cv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("__cos").desc, col("neighbor_id").asc)
-    short.join(broadcast(qv), "query_id").join(cv, "neighbor_id")
-      .withColumn("__cos", cosineSim(col("__qv"), col("__cv")))
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("__cos"), 4).as("cosine"))
+    topKPerQuery(short.join(broadcast(qv), "query_id").join(cv, "neighbor_id")
+      .withColumn("__cos", cosineSim(col("__qv"), col("__cv"))), k, rounded("cosine"))
   }
 
   /**
@@ -375,7 +433,8 @@ object SimSearch {
    * reranker loss learns the most from (Karpukhin et al. 2020 DPR mines
    * negatives exactly this way, from BM25/dense top results that are not
    * positives). Pairs where either label is null are never excluded —
-   * unlabeled corpus rows are eligible negatives for every anchor.
+   * unlabeled corpus rows are eligible negatives for every anchor. Both
+   * label columns must be integral (rejected when the plan is built).
    *
    * Plan shape: identical to [[topK]] (queries broadcast with their labels,
    * ONE corpus scan, window top-k) — the label test runs inside the scan
@@ -389,12 +448,11 @@ object SimSearch {
       queries: DataFrame, qId: String, qVec: String, qLabel: String,
       corpus: DataFrame, cId: String, cVec: String, cLabel: String,
       k: Int, excludeSelf: Boolean = true): DataFrame = {
-    val scored = broadcastCosine(corpus, cId, cVec, queries, qId, qVec,
-      excludeSelf = excludeSelf,
-      excludeLabelMatch = Some((qLabel, cLabel)))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("__cos").desc, col("neighbor_id").asc)
-    scored.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("__cos"), 4).as("cosine"))
+    requireIntegralLabel(queries, qLabel, "queries")
+    requireIntegralLabel(corpus, cLabel, "corpus")
+    topKPerQuery(broadcastCosine(corpus, cId, cVec, queries, qId, qVec,
+        excludeSelf = excludeSelf, excludeLabelMatch = Some((qLabel, cLabel))),
+      k, rounded("cosine"))
   }
 
   /**
@@ -495,90 +553,126 @@ object SimSearch {
       queries: DataFrame, qId: String, qVec: String,
       corpus: DataFrame, cId: String, cVec: String,
       k: Int, nPlanes: Int = 8, nTables: Int = 1, excludeSelf: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
     require(nPlanes > 0 && nPlanes <= 32, s"need 0 < nPlanes <= 32, got $nPlanes")
     require(nTables > 0, s"need nTables > 0, got $nTables")
-    requireIntegralId(corpus, cId, "corpus")
-    requireIntegralId(queries, qId, "queries")
-    requireCollectableQueries(queries, qId, qVec)
-    val spark = corpus.sparkSession
     // one shared map over all tables, keyed (t << nPlanes) | bucket
-    val qByBucket: Map[Long, Array[(Long, Array[Float], Double)]] =
-      queries.select(col(qId).cast("long"), col(qVec)).collect().flatMap { r =>
-        if (r.isNullAt(0) || r.isNullAt(1)) Seq.empty
-        else {
-          val v = r.getSeq[Float](1).toArray
-          var n = 0.0; var i = 0
-          while (i < v.length) { n += v(i).toDouble * v(i).toDouble; i += 1 }
-          if (n == 0.0) Seq.empty
-          else {
-            val entry = (r.getLong(0), v, math.sqrt(n))
-            (0 until nTables).map(t =>
-              ((t.toLong << nPlanes) | bucketOf(v, nPlanes, t * nPlanes), entry))
-          }
-        }
-      }.groupBy(_._1).map { case (b, xs) => b -> xs.map(_._2) }
-    val bc = spark.sparkContext.broadcast(qByBucket)
-    val outSchema = StructType(Seq(
-      StructField("query_id", LongType), StructField("neighbor_id", LongType),
-      StructField("__cos", DoubleType)))
-    val slim = corpus.select(col(cId).cast("long"), col(cVec))
-    val rdd = slim.rdd.mapPartitions { rows =>
-      val buckets = bc.value
-      rows.flatMap { r =>
-        if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
-        else {
-          val cid = r.getLong(0)
-          val cv = r.getSeq[Float](1).toArray
-          // Probe all tables FIRST: the overwhelming majority of corpus rows
-          // collide with no query in any table, and must pay only the bucket
-          // hashes — the O(d) norm pass and the per-row collections are
-          // allocated lazily on the first hit.
-          var seen: java.util.HashSet[Long] = null
-          var out: scala.collection.mutable.ArrayBuffer[Row] = null
-          var cSqrt = 0.0
-          var t = 0
-          while (t < nTables) {
-            buckets.get((t.toLong << nPlanes) | bucketOf(cv, nPlanes, t * nPlanes)) match {
-              case Some(qs) =>
-                if (out == null) {
-                  var cn = 0.0; var i = 0
-                  while (i < cv.length) { cn += cv(i).toDouble * cv(i).toDouble; i += 1 }
-                  if (cn == 0.0) t = nTables // zero vector: skip all tables
-                  else {
-                    cSqrt = math.sqrt(cn)
-                    seen = new java.util.HashSet[Long]()
-                    out = scala.collection.mutable.ArrayBuffer.empty[Row]
-                  }
-                }
-                if (out != null) {
-                  // OR-amplification: score each colliding query once (dedup
-                  // by query id across tables)
-                  var qi = 0
-                  while (qi < qs.length) {
-                    val (qid, qv, qSqrt) = qs(qi)
-                    if (qv.length == cv.length && !(excludeSelf && qid == cid) &&
-                        seen.add(qid)) {
-                      var dot = 0.0; var d = 0
-                      while (d < qv.length) { dot += qv(d).toDouble * cv(d).toDouble; d += 1 }
-                      out += Row(qid, cid, dot / (qSqrt * cSqrt))
-                    }
-                    qi += 1
-                  }
-                }
-              case None => ()
+    val scored = broadcastQueryScan(queries, qId, qVec, corpus, cId, "corpus", col(cVec)) {
+      grouped(queryVecs(queries, qId, qVec).flatMap { case q @ (_, v, _) =>
+        (0 until nTables).map(t => ((t.toLong << nPlanes) | bucketOf(v, nPlanes, t * nPlanes), q))
+      })
+    } { (buckets, r) =>
+      val cid = r.getLong(0)
+      val cv = r.getSeq[Float](1).toArray
+      // Probe all tables FIRST: the overwhelming majority of corpus rows
+      // collide with no query in any table, and must pay only the bucket
+      // hashes — the O(d) norm pass and the per-row collections are
+      // allocated lazily on the first hit.
+      var seen: java.util.HashSet[Long] = null
+      var out: scala.collection.mutable.ArrayBuffer[Row] = null
+      var cSqrt = 0.0
+      var t = 0
+      while (t < nTables) {
+        buckets.get((t.toLong << nPlanes) | bucketOf(cv, nPlanes, t * nPlanes)) match {
+          case Some(qs) =>
+            if (out == null) {
+              var cn = 0.0; var i = 0
+              while (i < cv.length) { cn += cv(i).toDouble * cv(i).toDouble; i += 1 }
+              if (cn == 0.0) t = nTables // zero vector: skip all tables
+              else {
+                cSqrt = math.sqrt(cn)
+                seen = new java.util.HashSet[Long]()
+                out = scala.collection.mutable.ArrayBuffer.empty[Row]
+              }
             }
-            t += 1
-          }
-          if (out == null) Iterator.empty else out.iterator
+            if (out != null) {
+              // OR-amplification: score each colliding query once (dedup
+              // by query id across tables)
+              var qi = 0
+              while (qi < qs.length) {
+                val (qid, qv, qSqrt) = qs(qi)
+                if (qv.length == cv.length && !(excludeSelf && qid == cid) &&
+                    seen.add(qid)) {
+                  out += Row(qid, cid, cosine(qv, qSqrt, cv, cSqrt))
+                }
+                qi += 1
+              }
+            }
+          case None => ()
+        }
+        t += 1
+      }
+      if (out == null) Iterator.empty else out.iterator
+    }
+    topKPerQuery(scored, k, rounded("cosine"))
+  }
+
+  /**
+   * K-MEANS ASSIGNMENT relation — the clustering primitive itself, exposed
+   * (the [[topKIvf]] coarse quantizer and [[ivfReport]] audit both consume
+   * it): deterministic id-ranked seeds, `nIters` integer-quantized
+   * Lloyd passes (see [[topKIvf]] — exact commutative Long sums, so the
+   * refined centroids are partition-invariant and SQL-mirrorable), then one
+   * corpus scan assigning every vector to its (cosine desc, index asc)
+   * nearest centroid. This is the label column semantic-curation pipelines
+   * join everything else against (SemDeDup clusters, per-cluster sampling
+   * quotas, cluster-balanced mixtures).
+   *
+   * Plan shape: centroids ride the mapPartitions closure — the corpus never
+   * shuffles; output is (id, cluster, cos_micro) longs.
+   *
+   * @return (cId, cluster, cos_micro) — cos_micro = floor(cos·10⁶) of the
+   *         vector against its winning centroid. Null/zero-norm rows absent.
+   */
+  def kmeansAssign(
+      corpus: DataFrame, cId: String, cVec: String,
+      k: Int = 16, nIters: Int = 0): DataFrame = {
+    import org.apache.spark.sql.types._
+    require(k > 0, s"k must be positive, got $k")
+    require(nIters >= 0, s"nIters must be >= 0, got $nIters")
+    requireIntegralId(corpus, cId, "corpus")
+    val slim = corpus.select(col(cId).cast("long"), col(cVec))
+    val cents = trainCentroids(slim, cId, k, nIters)._1
+    val schema = StructType(Seq(
+      StructField("__cid", LongType), StructField("cluster", IntegerType),
+      StructField("cos_micro", LongType)))
+    val rdd = slim.rdd.mapPartitions { rows =>
+      rows.flatMap { r =>
+        vecWithNorm(r).map { case (id, v, n) =>
+          val cos = ivfCentroidCos(cents, v, n)
+          val j = argmax(cos)
+          Row(id, j, math.floor(cos(j) * 1000000.0).toLong)
         }
       }
     }
-    val scored = spark.createDataFrame(rdd, outSchema)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("__cos").desc, col("neighbor_id").asc)
-    scored.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("__cos"), 4).as("cosine"))
+    corpus.sparkSession.createDataFrame(rdd, schema)
+      .select(col("__cid").as(cId), col("cluster").cast("long").as("cluster"),
+        col("cos_micro"))
+  }
+
+  /**
+   * IVF quantizer-health audit — the index report a production ANN stack
+   * reads before trusting probe settings: per coarse centroid, how many
+   * vectors landed there (`n_assigned` — skewed occupancy means probes scan
+   * uneven list sizes) and how tight the cluster is (`mean_cos` of each
+   * member to its centroid — low cohesion predicts recall loss at small
+   * nProbe). [[kmeansAssign]] with [[topKIvf]]'s seeding + Lloyd chain, then
+   * one |clusters|-key exchange aggregates. Per-member cosines floor to
+   * integer micro-units so the sums are exact; the mean is the double
+   * division of those exact integers. Empty clusters are absent (nothing
+   * assigned).
+   *
+   * @return (cluster, n_assigned, sum_cos_micro, mean_cos rounded to 6)
+   */
+  def ivfReport(
+      corpus: DataFrame, cId: String, cVec: String,
+      nList: Int = 16, nIters: Int = 0): DataFrame = {
+    require(nList > 0, s"nList must be positive, got $nList")
+    kmeansAssign(corpus, cId, cVec, nList, nIters)
+      .groupBy(col("cluster"))
+      .agg(count(lit(1)).as("n_assigned"), sum(col("cos_micro")).as("sum_cos_micro"))
+      .select(col("cluster"), col("n_assigned"), col("sum_cos_micro"),
+        round(col("sum_cos_micro").cast("double") /
+          (col("n_assigned").cast("double") * lit(1000000.0)), 6).as("mean_cos"))
   }
 
   /**
@@ -611,178 +705,40 @@ object SimSearch {
    * @param nIters Lloyd refinement iterations (0 = raw seed centroids).
    *        Empty or zero-norm clusters keep their previous centroid.
    *        Requires uniform vector dimensions when > 0 (fails fast otherwise).
-   *        (This scaladoc describes [[topKIvf]] below; [[ivfReport]] is its
-   *        health-audit companion.)
+   *        [[ivfReport]] is the quantizer's health audit.
    */
-  /**
-   * IVF quantizer-health audit — the index report a production ANN stack
-   * reads before trusting probe settings: per coarse centroid, how many
-   * vectors landed there (`n_assigned` — skewed occupancy means probes scan
-   * uneven list sizes) and how tight the cluster is (`mean_cos` of each
-   * member to its centroid — low cohesion predicts recall loss at small
-   * nProbe). Same deterministic seeding + Lloyd chain as [[topKIvf]]; one
-   * corpus scan assigns and scores, one |clusters|-key exchange aggregates.
-   * Per-member cosines floor to integer micro-units so the sums are exact;
-   * the mean is the double division of those exact integers. Empty clusters
-   * are absent (nothing assigned).
-   *
-   * @return (cluster, n_assigned, sum_cos_micro, mean_cos rounded to 6)
-   */
-  def ivfReport(
-      corpus: DataFrame, cId: String, cVec: String,
-      nList: Int = 16, nIters: Int = 0): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    require(nList > 0, s"nList must be positive, got $nList")
-    require(nIters >= 0, s"nIters must be >= 0, got $nIters")
-    requireIntegralId(corpus, cId, "corpus")
-    val spark = corpus.sparkSession
-    val slim = corpus.select(col(cId).cast("long"), col(cVec))
-    val seeds = slim.orderBy(col(cId).cast("long")).limit(nList)
-      .collect().flatMap(vecWithNorm).map { case (_, v, n) => (v.map(_.toDouble), n) }
-    require(seeds.nonEmpty, "corpus has no non-null non-zero vectors to seed centroids")
-    val cents = lloydRefine(slim, seeds, nIters)
-    val schema = StructType(Seq(
-      StructField("cluster", IntegerType), StructField("__cm", LongType)))
-    val rdd = slim.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        vecWithNorm(r).map { case (_, v, n) =>
-          val cos = ivfCentroidCos(cents, v, n)
-          var bj = 0; var j = 1
-          while (j < cos.length) { if (cos(j) > cos(bj)) bj = j; j += 1 }
-          Row(bj, math.floor(cos(bj) * 1000000.0).toLong)
-        }
-      }
-    }
-    spark.createDataFrame(rdd, schema)
-      .groupBy(col("cluster"))
-      .agg(count(lit(1)).as("n_assigned"), sum(col("__cm")).as("sum_cos_micro"))
-      .select(col("cluster").cast("long").as("cluster"), col("n_assigned"),
-        col("sum_cos_micro"),
-        round(col("sum_cos_micro").cast("double") /
-          (col("n_assigned").cast("double") * lit(1000000.0)), 6).as("mean_cos"))
-  }
-
-  /**
-   * K-MEANS ASSIGNMENT relation — the clustering primitive itself, exposed
-   * (the [[topKIvf]] coarse quantizer and [[ivfReport]] audit both consume
-   * it internally): deterministic id-ranked seeds, `nIters` integer-quantized
-   * Lloyd passes (see [[topKIvf]] — exact commutative Long sums, so the
-   * refined centroids are partition-invariant and SQL-mirrorable), then one
-   * corpus scan assigning every vector to its (cosine desc, index asc)
-   * nearest centroid. This is the label column semantic-curation pipelines
-   * join everything else against (SemDeDup clusters, per-cluster sampling
-   * quotas, cluster-balanced mixtures).
-   *
-   * Plan shape: centroids broadcast inside a mapPartitions kernel — the
-   * corpus never shuffles; output is (id, cluster, cos_micro) longs.
-   *
-   * @return (cId, cluster, cos_micro) — cos_micro = floor(cos·10⁶) of the
-   *         vector against its winning centroid. Null/zero-norm rows absent.
-   */
-  def kmeansAssign(
-      corpus: DataFrame, cId: String, cVec: String,
-      k: Int = 16, nIters: Int = 0): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    require(k > 0, s"k must be positive, got $k")
-    require(nIters >= 0, s"nIters must be >= 0, got $nIters")
-    requireIntegralId(corpus, cId, "corpus")
-    val spark = corpus.sparkSession
-    val slim = corpus.select(col(cId).cast("long"), col(cVec))
-    val seeds = slim.orderBy(col(cId).cast("long")).limit(k)
-      .collect().flatMap(vecWithNorm).map { case (_, v, n) => (v.map(_.toDouble), n) }
-    require(seeds.nonEmpty, "corpus has no non-null non-zero vectors to seed centroids")
-    val cents = lloydRefine(slim, seeds, nIters)
-    val schema = StructType(Seq(
-      StructField("__cid", LongType), StructField("cluster", IntegerType),
-      StructField("cos_micro", LongType)))
-    val rdd = slim.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        vecWithNorm(r).map { case (id, v, n) =>
-          val cos = ivfCentroidCos(cents, v, n)
-          var bj = 0; var j = 1
-          while (j < cos.length) { if (cos(j) > cos(bj)) bj = j; j += 1 }
-          Row(id, bj, math.floor(cos(bj) * 1000000.0).toLong)
-        }
-      }
-    }
-    spark.createDataFrame(rdd, schema)
-      .select(col("__cid").as(cId), col("cluster").cast("long").as("cluster"),
-        col("cos_micro"))
-  }
-
   def topKIvf(
       queries: DataFrame, qId: String, qVec: String,
       corpus: DataFrame, cId: String, cVec: String,
       k: Int, nList: Int = 16, nProbe: Int = 4, nIters: Int = 0,
       excludeSelf: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
     require(nList > 0 && nProbe > 0 && nProbe <= nList,
       s"need 0 < nProbe <= nList, got nList=$nList nProbe=$nProbe")
     require(nIters >= 0, s"nIters must be >= 0, got $nIters")
-    requireIntegralId(corpus, cId, "corpus")
-    requireIntegralId(queries, qId, "queries")
-    requireCollectableQueries(queries, qId, qVec)
-    val spark = corpus.sparkSession
-    def withNorm(r: Row): Option[(Long, Array[Float], Double)] = {
-      if (r.isNullAt(0) || r.isNullAt(1)) None
-      else {
-        val v = r.getSeq[Float](1).toArray
-        var n = 0.0; var i = 0
-        while (i < v.length) { n += v(i).toDouble * v(i).toDouble; i += 1 }
-        if (n == 0.0) None else Some((r.getLong(0), v, math.sqrt(n)))
+    val scored = broadcastQueryScan(queries, qId, qVec, corpus, cId, "corpus", col(cVec)) {
+      val cents = trainCentroids(corpus.select(col(cId).cast("long"), col(cVec)), cId,
+        nList, nIters)._1
+      // each query enters the lists of its nProbe nearest centroids
+      val probes = queryVecs(queries, qId, qVec).flatMap { case q @ (_, qv, qn) =>
+        nearestLists(cents, qv, qn, nProbe).map(_ -> q)
+      }
+      (cents, grouped(probes))
+    } { case ((cents, byList), r) =>
+      vecWithNorm(r) match {
+        case None => Iterator.empty
+        case Some((cid, cv, cSqrt)) =>
+          byList.get(ivfNearest(cents, cv, cSqrt)) match {
+            case None => Iterator.empty
+            case Some(qs) =>
+              qs.iterator.flatMap { case (qid, qv, qSqrt) =>
+                if (qv.length != cv.length) None
+                else if (excludeSelf && qid == cid) None
+                else Some(Row(qid, cid, cosine(qv, qSqrt, cv, cSqrt)))
+              }
+          }
       }
     }
-    val slim = corpus.select(col(cId).cast("long"), col(cVec))
-    // deterministic coarse centroids: nList smallest corpus ids, index = id
-    // rank (float→double element casts are exact), then nIters Lloyd passes
-    val seeds: Array[(Array[Double], Double)] = corpus
-      .select(col(cId).cast("long"), col(cVec))
-      .orderBy(col(cId).cast("long")).limit(nList)
-      .collect().flatMap(withNorm).map { case (_, v, n) => (v.map(_.toDouble), n) }
-    require(seeds.nonEmpty, "corpus has no non-null non-zero vectors to seed centroids")
-    val cents = lloydRefine(slim, seeds, nIters)
-    // query side: each query enters the maps of its nProbe nearest lists
-    val qRows = queries.select(col(qId).cast("long"), col(qVec)).collect().flatMap(withNorm)
-    val qByList: Map[Int, Array[(Long, Array[Float], Double)]] = qRows.flatMap { case (qid, qv, qn) =>
-      ivfCentroidCos(cents, qv, qn).zipWithIndex
-        .sortBy { case (cos, j) => (-cos, j) }.take(nProbe)
-        .map { case (_, j) => j -> ((qid, qv, qn)) }
-    }.groupBy(_._1).map { case (j, xs) => j -> xs.map(_._2) }
-    // centroids ride the task closure (nList vectors — tiny); the query map is
-    // broadcast once per executor.
-    val bc = spark.sparkContext.broadcast(qByList)
-    val outSchema = StructType(Seq(
-      StructField("query_id", LongType), StructField("neighbor_id", LongType),
-      StructField("__cos", DoubleType)))
-    val rdd = slim.rdd.mapPartitions { rows =>
-      val byList = bc.value
-      rows.flatMap { r =>
-        withNorm(r) match {
-          case None => Iterator.empty
-          case Some((cid, cv, cSqrt)) =>
-            byList.get(ivfNearest(cents, cv, cSqrt)) match {
-              case None => Iterator.empty
-              case Some(qs) =>
-                qs.iterator.flatMap { case (qid, qv, qSqrt) =>
-                  if (qv.length != cv.length) None
-                  else if (excludeSelf && qid == cid) None
-                  else {
-                    var dot = 0.0; var d = 0
-                    while (d < qv.length) { dot += qv(d).toDouble * cv(d).toDouble; d += 1 }
-                    Some(Row(qid, cid, dot / (qSqrt * cSqrt)))
-                  }
-                }
-            }
-        }
-      }
-    }
-    val scored = spark.createDataFrame(rdd, outSchema)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("__cos").desc, col("neighbor_id").asc)
-    scored.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("__cos"), 4).as("cosine"))
+    topKPerQuery(scored, k, rounded("cosine"))
   }
 
   /**
@@ -816,10 +772,10 @@ object SimSearch {
    * dimensions (fails fast); corpus rows of a different dimension than the
    * codebook are skipped.
    *
-   * Plan shape at 100 TB: codebooks ride the closure (nSub·ksub·subDim
-   * doubles — KBs); queries collect+broadcast as ADC tables (guarded by
-   * [[requireCollectableQueries]]); ONE corpus scan encodes and scores with no shuffle of
-   * the corpus; per-query top-k via the usual window. At petabyte scale the
+   * Plan shape at 100 TB: the codebooks (nSub·ksub·subDim doubles — KBs)
+   * broadcast with the queries' ADC tables over [[broadcastQueryScan]]; ONE
+   * corpus scan encodes and scores with no shuffle of the corpus; per-query
+   * top-k via the usual window. At petabyte scale the
    * natural extension is persisting the encoded corpus and re-scanning only
    * codes — that split is [[pqEncode]] → [[pqSearchEncoded]]; this fused
    * form re-encodes per call for single-job simplicity.
@@ -831,49 +787,18 @@ object SimSearch {
       corpus: DataFrame, cId: String, cVec: String,
       k: Int, nSub: Int = 8, ksub: Int = 16, nIters: Int = 0,
       excludeSelf: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    requireIntegralId(queries, qId, "queries")
-    requireCollectableQueries(queries, qId, qVec)
-    val spark = corpus.sparkSession
-    val model = pqTrainModel(corpus, cId, cVec, nSub, ksub, nIters)
-    val slim = corpus.select(col(cId).cast("long"), col(cVec))
-    val qRows = pqAdcTables(queries, qId, qVec, model)
-      .map { case (qid, _, tbl, qSqrt) => (qid, tbl, qSqrt) }
-    val bc = spark.sparkContext.broadcast((model, qRows))
-    val outSchema = StructType(Seq(
-      StructField("query_id", LongType), StructField("neighbor_id", LongType),
-      StructField("__cos", DoubleType)))
-    val dim = model.dim
-    val rdd = slim.rdd.mapPartitions { rows =>
-      val (m0, qs) = bc.value
-      rows.flatMap { r =>
-        vecWithNorm(r) match {
-          case Some((cid, cv, _)) if cv.length == dim =>
-            val codes = pqEncodeVec(cv, m0)
-            var rn2 = 0.0
-            var m = 0
-            while (m < m0.nSub) { rn2 += m0.cn2(m)(codes(m)); m += 1 }
-            if (rn2 == 0.0) Iterator.empty
-            else {
-              val rSqrt = math.sqrt(rn2)
-              qs.iterator.flatMap { case (qid, tbl, qSqrt) =>
-                if (excludeSelf && qid == cid) None
-                else {
-                  var dot = 0.0; var mm = 0
-                  while (mm < m0.nSub) { dot += tbl(mm)(codes(mm)); mm += 1 }
-                  Some(Row(qid, cid, dot / (qSqrt * rSqrt)))
-                }
-              }
-            }
-          case _ => Iterator.empty
-        }
+    val scored = broadcastQueryScan(queries, qId, qVec, corpus, cId, "corpus", col(cVec)) {
+      val model = pqTrainModel(corpus, cId, cVec, nSub, ksub, nIters)
+      (model, pqAdcTables(queries, qId, qVec, model).map(_._3))
+    } { case ((m0, qs), r) =>
+      vecWithNorm(r) match {
+        case Some((cid, cv, _)) if cv.length == m0.dim =>
+          val codes = pqEncodeVec(cv, m0)
+          adcHits(qs, cid, codes, m0.reconNorm2(codes), excludeSelf)
+        case _ => Iterator.empty
       }
     }
-    val scored = spark.createDataFrame(rdd, outSchema)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("__cos").desc, col("neighbor_id").asc)
-    scored.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("__cos"), 4).as("adc_cosine"))
+    topKPerQuery(scored, k, rounded("adc_cosine"))
   }
 
   /**
@@ -926,13 +851,45 @@ object SimSearch {
       while (d < subDim) { n += cw(m)(j)(d) * cw(m)(j)(d); d += 1 }
       n
     }
+    /** Squared norm of the reconstruction of `codes` (m-ascending fold). */
+    private[operators] def reconNorm2(codes: Array[Int]): Double = {
+      var n2 = 0.0; var m = 0
+      while (m < nSub) { n2 += cn2(m)(codes(m)); m += 1 }
+      n2
+    }
   }
+
+  /** One query of an ADC search: its table `tbl(m)(j) = dot(q_m, c_mj)`, its
+    * norm folded per subspace, and the dot's starting term `qc` — dot(q,
+    * c_list) on the residual path, 0 elsewhere. */
+  private final case class AdcQuery(
+      qid: Long, tbl: Array[Array[Double]], qSqrt: Double, qc: Double = 0.0)
+
+  /** THE ADC scorer: one corpus row's `codes` against `qs`, dot = qc +
+    * Σ_m tbl(m)(code_m) (m ascending) over the reconstruction norm
+    * sqrt(`rn2`); a zero-norm reconstruction has no angle and never scores. */
+  private def adcHits(
+      qs: Array[AdcQuery], cid: Long, codes: Array[Int], rn2: Double,
+      excludeSelf: Boolean): Iterator[Row] =
+    if (rn2 <= 0.0) Iterator.empty
+    else {
+      val rSqrt = math.sqrt(rn2)
+      qs.iterator.filterNot(q => excludeSelf && q.qid == cid).map { q =>
+        var dot = q.qc; var m = 0
+        while (m < codes.length) { dot += q.tbl(m)(codes(m)); m += 1 }
+        Row(q.qid, cid, dot / (q.qSqrt * rSqrt))
+      }
+    }
+
+  /** Persisted codes are unsigned bytes, so any ksub ≤ 256 round-trips;
+    * None when `raw` does not hold one code per subspace. */
+  private def decodeCodes(raw: Array[Byte], nSub: Int): Option[Array[Int]] =
+    if (raw.length == nSub) Some(raw.map(_ & 0xFF)) else None
 
   /** Shared row reader for (id: castable-to-long, vec: array<float>) frames:
     * null-safe, returns the vector and its L2 norm, None for null/zero-norm
     * rows (no defined angle — excluded everywhere by the kernel contracts). */
-  private[operators] def vecWithNorm(
-      r: org.apache.spark.sql.Row): Option[(Long, Array[Float], Double)] = {
+  private[operators] def vecWithNorm(r: Row): Option[Vec] = {
     if (r.isNullAt(0) || r.isNullAt(1)) None
     else {
       val v = r.getSeq[Float](1).toArray
@@ -965,11 +922,17 @@ object SimSearch {
     require(nIters >= 0, s"nIters must be >= 0, got $nIters")
     requireIntegralId(corpus, cId, "corpus")
     val slim = corpus.select(col(cId).cast("long"), col(cVec))
-    // eligibility filters AFTER the id-ranked LIMIT (the topKIvf/topKPq
-    // seeding contract: a null among the smallest ids shrinks the seed set)
-    val seeds: Array[Array[Float]] = slim
-      .orderBy(col(cId).cast("long")).limit(ksub)
-      .collect().flatMap(vecWithNorm).map(_._2)
+    trainCodebooks(slim, seedPool(slim, cId, ksub).flatten.map(_._2.map(_.toDouble)),
+      nSub, nIters)
+  }
+
+  /** Codebooks seeded per subspace from `seeds` (one codeword per seed, in
+    * seed order), then refined by `nIters` [[pqRefine]] passes in the space
+    * `toVec` maps each eligible vector into: the vector itself, or its
+    * centroid residual for [[topKIvfPqResidual]]. */
+  private def trainCodebooks(
+      slim: DataFrame, seeds: Array[Array[Double]], nSub: Int, nIters: Int,
+      toVec: (Array[Float], Double) => Array[Double] = (v, _) => v.map(_.toDouble)): PqModel = {
     require(seeds.nonEmpty, "corpus has no non-null non-zero vectors to seed codebooks")
     val dim = seeds(0).length
     require(seeds.forall(_.length == dim),
@@ -977,9 +940,9 @@ object SimSearch {
     require(dim % nSub == 0, s"dim $dim must be divisible by nSub $nSub")
     val subDim = dim / nSub
     val cw0 = Array.tabulate(nSub, seeds.length) { (m, j) =>
-      Array.tabulate(subDim)(d => seeds(j)(m * subDim + d).toDouble)
+      Array.tabulate(subDim)(d => seeds(j)(m * subDim + d))
     }
-    PqModel(nSub, subDim, pqRefine(slim, cw0, dim, nSub, subDim, nIters))
+    PqModel(nSub, subDim, pqRefine(slim, cw0, dim, nSub, subDim, nIters, toVec))
   }
 
   /** Per-subspace argmin-squared-L2 code (d-ascending fold, tie → smaller j)
@@ -1027,18 +990,12 @@ object SimSearch {
   }
 
   /** `nIters` deterministic per-subspace Lloyd passes (see [[pqTrainModel]]).
-    * `toVec` maps each eligible (vector, norm) into the training space — the
-    * identity Double cast by default, the centroid residual for
-    * [[topKIvfPqResidual]]. */
-  private[operators] def pqRefine(
+    * `toVec` maps each eligible (vector, norm) into the training space (see
+    * [[trainCodebooks]]). */
+  private def pqRefine(
       slim: DataFrame, cw0: Array[Array[Array[Double]]],
       dim: Int, nSub: Int, subDim: Int, nIters: Int,
-      toVec: (Array[Float], Double) => Array[Double] = (v, _) => {
-        val a = new Array[Double](v.length)
-        var i = 0
-        while (i < v.length) { a(i) = v(i).toDouble; i += 1 }
-        a
-      }): Array[Array[Array[Double]]] = {
+      toVec: (Array[Float], Double) => Array[Double]): Array[Array[Array[Double]]] = {
     var cw = cw0
     val sc = slim.sparkSession.sparkContext
     var it = 0
@@ -1090,29 +1047,30 @@ object SimSearch {
   }
 
   /** Query-side ADC tables: per eligible uniform-dim query, `tbl(m)(j) =
-    * dot(q_m, c_mj)` (d-ascending folds) plus the query norm — the
-    * collect-and-broadcast half of every PQ search path. Returns the raw
-    * vector too ([[topKIvfPq]] needs it for coarse-list probing). */
-  private[operators] def pqAdcTables(
+    * dot(q_m, c_mj)` (d-ascending folds) plus the query norm folded per
+    * subspace — the collect-and-broadcast half of every PQ search path.
+    * Each entry comes with the raw vector and its sequential
+    * [[vecWithNorm]] norm, which coarse-list probing uses (the DuckDB
+    * oracles mirror each of the two norm folds where it is used). */
+  private def pqAdcTables(
       queries: DataFrame, qId: String, qVec: String,
-      model: PqModel): Array[(Long, Array[Float], Array[Array[Double]], Double)] = {
+      model: PqModel): Array[(Array[Float], Double, AdcQuery)] = {
     val nSub = model.nSub; val subDim = model.subDim
-    queries.select(col(qId).cast("long"), col(qVec)).collect()
-      .flatMap(vecWithNorm).filter(_._2.length == model.dim).map { case (qid, qv, _) =>
-        val tbl = Array.tabulate(nSub, model.nCodes) { (m, j) =>
-          var dot = 0.0; var d = 0
-          while (d < subDim) { dot += qv(m * subDim + d).toDouble * model.cw(m)(j)(d); d += 1 }
-          dot
-        }
-        var qn2 = 0.0
-        var m = 0
-        while (m < nSub) {
-          var sn = 0.0; var d = 0
-          while (d < subDim) { val x = qv(m * subDim + d).toDouble; sn += x * x; d += 1 }
-          qn2 += sn; m += 1
-        }
-        (qid, qv, tbl, math.sqrt(qn2))
+    queryVecs(queries, qId, qVec).filter(_._2.length == model.dim).map { case (qid, qv, qn) =>
+      val tbl = Array.tabulate(nSub, model.nCodes) { (m, j) =>
+        var dot = 0.0; var d = 0
+        while (d < subDim) { dot += qv(m * subDim + d).toDouble * model.cw(m)(j)(d); d += 1 }
+        dot
       }
+      var qn2 = 0.0
+      var m = 0
+      while (m < nSub) {
+        var sn = 0.0; var d = 0
+        while (d < subDim) { val x = qv(m * subDim + d).toDouble; sn += x * x; d += 1 }
+        qn2 += sn; m += 1
+      }
+      (qv, qn, AdcQuery(qid, tbl, math.sqrt(qn2)))
+    }
   }
 
   /**
@@ -1127,7 +1085,6 @@ object SimSearch {
    * them.
    */
   def pqEncode(corpus: DataFrame, cId: String, cVec: String, model: PqModel): DataFrame = {
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     requireIntegralId(corpus, cId, "corpus")
     val spark = corpus.sparkSession
@@ -1163,53 +1120,14 @@ object SimSearch {
       encoded: DataFrame, eId: String, eCodes: String,
       queries: DataFrame, qId: String, qVec: String,
       model: PqModel, k: Int, excludeSelf: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    requireIntegralId(encoded, eId, "encoded corpus")
-    requireIntegralId(queries, qId, "queries")
-    requireCollectableQueries(queries, qId, qVec)
-    val spark = encoded.sparkSession
-    val qRows = pqAdcTables(queries, qId, qVec, model)
-      .map { case (qid, _, tbl, qSqrt) => (qid, tbl, qSqrt) }
-    val bc = spark.sparkContext.broadcast((model, qRows))
-    val outSchema = StructType(Seq(
-      StructField("query_id", LongType), StructField("neighbor_id", LongType),
-      StructField("__cos", DoubleType)))
-    val rdd = encoded.select(col(eId).cast("long"), col(eCodes)).rdd.mapPartitions { rows =>
-      val (m0, qs) = bc.value
-      rows.flatMap { r =>
-        if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
-        else {
-          val cid = r.getLong(0)
-          val raw = r.getAs[Array[Byte]](1)
-          if (raw.length != m0.nSub) Iterator.empty
-          else {
-            val codes = new Array[Int](m0.nSub)
-            var m = 0
-            while (m < m0.nSub) { codes(m) = raw(m) & 0xFF; m += 1 }
-            var rn2 = 0.0
-            m = 0
-            while (m < m0.nSub) { rn2 += m0.cn2(m)(codes(m)); m += 1 }
-            if (rn2 == 0.0) Iterator.empty
-            else {
-              val rSqrt = math.sqrt(rn2)
-              qs.iterator.flatMap { case (qid, tbl, qSqrt) =>
-                if (excludeSelf && qid == cid) None
-                else {
-                  var dot = 0.0; var mm = 0
-                  while (mm < m0.nSub) { dot += tbl(mm)(codes(mm)); mm += 1 }
-                  Some(Row(qid, cid, dot / (qSqrt * rSqrt)))
-                }
-              }
-            }
-          }
-        }
-      }
+    val scored = broadcastQueryScan(queries, qId, qVec, encoded, eId, "encoded corpus",
+        col(eCodes)) {
+      (model, pqAdcTables(queries, qId, qVec, model).map(_._3))
+    } { case ((m0, qs), r) =>
+      decodeCodes(r.getAs[Array[Byte]](1), m0.nSub).iterator.flatMap(codes =>
+        adcHits(qs, r.getLong(0), codes, m0.reconNorm2(codes), excludeSelf))
     }
-    val scored = spark.createDataFrame(rdd, outSchema)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("__cos").desc, col("neighbor_id").asc)
-    scored.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("__cos"), 4).as("adc_cosine"))
+    topKPerQuery(scored, k, rounded("adc_cosine"))
   }
 
   /**
@@ -1238,87 +1156,35 @@ object SimSearch {
       corpus: DataFrame, cId: String, cVec: String,
       k: Int, nList: Int = 16, nProbe: Int = 4, nIters: Int = 0,
       nSub: Int = 8, ksub: Int = 16, pqIters: Int = 0, excludeSelf: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
     require(nList > 0 && nProbe > 0 && nProbe <= nList,
       s"need 0 < nProbe <= nList, got nList=$nList nProbe=$nProbe")
     require(nIters >= 0, s"nIters must be >= 0, got $nIters")
     require(nSub > 0, s"nSub must be positive, got $nSub")
     require(ksub > 0 && ksub <= 256, s"need 0 < ksub <= 256, got $ksub")
     require(pqIters >= 0, s"pqIters must be >= 0, got $pqIters")
-    requireIntegralId(corpus, cId, "corpus")
-    requireIntegralId(queries, qId, "queries")
-    requireCollectableQueries(queries, qId, qVec)
-    val spark = corpus.sparkSession
-    val slim = corpus.select(col(cId).cast("long"), col(cVec))
-    // one id-ranked collect feeds both seed pools; eligibility filters AFTER
-    // each LIMIT (a null among the smallest ids shrinks that seed set, it
-    // does not pull in the next id — the topKIvf/topKPq seeding contract)
-    val seedPool = slim.orderBy(col(cId).cast("long"))
-      .limit(math.max(nList, ksub)).collect()
-    val centSeeds = seedPool.take(nList).flatMap(vecWithNorm)
-      .map { case (_, v, n) => (v.map(_.toDouble), n) }
-    val pqSeeds = seedPool.take(ksub).flatMap(vecWithNorm).map(_._2)
-    require(centSeeds.nonEmpty && pqSeeds.nonEmpty,
-      "corpus has no non-null non-zero vectors to seed")
-    val cents = lloydRefine(slim, centSeeds, nIters)
-    val dim = pqSeeds(0).length
-    require(pqSeeds.forall(_.length == dim),
-      s"codebook seeds must share one dimension, got ${pqSeeds.map(_.length).distinct.toSeq}")
-    require(dim % nSub == 0, s"dim $dim must be divisible by nSub $nSub")
-    val subDim = dim / nSub
-    val cw0 = Array.tabulate(nSub, pqSeeds.length) { (m, j) =>
-      Array.tabulate(subDim)(d => pqSeeds(j)(m * subDim + d).toDouble)
-    }
-    val model = PqModel(nSub, subDim, pqRefine(slim, cw0, dim, nSub, subDim, pqIters))
-    // queries: ADC table + probe lists; grouped by probed list
-    val qByList: Map[Int, Array[(Long, Array[Array[Double]], Double)]] =
-      pqAdcTables(queries, qId, qVec, model)
-        .flatMap { case (qid, qv, tbl, qSqrt) =>
-          var qn2 = 0.0; var i = 0
-          while (i < qv.length) { qn2 += qv(i).toDouble * qv(i).toDouble; i += 1 }
-          val entry = (qid, tbl, qSqrt)
-          ivfCentroidCos(cents, qv, math.sqrt(qn2)).zipWithIndex
-            .sortBy { case (cos, j) => (-cos, j) }.take(nProbe)
-            .map { case (_, j) => j -> entry }
-        }.groupBy(_._1).map { case (j, xs) => j -> xs.map(_._2) }
-    val bc = spark.sparkContext.broadcast((model, qByList))
-    val outSchema = StructType(Seq(
-      StructField("query_id", LongType), StructField("neighbor_id", LongType),
-      StructField("__cos", DoubleType)))
-    val rdd = slim.rdd.mapPartitions { rows =>
-      val (m0, byList) = bc.value
-      rows.flatMap { r =>
-        vecWithNorm(r) match {
-          case Some((cid, cv, cSqrt)) if cv.length == dim =>
-            byList.get(ivfNearest(cents, cv, cSqrt)) match {
-              case None => Iterator.empty
-              case Some(qs) =>
-                val codes = pqEncodeVec(cv, m0)
-                var rn2 = 0.0
-                var m = 0
-                while (m < m0.nSub) { rn2 += m0.cn2(m)(codes(m)); m += 1 }
-                if (rn2 == 0.0) Iterator.empty
-                else {
-                  val rSqrt = math.sqrt(rn2)
-                  qs.iterator.flatMap { case (qid, tbl, qSqrt) =>
-                    if (excludeSelf && qid == cid) None
-                    else {
-                      var dot = 0.0; var mm = 0
-                      while (mm < m0.nSub) { dot += tbl(mm)(codes(mm)); mm += 1 }
-                      Some(Row(qid, cid, dot / (qSqrt * rSqrt)))
-                    }
-                  }
-                }
-            }
-          case _ => Iterator.empty
-        }
+    val scored = broadcastQueryScan(queries, qId, qVec, corpus, cId, "corpus", col(cVec)) {
+      val slim = corpus.select(col(cId).cast("long"), col(cVec))
+      // one id-ranked collect seeds both quantizers
+      val (cents, pool) = trainCentroids(slim, cId, nList, nIters, poolSize = ksub)
+      val model = trainCodebooks(slim, pool.take(ksub).flatten.map(_._2.map(_.toDouble)),
+        nSub, pqIters)
+      val probes = pqAdcTables(queries, qId, qVec, model).flatMap { case (qv, qn, q) =>
+        nearestLists(cents, qv, qn, nProbe).map(_ -> q)
+      }
+      (cents, model, grouped(probes))
+    } { case ((cents, m0, byList), r) =>
+      vecWithNorm(r) match {
+        case Some((cid, cv, cSqrt)) if cv.length == m0.dim =>
+          byList.get(ivfNearest(cents, cv, cSqrt)) match {
+            case None => Iterator.empty
+            case Some(qs) =>
+              val codes = pqEncodeVec(cv, m0)
+              adcHits(qs, cid, codes, m0.reconNorm2(codes), excludeSelf)
+          }
+        case _ => Iterator.empty
       }
     }
-    val scored = spark.createDataFrame(rdd, outSchema)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("__cos").desc, col("neighbor_id").asc)
-    scored.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("__cos"), 4).as("adc_cosine"))
+    topKPerQuery(scored, k, rounded("adc_cosine"))
   }
 
   /**
@@ -1394,10 +1260,9 @@ object SimSearch {
     require(k > 0, s"k must be positive, got $k")
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
     require(lambda >= 0.0 && lambda <= 1.0, s"lambda must be in [0,1], got $lambda")
-    val scored = broadcastCosine(corpus, cId, cVec, queries, qId, qVec, excludeSelf = excludeSelf)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("__cos").desc, col("neighbor_id").asc)
-    val sl = scored.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= shortlist)
-      .select(col("query_id"), col("neighbor_id"), col("__cos"))
+    val sl = topKPerQuery(
+      broadcastCosine(corpus, cId, cVec, queries, qId, qVec, excludeSelf = excludeSelf),
+      shortlist, col("__cos"))
     val c = corpus.select(col(cId).cast("long").as("neighbor_id"), col(cVec).as("__cv"))
     val cand = c.join(broadcast(sl), Seq("neighbor_id"))
     val sel = udf { (cands: Seq[org.apache.spark.sql.Row]) =>
@@ -1515,12 +1380,9 @@ object SimSearch {
     val q = queries.select(col(qId).cast("long").as("query_id"), col(qVec).as("__qv"))
     val c = corpus.select(col(cId).cast("long").as("neighbor_id"), col(cVec).as("__cv"))
     val pairs = shortlist.join(q, Seq("query_id"))
-    val scored = c.join(broadcast(pairs), Seq("neighbor_id"))
+    topKPerQuery(c.join(broadcast(pairs), Seq("neighbor_id"))
       .withColumn("__cos", cosineSim(col("__qv"), col("__cv")))
-      .filter(col("__cos").isNotNull)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("__cos").desc, col("neighbor_id").asc)
-    scored.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("__cos"), 4).as("cosine"))
+      .filter(col("__cos").isNotNull), k, rounded("cosine"))
   }
 
   /**
@@ -1556,46 +1418,28 @@ object SimSearch {
       encoded: DataFrame, eId: String, eCodes: String,
       queries: DataFrame, qId: String, qVec: String,
       k: Int, excludeSelf: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    requireIntegralId(encoded, eId, "encoded corpus")
-    requireIntegralId(queries, qId, "queries")
-    requireCollectableQueries(queries, qId, qVec)
-    val spark = encoded.sparkSession
-    val qRows = queries.select(col(qId).cast("long"), col(qVec)).collect()
-      .flatMap(vecWithNorm)
-    val bc = spark.sparkContext.broadcast(qRows)
-    val outSchema = StructType(Seq(
-      StructField("query_id", LongType), StructField("neighbor_id", LongType),
-      StructField("__cos", DoubleType)))
-    val rdd = encoded.select(col(eId).cast("long"), col(eCodes)).rdd.mapPartitions { rows =>
-      val qs = bc.value
-      rows.flatMap { r =>
-        if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
-        else {
-          val cid = r.getLong(0)
-          val q = r.getSeq[Int](1).toArray
-          var cn2 = 0.0; var i = 0
-          while (i < q.length) { cn2 += q(i).toDouble * q(i).toDouble; i += 1 }
-          if (cn2 == 0.0) Iterator.empty
+    val scored = broadcastQueryScan(queries, qId, qVec, encoded, eId, "encoded corpus",
+        col(eCodes)) {
+      queryVecs(queries, qId, qVec)
+    } { (qs, r) =>
+      val cid = r.getLong(0)
+      val q = r.getSeq[Int](1).toArray
+      var cn2 = 0.0; var i = 0
+      while (i < q.length) { cn2 += q(i).toDouble * q(i).toDouble; i += 1 }
+      if (cn2 == 0.0) Iterator.empty
+      else {
+        val cSqrt = math.sqrt(cn2)
+        qs.iterator.flatMap { case (qid, qv, qSqrt) =>
+          if (qv.length != q.length || (excludeSelf && qid == cid)) None
           else {
-            val cSqrt = math.sqrt(cn2)
-            qs.iterator.flatMap { case (qid, qv, qSqrt) =>
-              if (qv.length != q.length || (excludeSelf && qid == cid)) None
-              else {
-                var dot = 0.0; var d = 0
-                while (d < q.length) { dot += qv(d).toDouble * q(d).toDouble; d += 1 }
-                Some(Row(qid, cid, dot / (qSqrt * cSqrt)))
-              }
-            }
+            var dot = 0.0; var d = 0
+            while (d < q.length) { dot += qv(d).toDouble * q(d).toDouble; d += 1 }
+            Some(Row(qid, cid, dot / (qSqrt * cSqrt)))
           }
         }
       }
     }
-    val scored = spark.createDataFrame(rdd, outSchema)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("__cos").desc, col("neighbor_id").asc)
-    scored.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("__cos"), 4).as("sq_cosine"))
+    topKPerQuery(scored, k, rounded("sq_cosine"))
   }
 
   /** Trained coarse quantizer: the IVF centroids with their norms. Small
@@ -1614,12 +1458,8 @@ object SimSearch {
     require(nList > 0, s"nList must be positive, got $nList")
     require(nIters >= 0, s"nIters must be >= 0, got $nIters")
     requireIntegralId(corpus, cId, "corpus")
-    val slim = corpus.select(col(cId).cast("long"), col(cVec))
-    val seeds = slim.orderBy(col(cId).cast("long")).limit(nList)
-      .collect().flatMap(vecWithNorm)
-      .map { case (_, v, n) => (v.map(_.toDouble), n) }
-    require(seeds.nonEmpty, "corpus has no non-null non-zero vectors to seed centroids")
-    IvfModel(lloydRefine(slim, seeds, nIters))
+    IvfModel(trainCentroids(corpus.select(col(cId).cast("long"), col(cVec)), cId,
+      nList, nIters)._1)
   }
 
   /**
@@ -1798,7 +1638,6 @@ object SimSearch {
   def ivfPqEncode(
       corpus: DataFrame, cId: String, cVec: String,
       ivf: IvfModel, pq: PqModel): DataFrame = {
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     requireIntegralId(corpus, cId, "corpus")
     val spark = corpus.sparkSession
@@ -1837,68 +1676,26 @@ object SimSearch {
       queries: DataFrame, qId: String, qVec: String,
       ivf: IvfModel, pq: PqModel, k: Int, nProbe: Int = 4,
       excludeSelf: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
     // nProbe may exceed the trained list count (null seeds shrink the seed
-    // set — the shared seeding contract); probing clamps naturally via
-    // take(nProbe), exactly like the fused topKIvfPq
+    // set — the shared seeding contract); probing clamps to every list,
+    // exactly like the fused topKIvfPq
     require(nProbe > 0, s"nProbe must be positive, got $nProbe")
-    requireIntegralId(encoded, eId, "encoded corpus")
-    requireIntegralId(queries, qId, "queries")
-    requireCollectableQueries(queries, qId, qVec)
-    val spark = encoded.sparkSession
-    val qByList: Map[Int, Array[(Long, Array[Array[Double]], Double)]] =
-      pqAdcTables(queries, qId, qVec, pq)
-        .flatMap { case (qid, qv, tbl, qSqrt) =>
-          var qn2 = 0.0; var i = 0
-          while (i < qv.length) { qn2 += qv(i).toDouble * qv(i).toDouble; i += 1 }
-          val entry = (qid, tbl, qSqrt)
-          ivfCentroidCos(ivf.cents, qv, math.sqrt(qn2)).zipWithIndex
-            .sortBy { case (cos, j) => (-cos, j) }.take(nProbe)
-            .map { case (_, j) => j -> entry }
-        }.groupBy(_._1).map { case (j, xs) => j -> xs.map(_._2) }
-    val bc = spark.sparkContext.broadcast((pq, qByList))
-    val outSchema = StructType(Seq(
-      StructField("query_id", LongType), StructField("neighbor_id", LongType),
-      StructField("__cos", DoubleType)))
-    val rdd = encoded.select(col(eId).cast("long"), col(eList).cast("int"), col(eCodes))
-      .rdd.mapPartitions { rows =>
-        val (m0, byList) = bc.value
-        rows.flatMap { r =>
-          if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)) Iterator.empty
-          else byList.get(r.getInt(1)) match {
-            case None => Iterator.empty
-            case Some(qs) =>
-              val cid = r.getLong(0)
-              val raw = r.getAs[Array[Byte]](2)
-              if (raw.length != m0.nSub) Iterator.empty
-              else {
-                val codes = new Array[Int](m0.nSub)
-                var m = 0
-                while (m < m0.nSub) { codes(m) = raw(m) & 0xFF; m += 1 }
-                var rn2 = 0.0
-                m = 0
-                while (m < m0.nSub) { rn2 += m0.cn2(m)(codes(m)); m += 1 }
-                if (rn2 == 0.0) Iterator.empty
-                else {
-                  val rSqrt = math.sqrt(rn2)
-                  qs.iterator.flatMap { case (qid, tbl, qSqrt) =>
-                    if (excludeSelf && qid == cid) None
-                    else {
-                      var dot = 0.0; var mm = 0
-                      while (mm < m0.nSub) { dot += tbl(mm)(codes(mm)); mm += 1 }
-                      Some(Row(qid, cid, dot / (qSqrt * rSqrt)))
-                    }
-                  }
-                }
-              }
-          }
-        }
+    val scored = broadcastQueryScan(queries, qId, qVec, encoded, eId, "encoded corpus",
+        col(eList).cast("int"), col(eCodes)) {
+      val probes = pqAdcTables(queries, qId, qVec, pq).flatMap { case (qv, qn, q) =>
+        nearestLists(ivf.cents, qv, qn, nProbe).map(_ -> q)
       }
-    val scored = spark.createDataFrame(rdd, outSchema)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("__cos").desc, col("neighbor_id").asc)
-    scored.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("__cos"), 4).as("adc_cosine"))
+      (pq, grouped(probes))
+    } { case ((m0, byList), r) =>
+      if (r.isNullAt(2)) Iterator.empty
+      else byList.get(r.getInt(1)) match {
+        case None => Iterator.empty
+        case Some(qs) =>
+          decodeCodes(r.getAs[Array[Byte]](2), m0.nSub).iterator.flatMap(codes =>
+            adcHits(qs, r.getLong(0), codes, m0.reconNorm2(codes), excludeSelf))
+      }
+    }
+    topKPerQuery(scored, k, rounded("adc_cosine"))
   }
 
   /**
@@ -1913,8 +1710,8 @@ object SimSearch {
    * implicitly: dot(q, c + recon(r)) = dot(q, c) + Σ_m tbl(m)(code_m), and
    * ‖c + recon‖² = ‖c‖² + 2·Σ_m ccDot(list)(m)(code_m) + Σ_m cn2(m)(code_m) —
    * all table lookups, so a corpus row still scores in O(nSub). The
-   * cross-term tables (nList·nSub·ksub doubles) ride the closure like the
-   * codebooks.
+   * cross-term tables (nList·nSub·ksub doubles) broadcast with the
+   * codebooks and the queries' ADC tables.
    *
    * This variant is PROPERTY-gated, not oracle-hash-gated: mirroring
    * residual training in SQL would mean re-deriving the assignment chain
@@ -1930,126 +1727,74 @@ object SimSearch {
       corpus: DataFrame, cId: String, cVec: String,
       k: Int, nList: Int = 16, nProbe: Int = 4, nIters: Int = 0,
       nSub: Int = 8, ksub: Int = 16, pqIters: Int = 0, excludeSelf: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
     require(nList > 0 && nProbe > 0 && nProbe <= nList,
       s"need 0 < nProbe <= nList, got nList=$nList nProbe=$nProbe")
     require(nIters >= 0 && pqIters >= 0, s"iteration counts must be >= 0")
     require(nSub > 0, s"nSub must be positive, got $nSub")
     require(ksub > 0 && ksub <= 256, s"need 0 < ksub <= 256, got $ksub")
-    requireIntegralId(corpus, cId, "corpus")
-    requireIntegralId(queries, qId, "queries")
-    requireCollectableQueries(queries, qId, qVec)
-    val spark = corpus.sparkSession
-    val slim = corpus.select(col(cId).cast("long"), col(cVec))
-    val seedPool = slim.orderBy(col(cId).cast("long"))
-      .limit(math.max(nList, ksub)).collect()
-    val centSeeds = seedPool.take(nList).flatMap(vecWithNorm)
-      .map { case (_, v, n) => (v.map(_.toDouble), n) }
-    require(centSeeds.nonEmpty, "corpus has no non-null non-zero vectors to seed")
-    val cents = lloydRefine(slim, centSeeds, nIters)
-    // residual of v w.r.t. its assigned list (dim-mismatched centroids can't
-    // win assignment for uniform-dim corpora; guard with raw cast anyway).
-    // A val lambda, not a def: an eta-expanded local def lifts onto the
-    // module class and drags the non-serializable module into the closure.
-    val residOf: (Array[Float], Double) => Array[Double] = (v, norm) => {
-      val c = cents(ivfNearest(cents, v, norm))._1
-      if (c.length != v.length) { val a = new Array[Double](v.length)
-        var i = 0; while (i < v.length) { a(i) = v(i).toDouble; i += 1 }; a
-      } else {
-        val a = new Array[Double](v.length)
-        var i = 0; while (i < v.length) { a(i) = v(i).toDouble - c(i); i += 1 }; a
-      }
-    }
-    val pqSeeds: Array[Array[Double]] = seedPool.take(ksub).flatMap(vecWithNorm)
-      .map { case (_, v, n) => residOf(v, n) }
-    require(pqSeeds.nonEmpty, "corpus has no non-null non-zero vectors to seed codebooks")
-    val dim = pqSeeds(0).length
-    require(pqSeeds.forall(_.length == dim),
-      s"codebook seeds must share one dimension, got ${pqSeeds.map(_.length).distinct.toSeq}")
-    require(dim % nSub == 0, s"dim $dim must be divisible by nSub $nSub")
-    val subDim = dim / nSub
-    val cw0 = Array.tabulate(nSub, pqSeeds.length) { (m, j) =>
-      Array.tabulate(subDim)(d => pqSeeds(j)(m * subDim + d))
-    }
-    val model = PqModel(nSub, subDim,
-      pqRefine(slim, cw0, dim, nSub, subDim, pqIters, toVec = residOf))
-    val nCodes = model.nCodes
-    // cross-term tables: ccDot(j)(m)(code) = dot(c_j,m, cw_m,code); cN2(j) = ‖c_j‖²
-    val ccDot = Array.tabulate(cents.length, nSub, nCodes) { (j, m, code) =>
-      val c = cents(j)._1
-      if (c.length != dim) 0.0
-      else {
-        var s = 0.0; var d = 0
-        while (d < subDim) { s += c(m * subDim + d) * model.cw(m)(code)(d); d += 1 }
-        s
-      }
-    }
-    val cN2 = cents.map { case (_, n) => n * n }
-    // queries: residual-codebook ADC tables + per-probed-list raw dot(q, c_j)
-    val qByList: Map[Int, Array[(Long, Array[Array[Double]], Double, Double)]] =
-      pqAdcTables(queries, qId, qVec, model)
-        .flatMap { case (qid, qv, tbl, qSqrt) =>
-          var qn2 = 0.0; var i = 0
-          while (i < qv.length) { qn2 += qv(i).toDouble * qv(i).toDouble; i += 1 }
-          ivfCentroidCos(cents, qv, math.sqrt(qn2)).zipWithIndex
-            .sortBy { case (cos, j) => (-cos, j) }.take(nProbe)
-            .map { case (_, j) =>
-              val c = cents(j)._1
-              var qc = 0.0
-              if (c.length == qv.length) {
-                var d = 0
-                while (d < qv.length) { qc += qv(d).toDouble * c(d); d += 1 }
-              }
-              j -> ((qid, tbl, qSqrt, qc))
-            }
-        }.groupBy(_._1).map { case (j, xs) => j -> xs.map(_._2) }
-    val bc = spark.sparkContext.broadcast((model, qByList, ccDot, cN2))
-    val outSchema = StructType(Seq(
-      StructField("query_id", LongType), StructField("neighbor_id", LongType),
-      StructField("__cos", DoubleType)))
-    val rdd = slim.rdd.mapPartitions { rows =>
-      val (m0, byList, cc, cn) = bc.value
-      rows.flatMap { r =>
-        vecWithNorm(r) match {
-          case Some((cid, cv, cSqrt)) if cv.length == dim =>
-            val list = ivfNearest(cents, cv, cSqrt)
-            byList.get(list) match {
-              case None => Iterator.empty
-              case Some(qs) =>
-                val rv = residOf(cv, cSqrt)
-                val codes = new Array[Int](m0.nSub)
-                var m = 0
-                while (m < m0.nSub) {
-                  codes(m) = pqNearestSubD(rv, m, m0.subDim, m0.cw(m)); m += 1
-                }
-                var rn2 = cn(list)
-                m = 0
-                while (m < m0.nSub) {
-                  rn2 += 2.0 * cc(list)(m)(codes(m)) + m0.cn2(m)(codes(m)); m += 1
-                }
-                if (rn2 <= 0.0) Iterator.empty
-                else {
-                  val rSqrt = math.sqrt(rn2)
-                  qs.iterator.flatMap { case (qid, tbl, qSqrt, qc) =>
-                    if (excludeSelf && qid == cid) None
-                    else {
-                      var dot = qc; var mm = 0
-                      while (mm < m0.nSub) { dot += tbl(mm)(codes(mm)); mm += 1 }
-                      Some(Row(qid, cid, dot / (qSqrt * rSqrt)))
-                    }
-                  }
-                }
-            }
-          case _ => Iterator.empty
+    val scored = broadcastQueryScan(queries, qId, qVec, corpus, cId, "corpus", col(cVec)) {
+      val slim = corpus.select(col(cId).cast("long"), col(cVec))
+      val (cents, pool) = trainCentroids(slim, cId, nList, nIters, poolSize = ksub)
+      val residOf: (Array[Float], Double) => Array[Double] =
+        (v, norm) => residual(v, cents(ivfNearest(cents, v, norm))._1)
+      val model = trainCodebooks(slim,
+        pool.take(ksub).flatten.map { case (_, v, n) => residOf(v, n) }, nSub, pqIters,
+        toVec = residOf)
+      val dim = model.dim; val subDim = model.subDim
+      // cross-term tables: ccDot(j)(m)(code) = dot(c_j,m, cw_m,code); cN2(j) = ‖c_j‖²
+      val ccDot = Array.tabulate(cents.length, nSub, model.nCodes) { (j, m, code) =>
+        val c = cents(j)._1
+        if (c.length != dim) 0.0
+        else {
+          var s = 0.0; var d = 0
+          while (d < subDim) { s += c(m * subDim + d) * model.cw(m)(code)(d); d += 1 }
+          s
         }
       }
+      val cN2 = cents.map { case (_, n) => n * n }
+      // queries: residual-codebook ADC tables, starting each probed list's
+      // dot from the raw dot(q, c_j)
+      val probes = pqAdcTables(queries, qId, qVec, model).flatMap { case (qv, qn, q) =>
+        nearestLists(cents, qv, qn, nProbe).map { j =>
+          val c = cents(j)._1
+          var qc = 0.0
+          if (c.length == qv.length) {
+            var d = 0
+            while (d < qv.length) { qc += qv(d).toDouble * c(d); d += 1 }
+          }
+          j -> q.copy(qc = qc)
+        }
+      }
+      (cents, model, grouped(probes), ccDot, cN2)
+    } { case ((cents, m0, byList, cc, cn), r) =>
+      vecWithNorm(r) match {
+        case Some((cid, cv, cSqrt)) if cv.length == m0.dim =>
+          val list = ivfNearest(cents, cv, cSqrt)
+          byList.get(list) match {
+            case None => Iterator.empty
+            case Some(qs) =>
+              val rv = residual(cv, cents(list)._1)
+              val codes =
+                Array.tabulate(m0.nSub)(m => pqNearestSubD(rv, m, m0.subDim, m0.cw(m)))
+              var rn2 = cn(list)
+              var m = 0
+              while (m < m0.nSub) {
+                rn2 += 2.0 * cc(list)(m)(codes(m)) + m0.cn2(m)(codes(m)); m += 1
+              }
+              adcHits(qs, cid, codes, rn2, excludeSelf)
+          }
+        case _ => Iterator.empty
+      }
     }
-    val scored = spark.createDataFrame(rdd, outSchema)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("__cos").desc, col("neighbor_id").asc)
-    scored.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("__cos"), 4).as("adc_cosine"))
+    topKPerQuery(scored, k, rounded("adc_cosine"))
   }
+
+  /** `v − c`, the residual a vector's PQ codes quantize on the residual path
+    * (a centroid of another dimension cannot win assignment on a uniform-dim
+    * corpus; such a vector keeps its raw cast). */
+  private def residual(v: Array[Float], c: Array[Double]): Array[Double] =
+    if (c.length != v.length) v.map(_.toDouble)
+    else Array.tabulate(v.length)(i => v(i).toDouble - c(i))
 
   /** Quantization scale for Lloyd centroid sums: element contributions are
     * `floor(x·scale + 0.5)` Longs, so per-cluster sums are exact and
@@ -2077,11 +1822,58 @@ object SimSearch {
   }
 
   private[operators] def ivfNearest(
-      cents: Array[(Array[Double], Double)], v: Array[Float], vNorm: Double): Int = {
-    val cos = ivfCentroidCos(cents, v, vNorm)
+      cents: Array[(Array[Double], Double)], v: Array[Float], vNorm: Double): Int =
+    argmax(ivfCentroidCos(cents, v, vNorm))
+
+  /** Index of the largest value; ties keep the smaller index (strict > only
+    * replaces) — the (cosine desc, index asc) assignment rule. */
+  private[operators] def argmax(xs: Array[Double]): Int = {
     var best = 0; var j = 1
-    while (j < cos.length) { if (cos(j) > cos(best)) best = j; j += 1 }
-    best // ties keep the smaller index (strict > only replaces)
+    while (j < xs.length) { if (xs(j) > xs(best)) best = j; j += 1 }
+    best
+  }
+
+  /** The `nProbe` lists a query probes: its nearest centroids by (cosine
+    * desc, index asc), all of them when fewer than nProbe exist. */
+  private def nearestLists(
+      cents: Array[(Array[Double], Double)], v: Array[Float], vNorm: Double,
+      nProbe: Int): Array[Int] =
+    ivfCentroidCos(cents, v, vNorm).zipWithIndex
+      .sortBy { case (cos, j) => (-cos, j) }.take(nProbe).map(_._2)
+
+  /** key → values, each key's values in input order. */
+  private def grouped[K, V: ClassTag](kvs: Array[(K, V)]): Map[K, Array[V]] =
+    kvs.groupBy(_._1).map { case (key, xs) => key -> xs.map(_._2) }
+
+  /**
+   * THE id-ranked seed pool every quantizer starts from: the `n`
+   * smallest-id rows of `slim` (= (id as Long, vec)), each read by
+   * [[vecWithNorm]] AFTER the LIMIT — a null or zero vector among the
+   * smallest ids shrinks the seed set, it does not pull in the next id. This
+   * is the seeding contract the DuckDB oracles mirror.
+   */
+  private def seedPool(slim: DataFrame, idCol: String, n: Int): Array[Option[Vec]] =
+    slim.orderBy(col(idCol).cast("long")).limit(n).collect().map(vecWithNorm)
+
+  /**
+   * THE coarse quantizer ([[topKIvf]], [[kmeansAssign]], [[ivfTrainModel]],
+   * the IVF-PQ paths, [[Dedup.semDedup]], [[Dedup.clusterExemplars]]): the
+   * eligible vectors among the `nList` smallest ids of [[seedPool]] (index =
+   * id rank; float→double casts are exact), refined by `nIters`
+   * [[lloydRefine]] passes.
+   *
+   * @param poolSize collect a pool of max(nList, poolSize) rows, so PQ
+   *        codebooks seed from the same collect
+   * @return the centroids with their norms, and the pool
+   */
+  private[operators] def trainCentroids(
+      slim: DataFrame, idCol: String, nList: Int, nIters: Int,
+      side: String = "corpus", poolSize: Int = 0)
+      : (Array[(Array[Double], Double)], Array[Option[Vec]]) = {
+    val pool = seedPool(slim, idCol, math.max(nList, poolSize))
+    val seeds = pool.take(nList).flatten.map { case (_, v, n) => (v.map(_.toDouble), n) }
+    require(seeds.nonEmpty, s"$side has no non-null non-zero vectors to seed centroids")
+    (lloydRefine(slim, seeds, nIters), pool)
   }
 
   /** `nIters` deterministic Lloyd passes over `slim` (= (id: Long, vec:
@@ -2090,7 +1882,7 @@ object SimSearch {
     * = quantized mean. One corpus scan per iteration; the driver collects only
     * partitions × nList × dim Longs. Empty/zero-norm clusters keep their
     * previous centroid. */
-  private[operators] def lloydRefine(
+  private def lloydRefine(
       slim: DataFrame, seeds: Array[(Array[Double], Double)],
       nIters: Int): Array[(Array[Double], Double)] = {
     var cents = seeds

@@ -739,6 +739,32 @@ class PlanSpec extends AnyFunSuite with LocalSpark {
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
+  test("IVF searches run one seed collect and one query collect while the frame is built") {
+    // nIters = pqIters = 0: no Lloyd pass, so the jobs are the id-ranked seed
+    // pool (shared by the coarse and product quantizers) and the query side.
+    // A parquet corpus, because collects over a local relation run no job.
+    val s = spark
+    import s.implicits._
+    val path = tempDir()
+    (0 until 200).map { i =>
+      (i.toLong, Array.tabulate(8)(d => ((i * 7 + d * 13) % 17 - 8).toFloat))
+    }.toDF("vec_id", "embedding").write.parquet(path)
+    val emb = spark.read.parquet(path)
+    val q = emb.filter(col("vec_id") < 5)
+    import graft.operators.SimSearch
+    val built = withJobCounter { jobs =>
+      def twoJobs(df: DataFrame): DataFrame = { assert(jobs() == 2); df }
+      Seq(
+        twoJobs(SimSearch.topKIvf(q, "vec_id", "embedding", emb, "vec_id", "embedding", 3,
+          nList = 4, nProbe = 2)),
+        twoJobs(SimSearch.topKIvfPq(q, "vec_id", "embedding", emb, "vec_id", "embedding", 3,
+          nList = 4, nProbe = 2, nSub = 4, ksub = 8)),
+        twoJobs(SimSearch.topKIvfPqResidual(q, "vec_id", "embedding", emb, "vec_id",
+          "embedding", 3, nList = 4, nProbe = 2, nSub = 4, ksub = 8)))
+    }
+    assert(built.forall(_.count() == 15L))
+  }
+
   test("ann_filtered is a PRE-filter: full k among survivors, all matching") {
     // (the scoring pass crosses an RDD boundary, so the predicate pushdown
     // itself isn't visible in this plan — pin the pre-filter SEMANTICS:

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, when}
 import org.scalacheck.{Gen, Properties, Test => SCTest}
 import org.scalacheck.Prop.forAllNoShrink
 
@@ -16,14 +16,17 @@ import graft.operators.SimSearch
  *   - pqEncode → pqSearchEncoded ≡ fused topKPq (same model)
  *   - ivfPqEncode → ivfPqSearchEncoded ≡ fused topKIvfPq (same params)
  *   - pqEncode drops exactly the null/zero-norm/wrong-dim rows
+ *   - every broadcast-query operator returns only eligible, self-free,
+ *     k-bounded pairs, and full-probe topKIvf is brute-force topK
  */
 object PqProps extends Properties("PqIndex") with LocalSpark {
 
   override def overrideParameters(p: SCTest.Parameters): SCTest.Parameters =
     p.withMinSuccessfulTests(10).withWorkers(1)
 
-  // dim 4 corpora with occasional degenerate rows: nulls, zero vectors and a
-  // wrong-dimension straggler — the eligibility edge cases
+  // dim 4 corpora with occasional degenerate rows: nulls and zero vectors —
+  // the eligibility edge cases. Lloyd refinement (nIters > 0) fails fast on
+  // mixed dimensions, so properties that run it keep this uniform generator.
   private val elemGen: Gen[Float] = Gen.chooseNum(-2.0f, 2.0f)
   private val vecGen: Gen[Array[Float]] = Gen.frequency(
     (8, Gen.listOfN(4, elemGen).map(_.toArray)),
@@ -31,6 +34,23 @@ object PqProps extends Properties("PqIndex") with LocalSpark {
     (1, Gen.const(null.asInstanceOf[Array[Float]])))
   private val corpusGen: Gen[List[Array[Float]]] =
     Gen.choose(6, 24).flatMap(n => Gen.listOfN(n, vecGen))
+  // ... plus wrong-dimension (dim 3) stragglers, for operators documented to
+  // skip them. The first 4 rows stay dim 4: they are every seed prefix below,
+  // and codebook training rejects seeds of mixed dimensions.
+  private val strayGen: Gen[Array[Float]] =
+    Gen.frequency((4, vecGen), (1, Gen.listOfN(3, elemGen).map(_.toArray)))
+  private val mixedCorpusGen: Gen[List[Array[Float]]] = for {
+    n <- Gen.choose(6, 24)
+    head <- Gen.listOfN(4, vecGen)
+    tail <- Gen.listOfN(n - 4, strayGen)
+  } yield head ++ tail
+
+  private def eligible(v: Array[Float]): Boolean = v != null && v.exists(_ != 0.0f)
+  /** An eligible dim-4 vector among the first 4 rows: the id-ranked seed
+    * rule filters AFTER its LIMIT, so training fails fast (documented)
+    * without one. */
+  private def seedable(vecs: List[Array[Float]]): Boolean =
+    vecs.take(4).exists(v => eligible(v) && v.length == 4)
   private val partsGen: Gen[Int] = Gen.choose(1, 4)
 
   private def df(vecs: List[Array[Float]], parts: Int): DataFrame = {
@@ -43,13 +63,9 @@ object PqProps extends Properties("PqIndex") with LocalSpark {
     out.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
 
   property("pqSearchEncoded over pqEncode equals fused topKPq") =
-    forAllNoShrink(corpusGen, partsGen, Gen.choose(0, 1)) { (vecs, parts, nIters) =>
+    forAllNoShrink(mixedCorpusGen, partsGen, Gen.choose(0, 1)) { (vecs, parts, nIters) =>
       val corpus = df(vecs, parts)
-      // the seed rule filters AFTER the id-ranked LIMIT, so training fails
-      // fast (documented) unless an ELIGIBLE vector sits in the seed prefix
-      val hasEligible = vecs.take(4).exists(v =>
-        v != null && v.length == 4 && v.exists(_ != 0.0f))
-      !hasEligible || {
+      !seedable(vecs) || {
         val q = corpus.filter(col("id") < 4)
         val model = SimSearch.pqTrainModel(corpus, "id", "vec",
           nSub = 2, ksub = 4, nIters = nIters)
@@ -131,18 +147,58 @@ object PqProps extends Properties("PqIndex") with LocalSpark {
     }
 
   property("pqEncode keeps exactly the eligible rows") =
-    forAllNoShrink(corpusGen, partsGen) { (vecs, parts) =>
+    forAllNoShrink(mixedCorpusGen, partsGen) { (vecs, parts) =>
       val corpus = df(vecs, parts)
-      val hasEligible = vecs.take(4).exists(v =>
-        v != null && v.length == 4 && v.exists(_ != 0.0f))
-      !hasEligible || {
+      !seedable(vecs) || {
         val model = SimSearch.pqTrainModel(corpus, "id", "vec", nSub = 2, ksub = 4)
         val kept = SimSearch.pqEncode(corpus, "id", "vec", model)
           .select("id").collect().map(_.getLong(0)).toSet
         val expected = vecs.zipWithIndex.collect {
-          case (v, i) if v != null && v.length == 4 && v.exists(_ != 0.0f) => i.toLong
+          case (v, i) if eligible(v) && v.length == 4 => i.toLong
         }.toSet
         kept == expected
       }
+    }
+
+  property("broadcast-query operators return eligible, self-free, k-bounded pairs") =
+    forAllNoShrink(mixedCorpusGen, partsGen, Gen.choose(1, 4), Gen.oneOf(false, true)) {
+      (vecs, parts, k, excludeSelf) =>
+        // labels 0..2, every fourth row unlabeled (hardNegatives' null rule)
+        val corpus = df(vecs, parts)
+          .withColumn("label", when(col("id") % 4 =!= 3, col("id") % 3))
+        // even ids: queries include degenerate and wrong-dimension rows too
+        val q = corpus.filter(col("id") % 2 === 0)
+        !seedable(vecs) || {
+          val model = SimSearch.pqTrainModel(corpus, "id", "vec", nSub = 2, ksub = 4)
+          val enc = SimSearch.pqEncode(corpus, "id", "vec", model)
+          val ranked = Seq(
+            SimSearch.topK(q, "id", "vec", corpus, "id", "vec", k, excludeSelf),
+            SimSearch.hardNegatives(q, "id", "vec", "label", corpus, "id", "vec", "label",
+              k, excludeSelf),
+            SimSearch.topKLsh(q, "id", "vec", corpus, "id", "vec", k, nPlanes = 2,
+              nTables = 2, excludeSelf = excludeSelf),
+            SimSearch.topKIvf(q, "id", "vec", corpus, "id", "vec", k, nList = 4, nProbe = 2,
+              excludeSelf = excludeSelf),
+            SimSearch.topKPq(q, "id", "vec", corpus, "id", "vec", k, nSub = 2, ksub = 4,
+              excludeSelf = excludeSelf),
+            SimSearch.topKSq(q, "id", "vec", corpus, "id", "vec", k, excludeSelf),
+            SimSearch.pqSearchEncoded(enc, "id", "codes", q, "id", "vec", model, k,
+              excludeSelf))
+          val range = SimSearch.rangeSearch(q, "id", "vec", corpus, "id", "vec", 0.0,
+            excludeSelf)
+          def pairs(out: DataFrame): Seq[(Long, Long)] =
+            out.collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
+          def wellFormed(ps: Seq[(Long, Long)]): Boolean = ps.forall { case (a, b) =>
+            val (va, vb) = (vecs(a.toInt), vecs(b.toInt))
+            a % 2 == 0 && eligible(va) && eligible(vb) && va.length == vb.length &&
+              !(excludeSelf && a == b)
+          } && ps.distinct.length == ps.length
+          val fullProbe = SimSearch.topKIvf(q, "id", "vec", corpus, "id", "vec", k,
+            nList = 4, nProbe = 4, excludeSelf = excludeSelf)
+          ranked.map(pairs).forall(ps =>
+              wellFormed(ps) && ps.groupBy(_._1).values.forall(_.length <= k)) &&
+            wellFormed(pairs(range)) &&
+            resultMap(fullProbe) == resultMap(ranked.head)
+        }
     }
 }

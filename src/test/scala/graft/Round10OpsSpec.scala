@@ -149,6 +149,28 @@ class Round10OpsSpec extends AnyFunSuite with LocalSpark {
     assert(!out.map(_._1).contains(1L))
   }
 
+  test("hardNegatives and knnLabelReport reject non-integral label columns at plan time") {
+    val s = spark
+    import s.implicits._
+    // a Long cast would merge labels 1.2 and 1.7 (hiding id 2, a
+    // different-label neighbor) and fail mid-job on a string label
+    val emb = Seq(
+      (0L, Array(1f, 0f), 1, 1.2, "a"),
+      (1L, Array(0f, 1f), 2, 1.5, "b"),
+      (2L, Array(0.99f, 0.1f), 3, 1.7, "c")
+    ).toDF("vec_id", "embedding", "ok", "dbl", "str")
+    val q = emb.filter($"vec_id" === 0L)
+    for (bad <- Seq("dbl", "str"); (ql, cl) <- Seq((bad, "ok"), ("ok", bad))) {
+      val e1 = intercept[IllegalArgumentException](SimSearch.hardNegatives(
+        q, "vec_id", "embedding", ql, emb, "vec_id", "embedding", cl, k = 2))
+      val e2 = intercept[IllegalArgumentException](SimSearch.knnLabelReport(
+        q, "vec_id", "embedding", ql, emb, "vec_id", "embedding", cl, k = 2))
+      for (e <- Seq(e1, e2))
+        assert(e.getMessage.contains(s"label column '$bad' must be an integral type"),
+          e.getMessage)
+    }
+  }
+
   // ---- BM25 pseudo-relevance feedback -------------------------------------
 
   test("topKPrf expands with feedback-doc terms and re-ranks") {
