@@ -117,8 +117,7 @@ object TextFunctions {
     * threshold). */
   def minHashBandKeys(
       shingles: Array[String], bandRows: Int = MinHashBandRows): Array[String] = {
-    require(bandRows > 0 && MinHashK % bandRows == 0,
-      s"bandRows must divide MinHashK=$MinHashK, got $bandRows")
+    requireBandRows(bandRows)
     val sig = minHashSig(shingles)
     val nBands = MinHashK / bandRows
     val out = new Array[String](nBands)
@@ -188,6 +187,14 @@ object TextFunctions {
   val MinHashBandRows = 4
   val MinHashP1 = 1000003L      // token-hash compression modulus
   val MinHashP2 = 1000000007L   // permutation modulus
+
+  /** THE `bandRows` check of every banding entry: rows per band must divide
+    * [[MinHashK]]. Operators call it before their first job — inside the
+    * band-key UDF a failure surfaces only at execution, wrapped in a
+    * SparkException. */
+  private[graft] def requireBandRows(bandRows: Int): Unit =
+    require(bandRows > 0 && MinHashK % bandRows == 0,
+      s"bandRows must divide MinHashK=$MinHashK, got $bandRows")
 
   /** (a_j, b_j) of the j-th MinHash permutation `(a·x + b) mod P2`, j in [0, K). */
   def minHashParams(j: Int): (Long, Long) =

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions.{minHashBandKeysUdfFor, shinglesUdf, wordNGramHashUdf}
+import graft.functions.TextFunctions.wordNGramHashUdf
 
 /**
  * Benchmark decontamination by n-gram collision — the standard pre-training
@@ -44,13 +44,15 @@ object Decontaminate {
    * paraphrased/reformatted benchmark leaks the exact n-gram rule misses
    * (whitespace variants, partial copies, light edits).
    *
-   * Plan shape = the cross-table form of [[Dedup.minHashLshPairs]]: one
-   * shingle-tokenizer pass per side (each checkpointed once — the lineage is
-   * consumed by banding AND verification), MinHash band keys, candidates from
-   * a band-key equi-join with the benchmark side broadcast (tiny by nature),
-   * then exact Jaccard verification of candidates only. The corpus is never
-   * shuffled on text and never self-joined; false negatives follow the usual
-   * banding bound ((1-j⁴)⁸ at Jaccard j — < 1e-7 for j ≥ 0.97).
+   * This is [[Dedup.minHashLshPairsBetween]] (corpus as side A, bench as side
+   * B) with its outputs renamed: one checkpointed shingle pass per side,
+   * MinHash band keys, candidates from the band-key equi-join, then exact
+   * Jaccard verification of candidates only. The join carries no broadcast
+   * hint; Spark's size-based planning broadcasts a small bench side on its
+   * own. The corpus is never shuffled on text and never self-joined; false
+   * negatives follow the usual banding bound ((1-j⁴)⁸ at Jaccard j — < 1e-7
+   * for j ≥ 0.97). Verification is per row: a side that repeats an id gets
+   * one row, with its own exact Jaccard, per (corpus row, bench row) pair.
    *
    * @return (corpus idCol, bench_id, jaccard) — verified contaminated pairs,
    *         jaccard rounded to 6 decimals. Note a corpus doc that IS a bench
@@ -61,32 +63,10 @@ object Decontaminate {
       corpus: DataFrame, idCol: String, textCol: String,
       bench: DataFrame, benchIdCol: String, benchTextCol: String,
       threshold: Double,
-      bandRows: Int = graft.functions.TextFunctions.MinHashBandRows): DataFrame = {
-    require(bandRows > 0 && graft.functions.TextFunctions.MinHashK % bandRows == 0,
-      s"bandRows must divide MinHashK=${graft.functions.TextFunctions.MinHashK}, got $bandRows")
-    val c = corpus.select(col(idCol).as("__a"), shinglesUdf(col(textCol)).as("__shs"))
-      .filter(size(col("__shs")) > 0).localCheckpoint(true)
-    val b = bench.select(col(benchIdCol).as("__b"), shinglesUdf(col(benchTextCol)).as("__shs"))
-      .filter(size(col("__shs")) > 0).localCheckpoint(true)
-    val cBands = c.select(col("__a"),
-      posexplode(minHashBandKeysUdfFor(bandRows)(col("__shs"))).as(Seq("__band", "__bkey")))
-    val bBands = b.select(col("__b"),
-      posexplode(minHashBandKeysUdfFor(bandRows)(col("__shs"))).as(Seq("__band", "__bkey")))
-    val cand = cBands.join(broadcast(bBands), Seq("__band", "__bkey"))
-      .select(col("__a"), col("__b")).distinct()
-    val ta = c.select(col("__a"), explode(col("__shs")).as("__sh"))
-    val tb = b.select(col("__b"), explode(col("__shs")).as("__sh"))
-    val inter = cand.join(ta, "__a").join(tb, Seq("__b", "__sh"))
-      .groupBy(col("__a"), col("__b")).agg(count(lit(1)).as("__i"))
-    val ca = ta.groupBy(col("__a")).agg(count(lit(1)).as("__na"))
-    val cb = tb.groupBy(col("__b")).agg(count(lit(1)).as("__nb"))
-    inter.join(ca, "__a").join(cb, "__b")
-      .withColumn("jaccard",
-        col("__i").cast("double") / (col("__na") + col("__nb") - col("__i")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("__a").as(idCol), col("__b").as("bench_id"),
-        round(col("jaccard"), 6).as("jaccard"))
-  }
+      bandRows: Int = graft.functions.TextFunctions.MinHashBandRows): DataFrame =
+    Dedup.minHashLshPairsBetween(corpus, idCol, textCol, bench, benchIdCol, benchTextCol,
+        threshold, bandRows)
+      .select(col("id_a").as(idCol), col("id_b").as("bench_id"), col("jaccard"))
 
   /**
    * BENCHMARK COVERAGE — the aggregate complement of span decontamination:

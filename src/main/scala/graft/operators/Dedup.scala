@@ -6,22 +6,35 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 
 /**
- * Document deduplication operators for large-scale training-data pipelines:
+ * Document deduplication operators for large-scale training-data pipelines.
  *
- *  - [[exact]]            — exact dedup by content hash (one shuffle on the hash).
- *  - [[jaccardPairs]]     — near-dup pairs by n-gram (3-word shingle) Jaccard,
- *                           token-inverted-index join (NO cross join: only docs
- *                           sharing a shingle are candidates).
- *  - [[minHashLshPairs]]  — the 100 TB path: MinHash signatures + LSH banding to
- *                           generate candidates, then exact Jaccard verification.
- *                           Candidate generation touches each doc once; the
- *                           quadratic step runs only inside LSH buckets.
- *  - [[simHashFingerprints]] / [[simHashPairs]] — 64-bit SimHash (two 32-bit
- *                           halves), near-dup = Hamming distance ≤ maxHamming;
- *                           candidates via banding (pigeonhole-exact for
- *                           maxHamming < nBands; 8- or 16-bit bands).
- *  - [[embeddingPairs]]   — embedding-cosine near-dup pairs (brute force; see
- *                           [[SimSearch]] for the bucketed scale path).
+ * THE BANDED NEAR-DUP FAMILY — filter-then-verify: MinHash band keys
+ * propose candidates (docs colliding on any band), an exact score disposes
+ * of them, so the quadratic step runs only inside LSH buckets:
+ *
+ *  - [[minHashLshPairs]]          self-join, exact Jaccard ≥ threshold.
+ *  - [[lshAuditReport]]           its recall/precision against [[jaccardPairs]].
+ *  - [[editVerifiedPairs]]        the same candidates, Levenshtein verify.
+ *  - [[minHashLshPairsBetween]]   cross-table; [[Decontaminate.fuzzyFlagged]]
+ *                                 is this operator with its outputs renamed.
+ *  - [[nearDupFromSignatures]] / [[nearDupFromSignaturesBetween]] — the
+ *                                 same banding over persisted
+ *                                 [[minHashSignatures]], MinHash estimate.
+ *
+ * Their shared core, each written once: `TextFunctions.requireBandRows` (the
+ * `bandRows` check, run before any job); [[shingleSets]] (the checkpointed
+ * `(__id, __shs)` side); [[textBands]] / [[sigBands]] (band relations of
+ * text and signatures) feeding [[bandJoin]] (the one band equi-join);
+ * [[verifyJaccard]] (the one exact verify, array intersection per row
+ * pair); `jaccard` and [[jaccardAtLeast]] (the one score and output tail,
+ * shared with the exhaustive inverted-index operators [[jaccardPairs]] /
+ * [[containmentPairs]]).
+ *
+ * Beside it: digest dedup ([[exact]], [[exactIncrement]], [[keepBestBy]],
+ * [[softWeights]]), [[simHashPairs]] and [[winnowPairs]] near-dup, span
+ * dedup ([[duplicateSpans]] and kin), and embedding near-dup / semantic
+ * curation ([[embeddingPairs]], [[semDedup]], [[clusterExemplars]] — their
+ * centroid assignment runs on `SimSearch.scanRows`).
  *
  * All scoring formulas use exact integer arithmetic or fixed-order double
  * arithmetic so every operator has a 1:1 DuckDB oracle (see SparkEntry).
@@ -307,31 +320,38 @@ object Dedup {
           .otherwise(1L).as("kept"))
   }
 
-  /** Internal: Jaccard from per-pair intersection counts (columns __a, __b,
-    * __i) and per-doc set sizes `cnt` (__id, __n). Callers derive `cnt` from
-    * the materialized per-doc shingle ARRAYS (`size(__shs)` — shingles are
-    * distinct per doc) so no count shuffle and no tokenizer re-execution. */
-  private def jaccardFromInter(cnt: DataFrame, inter: DataFrame): DataFrame =
-    inter
-      .join(cnt.select(col("__id").as("__a"), col("__n").as("__na")), "__a")
-      .join(cnt.select(col("__id").as("__b"), col("__n").as("__nb")), "__b")
-      .withColumn("jaccard",
-        col("__i").cast("double") / (col("__na") + col("__nb") - col("__i")).cast("double"))
-
-  /** Internal: the shared inverted-index core of [[jaccardPairs]] and
-    * [[containmentPairs]] — returns (inter, cnt): per-pair intersection
-    * counts (__a < __b, __i) and per-doc set sizes (__id, __n). */
-  private def shinglePairCore(
-      df: DataFrame, idCol: String, textCol: String,
-      maxDocFrequency: Long): (DataFrame, DataFrame) = {
-    // ONE tokenizer pass, materialized (same trap as minHashLshPairs: the
-    // inverted-index self-join reads the shingle relation twice, the capped
-    // variant adds the doc-frequency aggregate and its semi-join — an
-    // unmaterialized frame re-runs the shingle UDF once per subtree, ~5× on
-    // the capped path). Set sizes come from size(__shs) — no count shuffle.
-    val shs = df.select(col(idCol).as("__id"), shinglesUdf(col(textCol)).as("__shs"))
+  /** THE checkpointed shingle-set side of the shingle/MinHash family:
+    * `(__id, __shs)`, one row per doc with a non-empty distinct 3-word-shingle
+    * array. ONE tokenizer pass, materialized eagerly: band keys, both verify
+    * sides, the inverted index and the set sizes all read the compact arrays
+    * — an unmaterialized lineage re-runs the shingle UDF once per consumer,
+    * i.e. tokenizes the corpus several times instead of once. */
+  private def shingleSets(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.select(col(idCol).as("__id"), shinglesUdf(col(textCol)).as("__shs"))
       .filter(size(col("__shs")) > 0)
       .localCheckpoint(true)
+
+  /** THE Jaccard of a pair relation carrying the intersection size `__i` and
+    * both set sizes `__na`, `__nb`. */
+  private val jaccard: Column =
+    col("__i").cast("double") / (col("__na") + col("__nb") - col("__i")).cast("double")
+
+  /** THE output tail of the Jaccard operators: pairs `(__a, __b, jaccard)` at
+    * or above `threshold` (unrounded), renamed to (`idA`, `idB`, jaccard
+    * rounded to 6). */
+  private def jaccardAtLeast(
+      pairs: DataFrame, threshold: Double, idA: String, idB: String): DataFrame =
+    pairs.filter(col("jaccard") >= threshold)
+      .select(col("__a").as(idA), col("__b").as(idB), round(col("jaccard"), 6).as("jaccard"))
+
+  /** Internal: the shared inverted-index core of [[jaccardPairs]] and
+    * [[containmentPairs]] — per-pair intersection counts with both set sizes
+    * `(__a < __b, __i, __na, __nb)`. */
+  private def shinglePairCore(
+      df: DataFrame, idCol: String, textCol: String,
+      maxDocFrequency: Long): DataFrame = {
+    // set sizes come from size(__shs) — no count shuffle
+    val shs = shingleSets(df, idCol, textCol)
     val t = shs.select(col("__id"), explode(col("__shs")).as("__sh"))
     val cnt = shs.select(col("__id"), size(col("__shs")).cast("long").as("__n"))
     // shingles are distinct per doc, so count-per-shingle = doc frequency.
@@ -349,11 +369,12 @@ object Dedup {
       }
     // ONE pass over the inverted index: intersection counts straight off the
     // shingle equi-join (no candidate materialization + re-expansion).
-    val inter = tIdx.select(col("__id").as("__a"), col("__sh"))
+    tIdx.select(col("__id").as("__a"), col("__sh"))
       .join(tIdx.select(col("__id").as("__b"), col("__sh")), "__sh")
       .filter(col("__a") < col("__b"))
       .groupBy(col("__a"), col("__b")).agg(count(lit(1)).as("__i"))
-    (inter, cnt)
+      .join(cnt.select(col("__id").as("__a"), col("__n").as("__na")), "__a")
+      .join(cnt.select(col("__id").as("__b"), col("__n").as("__nb")), "__b")
   }
 
   /**
@@ -375,11 +396,8 @@ object Dedup {
    */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String, threshold: Double,
       maxDocFrequency: Long = 0L): DataFrame = {
-    val (inter, cnt) = shinglePairCore(df, idCol, textCol, maxDocFrequency)
-    jaccardFromInter(cnt, inter)
-      .filter(col("jaccard") >= threshold)
-      .select(col("__a").as("id_a"), col("__b").as("id_b"),
-        round(col("jaccard"), 6).as("jaccard"))
+    jaccardAtLeast(shinglePairCore(df, idCol, textCol, maxDocFrequency)
+      .withColumn("jaccard", jaccard), threshold, "id_a", "id_b")
   }
 
   /**
@@ -394,10 +412,7 @@ object Dedup {
    */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String, threshold: Double,
       maxDocFrequency: Long = 0L): DataFrame = {
-    val (inter, cnt) = shinglePairCore(df, idCol, textCol, maxDocFrequency)
-    inter
-      .join(cnt.select(col("__id").as("__a"), col("__n").as("__na")), "__a")
-      .join(cnt.select(col("__id").as("__b"), col("__n").as("__nb")), "__b")
+    shinglePairCore(df, idCol, textCol, maxDocFrequency)
       .withColumn("containment",
         col("__i").cast("double") / least(col("__na"), col("__nb")).cast("double"))
       .filter(col("containment") >= threshold)
@@ -428,10 +443,12 @@ object Dedup {
   def lshAuditReport(
       df: DataFrame, idCol: String, textCol: String, threshold: Double,
       bandRows: Int = graft.functions.TextFunctions.MinHashBandRows): DataFrame = {
+    // banding first: its bandRows check runs before the truth side's
+    // shingle checkpoint, i.e. before any job
+    val (shs, cand) = lshBandCandidates(df, idCol, textCol, bandRows)
     val truth = jaccardPairs(df, idCol, textCol, threshold)
       .select(col("id_a"), col("id_b"))
-    val (cand, verified) = lshCandVerified(df, idCol, textCol, bandRows)
-    val found = verified.filter(col("jaccard") >= threshold)
+    val found = verifyJaccard(cand, shs, shs).filter(col("jaccard") >= threshold)
       .select(col("__a").as("id_a"), col("__b").as("id_b"), lit(1L).as("__hit"))
     val nCand = cand.agg(count(lit(1)).as("n_cand"))
     truth.join(found, Seq("id_a", "id_b"), "left")
@@ -464,80 +481,58 @@ object Dedup {
    */
   def minHashLshPairs(df: DataFrame, idCol: String, textCol: String, threshold: Double,
       bandRows: Int = graft.functions.TextFunctions.MinHashBandRows): DataFrame = {
-    // fail fast at plan time — inside the UDF the same require surfaces only
-    // at execution, wrapped in a SparkException
-    require(bandRows > 0 && graft.functions.TextFunctions.MinHashK % bandRows == 0,
-      s"bandRows must divide MinHashK=${graft.functions.TextFunctions.MinHashK}, got $bandRows")
-    // ONE tokenizer pass, materialized. Four subtrees consume the shingles
-    // (band keys + both verification sides + the set-size counts); an
-    // unmaterialized frame re-runs the shingle UDF lineage once per subtree —
-    // at corpus scale that is tokenizing the corpus 4× instead of once. The
-    // checkpoint holds the compact per-doc arrays; the explodes below are
-    // narrow reads of the materialized blocks, not recomputation.
-    val (_, verified) = lshCandVerified(df, idCol, textCol, bandRows)
-    verified
-      .filter(col("jaccard") >= threshold)
-      .select(col("__a").as("id_a"), col("__b").as("id_b"),
-        round(col("jaccard"), 6).as("jaccard"))
-  }
-
-  /** Shared banding front-end of the LSH family: checkpointed per-doc
-    * shingle arrays `(__id, __shs)` (ONE tokenizer pass over text — every
-    * downstream consumer reads the materialized compact arrays, never
-    * re-runs the shingle UDF) plus the distinct banded candidate pairs
-    * `(__a, __b)`. The band-key UDF runs over the checkpointed arrays
-    * (8 strings per doc), so the self-join's two band subtrees cost two
-    * cheap array passes, not two corpus tokenizations. */
-  private def lshBandCandidates(
-      df: DataFrame, idCol: String, textCol: String,
-      bandRows: Int): (DataFrame, DataFrame) = {
-    val shs = df.select(col(idCol).as("__id"), shinglesUdf(col(textCol)).as("__shs"))
-      .filter(size(col("__shs")) > 0)
-      .localCheckpoint(true)
-    // Band keys computed inside the signature UDF pass (8 strings per doc) —
-    // no 32-rows-per-doc explode + groupBy shuffle just to reassemble bands.
-    val bands = shs
-      .select(col("__id"),
-        posexplode(minHashBandKeysUdfFor(bandRows)(col("__shs"))).as(Seq("__band", "__bkey")))
-    val cand = bands.select(col("__id").as("__a"), col("__band"), col("__bkey"))
-      .join(bands.select(col("__id").as("__b"), col("__band"), col("__bkey")),
-        Seq("__band", "__bkey"))
-      .filter(col("__a") < col("__b"))
-      .select(col("__a"), col("__b")).distinct()
-    (shs, cand)
-  }
-
-  /** Shared banding core of [[minHashLshPairs]] / [[lshAuditReport]]:
-    * (distinct candidate pairs `(__a, __b)`, exact-Jaccard-verified pairs
-    * `(__a, __b, jaccard)` — unthresholded).
-    *
-    * Verification joins the candidate pairs to the materialized PER-DOC
-    * SHINGLE ARRAYS and computes `size(array_intersect(...))` inline —
-    * shingles are distinct within a doc ([[graft.functions.TextFunctions
-    * .shingles3Array]] builds a LinkedHashSet), so the intersection size is
-    * exactly the count the former exploded shape aggregated. The former
-    * shape shuffled the EXPLODED shingle relation twice (by __a, then by
-    * (__b, __sh) — ~32 rows per doc per candidate on the wire), aggregated
-    * per pair, and joined the set sizes back on two more exchanges; this
-    * shape moves one compact array per candidate side and needs NO
-    * aggregation and NO size join at all (sizes read off the arrays) —
-    * guide §2.3/§2.4: shuffle fewer bytes at coarser granularity, remove
-    * exchanges outright. Candidates are banding-bounded, so per-pair array
-    * shipping is the same cost model the edit-distance verify already uses. */
-  private def lshCandVerified(
-      df: DataFrame, idCol: String, textCol: String,
-      bandRows: Int): (DataFrame, DataFrame) = {
     val (shs, cand) = lshBandCandidates(df, idCol, textCol, bandRows)
-    val verified = cand
-      .join(shs.select(col("__id").as("__a"), col("__shs").as("__sa")), "__a")
-      .join(shs.select(col("__id").as("__b"), col("__shs").as("__sb")), "__b")
+    jaccardAtLeast(verifyJaccard(cand, shs, shs), threshold, "id_a", "id_b")
+  }
+
+  /** Band relation `(__id, __band, __bkey)` of a [[shingleSets]] side: the
+    * K/bandRows band keys come out of the signature UDF pass itself — no
+    * 32-rows-per-doc explode + groupBy shuffle just to reassemble bands. */
+  private def textBands(shs: DataFrame, bandRows: Int): DataFrame =
+    shs.select(col("__id"),
+      posexplode(minHashBandKeysUdfFor(bandRows)(col("__shs"))).as(Seq("__band", "__bkey")))
+
+  /** THE band join of the LSH family: the distinct id pairs `(__a, __b)` whose
+    * rows share a `(__band, __bkey)` between band relations `a` and `b` (text
+    * path: [[textBands]]; signature path: [[sigBands]]). A shuffle equi-join,
+    * neither side hinted; `self` (a = b) keeps `__a < __b`. */
+  private def bandJoin(a: DataFrame, b: DataFrame, self: Boolean): DataFrame = {
+    val hits = a.select(col("__id").as("__a"), col("__band"), col("__bkey"))
+      .join(b.select(col("__id").as("__b"), col("__band"), col("__bkey")), Seq("__band", "__bkey"))
+    (if (self) hits.filter(col("__a") < col("__b")) else hits)
+      .select(col("__a"), col("__b")).distinct()
+  }
+
+  /** THE exact verify of the LSH family: candidate id pairs `(__a, __b)`
+    * joined to their [[shingleSets]] sides, `__i` = `size(array_intersect)`
+    * (shingles are distinct within a doc — [[graft.functions.TextFunctions
+    * .shingles3Array]] builds a LinkedHashSet — so this is the exact
+    * intersection count), set sizes read off the arrays. Each candidate side
+    * moves one compact array per pair, with no exploded shingle join, no
+    * per-pair aggregation and no size join. One output row per (A-row, B-row)
+    * pair: a side that repeats an id gets one exact Jaccard per row.
+    * @return (__a, __b, __i, __na, __nb, jaccard) — unthresholded */
+  private def verifyJaccard(cand: DataFrame, a: DataFrame, b: DataFrame): DataFrame =
+    cand
+      .join(a.select(col("__id").as("__a"), col("__shs").as("__sa")), "__a")
+      .join(b.select(col("__id").as("__b"), col("__shs").as("__sb")), "__b")
       .select(col("__a"), col("__b"),
         size(array_intersect(col("__sa"), col("__sb"))).cast("long").as("__i"),
         size(col("__sa")).cast("long").as("__na"),
         size(col("__sb")).cast("long").as("__nb"))
-      .withColumn("jaccard",
-        col("__i").cast("double") / (col("__na") + col("__nb") - col("__i")).cast("double"))
-    (cand, verified)
+      .withColumn("jaccard", jaccard)
+
+  /** Shared banding front-end of the self-join LSH operators
+    * ([[minHashLshPairs]], [[lshAuditReport]], [[editVerifiedPairs]]): the
+    * [[shingleSets]] side plus its distinct banded candidate pairs
+    * `(__a < __b)`. `bandRows` is checked before the checkpoint runs. */
+  private def lshBandCandidates(
+      df: DataFrame, idCol: String, textCol: String,
+      bandRows: Int): (DataFrame, DataFrame) = {
+    requireBandRows(bandRows)
+    val shs = shingleSets(df, idCol, textCol)
+    val bands = textBands(shs, bandRows)
+    (shs, bandJoin(bands, bands, self = true))
   }
 
   /**
@@ -567,8 +562,6 @@ object Dedup {
       bandRows: Int = graft.functions.TextFunctions.MinHashBandRows): DataFrame = {
     require(maxDistMilli >= 0L && maxDistMilli <= 1000L,
       s"maxDistMilli must be in [0, 1000], got $maxDistMilli")
-    require(bandRows > 0 && graft.functions.TextFunctions.MinHashK % bandRows == 0,
-      s"bandRows must divide MinHashK=${graft.functions.TextFunctions.MinHashK}, got $bandRows")
     // Candidates come from the checkpointed banding core — the shingle UDF
     // pass runs ONCE (materialized), not once per side of the band self-join.
     val (_, cand) = lshBandCandidates(df, idCol, textCol, bandRows)
@@ -618,9 +611,8 @@ object Dedup {
   def nearDupFromSignatures(
       sigs: DataFrame, idCol: String, sigCol: String, threshold: Double,
       bandRows: Int = graft.functions.TextFunctions.MinHashBandRows): DataFrame = {
+    requireBandRows(bandRows)
     val k = graft.functions.TextFunctions.MinHashK
-    require(bandRows > 0 && k % bandRows == 0,
-      s"bandRows must divide MinHashK=$k, got $bandRows")
     // the signature frame (~K Longs/doc, bounded) feeds the band build AND
     // both estimate joins — checkpointed so a caller handing a LAZY frame
     // (signatures built inline from text) pays the shingle+MinHash pass
@@ -628,12 +620,7 @@ object Dedup {
     val s0 = sigs.select(col(idCol).as("__id"), col(sigCol).as("__sig"))
       .localCheckpoint()
     val bands = sigBands(s0, bandRows, k / bandRows)
-    val cand = bands.select(col("__id").as("__a"), col("__band"), col("__bkey"))
-      .join(bands.select(col("__id").as("__b"), col("__band"), col("__bkey")),
-        Seq("__band", "__bkey"))
-      .filter(col("__a") < col("__b"))
-      .select(col("__a"), col("__b")).distinct()
-    sigEstimate(cand, s0, s0, threshold, k)
+    sigEstimate(bandJoin(bands, bands, self = true), s0, s0, threshold, k)
   }
 
   /**
@@ -652,9 +639,8 @@ object Dedup {
       sigsB: DataFrame, idColB: String, sigColB: String,
       threshold: Double,
       bandRows: Int = graft.functions.TextFunctions.MinHashBandRows): DataFrame = {
+    requireBandRows(bandRows)
     val k = graft.functions.TextFunctions.MinHashK
-    require(bandRows > 0 && k % bandRows == 0,
-      s"bandRows must divide MinHashK=$k, got $bandRows")
     val nBands = k / bandRows
     // same lazy-caller guard as [[nearDupFromSignatures]]: each side feeds
     // its band build and its estimate join
@@ -662,12 +648,8 @@ object Dedup {
       .localCheckpoint()
     val b = sigsB.select(col(idColB).as("__id"), col(sigColB).as("__sig"))
       .localCheckpoint()
-    val cand = sigBands(a, bandRows, nBands).select(
-        col("__id").as("__a"), col("__band"), col("__bkey"))
-      .join(sigBands(b, bandRows, nBands).select(
-        col("__id").as("__b"), col("__band"), col("__bkey")),
-        Seq("__band", "__bkey"))
-      .select(col("__a"), col("__b")).distinct()
+    val cand = bandJoin(sigBands(a, bandRows, nBands), sigBands(b, bandRows, nBands),
+      self = false)
     sigEstimate(cand, a, b, threshold, k)
   }
 
@@ -700,45 +682,27 @@ object Dedup {
   /**
    * CROSS-CORPUS MinHash+LSH near-dup pairs — [[minHashLshPairs]] between TWO
    * tables where NEITHER side fits a broadcast (dedup this year's crawl
-   * against last year's): one checkpointed shingle pass per side, band keys
-   * from the same signature UDF, candidates from a SHUFFLE equi-join on
-   * (band, key) — contrast [[Decontaminate.fuzzyFlagged]], which broadcasts
-   * its (benchmark-sized) second side — then exact Jaccard verification of
-   * candidates only. Same banding false-negative bound; `bandRows` tunes it.
-   * Output: (id_a from `dfA`, id_b from `dfB`, jaccard ≥ threshold, rounded
-   * to 6). Ids are NOT required disjoint across tables (a pair is (A-row,
-   * B-row), never ordered by id).
+   * against last year's): one checkpointed shingle pass per side
+   * ([[shingleSets]]), band keys from the same signature UDF, candidates from
+   * the shuffle [[bandJoin]], then the exact [[verifyJaccard]] of candidates
+   * only. Same banding false-negative bound; `bandRows` tunes it. Output:
+   * (id_a from `dfA`, id_b from `dfB`, jaccard ≥ threshold, rounded to 6).
+   * Ids are NOT required disjoint across tables (a pair is (A-row, B-row),
+   * never ordered by id). Verification is per row: candidates are id pairs,
+   * and a side that repeats an id gets one row, with its own exact Jaccard,
+   * per (A-row, B-row) pair. [[Decontaminate.fuzzyFlagged]] is this operator
+   * with its outputs renamed.
    */
   def minHashLshPairsBetween(
       dfA: DataFrame, idColA: String, textColA: String,
       dfB: DataFrame, idColB: String, textColB: String,
       threshold: Double,
       bandRows: Int = graft.functions.TextFunctions.MinHashBandRows): DataFrame = {
-    require(bandRows > 0 && graft.functions.TextFunctions.MinHashK % bandRows == 0,
-      s"bandRows must divide MinHashK=${graft.functions.TextFunctions.MinHashK}, got $bandRows")
-    def side(df: DataFrame, id: String, text: String) =
-      df.select(col(id).as("__id"), shinglesUdf(col(text)).as("__shs"))
-        .filter(size(col("__shs")) > 0)
-        .localCheckpoint(true)
-    val a = side(dfA, idColA, textColA)
-    val b = side(dfB, idColB, textColB)
-    def bands(shs: DataFrame, out: String) = shs
-      .select(col("__id").as(out),
-        posexplode(minHashBandKeysUdfFor(bandRows)(col("__shs"))).as(Seq("__band", "__bkey")))
-    val cand = bands(a, "__a").join(bands(b, "__b"), Seq("__band", "__bkey"))
-      .select(col("__a"), col("__b")).distinct()
-    val ta = a.select(col("__id").as("__a"), explode(col("__shs")).as("__sh"))
-    val tb = b.select(col("__id").as("__b"), explode(col("__shs")).as("__sh"))
-    val inter = cand.join(ta, "__a").join(tb, Seq("__b", "__sh"))
-      .groupBy(col("__a"), col("__b")).agg(count(lit(1)).as("__i"))
-    val na = a.select(col("__id").as("__a"), size(col("__shs")).cast("long").as("__na"))
-    val nb = b.select(col("__id").as("__b"), size(col("__shs")).cast("long").as("__nb"))
-    inter.join(na, "__a").join(nb, "__b")
-      .withColumn("jaccard",
-        col("__i").cast("double") / (col("__na") + col("__nb") - col("__i")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("__a").as("id_a"), col("__b").as("id_b"),
-        round(col("jaccard"), 6).as("jaccard"))
+    requireBandRows(bandRows)
+    val a = shingleSets(dfA, idColA, textColA)
+    val b = shingleSets(dfB, idColB, textColB)
+    val cand = bandJoin(textBands(a, bandRows), textBands(b, bandRows), self = false)
+    jaccardAtLeast(verifyJaccard(cand, a, b), threshold, "id_a", "id_b")
   }
 
   /**
@@ -1470,14 +1434,11 @@ object Dedup {
     val outSchema = StructType(Seq(
       StructField("__cid", LongType), StructField("__cl", IntegerType),
       StructField("__v", ArrayType(FloatType))))
-    val rdd = slim.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        SimSearch.vecWithNorm(r).map { case (id, v, n) =>
-          Row(id, SimSearch.ivfNearest(cents, v, n), v.toSeq)
-        }
+    val assigned = SimSearch.scanRows(slim, outSchema, cents) { (cs, r) =>
+      SimSearch.vecWithNorm(r).iterator.map { case (id, v, n) =>
+        Row(id, SimSearch.ivfNearest(cs, v, n), v.toSeq)
       }
     }
-    val assigned = spark.createDataFrame(rdd, outSchema)
     // Within-cluster scoring WITHOUT a self-join: a self-join on __cl ships
     // every vector twice and its output carries two arrays per candidate row
     // (~6 KB/candidate at 768-dim). Instead ONE exchange co-locates each
@@ -1723,8 +1684,8 @@ object Dedup {
    * Keep the exemplars, drop (or down-weight) the rest: cluster-aware
    * pruning that preserves coverage instead of uniform subsampling.
    *
-   * Scale shape: one corpus scan assigns clusters (centroids broadcast in
-   * the closure, no corpus shuffle), ONE exchange groups each cluster's
+   * Scale shape: one corpus scan assigns clusters (centroids broadcast,
+   * no corpus shuffle), ONE exchange groups each cluster's
    * (id, rel, vec) rows — cluster size is bounded by nList exactly as in
    * [[semDedup]] — and the O(k·|cluster|) greedy kernel runs per cluster.
    * Null / zero-norm embeddings cannot be assigned and are absent.
@@ -1748,19 +1709,16 @@ object Dedup {
     SimSearch.requireIntegralId(df, idCol, "input")
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val spark = df.sparkSession
     val slim = df.select(col(idCol).cast("long"), col(vecCol))
     val cents = SimSearch.trainCentroids(slim, idCol, nList, nIters, side = "input")._1
     val schema = StructType(Seq(
       StructField("cluster", IntegerType), StructField("__id", LongType),
       StructField("__rel", DoubleType), StructField("__v", ArrayType(FloatType))))
-    val rdd = slim.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        SimSearch.vecWithNorm(r).map { case (id, v, n) =>
-          val cos = SimSearch.ivfCentroidCos(cents, v, n)
-          val j = SimSearch.argmax(cos)
-          Row(j, id, cos(j), v.toSeq)
-        }
+    val assigned = SimSearch.scanRows(slim, schema, cents) { (cs, r) =>
+      SimSearch.vecWithNorm(r).iterator.map { case (id, v, n) =>
+        val cos = SimSearch.ivfCentroidCos(cs, v, n)
+        val j = SimSearch.argmax(cos)
+        Row(j, id, cos(j), v.toSeq)
       }
     }
     val sel = udf { (cands: Seq[Row]) =>
@@ -1768,7 +1726,7 @@ object Dedup {
         (r.getLong(0), r.getDouble(1), r.getSeq[Float](2).toArray)
       }.toArray, k, lambda)
     }
-    spark.createDataFrame(rdd, schema)
+    assigned
       .groupBy(col("cluster"))
       .agg(collect_list(struct(col("__id"), col("__rel"), col("__v"))).as("__cands"))
       .select(col("cluster").cast("long").as("cluster"), explode(sel(col("__cands"))).as("__s"))

@@ -158,14 +158,28 @@ object SimSearch {
     requireIntegralId(corpus, cId, corpusSide)
     requireIntegralId(queries, qId, "queries")
     requireCollectableQueries(queries, qId, qVec)
-    val spark = corpus.sparkSession
+    scanRows(corpus.select(col(cId).cast("long") +: corpusCols: _*), ScanSchema, payload)(score)
+  }
+
+  /**
+   * THE per-row corpus scan: `payload` is broadcast and `slim` — the id cast
+   * to Long, then the scanned columns — is read once in mapPartitions, where
+   * `f` turns each row into rows of `schema`. A row with a null id or a null
+   * first column is skipped before `f` sees it. No shuffle of the corpus. The
+   * kernel searches ([[broadcastQueryScan]]), the encoders and every
+   * centroid assignment ([[kmeansAssign]], `Dedup.semDedup`,
+   * `Dedup.clusterExemplars`) scan through it.
+   */
+  private[operators] def scanRows[P: ClassTag](
+      slim: DataFrame, schema: org.apache.spark.sql.types.StructType, payload: P)(
+      f: (P, Row) => Iterator[Row]): DataFrame = {
+    val spark = slim.sparkSession
     val bc = spark.sparkContext.broadcast(payload)
-    val slim = corpus.select(col(cId).cast("long") +: corpusCols: _*)
     val rdd = slim.rdd.mapPartitions { rows =>
       val p = bc.value
-      rows.flatMap(r => if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty else score(p, r))
+      rows.flatMap(r => if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty else f(p, r))
     }
-    spark.createDataFrame(rdd, ScanSchema)
+    spark.createDataFrame(rdd, schema)
   }
 
   /** The exact sequential cosine fold of [[cosineUdf]], norms precomputed
@@ -617,8 +631,8 @@ object SimSearch {
    * join everything else against (SemDeDup clusters, per-cluster sampling
    * quotas, cluster-balanced mixtures).
    *
-   * Plan shape: centroids ride the mapPartitions closure — the corpus never
-   * shuffles; output is (id, cluster, cos_micro) longs.
+   * Plan shape: centroids broadcast, one [[scanRows]] pass — the corpus
+   * never shuffles; output is (id, cluster, cos_micro) longs.
    *
    * @return (cId, cluster, cos_micro) — cos_micro = floor(cos·10⁶) of the
    *         vector against its winning centroid. Null/zero-norm rows absent.
@@ -635,17 +649,13 @@ object SimSearch {
     val schema = StructType(Seq(
       StructField("__cid", LongType), StructField("cluster", IntegerType),
       StructField("cos_micro", LongType)))
-    val rdd = slim.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        vecWithNorm(r).map { case (id, v, n) =>
-          val cos = ivfCentroidCos(cents, v, n)
-          val j = argmax(cos)
-          Row(id, j, math.floor(cos(j) * 1000000.0).toLong)
-        }
+    scanRows(slim, schema, cents) { (cs, r) =>
+      vecWithNorm(r).iterator.map { case (id, v, n) =>
+        val cos = ivfCentroidCos(cs, v, n)
+        val j = argmax(cos)
+        Row(id, j, math.floor(cos(j) * 1000000.0).toLong)
       }
-    }
-    corpus.sparkSession.createDataFrame(rdd, schema)
-      .select(col("__cid").as(cId), col("cluster").cast("long").as("cluster"),
+    }.select(col("__cid").as(cId), col("cluster").cast("long").as("cluster"),
         col("cos_micro"))
   }
 
@@ -1087,23 +1097,13 @@ object SimSearch {
   def pqEncode(corpus: DataFrame, cId: String, cVec: String, model: PqModel): DataFrame = {
     import org.apache.spark.sql.types._
     requireIntegralId(corpus, cId, "corpus")
-    val spark = corpus.sparkSession
-    val slim = corpus.select(col(cId).cast("long"), col(cVec))
-    val bc = spark.sparkContext.broadcast(model)
-    val dim = model.dim
     val outSchema = StructType(Seq(
       StructField("id", LongType), StructField("codes", BinaryType)))
-    val rdd = slim.rdd.mapPartitions { rows =>
-      val m0 = bc.value
-      rows.flatMap { r =>
-        vecWithNorm(r) match {
-          case Some((cid, cv, _)) if cv.length == dim =>
-            Some(Row(cid, pqEncodeVec(cv, m0).map(_.toByte)))
-          case _ => None
-        }
+    scanRows(corpus.select(col(cId).cast("long"), col(cVec)), outSchema, model) { (m0, r) =>
+      vecWithNorm(r).iterator.collect { case (cid, cv, _) if cv.length == m0.dim =>
+        Row(cid, pqEncodeVec(cv, m0).map(_.toByte))
       }
     }
-    spark.createDataFrame(rdd, outSchema)
   }
 
   /**
@@ -1146,8 +1146,8 @@ object SimSearch {
    * quantizer's `nIters`): id-seeded
    * Lloyd centroids, (cosine desc, index asc) assignment, per-subspace
    * seeded codebooks, fixed-order folds, zero-reconstruction rows dropped.
-   * Plan shape: centroids + codebooks in the closure, bucketed query ADC
-   * tables broadcast, ONE shuffle-free corpus scan.
+   * Plan shape: centroids + codebooks broadcast with the bucketed query
+   * ADC tables, ONE shuffle-free corpus scan.
    *
    * @return (query_id, neighbor_id, adc_cosine rounded to 4)
    */
@@ -1640,25 +1640,15 @@ object SimSearch {
       ivf: IvfModel, pq: PqModel): DataFrame = {
     import org.apache.spark.sql.types._
     requireIntegralId(corpus, cId, "corpus")
-    val spark = corpus.sparkSession
-    val slim = corpus.select(col(cId).cast("long"), col(cVec))
-    val bc = spark.sparkContext.broadcast((ivf, pq))
-    val dim = pq.dim
     val outSchema = StructType(Seq(
       StructField("id", LongType), StructField("list", IntegerType),
       StructField("codes", BinaryType)))
-    val rdd = slim.rdd.mapPartitions { rows =>
-      val (iv, m0) = bc.value
-      rows.flatMap { r =>
-        vecWithNorm(r) match {
-          case Some((cid, cv, cSqrt)) if cv.length == dim =>
-            Some(Row(cid, ivfNearest(iv.cents, cv, cSqrt),
-              pqEncodeVec(cv, m0).map(_.toByte)))
-          case _ => None
+    scanRows(corpus.select(col(cId).cast("long"), col(cVec)), outSchema, (ivf, pq)) {
+      case ((iv, m0), r) =>
+        vecWithNorm(r).iterator.collect { case (cid, cv, cSqrt) if cv.length == m0.dim =>
+          Row(cid, ivfNearest(iv.cents, cv, cSqrt), pqEncodeVec(cv, m0).map(_.toByte))
         }
-      }
     }
-    spark.createDataFrame(rdd, outSchema)
   }
 
   /**

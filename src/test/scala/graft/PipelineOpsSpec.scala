@@ -486,6 +486,20 @@ class PipelineOpsSpec extends AnyFunSuite with LocalSpark {
     assert(crossPairs == selfPairs && crossPairs.nonEmpty)
   }
 
+  test("cross-table LSH verifies each row pair when a side repeats an id") {
+    val dog = "the quick brown fox jumps over the lazy dog today"
+    val a = docsDf(Seq((1L, dog), (1L, "the quick brown fox jumps over the lazy cat today")))
+    val b = docsDf(Seq((9L, dog)))
+    // 8 shingles each side; the cat row shares 6 of them: 6 / 10 = 0.6
+    val want = Seq((1L, 9L, 0.6), (1L, 9L, 1.0))
+    def triples(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+    assert(triples(Dedup.minHashLshPairsBetween(a, "doc_id", "text", b, "doc_id", "text", 0.0))
+      == want)
+    assert(triples(Decontaminate.fuzzyFlagged(a, "doc_id", "text", b, "doc_id", "text", 0.0))
+      == want)
+  }
+
   test("minHashLshPairs bandRows knob: exact dups always collide; stricter banding narrows") {
     val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
     val docs = docsDf(Seq(

@@ -765,6 +765,33 @@ class PlanSpec extends AnyFunSuite with LocalSpark {
     assert(built.forall(_.count() == 15L))
   }
 
+  test("every banding entry rejects a bandRows that does not divide MinHashK before any job") {
+    val s = spark
+    import s.implicits._
+    val docs = Seq((1L, "alpha beta gamma delta epsilon"), (2L, "alpha beta gamma delta zeta"))
+      .toDF("doc_id", "text")
+    val sigs = Seq((1L, Seq.fill(32)(7L)), (2L, Seq.fill(32)(7L))).toDF("doc_id", "sig")
+    import graft.operators.{Decontaminate, Dedup}
+    val entries: Seq[(String, () => DataFrame)] = Seq(
+      "lshAuditReport" -> (() => Dedup.lshAuditReport(docs, "doc_id", "text", 0.5, bandRows = 3)),
+      "minHashLshPairs" -> (() => Dedup.minHashLshPairs(docs, "doc_id", "text", 0.5, bandRows = 3)),
+      "editVerifiedPairs" -> (() => Dedup.editVerifiedPairs(docs, "doc_id", "text", 200, bandRows = 3)),
+      "minHashLshPairsBetween" -> (() => Dedup.minHashLshPairsBetween(
+        docs, "doc_id", "text", docs, "doc_id", "text", 0.5, bandRows = 3)),
+      "fuzzyFlagged" -> (() => Decontaminate.fuzzyFlagged(
+        docs, "doc_id", "text", docs, "doc_id", "text", 0.5, bandRows = 3)),
+      "nearDupFromSignatures" -> (() => Dedup.nearDupFromSignatures(
+        sigs, "doc_id", "sig", 0.5, bandRows = 3)),
+      "nearDupFromSignaturesBetween" -> (() => Dedup.nearDupFromSignaturesBetween(
+        sigs, "doc_id", "sig", sigs, "doc_id", "sig", 0.5, bandRows = 3)))
+    withJobCounter { jobs =>
+      entries.foreach { case (name, call) =>
+        intercept[IllegalArgumentException](call())
+        assert(jobs() == 0, s"$name checked bandRows after a Spark job")
+      }
+    }
+  }
+
   test("ann_filtered is a PRE-filter: full k among survivors, all matching") {
     // (the scoring pass crosses an RDD boundary, so the predicate pushdown
     // itself isn't visible in this plan — pin the pre-filter SEMANTICS:
