@@ -170,13 +170,26 @@ object TextFunctions {
   val simHash1Udf = udf((shs: Seq[String]) => simHashHalf(shs.toArray, SimHashMult1))
   val simHash2Udf = udf((shs: Seq[String]) => simHashHalf(shs.toArray, SimHashMult2))
 
+  /** THE word-n-gram explode input: per start position of a words array, the
+    * struct `(w1, …, wn)` of the n words from there; empty when the array has
+    * fewer than n words (guarded: a negative `slice` length throws). The n
+    * shifted slices are zipped, with no lambda: higher-order functions run
+    * interpreted, a zip runs in generated code. */
+  def wordGrams(ws: Column, n: Int): Column = {
+    require(n >= 1, s"n must be >= 1, got $n")
+    val grams = s"array<struct<${(1 to n).map(o => s"w$o:string").mkString(",")}>>"
+    val k = size(ws) - (n - 1)
+    when(size(ws) >= n, arrays_zip((1 to n).map(o => slice(ws, lit(o), k)): _*).cast(grams))
+      .otherwise(array().cast(grams))
+  }
+
+  /** The space-joined string key of a [[wordGrams]] struct. */
+  private[graft] def gramKey(g: Column, n: Int): Column =
+    concat_ws(" ", (1 to n).map(o => g.getField(s"w$o")): _*)
+
   /** Distinct 3-word shingles of a words array (space-joined); empty when < 3 words. */
   def shingles3(ws: Column): Column =
-    array_distinct(
-      when(size(ws) >= 3,
-        transform(sequence(lit(1), size(ws) - 2),
-          i => concat_ws(" ", element_at(ws, i), element_at(ws, i + 1), element_at(ws, i + 2))))
-      .otherwise(array().cast("array<string>")))
+    array_distinct(transform(wordGrams(ws, 3), gramKey(_, 3)))
 
   // ---------------------------------------------------------------------------
   // MinHash / SimHash parameters — inlined as literals in the oracle SQL too.

@@ -1,52 +1,87 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
-import graft.functions.TextFunctions.wordsCol
+import graft.functions.TextFunctions.{wordGrams, wordsCol}
 
 /**
- * Corpus-level statistical quality signals.
+ * Corpus-level statistical quality signals, and the one core each family
+ * shares:
  *
- * [[unigramLogLoss]] — per-document cross-entropy against the corpus's own
- * add-one-smoothed unigram distribution: `xent(d) = avg_{w ∈ d} −ln((c(w)+1)/(N+V))`
- * where c = corpus word count, N = total words, V = vocabulary size. High
- * values flag documents whose word distribution diverges from the corpus
- * (gibberish, boilerplate, wrong language) — the standard perplexity-style
- * filter for training-data curation.
+ *  - Add-one n-gram cross-entropy: [[unigramLogLoss]], [[bigramLogLoss]] and
+ *    [[trigramLogLoss]] are faces of `ngramLogLoss` (one checkpointed count
+ *    table over [[TextFunctions.wordGrams]], its context rollup, V, the
+ *    per-doc mean). [[refUnigramLogLoss]] and [[stupidBackoffLogLoss]] train
+ *    on a slice and add an OOV/backoff path.
+ *  - Word n-grams: every adjacent-n-gram explode is
+ *    [[TextFunctions.wordGrams]] — the LMs, [[topNgramCharFraction]],
+ *    [[dsirWeights]] at `ngram = 2`, [[stupidBackoffLogLoss]].
+ *    [[collocations]] is [[cooccurrence]] at window 1, whose skip pairs are
+ *    exactly the adjacent pairs.
+ *  - Micro-nats: every log cost is quantized by `microNats`
+ *    (`floor(x·1e6)` as BIGINT) BEFORE any aggregation, so per-doc and
+ *    per-source sums are exact integer sums — invariant under Spark's
+ *    reduction order and mirrored 1:1 in oracle SQL. Only a final mean is a
+ *    double: `microMean`, rounded to 4. [[charEntropy]],
+ *    [[sourceKlDivergence]], [[mixtureEntropy]], [[dsirWeights]], the PMI
+ *    scores and the PSI term all quantize the same way.
+ *  - Clamped bins: `binOf` and `requireBins` serve [[exactHistogram]],
+ *    [[psiDrift]], [[ksDrift]], [[psiDriftByGroup]] and
+ *    [[graft.streaming.StreamDrift.psiPerWindow]]; `microMass` and `psiMicro`
+ *    are the smoothed mass and the PSI term of the three PSI sites;
+ *    [[psiDrift]] and [[ksDrift]] read one two-side bin table.
+ *  - Sketches: [[approxDistinctByGroup]] and [[kmvGroupOverlap]] share one
+ *    KMV sketch builder; the count-min family shares its hash rows.
+ *  - Exact ranks: [[vocabulary]], [[keepTopPercent]], [[exactPercentiles]],
+ *    [[keepTopPercentByGroup]], [[madOutliers]], [[quantileBuckets]] and
+ *    [[ensembleRank]] rank through [[DenseRank]], never a partition-less
+ *    window.
+ *  - Tokenizer training: the BPE and unigram-LM trainers count words in one
+ *    distributed aggregation and run their loops on the size-guarded
+ *    distinct vocabulary.
  *
- * Determinism: the per-word surprisal is QUANTIZED to integer micro-nats
- * (`floor(−ln(p)·1e6)`), so the per-document aggregation is an exact integer
- * sum — invariant under Spark's reduction order and mirrored 1:1 in oracle
- * SQL (the same trick as SimJoin.tfidfPairs' integer idf weights). Only the
- * final mean is a double, rounded to 4.
- *
- * Scale shape: two shuffles (word counts, per-doc sum) plus one join of the
- * exploded words against the unigram table — left to AQE to broadcast when
- * the vocabulary is small; never collected driver-side. Documents with zero
- * extractable words have no distribution to score and are absent from the
- * output (inner-join semantics, mirrored by the oracle).
+ * Documents with no extractable unit (word, n-gram, character) have nothing
+ * to score and are absent from per-document outputs.
  */
 object CorpusStats {
 
-  /** Materialize INDEPENDENT frames as concurrent jobs (guide §2.6 — overlap
-    * independent jobs so one pass's straggler tail back-fills with the
-    * other's tasks): serial eager `localCheckpoint`s cost one full cluster
-    * wave each, which at small scale is the dominant cost of the
-    * checkpoint-the-bounded-table idiom (measured on `cooccurrence`, r18:
-    * the two-wave shape ran SLOWER warm than cold in both r17 sweeps).
-    * Results are positionally aligned with the input; contents don't depend
-    * on materialization order. Callers must pass frames with NO dependency
-    * on each other. */
-  private def checkpointConcurrently(dfs: Seq[DataFrame]): Seq[DataFrame] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(
-      Future.sequence(dfs.map(df => Future(df.localCheckpoint()))),
-      Duration.Inf)
+  /** THE micro-nat quantizer: `floor(x·1e6)` as BIGINT. `scaled` rescales
+    * the micro-nat value before the floor ([[mixtureEntropy]]'s `·w/T`). */
+  private def microNats(x: Column, scaled: Column => Column = identity): Column =
+    floor(scaled(x * lit(1000000.0))).cast("long")
+
+  /** THE mean tail: a micro-nat sum `__s` over `n` items, in nats rounded to 4. */
+  private def microMean(n: Column): Column =
+    round(col("__s").cast("double") / (n.cast("double") * lit(1000000.0)), 4)
+
+  /** THE range check of the clamped-bin family. */
+  private[graft] def requireBins(lo: Double, hi: Double, nBins: Int): Unit = {
+    require(nBins > 0, s"nBins must be positive, got $nBins")
+    require(lo < hi, s"need lo < hi, got [$lo, $hi)")
   }
+
+  /** THE clamped bin of a double `v`: `floor((v − lo)/w)`, w = (hi − lo)/nBins
+    * in exact double arithmetic, clamped into [0, nBins) — below lo → bin 0,
+    * ≥ hi → bin nBins−1, −∞/+∞ included. */
+  private[graft] def binOf(v: Column, lo: Double, hi: Double, nBins: Int): Column = {
+    val w = (hi - lo) / nBins
+    least(greatest(floor((v - lit(lo)) / lit(w)).cast("long"), lit(0L)), lit(nBins.toLong - 1L))
+  }
+
+  /** THE add-one-smoothed bin mass in BIGINT micro-units:
+    * `(c+1)·10⁶ div (n+nBins)` — never 0, so the PSI log is finite. */
+  private[graft] def microMass(c: Column, n: Column, nBins: Int): Column =
+    call_function("div", (c + 1) * 1000000L, n + nBins)
+
+  /** THE PSI term of two `microMass`es: `(cur − base)·⌊(ln cur − ln base)·10⁶⌋
+    * div 10⁶`. The factors share a sign, so the term is non-negative and
+    * `div` equals floor. */
+  private[graft] def psiMicro(cur: Column, base: Column): Column =
+    call_function("div",
+      (cur - base) * microNats(log(cur.cast("double")) - log(base.cast("double"))),
+      lit(1000000L))
 
   /**
    * Corpus vocabulary table: per word, collection frequency (total
@@ -65,23 +100,48 @@ object CorpusStats {
       Seq(col("cf").desc, col("word").asc), "rank", startAt = 1L)
   }
 
-  /** @return (idCol, xent) — add-one-smoothed unigram cross-entropy in nats. */
-  def unigramLogLoss(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val w = docs.select(col(idCol).as("__id"), explode(wordsCol(col(textCol))).as("__w"))
-    // vocab-sized, two consumers (totals + cost table) — uncut, each re-ran
-    // the corpus tokenize + explode (r17)
-    val cnt = w.groupBy(col("__w")).agg(count(lit(1)).as("__c")).localCheckpoint()
-    val tot = cnt.agg(sum(col("__c")).as("__N"), count(lit(1)).as("__V"))
-    val q = cnt.crossJoin(broadcast(tot))
-      .select(col("__w"),
-        floor(-log((col("__c") + 1).cast("double") / (col("__N") + col("__V")).cast("double"))
-          * lit(1000000.0)).cast("long").as("__qn"))
-    w.join(q, "__w")
+  /**
+   * Add-one-smoothed UNIGRAM cross-entropy against the corpus's own word
+   * distribution: `xent(d) = avg_{w ∈ d} −ln((c(w)+1)/(N+V))` where c = corpus
+   * word count, N = total words, V = vocabulary size. High values flag
+   * documents whose word distribution diverges from the corpus (gibberish,
+   * boilerplate, wrong language) — the standard perplexity-style filter for
+   * training-data curation. Scale shape: `ngramLogLoss`'s.
+   * @return (idCol, xent)
+   */
+  def unigramLogLoss(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    ngramLogLoss(docs, idCol, textCol, 1, "xent")
+
+  /** THE add-one n-gram LM of [[unigramLogLoss]], [[bigramLogLoss]] and
+    * [[trigramLogLoss]]: per distinct observed n-gram,
+    * `q = microNats(−ln((c+1)/(ctx+V)))`, where c is its corpus count, ctx the
+    * count of its first n−1 words AS A CONTEXT (Σ over the last word of c;
+    * the grand total N at n = 1) and V the corpus vocabulary size; per doc,
+    * the `microMean` of q over its n-grams. The count table is ONE
+    * aggregation over the [[TextFunctions.wordGrams]] explode, checkpointed
+    * because the context rollup, V (at n = 1) and the cost table all read it
+    * — observed n-grams only, no vocabⁿ blowup, never collected. At n > 1, V
+    * counts the distinct words of every doc, short ones included. Docs with
+    * fewer than n words are absent. */
+  private def ngramLogLoss(
+      docs: DataFrame, idCol: String, textCol: String, n: Int, outCol: String): DataFrame = {
+    val ws = docs.select(col(idCol).as("__id"), wordsCol(col(textCol)).as("__ws"))
+    val keys = (1 to n).map(o => s"__w$o")
+    val grams = ws.select(col("__id"), explode(wordGrams(col("__ws"), n)).as("__g"))
+      .select(col("__id") +: keys.zipWithIndex.map { case (k, o) => col(s"__g.w${o + 1}").as(k) }: _*)
+    val c = grams.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__c")).localCheckpoint()
+    val withCtx =
+      if (n == 1) c.crossJoin(broadcast(c.agg(sum(col("__c")).as("__ctx"), count(lit(1)).as("__V"))))
+      else c.join(c.groupBy(keys.init.map(col): _*).agg(sum(col("__c")).as("__ctx")), keys.init)
+        .crossJoin(broadcast(ws.select(explode(col("__ws")).as("__w"))
+          .agg(count_distinct(col("__w")).as("__V"))))
+    val q = withCtx.select(keys.map(col) :+
+      microNats(-log((col("__c") + 1).cast("double") / (col("__ctx") + col("__V")).cast("double")))
+        .as("__qn"): _*)
+    grams.join(q, keys)
       .groupBy(col("__id"))
       .agg(sum(col("__qn")).as("__s"), count(lit(1)).as("__n"))
-      .select(col("__id").as(idCol),
-        round(col("__s").cast("double") / (col("__n").cast("double") * lit(1000000.0)), 4)
-          .as("xent"))
+      .select(col("__id").as(idCol), microMean(col("__n")).as(outCol))
   }
 
   /**
@@ -105,28 +165,24 @@ object CorpusStats {
    */
   def refUnigramLogLoss(
       docs: DataFrame, idCol: String, textCol: String,
-      refFilter: org.apache.spark.sql.Column): DataFrame = {
+      refFilter: Column): DataFrame = {
     val w = docs.select(col(idCol).as("__id"), explode(wordsCol(col(textCol))).as("__w"))
-    // vocab-sized, two consumers (totals + cost table) — see unigramLogLoss
+    // vocab-sized, two consumers (totals + cost table)
     val cnt = docs.filter(refFilter)
       .select(explode(wordsCol(col(textCol))).as("__w"))
       .groupBy(col("__w")).agg(count(lit(1)).as("__c")).localCheckpoint()
     val tot = cnt.agg(sum(col("__c")).as("__N"), count(lit(1)).as("__V"))
     val q = cnt.crossJoin(broadcast(tot))
       .select(col("__w"),
-        floor(-log((col("__c") + 1).cast("double")
-            / (col("__N") + col("__V") + 1).cast("double"))
-          * lit(1000000.0)).cast("long").as("__qn"))
-    val oov = floor(-log(lit(1.0) / (col("__N") + col("__V") + 1).cast("double"))
-      * lit(1000000.0)).cast("long")
+        microNats(-log((col("__c") + 1).cast("double")
+            / (col("__N") + col("__V") + 1).cast("double"))).as("__qn"))
+    val oov = microNats(-log(lit(1.0) / (col("__N") + col("__V") + 1).cast("double")))
     w.join(q, Seq("__w"), "left")
       .crossJoin(broadcast(tot))
       .select(col("__id"), coalesce(col("__qn"), oov).as("__qn"))
       .groupBy(col("__id"))
       .agg(sum(col("__qn")).as("__s"), count(lit(1)).as("__n"))
-      .select(col("__id").as(idCol),
-        round(col("__s").cast("double") / (col("__n").cast("double") * lit(1000000.0)), 4)
-          .as("xent_ref"))
+      .select(col("__id").as(idCol), microMean(col("__n")).as("xent_ref"))
   }
 
   /**
@@ -150,10 +206,9 @@ object CorpusStats {
     val cnt = chars.groupBy(col("__id"), col("__ch")).agg(count(lit(1)).as("__c"))
     cnt.groupBy(col("__id"))
       .agg(sum(col("__c")).as("__n"),
-        sum(col("__c") * floor(log(col("__c").cast("double")) * lit(1000000.0)).cast("long"))
-          .as("__s"))
+        sum(col("__c") * microNats(log(col("__c").cast("double")))).as("__s"))
       .select(col("__id").as(idCol), col("__n").as("n_chars"),
-        round((floor(log(col("__n").cast("double")) * lit(1000000.0)).cast("long")
+        round((microNats(log(col("__n").cast("double")))
             - floor(col("__s").cast("double") / col("__n").cast("double")).cast("long"))
           .cast("double") / lit(1000000.0), 4).as("entropy"))
   }
@@ -178,15 +233,8 @@ object CorpusStats {
    */
   def approxDistinctByGroup(
       df: DataFrame, groupCol: String, valueCol: String, k: Int = 64): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    import graft.functions.TextFunctions.tHashUdf
-    val slim = df.filter(col(valueCol).isNotNull)
-      .select(col(groupCol).cast("string"),
-        pmod(tHashUdf(col(valueCol).cast("string")), lit(2147483648L)).cast("long"))
-      .as[(String, Long)]
-    slim.groupByKey(_._1).mapValues(_._2)
-      .agg(new graft.functions.KmvAgg(k).toColumn.name("sketch"))
+    import df.sparkSession.implicits._
+    kmvSketches(df, groupCol, valueCol, k)
       .map { case (g, sk) => (g, sk.length.toLong, if (sk.isEmpty) -1L else sk.last) }
       .toDF(groupCol, "n_sketch", "__vk")
       // the estimate division + rounding stay Spark EXPRESSIONS so the engine
@@ -218,16 +266,7 @@ object CorpusStats {
    */
   def kmvGroupOverlap(
       df: DataFrame, groupCol: String, valueCol: String, k: Int = 64): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    import graft.functions.TextFunctions.tHashUdf
-    val slim = df.filter(col(valueCol).isNotNull)
-      .select(col(groupCol).cast("string"),
-        pmod(tHashUdf(col(valueCol).cast("string")), lit(2147483648L)).cast("long"))
-      .as[(String, Long)]
-    val sk = slim.groupByKey(_._1).mapValues(_._2)
-      .agg(new graft.functions.KmvAgg(k).toColumn.name("__sk"))
-      .toDF("__g", "__sk")
+    val sk = kmvSketches(df, groupCol, valueCol, k).toDF("__g", "__sk")
     val a = sk.select(col("__g").as("g_a"), col("__sk").as("__ska"))
     val b = sk.select(col("__g").as("g_b"), col("__sk").as("__skb"))
     val unionK = slice(array_sort(array_distinct(concat(col("__ska"), col("__skb")))), 1, k)
@@ -248,6 +287,20 @@ object CorpusStats {
         round(col("__rho") * col("__du"), 4).as("inter_est"))
   }
 
+  /** THE KMV sketch builder of [[approxDistinctByGroup]] and
+    * [[kmvGroupOverlap]]: per group (as a string), the [[graft.functions.KmvAgg]]
+    * bottom-k sketch of its non-null values' tHash folded into [0, 2³¹). */
+  private def kmvSketches(
+      df: DataFrame, groupCol: String, valueCol: String, k: Int): Dataset[(String, Seq[Long])] = {
+    import df.sparkSession.implicits._
+    df.filter(col(valueCol).isNotNull)
+      .select(col(groupCol).cast("string"),
+        pmod(TextFunctions.tHashUdf(col(valueCol).cast("string")), lit(2147483648L)).cast("long"))
+      .as[(String, Long)]
+      .groupByKey(_._1).mapValues(_._2)
+      .agg(new graft.functions.KmvAgg(k).toColumn)
+  }
+
   /**
    * Add-one-smoothed BIGRAM cross-entropy — the order-2 upgrade of
    * [[unigramLogLoss]] (KenLM-style n-gram scoring, truncated to n=2):
@@ -257,89 +310,26 @@ object CorpusStats {
    * whose unigram distribution looks normal but whose transitions are
    * improbable — the complement of [[unigramLogLoss]].
    *
-   * Same determinism contract (integer micro-nat quantization, exact Long
-   * sums, final mean rounded to 4) and scale shape (shuffles on the bigram
-   * key, never collected; observed bigrams only — no vocab² blowup).
-   * Documents with fewer than two extractable words have no transition to
-   * score and are absent from the output.
+   * The n = 2 face of `ngramLogLoss`. Documents with fewer than two
+   * extractable words have no transition to score and are absent.
    * @return (idCol, xent2)
    */
-  def bigramLogLoss(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val ws = docs.select(col(idCol).as("__id"), wordsCol(col(textCol)).as("__ws"))
-    val b = ws.filter(size(col("__ws")) >= 2)
-      .select(col("__id"),
-        explode(zip_with(
-          slice(col("__ws"), lit(1), size(col("__ws")) - 1),
-          slice(col("__ws"), lit(2), size(col("__ws")) - 1),
-          (a, bw) => struct(a.as("w1"), bw.as("w2")))).as("__bg"))
-      .select(col("__id"), col("__bg.w1").as("__w1"), col("__bg.w2").as("__w2"))
-    // ONE bigram aggregation, checkpointed (vocab²-bounded): the w1 context
-    // counts are its per-w1 rollup (Σ_w2 c2 = occurrences of w1 as a bigram
-    // head) — the former separate groupBy re-ran the corpus bigram explode
-    val c2 = b.groupBy(col("__w1"), col("__w2")).agg(count(lit(1)).as("__c2"))
-      .localCheckpoint()
-    val c1 = c2.groupBy(col("__w1")).agg(sum(col("__c2")).as("__c1"))
-    val vv = ws.select(explode(col("__ws")).as("__w"))
-      .agg(count_distinct(col("__w")).as("__V"))
-    val q = c2.join(c1, "__w1").crossJoin(broadcast(vv))
-      .select(col("__w1"), col("__w2"),
-        floor(-log((col("__c2") + 1).cast("double") /
-            (col("__c1") + col("__V")).cast("double")) * lit(1000000.0))
-          .cast("long").as("__qn"))
-    b.join(q, Seq("__w1", "__w2"))
-      .groupBy(col("__id"))
-      .agg(sum(col("__qn")).as("__s"), count(lit(1)).as("__n"))
-      .select(col("__id").as(idCol),
-        round(col("__s").cast("double") / (col("__n").cast("double") * lit(1000000.0)), 4)
-          .as("xent2"))
-  }
+  def bigramLogLoss(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    ngramLogLoss(docs, idCol, textCol, 2, "xent2")
 
   /**
    * Add-one-smoothed TRIGRAM cross-entropy — order 3 of the
    * [[unigramLogLoss]]/[[bigramLogLoss]] family:
    * `xent3(d) = avg_{(w1,w2,w3) ∈ d} −ln((c3(w1,w2,w3)+1)/(ctx2(w1,w2)+V))`
    * where c3 = corpus trigram count, ctx2 = occurrences of (w1,w2) AS A
-   * TRIGRAM CONTEXT (= Σ_w3 c3, computed from the trigram relation itself —
-   * the same convention bigramLogLoss uses for its w1 context), and V = the
-   * unigram vocabulary size. Longer context catches locally-fluent word
-   * salad that order-2 scores as normal.
-   *
-   * Same determinism contract (integer micro-nat quantization, exact Long
-   * sums, final mean rounded to 4) and scale shape (shuffles on the observed
-   * trigram key only — no vocab³ blowup; never collected). Documents with
-   * fewer than three extractable words are absent from the output.
+   * TRIGRAM CONTEXT (= Σ_w3 c3), and V = the unigram vocabulary size. Longer
+   * context catches locally-fluent word salad that order-2 scores as normal.
+   * The n = 3 face of `ngramLogLoss`; documents with fewer than three
+   * extractable words are absent.
    * @return (idCol, xent3)
    */
-  def trigramLogLoss(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val ws = docs.select(col(idCol).as("__id"), wordsCol(col(textCol)).as("__ws"))
-    val t = ws.filter(size(col("__ws")) >= 3)
-      .select(col("__id"),
-        explode(transform(sequence(lit(1), size(col("__ws")) - 2),
-          i => struct(
-            element_at(col("__ws"), i).as("w1"),
-            element_at(col("__ws"), i + 1).as("w2"),
-            element_at(col("__ws"), i + 2).as("w3")))).as("__tg"))
-      .select(col("__id"), col("__tg.w1").as("__w1"), col("__tg.w2").as("__w2"),
-        col("__tg.w3").as("__w3"))
-    // same derivation as bigramLogLoss: ctx2 = Σ_w3 c3 rolls up from the
-    // checkpointed trigram table instead of re-exploding the corpus
-    val c3 = t.groupBy(col("__w1"), col("__w2"), col("__w3")).agg(count(lit(1)).as("__c3"))
-      .localCheckpoint()
-    val ctx2 = c3.groupBy(col("__w1"), col("__w2")).agg(sum(col("__c3")).as("__cc"))
-    val vv = ws.select(explode(col("__ws")).as("__w"))
-      .agg(count_distinct(col("__w")).as("__V"))
-    val q = c3.join(ctx2, Seq("__w1", "__w2")).crossJoin(broadcast(vv))
-      .select(col("__w1"), col("__w2"), col("__w3"),
-        floor(-log((col("__c3") + 1).cast("double") /
-            (col("__cc") + col("__V")).cast("double")) * lit(1000000.0))
-          .cast("long").as("__qn"))
-    t.join(q, Seq("__w1", "__w2", "__w3"))
-      .groupBy(col("__id"))
-      .agg(sum(col("__qn")).as("__s"), count(lit(1)).as("__n"))
-      .select(col("__id").as(idCol),
-        round(col("__s").cast("double") / (col("__n").cast("double") * lit(1000000.0)), 4)
-          .as("xent3"))
-  }
+  def trigramLogLoss(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    ngramLogLoss(docs, idCol, textCol, 3, "xent3")
 
   /**
    * Gopher-style repetition signal (Rae et al. 2021, "Scaling Language
@@ -360,11 +350,8 @@ object CorpusStats {
     val ws = docs.select(col(idCol).as("__id"), wordsCol(col(textCol)).as("__ws"))
     val totals = ws.select(col("__id"), explode(col("__ws")).as("__w"))
       .groupBy(col("__id")).agg(sum(length(col("__w"))).as("__tot"))
-    val grams = ws.filter(size(col("__ws")) >= n)
-      .select(col("__id"),
-        explode(transform(sequence(lit(1), size(col("__ws")) - (n - 1)),
-          i => concat_ws(" ",
-            (0 until n).map(o => element_at(col("__ws"), i + o)): _*))).as("__g"))
+    val grams = ws.select(col("__id"),
+      explode(transform(wordGrams(col("__ws"), n), TextFunctions.gramKey(_, n))).as("__g"))
     val cnt = grams.groupBy(col("__id"), col("__g")).agg(count(lit(1)).as("__c"))
     val w = Window.partitionBy(col("__id")).orderBy(col("__c").desc, col("__g").asc)
     cnt.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
@@ -390,13 +377,11 @@ object CorpusStats {
    */
   def exactHistogram(
       df: DataFrame, valueCol: String, lo: Double, hi: Double, nBins: Int): DataFrame = {
-    require(nBins > 0, s"nBins must be positive, got $nBins")
-    require(lo < hi, s"need lo < hi, got [$lo, $hi)")
+    requireBins(lo, hi, nBins)
     val w = (hi - lo) / nBins
     df.select(col(valueCol).cast("double").as("__v"))
       .filter(col("__v").isNotNull && !isnan(col("__v")))
-      .select(least(greatest(floor((col("__v") - lit(lo)) / lit(w)).cast("long"), lit(0L)),
-        lit(nBins.toLong - 1L)).as("bin"))
+      .select(binOf(col("__v"), lo, hi, nBins).as("bin"))
       .groupBy(col("bin")).agg(count(lit(1)).as("n"))
       .select(col("bin"),
         round(lit(lo) + col("bin").cast("double") * lit(w), 4).as("lo_edge"),
@@ -587,7 +572,8 @@ object CorpusStats {
    * micro-nats (each source's term floored on a single canonical double
    * path, then summed exactly — the [[unigramLogLoss]] idiom), and
    * `max_share_milli = max_s ⌊1000·w_s/T⌋`. H near ln(n_sources) means
-   * balanced; H near 0 or a large max share means collapse.
+   * balanced; H near 0 or a large max share means collapse. A zero-weight
+   * source adds 0 to both (still counted in n_sources); a zero total gives 0.
    *
    * Scale shape: one source-keyed rollup + a broadcast 1-row total —
    * nothing else moves.
@@ -599,13 +585,17 @@ object CorpusStats {
     val w = docs.filter(col(sourceCol).isNotNull && col(weightCol).isNotNull)
       .groupBy(col(sourceCol)).agg(sum(col(weightCol).cast("long")).as("__w"))
     val t = w.agg(sum(col("__w")).as("__t"))
+    // ANSI division throws on w = 0 and T = 0: guarded, a zero-weight term
+    // is its w → 0 limit, 0
     w.crossJoin(broadcast(t))
       .select(col("__w"), col("__t"),
-        expr("CAST(floor(ln(CAST(__t AS DOUBLE) / __w) * 1000000.0 * __w / __t) AS BIGINT)")
+        when(col("__w") === 0L, lit(0L)).otherwise(
+          microNats(log(col("__t").cast("double") / col("__w")), _ * col("__w") / col("__t")))
           .as("__e"))
       .agg(count(lit(1)).as("n_sources"), max(col("__t")).as("total_w"),
         sum(col("__e")).as("entropy_micro"),
-        max(expr("(__w * 1000) DIV __t")).as("max_share_milli"))
+        max(when(col("__t") === 0L, lit(0L)).otherwise(expr("(__w * 1000) DIV __t")))
+          .as("max_share_milli"))
   }
 
   /**
@@ -644,15 +634,12 @@ object CorpusStats {
       .join(ns, "__src")
       .crossJoin(broadcast(n))
       .select(col("__src"), col("__ns"),
-        (col("__csw") *
-          floor(log((col("__csw") * col("__N")).cast("double") /
-                    (col("__ns") * col("__cw")).cast("double")) * lit(1000000.0))
-            .cast("long")).as("__q"))
+        (col("__csw") * microNats(log((col("__csw") * col("__N")).cast("double") /
+          (col("__ns") * col("__cw")).cast("double")))).as("__q"))
     contrib.groupBy(col("__src"))
       .agg(first(col("__ns")).as("__ns2"), sum(col("__q")).as("__s"))
       .select(col("__src").as(sourceCol), col("__ns2").as("n_tokens"),
-        round(col("__s").cast("double") / (col("__ns2").cast("double") * lit(1000000.0)), 4)
-          .as("kl"))
+        microMean(col("__ns2")).as("kl"))
   }
 
   /**
@@ -692,12 +679,10 @@ object CorpusStats {
       expr(targetPred).as("__t"), wordsCol(col(textCol)).as("__ws"))
     // docs with fewer than `ngram` words have no features and are absent
     // (same contract as the wordless-doc exclusion below)
-    val toks =
-      if (ngram == 1) base.select(col("__id"), col("__t"), explode(col("__ws")).as("__w"))
-      else base.filter(size(col("__ws")) >= 2)
-        .select(col("__id"), col("__t"),
-          explode(expr("transform(sequence(0, size(__ws) - 2), " +
-            "i -> concat(__ws[i], ' ', __ws[i + 1]))")).as("__w"))
+    val feats =
+      if (ngram == 1) col("__ws")
+      else transform(wordGrams(col("__ws"), 2), TextFunctions.gramKey(_, 2))
+    val toks = base.select(col("__id"), col("__t"), explode(feats).as("__w"))
     // Both sides' counts in ONE conditional aggregation over one token pass
     // (the former two filtered groupBys + full-outer vocab join re-ran the
     // tokenizer explode per side), checkpointed because the weight table and
@@ -711,9 +696,8 @@ object CorpusStats {
       .localCheckpoint()
     val tot = vocab.agg(sum(col("__ct")).as("__NT"), sum(col("__cr")).as("__NR"),
       count(lit(1)).as("__V"))
-    def q(c: org.apache.spark.sql.Column, n: org.apache.spark.sql.Column) =
-      floor(-log((c + 1).cast("double") / (n + col("__V")).cast("double"))
-        * lit(1000000.0)).cast("long")
+    def q(c: Column, n: Column) =
+      microNats(-log((c + 1).cast("double") / (n + col("__V")).cast("double")))
     val wt = vocab.crossJoin(broadcast(tot))
       .select(col("__w"),
         (q(col("__cr"), col("__NR")) - q(col("__ct"), col("__NT"))).as("__d"))
@@ -760,16 +744,13 @@ object CorpusStats {
   /**
    * Collocation extraction by pointwise mutual information over adjacent
    * word pairs — the phrase-mining / tokenizer-seeding step ("new york",
-   * "machine learning" score high; chance co-occurrences score ~0). Scored
-   * in integer micro-nats so the ranking is reduction-order-proof and
-   * oracle-exact: `pmi_micro = q(c_x/N₁) + q(c_y/N₁) − q(c_xy/N₂)` with
-   * `q(p) = floor(−ln(p)·10⁶)` (the [[unigramLogLoss]] idiom; observed
-   * pairs only, so no smoothing is needed). Bigrams never cross document
-   * boundaries.
-   *
-   * Scale shape: two word-keyed aggregations + one join of the bigram
-   * relation against the (much smaller) unigram table — AQE broadcasts it
-   * when the vocabulary allows; scalar totals ride a 1-row broadcast.
+   * "machine learning" score high; chance co-occurrences score ~0):
+   * [[cooccurrence]] at window 1, whose skip pairs are exactly the adjacent
+   * pairs. Scored in integer micro-nats so the ranking is
+   * reduction-order-proof and oracle-exact:
+   * `pmi_micro = q(c_x/N₁) + q(c_y/N₁) − q(c_xy/N₂)` with
+   * `q(p) = floor(−ln(p)·10⁶)` (observed pairs only, so no smoothing is
+   * needed). Pairs never cross document boundaries.
    *
    * @param minCount noise floor: pairs rarer than this are dropped BEFORE
    *                 the join (rare pairs otherwise dominate PMI rankings)
@@ -778,28 +759,23 @@ object CorpusStats {
    */
   def collocations(
       docs: DataFrame, textCol: String,
-      minCount: Long = 5L, topK: Int = 100): DataFrame = {
-    require(minCount >= 1L, s"minCount must be >= 1, got $minCount")
-    require(topK >= 1, s"topK must be >= 1, got $topK")
-    val ws = docs.select(wordsCol(col(textCol)).as("__ws"))
-    val uni = ws.select(explode(col("__ws")).as("__w"))
-      .groupBy(col("__w")).agg(count(lit(1)).as("__c1"))
-    val bi = ws.filter(size(col("__ws")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(0, size(__ws) - 2), i -> struct(__ws[i] AS w1, __ws[i + 1] AS w2))"))
-        .as("__p"))
-      .groupBy(col("__p.w1").as("w1"), col("__p.w2").as("w2"))
-      .agg(count(lit(1)).as("n_pair"))
-    pmiTopK(bi, uni, minCount, topK)
-  }
+      minCount: Long = 5L, topK: Int = 100): DataFrame =
+    cooccurrence(docs, textCol, 1, minCount, topK)
 
   /**
    * SKIP-GRAM co-occurrence PMI — [[collocations]] widened to a ±`window`
    * token window (the word2vec/GloVe counting shape): every ordered pair
    * `(ws[i], ws[i+d])` with `1 ≤ d ≤ window` counts, so associations that
    * skip a token ("new __ york") surface too. Same exact micro-nat PMI
-   * quantization and (pmi desc, w1, w2) total order; the pair relation is
-   * `window×` larger — still one explode + one aggregation.
+   * quantization and (pmi desc, w1, w2) total order.
+   *
+   * Scale shape: each doc emits `(w, null)` per word and `(w1, w2)` per
+   * skip pair, and ONE aggregation over the union of the two counts both —
+   * words never collide with pairs, since words are never null. The union
+   * keeps the two explodes in separate tasks. The count table is
+   * vocab-/pair-vocab-sized and read by the totals and three joins, so it
+   * is checkpointed once; the unigram side joins by word (AQE broadcasts it
+   * when the vocabulary allows), scalar totals ride 1-row broadcasts.
    */
   def cooccurrence(
       docs: DataFrame, textCol: String, window: Int = 2,
@@ -808,40 +784,23 @@ object CorpusStats {
     require(minCount >= 1L, s"minCount must be >= 1, got $minCount")
     require(topK >= 1, s"topK must be >= 1, got $topK")
     val ws = docs.select(wordsCol(col(textCol)).as("__ws"))
-    val uni = ws.select(explode(col("__ws")).as("__w"))
-      .groupBy(col("__w")).agg(count(lit(1)).as("__c1"))
-    val bi = ws.filter(size(col("__ws")) >= 2)
+    val unis = ws.select(explode(col("__ws")).as("w1"), lit(null).cast("string").as("w2"))
+    val pairs = ws.filter(size(col("__ws")) >= 2)
       .select(explode(expr(
         s"""flatten(transform(sequence(0, size(__ws) - 2),
            | i -> transform(sequence(1, least($window, size(__ws) - 1 - i)),
-           |   d -> struct(__ws[i] AS w1, __ws[i + d] AS w2))))""".stripMargin))
-        .as("__p"))
-      .groupBy(col("__p.w1").as("w1"), col("__p.w2").as("w2"))
-      .agg(count(lit(1)).as("n_pair"))
-    pmiTopK(bi, uni, minCount, topK)
-  }
-
-  /** Shared micro-nat PMI ranking tail of [[collocations]]/[[cooccurrence]].
-    * Both inputs are checkpointed: each is an already-aggregated
-    * vocab-/pair-vocab-sized table with multiple consumers here (totals +
-    * joins), and uncut every consumer re-ran the caller's corpus tokenize +
-    * explode lineage (collocations: 10 corpus scans → 2). The two
-    * materializations are INDEPENDENT corpus passes, so they run as
-    * concurrent jobs (guide §2.6 — overlap independent jobs so one pass's
-    * straggler tail back-fills with the other's tasks): serial eager
-    * checkpoints cost two full waves, which is why `cooccurrence` measured
-    * SLOWER warm than cold in both r17 sweeps (VERDICT r17 item 6) — the
-    * wave serialization exceeded the saved rescans at sf0.1. Overlapped,
-    * the scan-count win keeps its local cost honest (isolated warm
-    * 2.3 → 1.7 s at sf0.1; labels bit-identical — the checkpoint contents
-    * don't depend on which job materializes first). */
-  private def pmiTopK(
-      bi0: DataFrame, uni0: DataFrame, minCount: Long, topK: Int): DataFrame = {
-    val Seq(uni, bi) = checkpointConcurrently(Seq(uni0, bi0))
+           |   d -> struct(__ws[i] AS w1, __ws[i + d] AS w2))))""".stripMargin)).as("__p"))
+      .select(col("__p.w1").as("w1"), col("__p.w2").as("w2"))
+    val counts = unis.union(pairs)
+      .groupBy(col("w1"), col("w2"))
+      .agg(count(lit(1)).as("__n"))
+      .localCheckpoint()
+    val uni = counts.filter(col("w2").isNull).select(col("w1").as("__w"), col("__n").as("__c1"))
+    val bi = counts.filter(col("w2").isNotNull)
+      .select(col("w1"), col("w2"), col("__n").as("n_pair"))
     val n1 = uni.agg(sum(col("__c1")).as("__N1"))
     val n2 = bi.agg(sum(col("n_pair")).as("__N2"))
-    def q(c: org.apache.spark.sql.Column, n: org.apache.spark.sql.Column) =
-      floor(-log(c.cast("double") / n.cast("double")) * lit(1000000.0)).cast("long")
+    def q(c: Column, n: Column) = microNats(-log(c.cast("double") / n.cast("double")))
     bi.filter(col("n_pair") >= minCount)
       .crossJoin(broadcast(n1)).crossJoin(broadcast(n2))
       .join(uni.select(col("__w").as("w1"), col("__c1").as("__cx")), "w1")
@@ -863,7 +822,7 @@ object CorpusStats {
   private[graft] val CmsB: Seq[Long] = Seq(
     12345L, 54321L, 2531011L, 7919L, 104729L, 1299721L, 15485867L, 982451653L)
 
-  private def cmsBucketRows(h: org.apache.spark.sql.Column, width: Int, depth: Int) =
+  private def cmsBucketRows(h: Column, width: Int, depth: Int) =
     explode(array((0 until depth).map { j =>
       struct(lit(j).cast("long").as("__j"),
         ((h * lit(CmsA(j)) + lit(CmsB(j))) % lit(width.toLong)).as("__b"))
@@ -1095,22 +1054,6 @@ object CorpusStats {
   }
 
   /**
-   * SKETCH-DERIVED stopword ratio — the composed pipeline the CMS family
-   * exists for: the corpus' own [[cmsTopTokens]] heavy hitters BECOME the
-   * stopword list (no hand-curated list needed per language/domain), and
-   * every document is scored by the fraction of its tokens in that list.
-   * High ratio = glue-word prose (normal), low = keyword salad / code /
-   * gibberish — a quality feature derived entirely from the data.
-   *
-   * The ratio is an exact integer micro-unit division (`n_stop·10⁶ div
-   * n_tokens`), so no float crosses an engine boundary. Scale shape: the
-   * heavy-hitter list is topK rows (broadcast); the corpus streams through
-   * one explode + broadcast join + doc-keyed aggregation — the sketched
-   * first pass never re-runs at query time in the persisted deployment.
-   *
-   * @return (idCol, n_tokens, n_stop, stop_micro); zero-token docs absent.
-   */
-  /**
    * Scale-safe QUANTILE BINNING: bucket = `rank·buckets div n` over the
    * unique (score desc, id asc) total order — `ntile()` without `ntile`'s
    * scale trap (a partition-less window funnels the whole table through one
@@ -1136,6 +1079,22 @@ object CorpusStats {
         expr(s"__rk * ${buckets}L div __n").as("bucket"))
   }
 
+  /**
+   * SKETCH-DERIVED stopword ratio — the composed pipeline the CMS family
+   * exists for: the corpus' own [[cmsTopTokens]] heavy hitters BECOME the
+   * stopword list (no hand-curated list needed per language/domain), and
+   * every document is scored by the fraction of its tokens in that list.
+   * High ratio = glue-word prose (normal), low = keyword salad / code /
+   * gibberish — a quality feature derived entirely from the data.
+   *
+   * The ratio is an exact integer micro-unit division (`n_stop·10⁶ div
+   * n_tokens`), so no float crosses an engine boundary. Scale shape: the
+   * heavy-hitter list is topK rows (broadcast); the corpus streams through
+   * one explode + broadcast join + doc-keyed aggregation — the sketched
+   * first pass never re-runs at query time in the persisted deployment.
+   *
+   * @return (idCol, n_tokens, n_stop, stop_micro); zero-token docs absent.
+   */
   def derivedStopwordRatio(
       docs: DataFrame, idCol: String, textCol: String,
       width: Int = 1024, depth: Int = 4, topK: Int = 50): DataFrame = {
@@ -1160,48 +1119,51 @@ object CorpusStats {
    * drifting / >0.25 shifted, the conventional bands, in micro-units).
    *
    * Integer contract (reduction-order-proof, oracle-mirrored): smoothed
-   * masses are BIGINT micro-units `(c+1)·10⁶ div (n+nBins)`; the log ratio
-   * is quantized micro-nats `floor((ln q − ln p)·10⁶)` of those exact
-   * integers (the [[unigramLogLoss]] idiom); the contribution
-   * `(q − p)·dln div 10⁶` is a product of same-sign factors, so it is
-   * non-negative and `div`-vs-floor-proof. Scale shape: each corpus is one
-   * scan + one bin aggregation (≤ nBins rows); totals ride 1-row broadcast
-   * cross joins; output is exactly nBins rows.
+   * masses are BIGINT micro-units `(c+1)·10⁶ div (n+nBins)` (`microMass`);
+   * the log ratio is quantized micro-nats `floor((ln q − ln p)·10⁶)` of
+   * those exact integers; the contribution `(q − p)·dln div 10⁶`
+   * (`psiMicro`) is a product of same-sign factors, so it is non-negative
+   * and `div`-vs-floor-proof. Scale shape: both corpora scan once into one
+   * checkpointed ≤ nBins-row bin table (`twoSideBins`); totals ride a 1-row
+   * broadcast cross join; output is exactly nBins rows.
    *
    * @return (bin, n_base, n_cur, base_micro, cur_micro, psi_micro)
    */
   def psiDrift(
       base: DataFrame, cur: DataFrame, valueCol: String,
+      lo: Double, hi: Double, nBins: Int): DataFrame =
+    twoSideBins(base, cur, valueCol, lo, hi, nBins)
+      .select(col("bin"), col("nb").as("n_base"), col("nc").as("n_cur"),
+        microMass(col("nb"), col("__tb"), nBins).as("base_micro"),
+        microMass(col("nc"), col("__tc"), nBins).as("cur_micro"))
+      .withColumn("psi_micro", psiMicro(col("cur_micro"), col("base_micro")))
+
+  /** THE two-side bin table of [[psiDrift]] and [[ksDrift]]: every bin of
+    * [0, nBins) with its base and current counts and both sides' totals,
+    * `(bin, nb, nc, __tb, __tc)`. Both inputs are reduced to the value (as a
+    * double) plus a side literal, unioned, and counted by ONE conditional
+    * aggregation over `binOf` (null and NaN dropped); that nBins-bounded
+    * table is read by the totals and the densify join, so it is
+    * checkpointed once and each input scans once. */
+  private def twoSideBins(
+      base: DataFrame, cur: DataFrame, valueCol: String,
       lo: Double, hi: Double, nBins: Int): DataFrame = {
-    require(nBins > 0, s"nBins must be positive, got $nBins")
-    require(lo < hi, s"need lo < hi, got [$lo, $hi)")
-    val w = (hi - lo) / nBins
-    def binned(df: DataFrame, out: String) =
-      df.select(col(valueCol).cast("double").as("__v"))
-        .filter(col("__v").isNotNull && !isnan(col("__v")))
-        .select(least(greatest(floor((col("__v") - lit(lo)) / lit(w)).cast("long"), lit(0L)),
-          lit(nBins.toLong - 1L)).as("bin"))
-        .groupBy(col("bin")).agg(count(lit(1)).as(out))
-    val spark = base.sparkSession
-    // nBins-bounded bin tables, each with two consumers (totals + densify
-    // join) — checkpointed so each input scans once (r17)
-    val Seq(b, c) = checkpointConcurrently(
-      Seq(binned(base, "__nb"), binned(cur, "__nc")))
-    val tb = b.agg(coalesce(sum(col("__nb")), lit(0L)).as("__tb"))
-    val tc = c.agg(coalesce(sum(col("__nc")), lit(0L)).as("__tc"))
-    spark.range(nBins).select(col("id").as("bin"))
-      .join(b, Seq("bin"), "left")
-      .join(c, Seq("bin"), "left")
-      .crossJoin(broadcast(tb)).crossJoin(broadcast(tc))
-      .select(col("bin"), coalesce(col("__nb"), lit(0L)).as("n_base"),
-        coalesce(col("__nc"), lit(0L)).as("n_cur"), col("__tb"), col("__tc"))
-      .withColumn("base_micro", expr(s"(n_base + 1) * 1000000L div (__tb + $nBins)"))
-      .withColumn("cur_micro", expr(s"(n_cur + 1) * 1000000L div (__tc + $nBins)"))
-      .withColumn("__dln", floor((log(col("cur_micro").cast("double")) -
-        log(col("base_micro").cast("double"))) * lit(1000000.0)).cast("long"))
-      .withColumn("psi_micro", expr("(cur_micro - base_micro) * __dln div 1000000L"))
-      .select(col("bin"), col("n_base"), col("n_cur"),
-        col("base_micro"), col("cur_micro"), col("psi_micro"))
+    requireBins(lo, hi, nBins)
+    def side(df: DataFrame, isBase: Boolean) =
+      df.select(col(valueCol).cast("double").as("__v"), lit(isBase).as("__base"))
+    val counts = side(base, isBase = true).union(side(cur, isBase = false))
+      .filter(col("__v").isNotNull && !isnan(col("__v")))
+      .groupBy(binOf(col("__v"), lo, hi, nBins).as("bin"))
+      .agg(sum(when(col("__base"), 1L).otherwise(0L)).as("__nb"),
+        sum(when(col("__base"), 0L).otherwise(1L)).as("__nc"))
+      .localCheckpoint()
+    val tot = counts.agg(coalesce(sum(col("__nb")), lit(0L)).as("__tb"),
+      coalesce(sum(col("__nc")), lit(0L)).as("__tc"))
+    base.sparkSession.range(nBins).select(col("id").as("bin"))
+      .join(counts, Seq("bin"), "left")
+      .crossJoin(broadcast(tot))
+      .select(col("bin"), coalesce(col("__nb"), lit(0L)).as("nb"),
+        coalesce(col("__nc"), lit(0L)).as("nc"), col("__tb"), col("__tc"))
   }
 
   /**
@@ -1512,8 +1474,8 @@ object CorpusStats {
   }
 
   /**
-   * KOLMOGOROV–SMIRNOV-style drift check over the same clamped bins as
-   * [[psiDrift]] — the complementary read: PSI weights every bin's shift,
+   * KOLMOGOROV–SMIRNOV-style drift check over [[psiDrift]]'s two-side bin
+   * table — the complementary read: PSI weights every bin's shift,
    * KS reports the single worst CDF gap, catching a localized shift PSI
    * smears out. `ks_micro = max_bin |cumP − cumQ|` with both CDFs as exact
    * BIGINT micro-units (`cum·10⁶ div n`); `at_bin` is the smallest bin
@@ -1525,30 +1487,10 @@ object CorpusStats {
   def ksDrift(
       base: DataFrame, cur: DataFrame, valueCol: String,
       lo: Double, hi: Double, nBins: Int): DataFrame = {
-    require(nBins > 0, s"nBins must be positive, got $nBins")
-    require(lo < hi, s"need lo < hi, got [$lo, $hi)")
     import org.apache.spark.sql.expressions.Window
-    val w = (hi - lo) / nBins
-    def binned(df: DataFrame, out: String) =
-      df.select(col(valueCol).cast("double").as("__v"))
-        .filter(col("__v").isNotNull && !isnan(col("__v")))
-        .select(least(greatest(floor((col("__v") - lit(lo)) / lit(w)).cast("long"), lit(0L)),
-          lit(nBins.toLong - 1L)).as("bin"))
-        .groupBy(col("bin")).agg(count(lit(1)).as(out))
-    val spark = base.sparkSession
-    // nBins-bounded bin tables, each with two consumers (totals + densify
-    // join) — checkpointed so each input scans once (r17)
-    val Seq(b, c) = checkpointConcurrently(
-      Seq(binned(base, "__nb"), binned(cur, "__nc")))
-    val tb = b.agg(coalesce(sum(col("__nb")), lit(0L)).as("__tb"))
-    val tc = c.agg(coalesce(sum(col("__nc")), lit(0L)).as("__tc"))
     val cumW = Window.orderBy(col("bin"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    spark.range(nBins).select(col("id").as("bin"))
-      .join(b, Seq("bin"), "left").join(c, Seq("bin"), "left")
-      .crossJoin(broadcast(tb)).crossJoin(broadcast(tc))
-      .select(col("bin"), coalesce(col("__nb"), lit(0L)).as("nb"),
-        coalesce(col("__nc"), lit(0L)).as("nc"), col("__tb"), col("__tc"))
+    twoSideBins(base, cur, valueCol, lo, hi, nBins)
       .withColumn("__cb", sum(col("nb")).over(cumW))
       .withColumn("__cc", sum(col("nc")).over(cumW))
       .withColumn("__gap", abs(expr("__cb * 1000000L div greatest(__tb, 1L)") -
@@ -1573,15 +1515,11 @@ object CorpusStats {
   def psiDriftByGroup(
       df: DataFrame, groupCol: String, valueCol: String,
       lo: Double, hi: Double, nBins: Int): DataFrame = {
-    require(nBins > 0, s"nBins must be positive, got $nBins")
-    require(lo < hi, s"need lo < hi, got [$lo, $hi)")
-    val w = (hi - lo) / nBins
+    requireBins(lo, hi, nBins)
     val binnedRows = df
       .select(col(groupCol).as("__g"), col(valueCol).cast("double").as("__v"))
       .filter(col("__g").isNotNull && col("__v").isNotNull && !isnan(col("__v")))
-      .select(col("__g"),
-        least(greatest(floor((col("__v") - lit(lo)) / lit(w)).cast("long"), lit(0L)),
-          lit(nBins.toLong - 1L)).as("bin"))
+      .select(col("__g"), binOf(col("__v"), lo, hi, nBins).as("bin"))
     // (groups × nBins)-bounded, checkpointed: the corpus-wide bins and the
     // per-group totals are its own rollups, so the input scans once (r17)
     val perGroup = binnedRows.groupBy(col("__g"), col("bin")).agg(count(lit(1)).as("__ng"))
@@ -1598,11 +1536,9 @@ object CorpusStats {
       .select(col("__g"), col("bin"), col("__tg"),
         coalesce(col("__ng"), lit(0L)).as("ng"),
         coalesce(col("__nc"), lit(0L)).as("nc"), col("__tc"))
-      .withColumn("base_micro", expr(s"(nc + 1) * 1000000L div (__tc + $nBins)"))
-      .withColumn("cur_micro", expr(s"(ng + 1) * 1000000L div (__tg + $nBins)"))
-      .withColumn("__dln", floor((log(col("cur_micro").cast("double")) -
-        log(col("base_micro").cast("double"))) * lit(1000000.0)).cast("long"))
-      .withColumn("__psi", expr("(cur_micro - base_micro) * __dln div 1000000L"))
+      .withColumn("base_micro", microMass(col("nc"), col("__tc"), nBins))
+      .withColumn("cur_micro", microMass(col("ng"), col("__tg"), nBins))
+      .withColumn("__psi", psiMicro(col("cur_micro"), col("base_micro")))
       .groupBy(col("__g"))
       .agg(max(col("__tg")).as("n_docs"), sum(col("__psi")).as("psi_micro"))
       .select(col("__g").as(groupCol), col("n_docs"), col("psi_micro"))
@@ -1707,7 +1643,7 @@ object CorpusStats {
    *
    * (the backoff path takes the add-one unigram so out-of-vocabulary words
    * stay finite). Costs are floored to integer micro-nats per DISTINCT
-   * bigram BEFORE the per-doc sum — [[unigramLogLoss]]'s quantization, so
+   * bigram BEFORE the per-doc sum — `microNats`, so
    * reduction order cannot perturb the result and the SQL oracle mirrors
    * bit-exactly.
    *
@@ -1721,51 +1657,40 @@ object CorpusStats {
    */
   def stupidBackoffLogLoss(
       docs: DataFrame, idCol: String, textCol: String,
-      trainFilter: org.apache.spark.sql.Column,
+      trainFilter: Column,
       alphaMilli: Int = 400): DataFrame = {
     require(alphaMilli > 0 && alphaMilli <= 1000,
       s"alphaMilli must be in (0, 1000], got $alphaMilli")
-    val pairs = docs.select(col(idCol).as("__id"), wordsCol(col(textCol)).as("__ws"))
-      .filter(size(col("__ws")) >= 2)
-      .select(col("__id"), explode(expr(
-        "transform(sequence(1, size(__ws) - 1), i -> struct(__ws[i-1] AS v, __ws[i] AS w))"))
-        .as("__p"))
-      .select(col("__id"), col("__p.v").as("__v"), col("__p.w").as("__w"))
+    // (__id, context __v, word __w) per adjacent word pair
+    def bigrams(df: DataFrame) =
+      df.select(col(idCol).as("__id"), wordsCol(col(textCol)).as("__ws"))
+        .select(col("__id"), explode(wordGrams(col("__ws"), 2)).as("__p"))
+        .select(col("__id"), col("__p.w1").as("__v"), col("__p.w2").as("__w"))
+    val pairs = bigrams(docs)
     val train = docs.filter(trainFilter)
     // vocab-sized with THREE consumers (totals, seen-bigram context join,
     // fallback table) — uncut, each re-ran the train tokenize (r17)
     val uni = train.select(explode(wordsCol(col(textCol))).as("__w"))
       .groupBy(col("__w")).agg(count(lit(1)).as("__cw")).localCheckpoint()
     val tot = uni.agg(sum(col("__cw")).as("__N"), count(lit(1)).as("__V"))
-    val big = train.select(wordsCol(col(textCol)).as("__ws"))
-      .filter(size(col("__ws")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(1, size(__ws) - 1), i -> struct(__ws[i-1] AS v, __ws[i] AS w))"))
-        .as("__p"))
-      .select(col("__p.v").as("__v"), col("__p.w").as("__w"))
-      .groupBy(col("__v"), col("__w")).agg(count(lit(1)).as("__cvw"))
+    val big = bigrams(train).groupBy(col("__v"), col("__w")).agg(count(lit(1)).as("__cvw"))
     val seen = big.join(uni.select(col("__w").as("__v"), col("__cw").as("__cv")), "__v")
       .select(col("__v"), col("__w"),
-        floor(-log(col("__cvw").cast("double") / col("__cv").cast("double"))
-          * lit(1000000.0)).cast("long").as("__q"))
+        microNats(-log(col("__cvw").cast("double") / col("__cv").cast("double"))).as("__q"))
     val alpha = alphaMilli.toDouble / 1000.0
     val fallback = uni.crossJoin(broadcast(tot))
       .select(col("__w"),
-        floor(-log(lit(alpha) * (col("__cw") + 1).cast("double") /
-          (col("__N") + col("__V")).cast("double")) * lit(1000000.0))
-          .cast("long").as("__qf"))
+        microNats(-log(lit(alpha) * (col("__cw") + 1).cast("double") /
+          (col("__N") + col("__V")).cast("double"))).as("__qf"))
     val oov = tot.select(
-      floor(-log(lit(alpha) / (col("__N") + col("__V")).cast("double"))
-        * lit(1000000.0)).cast("long").as("__qo"))
+      microNats(-log(lit(alpha) / (col("__N") + col("__V")).cast("double"))).as("__qo"))
     pairs.join(seen, Seq("__v", "__w"), "left")
       .join(fallback, Seq("__w"), "left")
       .crossJoin(broadcast(oov))
       .select(col("__id"), coalesce(col("__q"), col("__qf"), col("__qo")).as("__c"))
       .groupBy(col("__id"))
       .agg(count(lit(1)).as("n_bigrams"), sum(col("__c")).as("__s"))
-      .select(col("__id").as(idCol), col("n_bigrams"),
-        round(col("__s").cast("double") /
-          (col("n_bigrams").cast("double") * lit(1000000.0)), 4).as("sbo_xent"))
+      .select(col("__id").as(idCol), col("n_bigrams"), microMean(col("n_bigrams")).as("sbo_xent"))
   }
 
   /**

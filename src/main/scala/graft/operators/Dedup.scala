@@ -344,14 +344,12 @@ object Dedup {
     pairs.filter(col("jaccard") >= threshold)
       .select(col("__a").as(idA), col("__b").as(idB), round(col("jaccard"), 6).as("jaccard"))
 
-  /** Internal: the shared inverted-index core of [[jaccardPairs]] and
-    * [[containmentPairs]] — per-pair intersection counts with both set sizes
-    * `(__a < __b, __i, __na, __nb)`. */
-  private def shinglePairCore(
-      df: DataFrame, idCol: String, textCol: String,
-      maxDocFrequency: Long): DataFrame = {
+  /** Internal: the shared inverted-index core of [[jaccardPairs]],
+    * [[containmentPairs]] and [[lshAuditReport]]'s truth leg — per-pair
+    * intersection counts with both set sizes `(__a < __b, __i, __na, __nb)`
+    * over a [[shingleSets]] side. */
+  private def shinglePairCore(shs: DataFrame, maxDocFrequency: Long): DataFrame = {
     // set sizes come from size(__shs) — no count shuffle
-    val shs = shingleSets(df, idCol, textCol)
     val t = shs.select(col("__id"), explode(col("__shs")).as("__sh"))
     val cnt = shs.select(col("__id"), size(col("__shs")).cast("long").as("__n"))
     // shingles are distinct per doc, so count-per-shingle = doc frequency.
@@ -396,7 +394,7 @@ object Dedup {
    */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String, threshold: Double,
       maxDocFrequency: Long = 0L): DataFrame = {
-    jaccardAtLeast(shinglePairCore(df, idCol, textCol, maxDocFrequency)
+    jaccardAtLeast(shinglePairCore(shingleSets(df, idCol, textCol), maxDocFrequency)
       .withColumn("jaccard", jaccard), threshold, "id_a", "id_b")
   }
 
@@ -412,7 +410,7 @@ object Dedup {
    */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String, threshold: Double,
       maxDocFrequency: Long = 0L): DataFrame = {
-    shinglePairCore(df, idCol, textCol, maxDocFrequency)
+    shinglePairCore(shingleSets(df, idCol, textCol), maxDocFrequency)
       .withColumn("containment",
         col("__i").cast("double") / least(col("__na"), col("__nb")).cast("double"))
       .filter(col("containment") >= threshold)
@@ -443,10 +441,11 @@ object Dedup {
   def lshAuditReport(
       df: DataFrame, idCol: String, textCol: String, threshold: Double,
       bandRows: Int = graft.functions.TextFunctions.MinHashBandRows): DataFrame = {
-    // banding first: its bandRows check runs before the truth side's
-    // shingle checkpoint, i.e. before any job
+    // one shingle checkpoint serves both legs: the banding side and the
+    // exhaustive truth side
     val (shs, cand) = lshBandCandidates(df, idCol, textCol, bandRows)
-    val truth = jaccardPairs(df, idCol, textCol, threshold)
+    val truth = jaccardAtLeast(shinglePairCore(shs, 0L).withColumn("jaccard", jaccard),
+        threshold, "id_a", "id_b")
       .select(col("id_a"), col("id_b"))
     val found = verifyJaccard(cand, shs, shs).filter(col("jaccard") >= threshold)
       .select(col("__a").as("id_a"), col("__b").as("id_b"), lit(1L).as("__hit"))

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.CorpusStats.{binOf, microMass, psiMicro, requireBins}
+
 /**
  * Streaming DRIFT monitor — the per-window face of
  * [[graft.operators.CorpusStats.psiDrift]]: each event-time window's value
@@ -21,10 +23,11 @@ import org.apache.spark.sql.functions._
  * plan computes the historical per-window drift series — that face is the
  * oracle-gated one (`stream_drift_batch`).
  *
- * Determinism contract: identical to [[graft.operators.CorpusStats.psiDrift]] —
- * clamped-edge bins, add-one-smoothed BIGINT micro masses
- * `(c+1)·10⁶ div (n+nBins)`, micro-nat quantized log ratios of exact
- * integers, same-sign products so `div` is floor-proof.
+ * Determinism contract: identical to [[graft.operators.CorpusStats.psiDrift]],
+ * because it runs the same helpers — `CorpusStats.binOf` (clamped-edge bins)
+ * and `requireBins`, `microMass` (add-one-smoothed BIGINT micro masses
+ * `(c+1)·10⁶ div (n+nBins)`) and `psiMicro` (micro-nat quantized log ratio
+ * of exact integers, same-sign product so `div` is floor-proof).
  *
  * @param baselineMicro the reference smoothed mass per bin (micro-units,
  *        all > 0 — e.g. `psiDrift(...).select("bin", "base_micro")` of the
@@ -37,26 +40,19 @@ object StreamDrift {
       stream: DataFrame, valueCol: String, baselineMicro: Seq[Long],
       lo: Double, hi: Double, windowDur: String): DataFrame = {
     val nBins = baselineMicro.length
-    require(nBins > 0, "baselineMicro must be non-empty")
+    requireBins(lo, hi, nBins)
     require(baselineMicro.forall(_ > 0L),
       "baseline masses must be positive (add-one smoothing guarantees this)")
-    require(lo < hi, s"need lo < hi, got [$lo, $hi)")
-    val w = (hi - lo) / nBins
-    val bin: Column =
-      least(greatest(floor((col(valueCol).cast("double") - lit(lo)) / lit(w)).cast("long"),
-        lit(0L)), lit(nBins.toLong - 1L))
     val counts = (0 until nBins).map(i =>
       sum(when(col("__bin") === i, 1L).otherwise(0L)).as(s"__c$i"))
     val agg = stream
       .where(col(valueCol).isNotNull && !isnan(col(valueCol).cast("double")))
-      .select(EventTime.tsCol(stream).as("__ts"), bin.as("__bin"))
+      .select(EventTime.tsCol(stream).as("__ts"),
+        binOf(col(valueCol).cast("double"), lo, hi, nBins).as("__bin"))
       .groupBy(window(col("__ts"), windowDur).as("__w"))
       .agg(count(lit(1)).as("n"), counts: _*)
-    val terms: Seq[Column] = (0 until nBins).map { i =>
-      val cur = s"((__c$i + 1) * 1000000L div (n + $nBins))"
-      val base = s"${baselineMicro(i)}L"
-      expr(s"($cur - $base) * CAST(floor((ln(CAST($cur AS DOUBLE)) - ln(CAST($base AS DOUBLE))) * 1000000.0) AS BIGINT) div 1000000L")
-    }
+    val terms: Seq[Column] = (0 until nBins).map(i =>
+      psiMicro(microMass(col(s"__c$i"), col("n"), nBins), lit(baselineMicro(i))))
     agg.select(col("__w.start").as("win_start"), col("n"),
       terms.reduce(_ + _).as("psi_micro"))
   }

@@ -765,6 +765,45 @@ class PlanSpec extends AnyFunSuite with LocalSpark {
     assert(built.forall(_.count() == 15L))
   }
 
+  test("lshAuditReport shingles and checkpoints its input once while the report is built") {
+    val s = spark
+    import s.implicits._
+    val docs = Seq(
+      (1L, "alpha beta gamma delta epsilon"), (2L, "alpha beta gamma delta zeta"),
+      (3L, "alpha beta gamma delta epsilon"), (4L, "one two three four five"))
+      .toDF("doc_id", "text")
+    import graft.operators.Dedup
+    val report = withJobCounter { jobs =>
+      val r = Dedup.lshAuditReport(docs, "doc_id", "text", 0.5)
+      assert(jobs() == 1)
+      r
+    }
+    // true pairs: (1, 3) at Jaccard 1.0, (1, 2) and (2, 3) at 0.5
+    val r = report.collect()(0)
+    assert(r.getLong(0) == 3L && r.getLong(2) <= r.getLong(1) && r.getLong(2) >= 1L)
+    assert(r.getDouble(3) == BigDecimal(r.getLong(2).toDouble / 3.0)
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+  }
+
+  test("drift and PMI operators checkpoint one table while the frame is built") {
+    val s = spark
+    import s.implicits._
+    val vals = Seq(1L, 5L, 12L, 30L, 39L).toDF("v")
+    val docs = Seq((1L, "new york is big"), (2L, "new york new york")).toDF("doc_id", "text")
+    import graft.operators.CorpusStats
+    // one checkpointed aggregation: under AQE, its shuffle-map stage is one
+    // job and the checkpoint's own pass another
+    val built = withJobCounter { jobs =>
+      def oneCheckpoint(df: DataFrame): DataFrame = { assert(jobs() == 2); df }
+      Seq(
+        oneCheckpoint(CorpusStats.psiDrift(vals, vals.filter(col("v") > 10L), "v", 0.0, 40.0, 4)),
+        oneCheckpoint(CorpusStats.ksDrift(vals, vals.filter(col("v") > 10L), "v", 0.0, 40.0, 4)),
+        oneCheckpoint(CorpusStats.collocations(docs, "text", minCount = 1L)),
+        oneCheckpoint(CorpusStats.cooccurrence(docs, "text", minCount = 1L)))
+    }
+    assert(built.map(_.count()) == Seq(4L, 1L, 4L, 8L))
+  }
+
   test("every banding entry rejects a bandRows that does not divide MinHashK before any job") {
     val s = spark
     import s.implicits._

@@ -92,6 +92,23 @@ class Round9OpsSpec extends AnyFunSuite with LocalSpark {
     assert(math.abs(out("drift")._2 - math.log(3.0)) < 0.01)
   }
 
+  test("mixtureEntropy: a zero-weight source adds 0; a zero total gives 0") {
+    val s = spark
+    import s.implicits._
+    def entropy(ws: Seq[(String, Long)]) = {
+      val r = CorpusStats.mixtureEntropy(ws.toDF("source", "w"), "source", "w").collect()(0)
+      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+    }
+    // the term of a positive source: floor(ln(T/w)·1e6·w/T)
+    def term(w: Long, t: Long) = math.floor(math.log(t.toDouble / w) * 1000000.0 * w / t).toLong
+    assert(entropy(Seq(("a", 5L), ("b", 3L), ("c", 0L))) ==
+      ((3L, 8L, term(5L, 8L) + term(3L, 8L), 625L)))
+    // a zero-weight source changes nothing but n_sources
+    val (_, t2, e2, m2) = entropy(Seq(("a", 5L), ("b", 3L)))
+    assert((t2, e2, m2) == ((8L, term(5L, 8L) + term(3L, 8L), 625L)))
+    assert(entropy(Seq(("a", 0L), ("b", 0L))) == ((2L, 0L, 0L, 0L)))
+  }
+
   test("dsirWeights scores target-like docs positive, off-target negative") {
     val s = spark
     import s.implicits._
