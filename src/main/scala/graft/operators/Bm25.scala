@@ -1,13 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.TextFunctions.wordsCol
+import graft.operators.CorpusStats.microNats
 
 /**
- * BM25 top-k retrieval over the corpus — the query-based selection step of a
+ * Lexical retrieval over the corpus — the query-based selection step of a
  * training-data pipeline (targeted curation: rank the corpus against a set of
  * reference queries/domains and keep the best-matching documents).
  *
@@ -16,39 +18,51 @@ import graft.functions.TextFunctions.wordsCol
  * `idf(t) = ln((N − df + 0.5)/(df + 0.5) + 1)` (always ≥ 0).
  *
  * Determinism (the oracle contract): idf is quantized to integer micro-nats
- * (`floor(idf·1e6)`) and each term's contribution to `floor` of an integer —
- * so the per-(query, doc) aggregation is an EXACT integer sum, invariant
- * under Spark's reduction order (the [[CorpusStats.unigramLogLoss]] trick).
- * The per-contribution double chain is single-path (+, ·, /) on exact integer
- * inputs, identical in any IEEE engine. Output `score_micro` stays integer;
- * ties break on doc id.
+ * ([[CorpusStats]]' quantizer, `floor(idf·1e6)`) and each term's
+ * contribution to `floor` of an integer — so the per-(query, doc)
+ * aggregation is an EXACT integer sum, invariant under Spark's reduction
+ * order. The per-contribution double chain is single-path (+, ·, /) on exact
+ * integer inputs, identical in any IEEE engine. Output `score_micro` stays
+ * integer; ties break on doc id.
+ *
+ * The faces:
+ *  - Indexes: [[index]] `(doc, dl, term, tf)` postings, [[impactIndex]]
+ *    `(term, doc, imp)` impacts, [[positionalIndex]] `(doc, pos, term)`.
+ *  - BM25 top-k: [[topK]] from text, [[topKIndexed]] over an [[index]],
+ *    [[topKPrf]] with pseudo-relevance feedback, and the MaxScore-pruned
+ *    [[topKMaxScore]] / [[topKMaxScoreIndexed]], identical to the
+ *    exhaustive ranking; [[maxScoreCandidateCount]] is MaxScore's
+ *    selectivity receipt.
+ *  - [[topKQl]]: Dirichlet query likelihood.
+ *  - Matching without ranking: [[phraseHits]], [[booleanAnd]].
+ *
+ * The ranked faces are compositions of one primitive per step:
+ *  - `postings`: the `(__d, __dl, __w, __tf)` view of an [[index]];
+ *  - `totals`: distinct `(__d, __dl)` → the one-row `(__tw, __nd)`;
+ *  - `queryTerms`: the distinct `(__q, __w)` query vocabulary;
+ *  - `idfMicro` / `idfTable`: the micro-nat idf per term of a postings slice;
+ *  - `queryImpacts`: the query-restricted impact relation `(__w, __d, __imp)`,
+ *    built from `impactExpr`, the one per-posting contribution;
+ *  - `exhaustiveTopK`: impacts joined with the query terms, summed per
+ *    (query, doc) by `querySums`, then ranked;
+ *  - `rankTopK` / `ranking`: the (score desc, doc asc) rank tail.
  *
  * Scale shape: the corpus becomes the standard postings relation
- * ([[index]] — persist it for repeated search; [[topK]] recomputes its two
- * narrow reads, which benchmarks faster than materializing once);
- * term frequencies come from a per-row map fold and
- * the doc length rides the explode, so the CORPUS IS NEVER SHUFFLED — no
- * (doc, term) groupBy and no doc-length join. Queries explode to distinct
- * terms and BROADCAST into the semi-join, so per-term work (df counts, idf)
- * runs only over the query vocabulary — never the corpus vocabulary — and
- * the idf slice broadcasts back. The only shuffles are query-vocabulary-
- * sized (df) and hit-sized (per-(query, doc) sum, top-k window). The per-query top-k runs as a
- * rank-limited window (Spark inserts WindowGroupLimit, so partial top-k is
- * computed map-side before the final per-query sort). One hot query is one
- * window partition — with thousands of queries that's the right parallelism;
- * a single mega-query would want the [[SimSearch]] broadcast-kernel path
- * instead.
+ * ([[index]] — persist it for repeated search); term frequencies come from
+ * a per-row map fold and the doc length rides the explode, so the CORPUS IS
+ * NEVER SHUFFLED — no (doc, term) groupBy and no doc-length join. Queries
+ * explode to distinct terms and BROADCAST into the semi-join, so per-term
+ * work (df counts, idf) runs only over the query vocabulary — never the
+ * corpus vocabulary — and the idf slice broadcasts back. The only shuffles
+ * are query-vocabulary-sized (df) and hit-sized (per-(query, doc) sum, top-k
+ * window). The per-query top-k runs as a rank-limited window (Spark inserts
+ * WindowGroupLimit, so partial top-k is computed map-side before the final
+ * per-query sort). One hot query is one window partition — with thousands of
+ * queries that's the right parallelism; a single mega-query would want the
+ * [[SimSearch]] broadcast-kernel path instead.
  */
 object Bm25 {
 
-  /**
-   * @param k       results per query (ties broken by ascending doc id)
-   * @param k1      term-frequency saturation (Robertson's default 1.2)
-   * @param b       length normalization strength (default 0.75)
-   * @return (query_id, doc_id, score_micro, rank) — rank is 1-based,
-   *         `score_micro` = the BM25 score in integer micro-units
-   *         (divide by 1e6 for the conventional float score)
-   */
   private val tfMapUdf = udf((ws: Seq[String]) =>
     ws.groupBy(identity).map { case (w, g) => w -> g.size.toLong })
 
@@ -69,6 +83,38 @@ object Bm25 {
         explode(tfMapUdf(col("__ws"))).as(Seq("term", "tf")))
 
   /**
+   * BM25 top-k straight from the text: [[index]] then search, in one plan.
+   *
+   * @param k       results per query (ties broken by ascending doc id)
+   * @param k1      term-frequency saturation (Robertson's default 1.2)
+   * @param b       length normalization strength (default 0.75)
+   * @return (query_id, doc_id, score_micro, rank) — rank is 1-based,
+   *         `score_micro` = the BM25 score in integer micro-units
+   *         (divide by 1e6 for the conventional float score)
+   */
+  def topK(
+      docs: DataFrame, idCol: String, textCol: String,
+      queries: DataFrame, qidCol: String, qtextCol: String,
+      k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    requireK(k)
+    // The index is not materialized: it is read by two narrow passes (totals
+    // and the query-term semi-join), and recomputing the tokenizer for them
+    // benchmarks faster than a checkpoint. Persist [[index]]'s output
+    // yourself when the corpus is searched repeatedly.
+    //
+    // The totals come from the DOC-level pass: (N, Σdl) needs one (doc, dl)
+    // row per doc, and the postings would pay the tf-map UDF and the term
+    // explode (dl× more rows) before the distinct throws that fanout away.
+    // Same size > 0 filter and same dl, so the same totals as the postings'.
+    val ws = docs.select(col(idCol).as("__d"), wordsCol(col(textCol)).as("__ws"))
+      .filter(size(col("__ws")) > 0)
+    val tot = totals(ws.select(col("__d"), size(col("__ws")).cast("long").as("__dl")))
+    val qt = queryTerms(queries, qidCol, qtextCol)
+    exhaustiveTopK(
+      queryImpacts(postings(index(docs, idCol, textCol)), crossTotals(tot), qt, k1, b), qt, k)
+  }
+
+  /**
    * BM25 top-k over a pre-built postings index (see [[index]]): corpus totals
    * (N, Σdl) come from one aggregate over the distinct (doc, dl) pairs of the
    * index itself, so the search needs NOTHING but the postings relation —
@@ -78,58 +124,9 @@ object Bm25 {
   def topKIndexed(
       idx: DataFrame, queries: DataFrame, qidCol: String, qtextCol: String,
       k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    val tf = idx.select(col("doc").as("__d"), col("dl").cast("long").as("__dl"),
-      col("term").as("__w"), col("tf").cast("long").as("__tf"))
-    val tot = tf.select(col("__d"), col("__dl")).distinct()
-      .agg(sum(col("__dl")).as("__tw"), count(lit(1)).as("__nd"))
-    scoreHits(tf, tot, queries, qidCol, qtextCol, k, k1, b)
-  }
-
-  def topK(
-      docs: DataFrame, idCol: String, textCol: String,
-      queries: DataFrame, qidCol: String, qtextCol: String,
-      k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    // = build-the-index-then-search: the postings relation is consumed twice
-    // (totals + the query-term semi-join), and recomputing the tokenizer for
-    // those two narrow passes benchmarks ~2.3× FASTER than materializing it
-    // (the old localCheckpoint cost more than both recomputes at sf0.1:
-    // 4.5 s vs 1.9 s). Persist [[index]]'s output yourself when the corpus
-    // is searched repeatedly — that's the encode-once path.
-    //
-    // Corpus totals come from the DOC-level pass, not the postings (r18,
-    // guide §2.3 "aggregate before you shuffle"): (N, Σdl) only needs one
-    // (doc, dl) row per doc, and deriving it through [[index]] paid the
-    // per-row tf-map UDF + the term explode — dl× more rows — before the
-    // distinct threw that fanout away. Same distinct-(doc, dl) set for every
-    // input (same size > 0 filter, same dl), so scores are bit-identical;
-    // the fused path just skips the UDF+explode on one of its three
-    // tokenizer passes. [[topKIndexed]] keeps the postings-derived totals —
-    // an index consumer has nothing else to read them from.
-    val ws = docs.select(col(idCol).as("__d"), wordsCol(col(textCol)).as("__ws"))
-      .filter(size(col("__ws")) > 0)
-    val tot = ws.select(col("__d"), size(col("__ws")).cast("long").as("__dl"))
-      .distinct()
-      .agg(sum(col("__dl")).as("__tw"), count(lit(1)).as("__nd"))
-    val idx = index(docs, idCol, textCol)
-    val tf = idx.select(col("doc").as("__d"), col("dl").cast("long").as("__dl"),
-      col("term").as("__w"), col("tf").cast("long").as("__tf"))
-    scoreHits(tf, tot, queries, qidCol, qtextCol, k, k1, b)
-  }
-
-  /** [[topKIndexed]] with a precomputed `(query_id, term)` vocabulary — the
-    * search face for computed queries (expansion, reformulation). */
-  def topKIndexedTerms(
-      idx: DataFrame, qTerms: DataFrame,
-      k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    val tf = idx.select(col("doc").as("__d"), col("dl").cast("long").as("__dl"),
-      col("term").as("__w"), col("tf").cast("long").as("__tf"))
-    val tot = tf.select(col("__d"), col("__dl")).distinct()
-      .agg(sum(col("__dl")).as("__tw"), count(lit(1)).as("__nd"))
-    scoreHitsTerms(tf, tot,
-      qTerms.select(col("query_id").as("__q"), col("term").as("__w")).distinct(),
-      k, k1, b)
+    requireK(k)
+    val qt = queryTerms(queries, qidCol, qtextCol)
+    exhaustiveTopK(indexImpacts(idx, qt, k1, b), qt, k)
   }
 
   /**
@@ -142,13 +139,12 @@ object Bm25 {
    * vocabulary is broad.
    *
    * Scale shape: the postings relation is the only corpus-sized input; the
-   * corpus totals and the round-1 query-term postings slice are each computed
-   * ONCE and shared by both rounds (round 2 unions in only the postings of
-   * expansion terms round 1 discovered — not a second whole-vocabulary
-   * semi-join). The feedback relation is ≤ fbDocs·|queries| rows and
-   * broadcasts into the expansion join. Determinism: integer micro-nat
-   * scores, (sum tf desc, term asc) expansion order, both rounds' windows
-   * id-tie-broken.
+   * corpus totals and the round-1 scores are each computed ONCE and shared
+   * by both rounds (round 2 adds only the postings of the expansion terms
+   * round 1 discovered — not a second whole-vocabulary semi-join). The
+   * feedback relation is ≤ fbDocs·|queries| rows and broadcasts into the
+   * expansion join. Determinism: integer micro-nat scores, (sum tf desc,
+   * term asc) expansion order, both rounds' windows id-tie-broken.
    *
    * @return round-2 ranking (query_id, doc_id, score_micro, rank)
    * @note caching contract: the postings `idx` is persisted
@@ -163,122 +159,68 @@ object Bm25 {
       idx: DataFrame, queries: DataFrame, qidCol: String, qtextCol: String,
       k: Int, fbDocs: Int = 3, fbTerms: Int = 5,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    requireK(k)
     require(fbDocs > 0 && fbTerms > 0, s"fbDocs/fbTerms must be positive")
-    // ONE persisted frame per call (r16, ADVICE r14 two rounds running): the
-    // postings `idx` is the only corpus-sized input and the only frame under
-    // the never-unpersist contract. The r14 shape persisted four more
-    // intermediates (tot, slice0, scores0, tfExp) — each has exactly two
-    // consumers, but BOTH consumers sit inside the one lazy result plan, so
-    // Spark's ReuseExchange/ReuseSubquery dedups their shuffles within the
-    // single final action; the extra persists bought nothing the plan didn't
-    // already share and leaked four cache entries per invocation in
-    // long-lived sessions (measured r16: warm flat after the change —
-    // 3.53 s on a box running the untouched bm25 controls 1.32-1.34× over
-    // their r15 receipts, i.e. ~2.65 s receipt-equivalent vs 2.77 before).
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val idxP = idx.persist(lvl)
-    val tf = idxP.select(col("doc").as("__d"), col("dl").cast("long").as("__dl"),
-      col("term").as("__w"), col("tf").cast("long").as("__tf"))
-    // Corpus totals (N, Σdl) computed ONCE and shared by both rounds — they
-    // are corpus properties; the expanded vocabulary doesn't change them.
-    // Collected to the driver (a BOUNDED collect: one aggregate row) and
-    // embedded as literals: both rounds' idf expressions read them for free,
-    // where the r14 shape paid a persisted frame + a broadcast crossJoin.
-    val totRow = tf.select(col("__d"), col("__dl")).distinct()
-      .agg(sum(col("__dl")).as("__tw"), count(lit(1)).as("__nd")).head()
+    // ONE persisted frame per call: the postings are the only corpus-sized
+    // input. Every other shared intermediate has both its consumers inside
+    // the one lazy result plan, where exchange reuse already shares it;
+    // persisting those too would leak cache entries in a long-lived session.
+    val tf = postings(idx.persist(StorageLevel.MEMORY_AND_DISK))
+    // Corpus totals (N, Σdl), shared by both rounds: the expanded vocabulary
+    // does not change them. A BOUNDED collect (one aggregate row), embedded
+    // as literals that both rounds' idf expressions read for free.
+    val totRow = totals(tf).head()
     // Empty postings sum to NULL and count to 0 — substitute (1, 1): with
     // zero posting rows NOTHING flows through the expressions that read the
     // totals, but as LITERALS they constant-fold at plan time and 0/0 would
-    // throw under ANSI before the (empty) result ever materializes. The
-    // placeholder keeps the pre-collect shape's lazy-empty behavior.
+    // throw under ANSI before the (empty) result ever materializes.
     val totTw = if (totRow.isNullAt(0) || totRow.getLong(1) == 0L) 1L else totRow.getLong(0)
     val totNd = if (totRow.getLong(1) == 0L) 1L else totRow.getLong(1)
-    val qt0 = queries
-      .select(col(qidCol).as("query_id"), explode(wordsCol(col(qtextCol))).as("term"))
-      .distinct()
-    val vocab0 = qt0.select(col("term").as("__w")).distinct()
-    // The round-1 query-term postings slice, cut ONCE: round 1 scores from it
-    // directly, and round 2 REUSES it — the full postings relation is
-    // re-touched only for the (few) expansion terms round 1 discovered, not
-    // re-semi-joined for the whole expanded vocabulary.
-    val slice0 = tf.join(broadcast(vocab0), "__w")
-    val qt0w = qt0.select(col("query_id").as("__q"), col("term").as("__w"))
-    def idfFor(tfq: DataFrame): DataFrame =
-      tfq.groupBy(col("__w")).agg(count(lit(1)).as("__df"))
-        .select(col("__w"),
-          floor(log((lit(totNd).cast("double") - col("__df").cast("double") + lit(0.5)) /
-              (col("__df").cast("double") + lit(0.5)) + lit(1.0)) * lit(1000000.0))
-            .cast("long").as("__idf"),
-          lit(totTw).as("__tw"), lit(totNd).as("__nd"))
-    def contribFor(tfq: DataFrame, qtw: DataFrame): DataFrame =
-      tfq.join(broadcast(qtw), "__w").join(broadcast(idfFor(tfq)), "__w")
-        .select(col("__q"), col("__d"), impactExpr(k1, b).as("__c"))
-    // Round-1 per-(query, doc) sums shared BEFORE the top-fbDocs window:
+    val withTotals: DataFrame => DataFrame =
+      _.select(col("*"), lit(totTw).as("__tw"), lit(totNd).as("__nd"))
+    val qt0 = queryTerms(queries, qidCol, qtextCol)
+    // Round-1 per-(query, doc) sums, shared BEFORE the top-fbDocs window:
     // round 2's score = round-1 score + expansion-term contributions (integer
-    // sums are associative and exp excludes each query's original terms, so
-    // the split is exact) — the dominant hit-relation aggregation is ONE
-    // exchange subtree, reused by the feedback window and the round-2 union.
-    // localCheckpoint, not just shared-lazily: scores0 anchors BOTH rounds
+    // sums are associative and the expansion excludes each query's original
+    // terms, so the split is exact).
+    // localCheckpoint, not just shared lazily: scores0 anchors BOTH rounds
     // (feedback window AND the round-2 union), so an unmaterialized frame
-    // puts the whole postings→contrib→agg subtree in the final plan twice —
-    // the r16 shape was a 356-operator plan whose codegen+planning dominated
-    // the COLD pass (24.5 s cold vs 5.2 s warm isolated at sf0.1). Cutting
-    // the lineage here splits the query into two ~half-size plans and lets
-    // round 2 read the round-1 aggregation's blocks instead of re-planning
-    // it (the exchange was runtime-reused before, but the operator tree —
-    // and its codegen — was not).
-    // Checkpointed PARTITIONED BY __q (r18, guide §2.4 "two operations keyed
-    // the same way can share one exchange"): localCheckpoint preserves the
-    // physical partitioning in its LogicalRDD, so the feedback top-fbDocs
-    // window (partitionBy __q) runs directly on the checkpoint blocks with
-    // no exchange — the extra repartition ships the already-aggregated
-    // per-(query, doc) rows once instead of re-exchanging them in the next
-    // job. Values are untouched; only block placement changes.
-    val scores0 = contribFor(slice0, qt0w)
-      .groupBy(col("__q"), col("__d")).agg(sum(col("__c")).as("score_micro"))
+    // puts the whole postings→impact→sum subtree in the final plan twice,
+    // and its planning and code generation dominate the cold pass.
+    // Checkpointed PARTITIONED BY __q: localCheckpoint preserves the physical
+    // partitioning, so the feedback window (partitionBy __q) runs directly on
+    // the checkpoint blocks with no exchange.
+    val scores0 = querySums(queryImpacts(tf, withTotals, qt0, k1, b), qt0)
       .repartition(col("__q"))
       .localCheckpoint(true)
-    val wfb = Window.partitionBy(col("__q"))
-      .orderBy(col("score_micro").desc, col("__d").asc)
-    val fb = scores0.withColumn("__rn", row_number().over(wfb))
-      .filter(col("__rn") <= fbDocs)
-      .select(col("__q").as("query_id"), col("__d").as("doc"))
-    val votes = broadcast(fb).join(idxP, Seq("doc"))
-      .groupBy(col("query_id"), col("term"))
-      .agg(sum(col("tf")).as("__s"))
-      .join(qt0.withColumn("__orig", lit(1)), Seq("query_id", "term"), "left_anti")
-    val we = Window.partitionBy(col("query_id")).orderBy(col("__s").desc, col("term").asc)
+    val fb = rankTopK(scores0, fbDocs).select(col("__q"), col("__d"))
+    val votes = broadcast(fb).join(tf, "__d")
+      .groupBy(col("__q"), col("__w"))
+      .agg(sum(col("__tf")).as("__s"))
+      .join(qt0, Seq("__q", "__w"), "left_anti")
+    val we = Window.partitionBy(col("__q")).orderBy(col("__s").desc, col("__w").asc)
     // Same lineage-cut argument as scores0: `exp` (≤ fbTerms·|queries| rows)
-    // is consumed by expVocab AND expw — unmaterialized, the whole
-    // feedback-vote subtree (broadcast(fb) ⋈ postings → sum → anti-join →
-    // window) would be planned and codegen'd twice in round 2's plan.
+    // is read by round 2's vocabulary semi-join AND its query-term join —
+    // unmaterialized, the whole feedback-vote subtree would be planned and
+    // code-generated twice in round 2's plan.
     val exp = votes.withColumn("__rn", row_number().over(we))
       .filter(col("__rn") <= fbTerms)
-      .select(col("query_id"), col("term"))
+      .select(col("__q"), col("__w"))
       .localCheckpoint(true)
     // Round 2 touches postings only for the expansion vocabulary (complete
     // posting lists per term, so df/idf are the same corpus properties the
     // whole-vocabulary pass would compute).
-    val expVocab = exp.select(col("term").as("__w")).distinct()
-    val tfExp = tf.join(broadcast(expVocab), "__w")
-    val expw = exp.select(col("query_id").as("__q"), col("term").as("__w"))
-    val contribExp = contribFor(tfExp, expw)
-    val scores2 = scores0.select(col("__q"), col("__d"), col("score_micro").as("__c"))
-      .unionByName(contribExp)
-      .groupBy(col("__q"), col("__d")).agg(sum(col("__c")).as("score_micro"))
-    val w = Window.partitionBy(col("__q"))
-      .orderBy(col("score_micro").desc, col("__d").asc)
-    scores2.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("__q").as("query_id"), col("__d").as("doc_id"),
-        col("score_micro"), col("rank").cast("long").as("rank"))
+    val expHits = queryImpacts(tf, withTotals, exp, k1, b).join(broadcast(exp), "__w")
+      .select(col("__q"), col("__d"), col("__imp"))
+    ranking(scoreSum(scores0.select(col("__q"), col("__d"), col("score_micro").as("__imp"))
+      .unionByName(expHits)), k)
   }
 
   /** The exact per-posting BM25 contribution in integer micro-units, over
     * columns (__idf, __tf, __dl, __tw, __nd). Query-INDEPENDENT once k1/b
     * are fixed — which is what makes an impact-ordered index possible:
-    * [[scoreHitsTerms]] and [[topKMaxScore]] share this expression, so the
-    * pruned ranking is bit-identical to the exhaustive one. */
+    * every BM25 face sums this one expression, so the pruned ranking is
+    * bit-identical to the exhaustive one. */
   private def impactExpr(k1: Double, b: Double) =
     floor(col("__idf").cast("double") *
         (col("__tf").cast("double") * lit(k1 + 1.0) /
@@ -323,26 +265,9 @@ object Bm25 {
   def topKMaxScore(
       idx: DataFrame, queries: DataFrame, qidCol: String, qtextCol: String,
       k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    val tf = idx.select(col("doc").as("__d"), col("dl").cast("long").as("__dl"),
-      col("term").as("__w"), col("tf").cast("long").as("__tf"))
-    val tot = tf.select(col("__d"), col("__dl")).distinct()
-      .agg(sum(col("__dl")).as("__tw"), count(lit(1)).as("__nd"))
-    val qt = queries
-      .select(col(qidCol).as("__q"), explode(wordsCol(col(qtextCol))).as("__w"))
-      .distinct()
-    val qterms = qt.select(col("__w")).distinct()
-    val tfq = tf.join(broadcast(qterms), "__w")
-    val idf = tfq.groupBy(col("__w")).agg(count(lit(1)).as("__df"))
-      .crossJoin(broadcast(tot))
-      .select(col("__w"),
-        floor(log((col("__nd").cast("double") - col("__df").cast("double") + lit(0.5)) /
-            (col("__df").cast("double") + lit(0.5)) + lit(1.0)) * lit(1000000.0))
-          .cast("long").as("__idf"),
-        col("__tw"), col("__nd"))
-    val imp = tfq.join(broadcast(idf), "__w")
-      .select(col("__w"), col("__d"), impactExpr(k1, b).as("__imp"))
-    maxScoreSearch(imp, qt, k)
+    requireK(k)
+    val qt = queryTerms(queries, qidCol, qtextCol)
+    maxScoreSearch(indexImpacts(idx, qt, k1, b), qt, k)
   }
 
   /**
@@ -357,20 +282,9 @@ object Bm25 {
    * @return (term, doc, imp)
    */
   def impactIndex(idx: DataFrame, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val tf = idx.select(col("doc").as("__d"), col("dl").cast("long").as("__dl"),
-      col("term").as("__w"), col("tf").cast("long").as("__tf"))
-    val tot = tf.select(col("__d"), col("__dl")).distinct()
-      .agg(sum(col("__dl")).as("__tw"), count(lit(1)).as("__nd"))
-    val idf = tf.groupBy(col("__w")).agg(count(lit(1)).as("__df"))
-      .crossJoin(broadcast(tot))
-      .select(col("__w"),
-        floor(log((col("__nd").cast("double") - col("__df").cast("double") + lit(0.5)) /
-            (col("__df").cast("double") + lit(0.5)) + lit(1.0)) * lit(1000000.0))
-          .cast("long").as("__idf"),
-        col("__tw"), col("__nd"))
-    tf.join(idf, "__w") // vocab-sized right side: shuffle join, NOT broadcast
-      .select(col("__w").as("term"), col("__d").as("doc"),
-        impactExpr(k1, b).as("imp"))
+    val tf = postings(idx)
+    impacts(tf, idfTable(tf, crossTotals(totals(tf))), k1, b) // vocab-sized idf: shuffle join, NOT broadcast
+      .select(col("__w").as("term"), col("__d").as("doc"), col("__imp").as("imp"))
   }
 
   /** [[topKMaxScore]] over a pre-built [[impactIndex]] — bit-identical to
@@ -379,15 +293,11 @@ object Bm25 {
   def topKMaxScoreIndexed(
       impIdx: DataFrame, queries: DataFrame, qidCol: String, qtextCol: String,
       k: Int): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    val qt = queries
-      .select(col(qidCol).as("__q"), explode(wordsCol(col(qtextCol))).as("__w"))
-      .distinct()
-    val qterms = qt.select(col("__w")).distinct()
+    requireK(k)
+    val qt = queryTerms(queries, qidCol, qtextCol)
     val imp = impIdx.select(col("term").as("__w"), col("doc").as("__d"),
-        col("imp").cast("long").as("__imp"))
-      .join(broadcast(qterms), "__w")
-    maxScoreSearch(imp, qt, k)
+      col("imp").cast("long").as("__imp"))
+    maxScoreSearch(restrictTo(imp, qt), qt, k)
   }
 
   /** Shared MaxScore tail of [[topKMaxScore]]/[[topKMaxScoreIndexed]]: the
@@ -396,104 +306,70 @@ object Bm25 {
     * impact relation `imp(__w, __d, __imp)`. Persisted here for its three
     * consumers; same never-unpersist contract as [[topKPrf]]. */
   private def maxScoreSearch(imp0: DataFrame, qt: DataFrame, k: Int): DataFrame = {
-    val imp = imp0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // EARLY EXIT before any θ work (r15): MaxScore tiers terms by their
-    // upper-bound IMPACT SPREAD — with near-uniform per-term bounds no prefix
-    // of a query's U-ascending terms can stay under θ (θ is itself at least
-    // one full impact), so the θ pass would only confirm ess ≈ qt at the
-    // price of a full prefix aggregation over the postings. One cheap
-    // two-level aggregation (|vocab| keys, no sort) reads the spread; under
-    // 2× → exhaustive shape directly. The uniform-idf word-salad corpus
-    // lands here (ub spread ~1.3×); any real Zipf vocabulary is orders of
-    // magnitude wider. Both paths are bit-identical, so the heuristic can
-    // only cost speed, never results.
+    val imp = imp0.persist(StorageLevel.MEMORY_AND_DISK)
+    // EARLY EXIT before any θ work: MaxScore tiers terms by their upper-bound
+    // IMPACT SPREAD — with near-uniform per-term bounds no prefix of a query's
+    // U-ascending terms can stay under θ (θ is itself at least one full
+    // impact), so the θ pass would only confirm ess ≈ qt at the price of a
+    // full prefix aggregation over the postings. One cheap two-level
+    // aggregation (|vocab| keys, no sort) reads the spread; under 2× →
+    // exhaustive shape directly. The uniform-idf word-salad corpus lands here
+    // (ub spread ~1.3×); any real Zipf vocabulary is orders of magnitude
+    // wider. Both paths are bit-identical, so the heuristic can only cost
+    // speed, never results.
     val ubSpread = imp.groupBy(col("__w")).agg(max(col("__imp")).as("__ub"))
       .agg(min(col("__ub")).as("__lo"), max(col("__ub")).as("__hi")).head()
     if (!ubSpread.isNullAt(0) && ubSpread.getLong(1) < 2L * math.max(1L, ubSpread.getLong(0)))
-      return exhaustiveShape(imp, qt, k)
+      return exhaustiveTopK(imp, qt, k)
     val ess = essentialTerms(imp, qt, k)
-    // ADAPTIVE FALLBACK (r15): when the essential set covers ~the whole query
+    // ADAPTIVE FALLBACK: when the essential set covers ~the whole query
     // vocabulary — the uniform-idf corpus, where θ can exclude (almost)
     // nothing — the pruned shape degenerates to the exhaustive aggregation
     // PLUS a persisted candidate frame and a non-essential join that feed it
-    // nothing. Detect it from the θ-pass outputs (both tiny and already
-    // materialized: `ess` is checkpointed, `qt` is the query-vocab relation
-    // the collectable-queries contract bounds) and run the exhaustive
-    // single-aggregation shape instead — bit-identical scores, so MaxScore
-    // never loses to the engine it generalizes. Pruning must skip ≥ 10% of
-    // (q, w) pairs to be worth the candidate bookkeeping (measured: uniform
-    // fixture 0.89× before, where ess/qt = 1.0).
+    // nothing. Detect it from the θ-pass outputs (both tiny: `ess` is
+    // checkpointed, `qt` is the query-vocab relation the collectable-queries
+    // contract bounds) and run the exhaustive shape instead. Pruning must
+    // skip ≥ 10% of (q, w) pairs to be worth the candidate bookkeeping.
     val nQt = qt.count()
-    if (nQt > 0 && ess.count() >= 0.9 * nQt) return exhaustiveShape(imp, qt, k)
-    // ONE pass over the essential-term hit relation: the (q, d) aggregation's
-    // keys ARE the candidate set (docs with ≥ 1 essential posting), and its
-    // sums are the essential half of every candidate's score — the hit-sized
-    // relation is exchanged exactly once, like the exhaustive engine's single
-    // aggregation. Persisted: candidate-sized, two consumers.
-    val essAgg = imp.join(broadcast(ess), "__w")
-      .groupBy(col("__q"), col("__d")).agg(sum(col("__imp")).as("__se"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = essAgg.select(col("__q"), col("__d"))
+    if (nQt > 0 && ess.count() >= 0.9 * nQt) return exhaustiveTopK(imp, qt, k)
+    // ONE pass over the essential-term hit relation: the (q, d) sums' keys
+    // ARE the candidate set (docs with ≥ 1 essential posting), and their
+    // values are the essential half of every candidate's score — the
+    // hit-sized relation is exchanged exactly once, like the exhaustive
+    // shape's single aggregation. Persisted: candidate-sized, two consumers.
+    val essAgg = querySums(imp, ess).persist(StorageLevel.MEMORY_AND_DISK)
     // NON-essential contributions: candidates join postings restricted to the
     // globally-non-essential vocabulary, then keep per-query non-essential
-    // (q, w) pairs. This is the decisive shape: MaxScore's whole point is
-    // that the high-df low-idf terms are the non-essential ones, so joining
-    // candidates against ONLY their postings replaces both the exhaustive
-    // |queries|-expanded hit relation (the original formulation, measured
-    // 0.36-0.47×) and the candidates × ALL-doc-terms join (the r13 shape,
-    // measured 0.72× on the Zipf fixture — each candidate doc dragged its
-    // every query-vocab posting through the exchange before the per-query
-    // filter).
+    // (q, w) pairs. MaxScore's non-essential terms are the high-df low-idf
+    // ones, so joining candidates against ONLY their postings keeps both the
+    // |queries|-expanded hit relation and each candidate's every
+    // query-vocabulary posting out of the exchange.
     val noness = qt.join(broadcast(ess), Seq("__q", "__w"), "left_anti")
-    val nonessTerms = noness.select(col("__w")).distinct()
-    val nonessHits = cand
-      .join(imp.join(broadcast(nonessTerms), "__w"), Seq("__d"))
+    val nonessHits = essAgg.select(col("__q"), col("__d"))
+      .join(restrictTo(imp, noness), Seq("__d"))
       .join(broadcast(noness), Seq("__q", "__w"), "left_semi")
       .select(col("__q"), col("__d"), col("__imp"))
     // Final scores: candidate-sized essential sums ∪ non-essential lookups,
     // regrouped — exact by integer associativity.
-    val scores = essAgg.select(col("__q"), col("__d"), col("__se").as("__imp"))
-      .unionByName(nonessHits)
-      .groupBy(col("__q"), col("__d"))
-      .agg(sum(col("__imp")).as("score_micro"))
-    val w = Window.partitionBy(col("__q")).orderBy(col("score_micro").desc, col("__d").asc)
-    scores.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("__q").as("query_id"), col("__d").as("doc_id"),
-        col("score_micro"), col("rank").cast("long").as("rank"))
-  }
-
-  /** The exhaustive single-aggregation shape over an already query-term-
-    * restricted impact relation — [[maxScoreSearch]]'s two fallback exits
-    * (upper-bound spread, essential-coverage) both land here; scores are
-    * bit-identical to the pruned path by construction. */
-  private def exhaustiveShape(imp: DataFrame, qt: DataFrame, k: Int): DataFrame = {
-    val scores = imp.join(broadcast(qt), Seq("__w"))
-      .groupBy(col("__q"), col("__d")).agg(sum(col("__imp")).as("score_micro"))
-    val w = Window.partitionBy(col("__q")).orderBy(col("score_micro").desc, col("__d").asc)
-    scores.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("__q").as("query_id"), col("__d").as("doc_id"),
-        col("score_micro"), col("rank").cast("long").as("rank"))
+    ranking(scoreSum(essAgg.select(col("__q"), col("__d"), col("score_micro").as("__imp"))
+      .unionByName(nonessHits)), k)
   }
 
   /** The MaxScore θ pass + essential-term partition over a (persisted)
     * query-term impact relation `imp(__w, __d, __imp)` → the per-query
     * essential (q, w) pairs. Checkpointed: `ess` is tiny (⊆ query
-    * vocabulary) but its lineage holds the θ pass — a top-k window over the
-    * whole impact relation — and it has three consumers downstream
+    * vocabulary) but its lineage holds the θ pass — a top-k aggregation over
+    * the whole impact relation — and it has three consumers downstream
     * (essential hits, the non-essential anti-join, diagnostics); uncut, each
-    * would re-sort the postings (measured 0.65× → 1.1× on the uniform
-    * fixture from this one cut). */
+    * would re-read the postings. */
   private def essentialTerms(imp: DataFrame, qt: DataFrame, k: Int): DataFrame = {
     val ub = imp.groupBy(col("__w")).agg(max(col("__imp")).as("__ub"))
     // Per-term top-k-by-impact prefix as a BOUNDED aggregation
     // ([[graft.functions.TopKAgg.perKeyStr]]), not a row_number window: the
     // window form sorted the ENTIRE posting relation per term before
-    // truncating (the dominant θ-pass cost on corpora where pruning can't
-    // pay); the aggregation collapses every partition to ≤ k postings per
-    // term map-side, so only the bounded prefix crosses the wire — at scale
-    // this IS the per-term prefix read an impact-ordered index serves.
+    // truncating; the aggregation collapses every partition to ≤ k postings
+    // per term map-side, so only the bounded prefix crosses the wire — at
+    // scale this IS the per-term prefix read an impact-ordered index serves.
     // Exact: same (impact desc, doc asc) order and tie-break (integer
     // impacts round-trip the Double buffer losslessly, ≪ 2^53).
     val prefix = graft.functions.TopKAgg
@@ -524,26 +400,9 @@ object Bm25 {
   def maxScoreCandidateCount(
       idx: DataFrame, queries: DataFrame, qidCol: String, qtextCol: String,
       k: Int, k1: Double = 1.2, b: Double = 0.75): Long = {
-    require(k > 0, s"k must be positive, got $k")
-    val tf = idx.select(col("doc").as("__d"), col("dl").cast("long").as("__dl"),
-      col("term").as("__w"), col("tf").cast("long").as("__tf"))
-    val tot = tf.select(col("__d"), col("__dl")).distinct()
-      .agg(sum(col("__dl")).as("__tw"), count(lit(1)).as("__nd"))
-    val qt = queries
-      .select(col(qidCol).as("__q"), explode(wordsCol(col(qtextCol))).as("__w"))
-      .distinct()
-    val qterms = qt.select(col("__w")).distinct()
-    val tfq = tf.join(broadcast(qterms), "__w")
-    val idf = tfq.groupBy(col("__w")).agg(count(lit(1)).as("__df"))
-      .crossJoin(broadcast(tot))
-      .select(col("__w"),
-        floor(log((col("__nd").cast("double") - col("__df").cast("double") + lit(0.5)) /
-            (col("__df").cast("double") + lit(0.5)) + lit(1.0)) * lit(1000000.0))
-          .cast("long").as("__idf"),
-        col("__tw"), col("__nd"))
-    val imp = tfq.join(broadcast(idf), "__w")
-      .select(col("__w"), col("__d"), impactExpr(k1, b).as("__imp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    requireK(k)
+    val qt = queryTerms(queries, qidCol, qtextCol)
+    val imp = indexImpacts(idx, qt, k1, b).persist(StorageLevel.MEMORY_AND_DISK)
     val ess = essentialTerms(imp, qt, k)
     val n = imp.join(broadcast(ess), "__w")
       .select(col("__q"), col("__d")).distinct().count()
@@ -551,51 +410,102 @@ object Bm25 {
     n
   }
 
-  /** Shared scoring tail of [[topK]] / [[topKIndexed]]: query-vocabulary
-    * semi-join, integer micro-nat idf, exact integer per-(query, doc) sums,
-    * rank-limited top-k window. `tf` = (__d, __dl, __w, __tf); `tot` = one
-    * row (__tw, __nd). */
-  private def scoreHits(
-      tf: DataFrame, tot: DataFrame,
-      queries: DataFrame, qidCol: String, qtextCol: String,
-      k: Int, k1: Double, b: Double): DataFrame = {
-    val qt = queries
-      .select(col(qidCol).as("__q"), explode(wordsCol(col(qtextCol))).as("__w"))
+  // ---- the shared primitives of the ranked faces ----------------------------
+
+  /** THE k check of every ranked face, before any plan or job. */
+  private def requireK(k: Int): Unit = require(k > 0, s"k must be positive, got $k")
+
+  /** THE postings view of an [[index]]: `(__d, __dl, __w, __tf)`. */
+  private def postings(idx: DataFrame): DataFrame =
+    idx.select(col("doc").as("__d"), col("dl").cast("long").as("__dl"),
+      col("term").as("__w"), col("tf").cast("long").as("__tf"))
+
+  /** THE corpus totals: the distinct `(__d, __dl)` rows of `docLens` → one
+    * row `(__tw, __nd)` = (Σdl, N). */
+  private def totals(docLens: DataFrame): DataFrame =
+    docLens.select(col("__d"), col("__dl")).distinct()
+      .agg(sum(col("__dl")).as("__tw"), count(lit(1)).as("__nd"))
+
+  /** Adds the one-row totals frame `tot` to a per-term frame: a broadcast
+    * cross join. */
+  private def crossTotals(tot: DataFrame): DataFrame => DataFrame =
+    _.crossJoin(broadcast(tot))
+
+  /** THE query vocabulary: distinct `(__q, __w)`. */
+  private def queryTerms(queries: DataFrame, qidCol: String, qtextCol: String): DataFrame =
+    queries.select(col(qidCol).as("__q"), explode(wordsCol(col(qtextCol))).as("__w"))
       .distinct()
-    scoreHitsTerms(tf, tot, qt, k, k1, b)
+
+  /** THE micro-nat idf: `floor(ln((N − df + 0.5)/(df + 0.5) + 1)·1e6)`. */
+  private def idfMicro(nd: Column, df: Column): Column =
+    microNats(log((nd.cast("double") - df.cast("double") + lit(0.5)) /
+      (df.cast("double") + lit(0.5)) + lit(1.0)))
+
+  /** Per-term idf of a postings slice that holds complete posting lists, so
+    * df is the corpus property: `(__w, __idf, __tw, __nd)`. `withTotals` adds
+    * the corpus totals `(__tw, __nd)` to the per-term df rows. */
+  private def idfTable(tfq: DataFrame, withTotals: DataFrame => DataFrame): DataFrame =
+    withTotals(tfq.groupBy(col("__w")).agg(count(lit(1)).as("__df")))
+      .select(col("__w"), idfMicro(col("__nd"), col("__df")).as("__idf"),
+        col("__tw"), col("__nd"))
+
+  /** The impact relation `(__w, __d, __imp)` of the postings `tf` under
+    * the idf table `idf`. */
+  private def impacts(tf: DataFrame, idf: DataFrame, k1: Double, b: Double): DataFrame =
+    tf.join(idf, "__w").select(col("__w"), col("__d"), impactExpr(k1, b).as("__imp"))
+
+  /** `rel` semi-joined to the vocabulary of the query terms `qt`, broadcast. */
+  private def restrictTo(rel: DataFrame, qt: DataFrame): DataFrame =
+    rel.join(broadcast(qt.select(col("__w")).distinct()), "__w")
+
+  /** THE query-restricted impact relation `(__w, __d, __imp)`: the postings
+    * of `qt`'s terms with their per-posting impacts. Restricting BEFORE any
+    * per-term work bounds df (and its join) to the query vocabulary — df
+    * over the full vocabulary would aggregate millions of terms to use a
+    * handful — and the idf slice broadcasts instead of shuffling the hit
+    * relation a second time. df per surviving term is unchanged (it counts
+    * the docs containing THAT term). */
+  private def queryImpacts(
+      tf: DataFrame, withTotals: DataFrame => DataFrame, qt: DataFrame,
+      k1: Double, b: Double): DataFrame = {
+    val tfq = restrictTo(tf, qt)
+    impacts(tfq, broadcast(idfTable(tfq, withTotals)), k1, b)
   }
 
-  /** [[scoreHits]] with the query vocabulary supplied as a RELATION
-    * `qt(__q, __w)` — the entry point for searches whose terms are computed
-    * (expansion, reformulation) rather than tokenized from text. */
-  private def scoreHitsTerms(
-      tf: DataFrame, tot: DataFrame, qt: DataFrame,
-      k: Int, k1: Double, b: Double): DataFrame = {
-    // Restrict to QUERY terms before any per-term work: df over the full
-    // vocabulary would aggregate (and then shuffle-join) millions of terms to
-    // use a handful — the semi-join bounds both to the query vocabulary, and
-    // the resulting idf slice broadcasts instead of shuffling the hit
-    // relation a second time. df per surviving term is unchanged (it counts
-    // docs containing THAT term).
-    val qterms = qt.select(col("__w")).distinct()
-    val tfq = tf.join(broadcast(qterms), "__w")
-    val idf = tfq.groupBy(col("__w")).agg(count(lit(1)).as("__df"))
-      .crossJoin(broadcast(tot))
-      .select(col("__w"),
-        floor(log((col("__nd").cast("double") - col("__df").cast("double") + lit(0.5)) /
-            (col("__df").cast("double") + lit(0.5)) + lit(1.0)) * lit(1000000.0))
-          .cast("long").as("__idf"),
-        col("__tw"), col("__nd"))
-    val contrib = tfq.join(broadcast(qt), "__w").join(broadcast(idf), "__w")
-      .select(col("__q"), col("__d"), impactExpr(k1, b).as("__c"))
-    val scores = contrib.groupBy(col("__q"), col("__d"))
-      .agg(sum(col("__c")).as("score_micro"))
-    val w = Window.partitionBy(col("__q")).orderBy(col("score_micro").desc, col("__d").asc)
-    scores.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("__q").as("query_id"), col("__d").as("doc_id"),
-        col("score_micro"), col("rank").cast("long").as("rank"))
+  /** [[queryImpacts]] over an [[index]], with totals from its postings — an
+    * index consumer has nothing else to read them from. */
+  private def indexImpacts(idx: DataFrame, qt: DataFrame, k1: Double, b: Double): DataFrame = {
+    val tf = postings(idx)
+    queryImpacts(tf, crossTotals(totals(tf)), qt, k1, b)
   }
+
+  /** Exact integer sums of `__imp` per (query, doc): `(__q, __d, score_micro)`. */
+  private def scoreSum(hits: DataFrame): DataFrame =
+    hits.groupBy(col("__q"), col("__d")).agg(sum(col("__imp")).as("score_micro"))
+
+  /** Per (query, doc) the sum of the impacts of the query's terms `qt(__q, __w)`:
+    * `(__q, __d, score_micro)`. Impacts are integers, so scoring each posting
+    * once before the query join gives the same sums as scoring per query. */
+  private def querySums(imp: DataFrame, qt: DataFrame): DataFrame =
+    scoreSum(imp.join(broadcast(qt), "__w"))
+
+  /** THE exhaustive scorer: every query term's impacts, summed per
+    * (query, doc), ranked. */
+  private def exhaustiveTopK(imp: DataFrame, qt: DataFrame, k: Int): DataFrame =
+    ranking(querySums(imp, qt), k)
+
+  /** THE rank tail: per query, the `k` best `(__q, __d, score_micro)` rows by
+    * (score desc, doc asc), with their 1-based `rank` (Int). A rank-limited
+    * window, so Spark plans it as WindowGroupLimit. */
+  private def rankTopK(scores: DataFrame, k: Int): DataFrame =
+    scores.withColumn("rank", row_number().over(
+        Window.partitionBy(col("__q")).orderBy(col("score_micro").desc, col("__d").asc)))
+      .filter(col("rank") <= k)
+
+  /** [[rankTopK]] as a ranked face's output `(query_id, doc_id, score_micro, rank)`. */
+  private def ranking(scores: DataFrame, k: Int): DataFrame =
+    rankTopK(scores, k).select(col("__q").as("query_id"), col("__d").as("doc_id"),
+      col("score_micro"), col("rank").cast("long").as("rank"))
 
   /**
    * POSITIONAL postings index — `(doc, pos, term)`, one row per token
@@ -676,39 +586,29 @@ object Bm25 {
       docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, qidCol: String, qtextCol: String,
       k: Int, mu: Double = 300.0): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
+    requireK(k)
     require(mu > 0.0, s"mu must be positive, got $mu")
-    val tf = index(docs, idCol, textCol)
-      .select(col("doc").as("__d"), col("dl").cast("long").as("__dl"),
-        col("term").as("__w"), col("tf").cast("long").as("__tf"))
+    val tf = postings(index(docs, idCol, textCol))
     // vocab-sized collection frequencies, checkpointed: the corpus total is
     // its own rollup (Σ cf = Σ tf), so the postings lineage runs twice
-    // (cf build + scoring join) instead of three times (r17)
+    // (cf build + scoring join) instead of three times
     val cf = tf.groupBy(col("__w")).agg(sum(col("__tf")).as("__cf"))
       .localCheckpoint()
     val tot = cf.agg(sum(col("__cf")).as("__T"))
-    val qt = queries
-      .select(col(qidCol).as("__q"), explode(wordsCol(col(qtextCol))).as("__w"))
-      .distinct()
+    val qt = queryTerms(queries, qidCol, qtextCol)
     val qn = qt.groupBy(col("__q")).agg(count(lit(1)).as("__nq"))
     val present = tf.join(broadcast(qt), "__w").join(cf, "__w")
       .crossJoin(broadcast(tot))
       .select(col("__q"), col("__d"), col("__dl"),
-        floor(log(lit(1.0) + (col("__tf") * col("__T")).cast("double") /
-            (lit(mu) * col("__cf").cast("double"))) * lit(1000000.0))
-          .cast("long").as("__pc"))
+        microNats(log(lit(1.0) + (col("__tf") * col("__T")).cast("double") /
+          (lit(mu) * col("__cf").cast("double")))).as("__pc"))
     val scores = present
       .groupBy(col("__q"), col("__d"))
       .agg(sum(col("__pc")).as("__ps"), first(col("__dl")).as("__dl"))
       .join(broadcast(qn), "__q")
       .select(col("__q"), col("__d"),
         (col("__ps") + col("__nq") *
-          floor(log(lit(mu) / (col("__dl").cast("double") + lit(mu))) * lit(1000000.0))
-            .cast("long")).as("score_micro"))
-    val w = Window.partitionBy(col("__q")).orderBy(col("score_micro").desc, col("__d").asc)
-    scores.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("__q").as("query_id"), col("__d").as("doc_id"),
-        col("score_micro"), col("rank").cast("long").as("rank"))
+          microNats(log(lit(mu) / (col("__dl").cast("double") + lit(mu))))).as("score_micro"))
+    ranking(scores, k)
   }
 }

@@ -26,7 +26,8 @@ import graft.functions.TextFunctions.{wordGrams, wordsCol}
  *    reduction order and mirrored 1:1 in oracle SQL. Only a final mean is a
  *    double: `microMean`, rounded to 4. [[charEntropy]],
  *    [[sourceKlDivergence]], [[mixtureEntropy]], [[dsirWeights]], the PMI
- *    scores and the PSI term all quantize the same way.
+ *    scores and the PSI term all quantize the same way, as do [[Bm25]]'s
+ *    idf and query-likelihood components.
  *  - Clamped bins: `binOf` and `requireBins` serve [[exactHistogram]],
  *    [[psiDrift]], [[ksDrift]], [[psiDriftByGroup]] and
  *    [[graft.streaming.StreamDrift.psiPerWindow]]; `microMass` and `psiMicro`
@@ -49,7 +50,7 @@ object CorpusStats {
 
   /** THE micro-nat quantizer: `floor(x·1e6)` as BIGINT. `scaled` rescales
     * the micro-nat value before the floor ([[mixtureEntropy]]'s `·w/T`). */
-  private def microNats(x: Column, scaled: Column => Column = identity): Column =
+  private[graft] def microNats(x: Column, scaled: Column => Column = identity): Column =
     floor(scaled(x * lit(1000000.0))).cast("long")
 
   /** THE mean tail: a micro-nat sum `__s` over `n` items, in nats rounded to 4. */

@@ -876,4 +876,60 @@ class PlanSpec extends AnyFunSuite with LocalSpark {
     assert(!plan.contains("LeftSemi"), plan)
     assert(plan.contains("WindowGroupLimit"), plan)
   }
+
+  test("every ranked Bm25 face rejects k <= 0 before any job") {
+    val s = spark
+    import s.implicits._
+    val docs = Seq((1L, "alpha beta gamma"), (2L, "beta gamma delta")).toDF("doc_id", "text")
+    import graft.operators.Bm25
+    val idx = Bm25.index(docs, "doc_id", "text")
+    def entries(k: Int): Seq[(String, () => Any)] = Seq(
+      "topK" -> (() => Bm25.topK(docs, "doc_id", "text", docs, "doc_id", "text", k)),
+      "topKIndexed" -> (() => Bm25.topKIndexed(idx, docs, "doc_id", "text", k)),
+      "topKPrf" -> (() => Bm25.topKPrf(idx, docs, "doc_id", "text", k)),
+      "topKMaxScore" -> (() => Bm25.topKMaxScore(idx, docs, "doc_id", "text", k)),
+      "topKMaxScoreIndexed" -> (() =>
+        Bm25.topKMaxScoreIndexed(Bm25.impactIndex(idx), docs, "doc_id", "text", k)),
+      "maxScoreCandidateCount" -> (() => Bm25.maxScoreCandidateCount(idx, docs, "doc_id", "text", k)),
+      "topKQl" -> (() => Bm25.topKQl(docs, "doc_id", "text", docs, "doc_id", "text", k)))
+    withJobCounter { jobs =>
+      for (k <- Seq(0, -1); (name, call) <- entries(k)) {
+        intercept[IllegalArgumentException](call())
+        assert(jobs() == 0, s"$name checked k = $k after a Spark job")
+      }
+    }
+  }
+
+  test("Bm25 PRF and MaxScore run a pinned number of jobs while the frame is built") {
+    val s = spark
+    import s.implicits._
+    import graft.operators.Bm25
+    // the wide-spread fixture of the LeftSemi test above: the pruned shape
+    val wide = (0L until 40L).map { i =>
+      val rare = if (i % 17 == 0) " uniquerareterm" else ""
+      (i, s"alpha beta gamma delta epsilon zeta$rare")
+    }.toDF("doc_id", "text")
+    // the flat-spread word-salad corpus: the exhaustive shape
+    val flat = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    // pinned, so a plan change that adds a job shows here; the counts include
+    // the shuffle-map stages and broadcasts AQE runs as jobs of their own.
+    // MaxScore leaves its impact relation persisted, and earlier tests build
+    // the same plans: start from an empty cache.
+    spark.sharedState.cacheManager.clearCache()
+    val built = withJobCounter { jobs =>
+      def jobsWhileBuilt(n: Int)(df: DataFrame): DataFrame = { assert(jobs() == n); df }
+      Seq(
+        // the totals collect and the two checkpoints
+        jobsWhileBuilt(20)(Bm25.topKPrf(Bm25.index(flat, "doc_id", "text"),
+          flat.filter(col("doc_id") < 5), "doc_id", "text", 10, fbDocs = 2, fbTerms = 2)),
+        // the pruned shape
+        jobsWhileBuilt(26)(Bm25.topKMaxScore(Bm25.index(wide, "doc_id", "text"),
+          wide.filter(col("doc_id") < 5), "doc_id", "text", 2)),
+        // the exhaustive shape
+        jobsWhileBuilt(26)(Bm25.topKMaxScore(Bm25.index(flat, "doc_id", "text"),
+          flat.filter(col("doc_id") < 5), "doc_id", "text", 10)))
+    }
+    try assert(built.map(_.count()) == Seq(50L, 10L, 50L))
+    finally spark.sharedState.cacheManager.clearCache()
+  }
 }
