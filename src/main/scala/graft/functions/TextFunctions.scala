@@ -470,8 +470,23 @@ object TextFunctions {
    * ASCII/BMP input contract as [[tHash]].
    */
   def winnowFingerprints(s: String, k: Int = 8, w: Int = 4): Array[Long] = {
+    val (_, mins) = winnowMinima(s, k, w)
+    val out = new Array[Long](mins.size)
+    val it = mins.iterator()
+    var o = 0
+    while (it.hasNext) { out(o) = it.next(); o += 1 }
+    out
+  }
+
+  /** THE winnow loop under [[winnowFingerprints]] and
+    * [[winnowFingerprintsPos]]: the [[tHash]] of every k-char gram of `s`
+    * in position order, and the ascending set of its `w`-window minima;
+    * both empty when `s` has no full window. */
+  private def winnowMinima(
+      s: String, k: Int, w: Int): (Array[Long], java.util.TreeSet[java.lang.Long]) = {
     require(k > 0 && w > 0, s"need positive k and w, got k=$k w=$w")
-    if (s == null || s.length < k + w - 1) return Array.emptyLongArray
+    val mins = new java.util.TreeSet[java.lang.Long]()
+    if (s == null || s.length < k + w - 1) return (Array.emptyLongArray, mins)
     val nGrams = s.length - k + 1
     val hashes = new Array[Long](nGrams)
     var i = 0
@@ -479,7 +494,6 @@ object TextFunctions {
       hashes(i) = tHash(s.substring(i, i + k))
       i += 1
     }
-    val mins = new java.util.TreeSet[java.lang.Long]()
     var start = 0
     while (start <= nGrams - w) {
       var m = hashes(start)
@@ -491,11 +505,7 @@ object TextFunctions {
       mins.add(m)
       start += 1
     }
-    val out = new Array[Long](mins.size)
-    val it = mins.iterator()
-    var o = 0
-    while (it.hasNext) { out(o) = it.next(); o += 1 }
-    out
+    (hashes, mins)
   }
 
   def winnowUdf(k: Int, w: Int) = udf((s: String) => winnowFingerprints(s, k, w))
@@ -508,30 +518,10 @@ object TextFunctions {
     * where gramHash = fingerprint`; same-hash grams are the same substring
     * under tHash's contract, so the span content is right either way. */
   def winnowFingerprintsPos(s: String, k: Int = 8, w: Int = 4): Array[(Long, Int)] = {
-    require(k > 0 && w > 0, s"need positive k and w, got k=$k w=$w")
-    if (s == null || s.length < k + w - 1) return Array.empty
-    val nGrams = s.length - k + 1
-    val hashes = new Array[Long](nGrams)
-    var i = 0
-    while (i < nGrams) {
-      hashes(i) = tHash(s.substring(i, i + k))
-      i += 1
-    }
-    val mins = new java.util.TreeSet[java.lang.Long]()
-    var start = 0
-    while (start <= nGrams - w) {
-      var m = hashes(start)
-      var j = start + 1
-      while (j < start + w) {
-        if (hashes(j) < m) m = hashes(j)
-        j += 1
-      }
-      mins.add(m)
-      start += 1
-    }
+    val (hashes, mins) = winnowMinima(s, k, w)
     val firstPos = new java.util.HashMap[java.lang.Long, Integer]()
-    i = 0
-    while (i < nGrams) {
+    var i = 0
+    while (i < hashes.length) {
       if (mins.contains(hashes(i)) && !firstPos.containsKey(hashes(i)))
         firstPos.put(hashes(i), i + 1) // 1-based, mirrors SQL generate_series
       i += 1

@@ -1,26 +1,47 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.wordNGramHashUdf
+import graft.operators.Dedup.{charGrams, gramPositions, gramSet, spansFromMarked}
 
 /**
- * Benchmark decontamination by n-gram collision — the standard pre-training
- * hygiene step: flag corpus documents that share any n-word gram with a
- * benchmark/evaluation document (GPT-3-style 13-gram rule), so evaluation
- * data can be removed from the training mix.
+ * Benchmark decontamination — the standard pre-training hygiene step: find
+ * what the corpus shares with a benchmark/evaluation set, so evaluation data
+ * can be removed from the training mix. The benchmark side is tiny by
+ * nature; the corpus is scanned in place and never shuffled on text.
  *
- * Plan shape: one gram-hash UDF pass per side, equi-join on the 64-bit gram
- * hash. The benchmark side is tiny by nature — its hash relation broadcasts —
- * so the corpus is scanned once and never shuffled on text. Exact on grams
- * (hash collisions of [[graft.functions.TextFunctions.tHash]] are the only
- * false-positive source, and flagging is the conservative direction for
+ *  - [[flagged]]                  whole docs sharing an n-word gram with a
+ *                                 bench doc (the GPT-3-style 13-gram rule).
+ *  - [[fuzzyFlagged]]             whole docs at 3-word-shingle Jaccard ≥
+ *                                 threshold — [[Dedup.minHashLshPairsBetween]]
+ *                                 renamed; [[sourceRollup]] rolls either up
+ *                                 per source.
+ *  - [[contaminatedSpans]] / [[contaminatedSpansBloom]] the corpus char
+ *                                 spans made of bench k-grams (broadcast /
+ *                                 Bloom-screened bench set);
+ *                                 [[removeContaminatedSpans]] cuts them.
+ *  - [[benchCoverage]] / [[leakReport]] the bench side: the fraction of bench
+ *                                 grams found in the corpus, overall and per
+ *                                 bench doc.
+ *
+ * The k-char-gram faces run on [[Dedup]]'s span core: `gramPositions` (the
+ * corpus gram relation), `gramSet` (distinct bench or corpus gram
+ * identities), `spansFromMarked` (island merge and output tail) and
+ * `cutSpans` (the interval union-merge and splice). Gram identities are the
+ * (h1, h2) pair of [[Dedup.charGrams]]; [[flagged]]'s n-word grams hash with
+ * [[graft.functions.TextFunctions.tHash]], whose collisions are its only
+ * false-positive source (flagging is the conservative direction for
  * decontamination).
  */
 object Decontaminate {
 
   /**
+   * Flags corpus documents that share any n-word gram with a benchmark
+   * document. One gram-hash UDF pass per side, equi-join on the 64-bit gram
+   * hash with the bench side broadcast.
+   *
    * @param n gram width in words (13 is the published convention)
    * @return (corpus idCol, bench_id) — one row per (contaminated doc,
    *         benchmark doc) collision pair, distinct
@@ -79,7 +100,8 @@ object Decontaminate {
    * matched (bench-bounded) grams, never on the corpus' full gram space.
    * Same broadcast-size guard as [[contaminatedSpans]].
    *
-   * @return one row: (n_bench, n_found, coverage_micro = found·10⁶ div bench)
+   * @return one row: (n_bench, n_found, coverage_micro = found·10⁶ div bench,
+   *         0 when no bench doc has k code points)
    */
   def benchCoverage(
       corpus: DataFrame, textCol: String,
@@ -87,15 +109,16 @@ object Decontaminate {
     SizeGuard.requireFits(bench.select(col(benchTextCol)), "benchCoverage bench side",
       "pass the smaller frame as bench, or split the bench set into shards that fit and " +
         "report coverage per shard")
-    val bh = bench.select(explode(Dedup.charGrams(col(benchTextCol), k)).as("__h"))
-      .distinct().localCheckpoint() // consumed twice: the count and the join
+    val bh = gramSet(bench, benchTextCol, k)
+      .localCheckpoint() // consumed twice: the count and the join
     val nb = bh.agg(count(lit(1)).as("n_bench"))
-    val nf = corpus.select(explode(Dedup.charGrams(col(textCol), k)).as("__h"))
+    val nf = corpus.select(explode(charGrams(col(textCol), k)).as("__h"))
       .join(broadcast(bh), "__h").distinct()
       .agg(count(lit(1)).as("n_found"))
     nb.crossJoin(nf)
       .select(col("n_bench"), col("n_found"),
-        expr("n_found * 1000000L div n_bench").as("coverage_micro"))
+        when(col("n_bench") > 0L, expr("n_found * 1000000L div n_bench"))
+          .otherwise(lit(0L)).as("coverage_micro"))
   }
 
   /**
@@ -122,14 +145,7 @@ object Decontaminate {
     SizeGuard.requireFits(bench.select(col(benchTextCol)), "contaminatedSpans bench side",
       "pass the smaller frame as bench, or use contaminatedSpansBloom, which never " +
         "broadcasts the bench set")
-    val g = corpus.select(col(idCol).as("__id"),
-        posexplode(Dedup.charGrams(col(textCol), k)).as(Seq("__i", "__h")))
-      .select(col("__id"), (col("__i") + 1).cast("long").as("__p"), col("__h"))
-    val bh = bench
-      .select(explode(Dedup.charGrams(col(benchTextCol), k)).as("__h")).distinct()
-    val marked = g.join(broadcast(bh), "__h").select(col("__id"), col("__p"))
-    Dedup.spansFromMarked(marked, k).select(col("__id").as(idCol),
-      col("span_start"), col("span_end"), col("n_grams"))
+    benchSpans(corpus, idCol, textCol, k, lit(true), broadcast(gramSet(bench, benchTextCol, k)))
   }
 
   /**
@@ -164,27 +180,33 @@ object Decontaminate {
       fpp: Double = 0.01): DataFrame = {
     require(fpp > 0.0 && fpp < 1.0, s"fpp must be in (0, 1), got $fpp")
     val spark = corpus.sparkSession
-    val bh = bench
-      .select(explode(Dedup.charGrams(col(benchTextCol), k)).as("__h"))
-      .select(col("__h"), col("__h.h1").as("__h1")).distinct()
+    val bh = gramSet(bench, benchTextCol, k).withColumn("__h1", col("__h.h1"))
       .persist()
     // the Bloom build is ONE aggregate over the (persisted) bench gram
     // relation; its expectedNumItems comes from the same pass's distinct
     // count, so no caller-supplied cardinality guess can undersize the filter
-    val nGrams = math.max(bh.count(), 1L)
-    SizeGuard.requireBloomFits(nGrams, fpp, "distinct bench grams",
+    val nGrams = bh.count()
+    SizeGuard.requireBloomFits(math.max(nGrams, 1L), fpp, "distinct bench grams",
       "raise fpp, or pre-shard the bench set and run one call per shard")
-    val bloom = bh.stat.bloomFilter("__h1", nGrams, fpp)
-    val bloomBc = spark.sparkContext.broadcast(bloom)
-    val mightContain = udf((h1: Long) => bloomBc.value.mightContainLong(h1))
-    val g = corpus.select(col(idCol).as("__id"),
-        posexplode(Dedup.charGrams(col(textCol), k)).as(Seq("__i", "__h")))
-      .select(col("__id"), (col("__i") + 1).cast("long").as("__p"), col("__h"))
-      .filter(mightContain(col("__h.h1")))
-    val marked = g.join(bh.select(col("__h")), "__h").select(col("__id"), col("__p"))
-    Dedup.spansFromMarked(marked, k).select(col("__id").as(idCol),
-      col("span_start"), col("span_end"), col("n_grams"))
+    // a bench without a k-gram has no filter to build (Spark's Bloom
+    // aggregate yields no buffer over an empty relation) and matches nothing
+    val screen =
+      if (nGrams == 0L) lit(false)
+      else {
+        val bloomBc = spark.sparkContext.broadcast(bh.stat.bloomFilter("__h1", nGrams, fpp))
+        udf((h1: Long) => bloomBc.value.mightContainLong(h1)).apply(col("__h.h1"))
+      }
+    benchSpans(corpus, idCol, textCol, k, screen, bh.select(col("__h")))
   }
+
+  /** The span tail of both span faces: the corpus gram positions passing
+    * `screen` whose identity joins `benchGrams(__h)`, merged into spans.
+    * @return (idCol, span_start, span_end, n_grams) */
+  private def benchSpans(
+      corpus: DataFrame, idCol: String, textCol: String, k: Int,
+      screen: Column, benchGrams: DataFrame): DataFrame =
+    spansFromMarked(gramPositions(corpus, idCol, charGrams(col(textCol), k))
+      .filter(screen).join(benchGrams, "__h").select(col("__id"), col("__p")), k, idCol)
 
   /** The cut form of [[contaminatedSpans]]: corpus documents rewritten with
     * every benchmark-leaked span spliced out (interval union-merge +
@@ -196,26 +218,6 @@ object Decontaminate {
     Dedup.cutSpans(corpus, idCol, textCol,
       contaminatedSpans(corpus, idCol, textCol, bench, benchTextCol, k))
 
-  /**
-   * Per-BENCHMARK-document leak report — the eval-integrity view of the same
-   * gram collision the span operators act on: for each benchmark doc, how
-   * many of its k-char-grams occur ANYWHERE in the training corpus, as an
-   * integer-milli fraction. This is the number an eval owner reads before
-   * trusting a score ("12% of this benchmark's text is in the training set"),
-   * where [[contaminatedSpans]] answers the corpus-side question ("which
-   * training spans must be cut").
-   *
-   * Scale shape: the corpus contributes ONE distinct-gram-identity aggregate
-   * (2 longs per distinct gram, no text, no positions); the benchmark side is
-   * tiny by contract. Output is 4 longs per bench doc. Same (h1, h2)
-   * codegen'd gram identity as [[Dedup.duplicateSpans]] — a single-hash
-   * collision would inflate the leak count, the paired identity makes that
-   * vanishingly unlikely.
-   *
-   * @return (benchIdCol, total_grams, leaked_grams, leak_milli) — one row
-   *         per bench doc; leak_milli = (leaked*1000) div total (0 when the
-   *         doc is shorter than k).
-   */
   /**
    * PER-SOURCE CONTAMINATION ROLLUP — the ops dashboard over [[flagged]] /
    * [[fuzzyFlagged]]: for every corpus source, how many docs it
@@ -246,20 +248,36 @@ object Decontaminate {
         expr("(n_flagged * 1000) DIV n_docs").as("flag_milli"))
   }
 
+  /**
+   * Per-BENCHMARK-document leak report — the eval-integrity view of the same
+   * gram collision the span operators act on: for each benchmark doc, how
+   * many of its k-char-grams occur ANYWHERE in the training corpus, as an
+   * integer-milli fraction. This is the number an eval owner reads before
+   * trusting a score ("12% of this benchmark's text is in the training set"),
+   * where [[contaminatedSpans]] answers the corpus-side question ("which
+   * training spans must be cut").
+   *
+   * Scale shape: the corpus contributes ONE distinct-gram-identity aggregate
+   * (2 longs per distinct gram, no text, no positions); the benchmark side is
+   * tiny by contract. Output is 4 longs per bench doc. Same (h1, h2)
+   * codegen'd gram identity as [[Dedup.duplicateSpans]] — a single-hash
+   * collision would inflate the leak count, the paired identity makes that
+   * vanishingly unlikely.
+   *
+   * @return (benchIdCol, total_grams, leaked_grams, leak_milli) — one row
+   *         per bench doc; leak_milli = (leaked*1000) div total (0 when the
+   *         doc is shorter than k).
+   */
   def leakReport(
       corpus: DataFrame, textCol: String,
       bench: DataFrame, benchIdCol: String, benchTextCol: String,
       k: Int = 20): DataFrame = {
-    val cg = corpus
-      .select(posexplode(Dedup.charGrams(col(textCol), k)).as(Seq("__i", "__h")))
-      .select(col("__h")).distinct()
-    val bg = bench.select(col(benchIdCol).as("__bid"),
-        posexplode(Dedup.charGrams(col(benchTextCol), k)).as(Seq("__i", "__h")))
-      .select(col("__bid"), col("__h"))
+    val bg = gramPositions(bench, benchIdCol, charGrams(col(benchTextCol), k))
+      .select(col("__id").as("__bid"), col("__h"))
     // build side = the BENCH gram table (tiny by contract) — without the hint
     // Catalyst's size estimate can put the corpus distinct-gram relation on
     // the broadcast side, which is exactly the side that is huge at scale
-    val leaked = cg.join(broadcast(bg), "__h")
+    val leaked = gramSet(corpus, textCol, k).join(broadcast(bg), "__h")
       .groupBy(col("__bid")).agg(count(lit(1)).as("__leak"))
     bench.select(col(benchIdCol).as("__bid"),
         greatest(length(col(benchTextCol)).cast("long") - (k - 1), lit(0L)).as("total_grams"))

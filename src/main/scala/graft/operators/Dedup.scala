@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
@@ -30,11 +31,41 @@ import graft.functions.TextFunctions._
  * shared with the exhaustive inverted-index operators [[jaccardPairs]] /
  * [[containmentPairs]]).
  *
- * Beside it: digest dedup ([[exact]], [[exactIncrement]], [[keepBestBy]],
- * [[softWeights]]), [[simHashPairs]] and [[winnowPairs]] near-dup, span
- * dedup ([[duplicateSpans]] and kin), and embedding near-dup / semantic
- * curation ([[embeddingPairs]], [[semDedup]], [[clusterExemplars]] — their
- * centroid assignment runs on `SimSearch.scanRows`).
+ * THE SPAN FAMILY — exact-substring dedup the MassJoin way: a gram-keyed
+ * relational step decides duplication, with no pair explosion:
+ *
+ *  - [[duplicateSpans]] / [[duplicateSpansAll]] / [[duplicateSpansWords]]
+ *                                 maximal runs of grams in ≥ minDocs docs
+ *                                 (resp. ≥ minOccurrences occurrences; word
+ *                                 grams).
+ *  - [[removeDuplicateSpans]] / [[removeDuplicateSpansAll]] /
+ *    [[removeDuplicateSpansWords]] their cuts; [[spanDuplicationStats]]
+ *                                 the per-doc duplicated fraction.
+ *  - [[Decontaminate.contaminatedSpans]] and kin: the same spans with
+ *                                 bench membership as the marker.
+ *
+ * Its shared core: [[gramPositions]] (the `(__id, __p, __h)` gram relation
+ * over [[charGrams]] / [[wordGrams]]), [[gramSet]] (distinct gram
+ * identities), [[markDuplicated]] (the one window dup marker),
+ * [[spansFromMarked]] (the one island merge and output tail),
+ * [[mergeIntervals]] (the one interval union-merge, under [[cutSpans]] and
+ * [[spanDuplicationStats]]).
+ *
+ * THE WINNOW FAMILY — [[winnowPairs]] (doc pairs sharing fingerprints) and
+ * [[winnowSpans]] (their match positions), both on [[winnowMatches]], the
+ * one checkpointed fingerprint self-join with its stop-fingerprint cap.
+ *
+ * THE LINE FAMILY — [[paragraphDedup]] (cross-doc line cut),
+ * [[lineDedupWithinDoc]] (within-doc repeat cut) and [[lineRuleClean]]
+ * (C4 line rules): one [[lineRows]] relation, each face's own line key,
+ * one [[rejoinLines]] per-doc md5 of the kept lines. The cross-doc
+ * verdicts, and those of [[chunkDedup]] / [[cdcChunks]], are
+ * [[withDistinctIdCount]].
+ *
+ * Beside them: digest dedup ([[exact]], [[exactIncrement]], [[keepBestBy]],
+ * [[softWeights]]), [[simHashPairs]] near-dup, and embedding near-dup /
+ * semantic curation ([[embeddingPairs]], [[semDedup]], [[clusterExemplars]]
+ * — their centroid assignment runs on `SimSearch.scanRows`).
  *
  * All scoring formulas use exact integer arithmetic or fixed-order double
  * arithmetic so every operator has a 1:1 DuckDB oracle (see SparkEntry).
@@ -142,7 +173,6 @@ object Dedup {
    */
   def keepBestBy(
       df: DataFrame, idCol: String, textCol: String, scoreCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("content_hash"))
       .orderBy(col(scoreCol).desc_nulls_last, col(idCol).asc)
     df.where(col(textCol).isNotNull)
@@ -170,7 +200,6 @@ object Dedup {
    * @return (idCol, content_hash, group_size, weight rounded to 6)
    */
   def softWeights(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("content_hash"))
     df.select(col(idCol), md5(col(textCol)).as("content_hash"))
       .withColumn("group_size", count(lit(1)).over(w))
@@ -359,7 +388,6 @@ object Dedup {
     val tIdx =
       if (maxDocFrequency <= 0L) t
       else {
-        import org.apache.spark.sql.expressions.Window
         t.withColumn("__df",
             count(lit(1)).over(Window.partitionBy(col("__sh"))))
           .filter(col("__df") <= maxDocFrequency)
@@ -722,36 +750,11 @@ object Dedup {
   def winnowPairs(
       df: DataFrame, idCol: String, textCol: String,
       minShared: Long, k: Int = 8, w: Int = 4,
-      maxDocFrequency: Long = 0L): DataFrame = {
-    // ONE fingerprint pass, materialized as compact per-doc arrays: the
-    // relation feeds both sides of the pair self-join, and with the cap on
-    // also the doc-frequency aggregate + semi-join — unmaterialized, that
-    // lineage re-runs the tokenize + rolling-hash + window-min UDF up to 4×
-    // over all text (3 wasted corpus scans at 100 TB).
-    val fpDocs = df.select(col(idCol).as("__id"),
-      winnowUdf(k, w)(col(textCol)).as("__fps")).localCheckpoint(true)
-    val fpAll = fpDocs.select(col("__id"), explode(col("__fps")).as("__fp"))
-    val fp =
-      if (maxDocFrequency <= 0L) fpAll
-      else {
-        // winnowFingerprints emits distinct values per doc, so count = doc
-        // freq. A window over hash(__fp) instead of aggregate + semi-join
-        // (r17): the cap filter then leaves the relation ALREADY partitioned
-        // (and sorted) on the join key, so the pair self-join below adds no
-        // exchange of its own.
-        import org.apache.spark.sql.expressions.Window
-        fpAll.withColumn("__df",
-            count(lit(1)).over(Window.partitionBy(col("__fp"))))
-          .filter(col("__df") <= maxDocFrequency)
-          .select(col("__id"), col("__fp"))
-      }
-    fp.select(col("__id").as("__a"), col("__fp"))
-      .join(fp.select(col("__id").as("__b"), col("__fp")), "__fp")
-      .filter(col("__a") < col("__b"))
-      .groupBy(col("__a"), col("__b")).agg(count(lit(1)).as("shared"))
+      maxDocFrequency: Long = 0L): DataFrame =
+    winnowMatches(df, idCol, textCol, k, w, maxDocFrequency, positions = false)
+      .groupBy(col("__id_a"), col("__id_b")).agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= minShared)
-      .select(col("__a").as("id_a"), col("__b").as("id_b"), col("shared"))
-  }
+      .select(col("__id_a").as("id_a"), col("__id_b").as("id_b"), col("shared"))
 
   /**
    * Winnowing MATCH SPANS — the reporting form of [[winnowPairs]]: one row
@@ -765,31 +768,44 @@ object Dedup {
    */
   def winnowSpans(
       df: DataFrame, idCol: String, textCol: String,
-      k: Int = 8, w: Int = 4, maxDocFrequency: Long = 0L): DataFrame = {
-    // Same materialize-once stance as [[winnowPairs]]: the positioned
-    // fingerprint UDF runs ONCE; self-join sides + cap consumers read the
-    // checkpointed arrays.
-    val fpDocs = df.select(col(idCol).as("__id"),
-      winnowPosUdf(k, w)(col(textCol)).as("__fpps")).localCheckpoint(true)
-    val fpAll = fpDocs.select(col("__id"), explode(col("__fpps")).as("__fpp"))
-      .select(col("__id"), col("__fpp._1").as("__fp"), col("__fpp._2").as("__p"))
+      k: Int = 8, w: Int = 4, maxDocFrequency: Long = 0L): DataFrame =
+    winnowMatches(df, idCol, textCol, k, w, maxDocFrequency, positions = true)
+      .select(col("__id_a").as("id_a"), col("__id_b").as("id_b"),
+        col("__fp").as("fingerprint"), col("__p_a").cast("long").as("pos_a"),
+        col("__p_b").cast("long").as("pos_b"))
+
+  /** THE winnow fingerprint self-join of [[winnowPairs]] and [[winnowSpans]]:
+    * one row per fingerprint shared by two docs, `(__id_a < __id_b, __fp)`
+    * plus each side's first position `__p_a`, `__p_b` when `positions`.
+    * `k` and `w` are checked before the checkpoint runs.
+    *
+    * ONE fingerprint pass, materialized as compact per-doc arrays: the
+    * relation feeds both sides of the self-join, and with the cap on also
+    * the doc-frequency window — unmaterialized, that lineage re-runs the
+    * tokenize + rolling-hash + window-min UDF up to 4× over all text (3
+    * wasted corpus scans at 100 TB). The fingerprints are distinct per doc,
+    * so the count per fingerprint is its doc frequency; the cap is a window
+    * over hash(__fp) instead of aggregate + semi-join (r17), so the capped
+    * relation stays partitioned (and sorted) on the join key and the
+    * self-join adds no exchange of its own. */
+  private def winnowMatches(
+      df: DataFrame, idCol: String, textCol: String, k: Int, w: Int,
+      maxDocFrequency: Long, positions: Boolean): DataFrame = {
+    require(k > 0 && w > 0, s"need positive k and w, got k=$k w=$w")
+    val fps = if (positions) winnowPosUdf(k, w) else winnowUdf(k, w)
+    val fpAll = df.select(col(idCol).as("__id"), fps(col(textCol)).as("__fps"))
+      .localCheckpoint(true)
+      .select(col("__id"), explode(col("__fps")).as("__f"))
+    val fpAny =
+      if (positions) fpAll.select(col("__id"), col("__f._1").as("__fp"), col("__f._2").as("__p"))
+      else fpAll.select(col("__id"), col("__f").as("__fp"))
     val fp =
-      if (maxDocFrequency <= 0L) fpAll
-      else {
-        // same window-shaped cap as [[winnowPairs]] — the self-join below
-        // reuses the hash(__fp) partitioning the window establishes
-        import org.apache.spark.sql.expressions.Window
-        fpAll.withColumn("__df",
-            count(lit(1)).over(Window.partitionBy(col("__fp"))))
-          .filter(col("__df") <= maxDocFrequency)
-          .select(col("__id"), col("__fp"), col("__p"))
-      }
-    fp.select(col("__id").as("__a"), col("__fp"), col("__p").as("pos_a"))
-      .join(fp.select(col("__id").as("__b"), col("__fp"), col("__p").as("pos_b")), "__fp")
-      .filter(col("__a") < col("__b"))
-      .select(col("__a").as("id_a"), col("__b").as("id_b"),
-        col("__fp").as("fingerprint"), col("pos_a").cast("long").as("pos_a"),
-        col("pos_b").cast("long").as("pos_b"))
+      if (maxDocFrequency <= 0L) fpAny
+      else fpAny.withColumn("__df", count(lit(1)).over(Window.partitionBy(col("__fp"))))
+        .filter(col("__df") <= maxDocFrequency).drop("__df")
+    def side(s: String): DataFrame =
+      fp.select(fp.columns.map(c => if (c == "__fp") col(c) else col(c).as(c + s)): _*)
+    side("_a").join(side("_b"), "__fp").filter(col("__id_a") < col("__id_b"))
   }
 
   /**
@@ -804,12 +820,12 @@ object Dedup {
    * merge into maximal spans (gaps-and-islands on position − row_number).
    *
    * Scale shape — the part that matters at 100 TB: duplication is decided by
-   * ONE aggregate on the gram-hash key (`count_distinct(doc)`), never a
-   * pair join, so a boilerplate gram in 10⁸ documents costs O(occurrences)
-   * rows through the shuffle, not O(occurrences²) pairs — the reason this
-   * beats running [[winnowPairs]] uncapped for removal (as opposed to
-   * match-reporting) workloads. The island merge windows per document, so
-   * no partition sees more than one document's positions.
+   * windows over ONE exchange on the gram-hash key ([[markDuplicated]]),
+   * never a pair join, so a boilerplate gram in 10⁸ documents costs
+   * O(occurrences) rows through the shuffle, not O(occurrences²) pairs —
+   * the reason this beats running [[winnowPairs]] uncapped for removal (as
+   * opposed to match-reporting) workloads. The island merge windows per
+   * document, so no partition sees more than one document's positions.
    *
    * vs [[winnowSpans]]: winnowing SAMPLES grams (~1/w kept) to report which
    * doc PAIRS share passages; this keeps every gram to report exactly WHICH
@@ -828,12 +844,8 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 20, minDocs: Long = 2L): DataFrame = {
     require(minDocs >= 2L, s"minDocs must be >= 2, got $minDocs")
-    val g = df.select(col(idCol).as("__id"),
-        posexplode(charGrams(col(textCol), k)).as(Seq("__i", "__h")))
-      .select(col("__id"), (col("__i") + 1).cast("long").as("__p"), col("__h"))
-    spansFromMarked(markDuplicatedByDocs(g, minDocs), k)
-      .select(col("__id").as(idCol),
-        col("span_start"), col("span_end"), col("n_grams"))
+    spansFromMarked(markDuplicated(gramPositions(df, idCol, charGrams(col(textCol), k)),
+      minDocs, distinctDocs = true), k, idCol)
   }
 
   /**
@@ -843,24 +855,16 @@ object Dedup {
    * distinct-doc rule deliberately ignores. This is the variant that also
    * flags self-repetition (boilerplate loops, degenerate generation runs):
    * Lee et al. 2021's suffix-array criterion is likewise any-second-
-   * occurrence, not cross-doc-only. Same aggregate-only decision, same
-   * island merge, same scale shape — only the HAVING clause differs.
+   * occurrence, not cross-doc-only. Same window decision, same island
+   * merge, same scale shape — only the counting rule differs.
    * @return (idCol, span_start, span_end, n_grams) as [[duplicateSpans]]
    */
   def duplicateSpansAll(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 20, minOccurrences: Long = 2L): DataFrame = {
     require(minOccurrences >= 2L, s"minOccurrences must be >= 2, got $minOccurrences")
-    val g = df.select(col(idCol).as("__id"),
-        posexplode(charGrams(col(textCol), k)).as(Seq("__i", "__h")))
-      .select(col("__id"), (col("__i") + 1).cast("long").as("__p"), col("__h"))
-    val byH = org.apache.spark.sql.expressions.Window.partitionBy(col("__h"))
-    // occurrence rule as a window over the ONE hash(__h) exchange — see
-    // markDuplicatedByDocs for why this beats the aggregate + join-back
-    val d = g.withColumn("__n", count(lit(1)).over(byH))
-      .filter(col("__n") >= minOccurrences).select(col("__id"), col("__p"))
-    spansFromMarked(d, k).select(col("__id").as(idCol),
-      col("span_start"), col("span_end"), col("n_grams"))
+    spansFromMarked(markDuplicated(gramPositions(df, idCol, charGrams(col(textCol), k)),
+      minOccurrences, distinctDocs = false), k, idCol)
   }
 
   /**
@@ -882,24 +886,20 @@ object Dedup {
    * WORD-unit form of [[duplicateSpans]] — the literal Lee et al. 2021
    * granularity (their suffix-array dedup removes duplicated ≥50-TOKEN
    * spans): a maximal run of n-word grams each occurring in ≥ minDocs
-   * distinct documents, reported in 1-based WORD positions. Same
-   * aggregate-only duplication decision and island merge; word spans are
-   * what a token-budgeted pipeline cuts by (char spans are
-   * [[duplicateSpans]]'s job). A duplicated word run of length ≥ L words
-   * appears as L − n + 1 consecutive marked grams.
+   * distinct documents, reported in 1-based WORD positions. Same window
+   * duplication decision and island merge; word spans are what a
+   * token-budgeted pipeline cuts by (char spans are [[duplicateSpans]]'s
+   * job). A duplicated word run of length ≥ L words appears as L − n + 1
+   * consecutive marked grams.
    * @return (idCol, word_start, word_end, n_grams) — word_end inclusive
    */
   def duplicateSpansWords(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 8, minDocs: Long = 2L): DataFrame = {
     require(minDocs >= 2L, s"minDocs must be >= 2, got $minDocs")
-    val g = df.select(col(idCol).as("__id"),
-        posexplode(wordGrams(wordsCol(col(textCol)), n)).as(Seq("__i", "__h")))
-      .select(col("__id"), (col("__i") + 1).cast("long").as("__p"), col("__h"))
-    spansFromMarked(markDuplicatedByDocs(g, minDocs), n)
-      .select(col("__id").as(idCol),
-        col("span_start").as("word_start"), col("span_end").as("word_end"),
-        col("n_grams"))
+    spansFromMarked(markDuplicated(gramPositions(df, idCol, wordGrams(wordsCol(col(textCol)), n)),
+      minDocs, distinctDocs = true), n, idCol)
+      .toDF(idCol, "word_start", "word_end", "n_grams")
   }
 
   /** The span-dedup gram identity: per gram position, an (h1, h2) PAIR of
@@ -922,20 +922,31 @@ object Dedup {
       graft.functions.WordGramHashPairsExpr(
         org.apache.spark.sql.GraftBridge.expression(ws), n))
 
-  /** Gram positions of the relation `g(__id, __p, __h)` whose hash occurs
-    * in ≥ `minDocs` DISTINCT docs, decided by windows over ONE hash(__h)
-    * exchange (r17). The former aggregate + join-back shape computed the
-    * O(len·k) gram lineage TWICE (once into the aggregate, once as the
-    * probe) and built a driver-collected broadcast of the duplicated-hash
-    * set — a relation that outgrows the broadcast cap on boilerplate-heavy
-    * corpora, where the join degenerates to a SECOND full gram shuffle
-    * (r15's materializeGrams localCheckpoint probe was the recorded dead
-    * end for de-duplicating that lineage by storage; the window shape
-    * removes the second consumer instead). minDocs = 2 (the gate default)
-    * is `min(__id) ≠ max(__id)` over the hash partition — no ordering
-    * beyond the partition sort; the general rule sums lag-based
-    * first-occurrence markers ordered by __id (null ids contribute 0,
-    * matching count_distinct).
+  /** THE gram-position relation of the span family: `(__id, __p, __h)`, one
+    * row per element `__h` of the array column `grams` of `df`, `__p` its
+    * 1-based position. */
+  private[operators] def gramPositions(df: DataFrame, idCol: String, grams: Column): DataFrame =
+    df.select(col(idCol).as("__id"), posexplode(grams).as(Seq("__i", "__h")))
+      .select(col("__id"), (col("__i") + 1).cast("long").as("__p"), col("__h"))
+
+  /** The distinct k-char gram identities `__h` of a text column. */
+  private[operators] def gramSet(df: DataFrame, textCol: String, k: Int): DataFrame =
+    df.select(explode(charGrams(col(textCol), k)).as("__h")).distinct()
+
+  /** THE dup marker of the span family: the positions `(__id, __p)` of the
+    * gram relation `g(__id, __p, __h)` whose hash occurs in ≥ `minCount`
+    * DISTINCT docs (`distinctDocs`) or ≥ `minCount` times in all, decided
+    * by windows over ONE hash(__h) exchange (r17). The former aggregate +
+    * join-back shape computed the O(len·k) gram lineage TWICE (once into
+    * the aggregate, once as the probe) and built a driver-collected
+    * broadcast of the duplicated-hash set — a relation that outgrows the
+    * broadcast cap on boilerplate-heavy corpora, where the join degenerates
+    * to a SECOND full gram shuffle (r15's materializeGrams localCheckpoint
+    * probe was the recorded dead end for de-duplicating that lineage by
+    * storage; the window shape removes the second consumer instead).
+    * Distinct docs at minCount = 2 (the gate default) is `min(__id) ≠
+    * max(__id)` over the hash partition — no ordering beyond the partition
+    * sort; above 2 it is [[withDistinctIdCount]]'s window arm.
     *
     * Skew hazard (r18, documented per ADVICE r17): the dup verdict is a
     * window over one hash(__h) exchange — a single gram hash shared by a
@@ -948,20 +959,13 @@ object Dedup {
     * second gram lineage dominates (r17 receipts: 6.5 → 2.0 s warm);
     * [[withDistinctIdCount]] documents the aggregate fallback shape to
     * mirror if a corpus with a degenerate hot gram ever needs it. */
-  private def markDuplicatedByDocs(g: DataFrame, minDocs: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  private def markDuplicated(g: DataFrame, minCount: Long, distinctDocs: Boolean): DataFrame = {
     val byH = Window.partitionBy(col("__h"))
     val flagged =
-      if (minDocs == 2L)
-        g.withColumn("__dup",
-          min(col("__id")).over(byH) =!= max(col("__id")).over(byH))
-      else {
-        val byHOrd = Window.partitionBy(col("__h")).orderBy(col("__id"))
-        g.withColumn("__dup",
-          sum(when(col("__id").isNotNull &&
-              !(lag(col("__id"), 1).over(byHOrd) <=> col("__id")), 1L)
-            .otherwise(0L)).over(byH) >= minDocs)
-      }
+      if (!distinctDocs) g.withColumn("__dup", count(lit(1)).over(byH) >= minCount)
+      else if (minCount == 2L)
+        g.withColumn("__dup", min(col("__id")).over(byH) =!= max(col("__id")).over(byH))
+      else withDistinctIdCount(g, "__h", "__id", "__nd").withColumn("__dup", col("__nd") >= minCount)
     flagged.filter(col("__dup")).select(col("__id"), col("__p"))
   }
 
@@ -993,7 +997,6 @@ object Dedup {
   private def withDistinctIdCount(
       df: DataFrame, keyCol: String, idCol: String, outCol: String,
       skewSafe: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     if (skewSafe) {
       val counts = df.select(col(keyCol), col(idCol))
         .groupBy(col(keyCol)).agg(count_distinct(col(idCol)).as(outCol))
@@ -1008,43 +1011,48 @@ object Dedup {
     }
   }
 
-  /** Gaps-and-islands merge of marked gram positions `(__id, __p)` into
-    * maximal spans — shared by [[duplicateSpans]] and
-    * [[Decontaminate.contaminatedSpans]]. Doc-partitioned window only.
-    * @return (__id, span_start, span_end, n_grams) */
-  private[operators] def spansFromMarked(marked: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  /** Gaps-and-islands merge of marked positions `(__id, __p)` into maximal
+    * runs of consecutive positions — the span tail of [[duplicateSpans]]
+    * and kin, [[Decontaminate.contaminatedSpans]] and [[wordCharIntervals]]'
+    * letter runs. Doc-partitioned window only; `span_end` is the run's last
+    * position plus `k − 1` (the last gram's last char).
+    * @return (idCol, span_start, span_end, n_grams) */
+  private[operators] def spansFromMarked(marked: DataFrame, k: Int, idCol: String): DataFrame = {
     val w = Window.partitionBy(col("__id")).orderBy(col("__p"))
     marked.withColumn("__isl", col("__p") - row_number().over(w))
       .groupBy(col("__id"), col("__isl"))
       .agg(min(col("__p")).as("span_start"),
         (max(col("__p")) + lit(k.toLong - 1L)).as("span_end"),
         count(lit(1)).as("n_grams"))
-      .select(col("__id"), col("span_start"), col("span_end"), col("n_grams"))
+      .select(col("__id").as(idCol), col("span_start"), col("span_end"), col("n_grams"))
   }
 
-  /** Union-merge span char intervals per doc and splice them OUT of the text
-    * (code-point positions; 1-based inclusive spans) — the shared cut stage
-    * of [[removeDuplicateSpans]] / [[Decontaminate.removeContaminatedSpans]].
-    * Docs absent from `spans` pass through (removed_chars = 0).
-    * @param spans (idCol, span_start, span_end)
-    * @return (idCol, clean_text, removed_chars) */
-  private[operators] def cutSpans(
-      df: DataFrame, idCol: String, textCol: String, spans: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val sp = spans.select(col(idCol).as("__id"),
-      col("span_start").as("__s"), col("span_end").as("__e"))
+  /** THE interval union-merge of [[cutSpans]] and [[spanDuplicationStats]]:
+    * the (idCol, span_start, span_end) 1-based inclusive spans of each doc
+    * merged into disjoint `(__id, __s, __e)` intervals. A span opens a new
+    * group iff it starts past the running max end of everything before it
+    * (adjacency merges harmlessly). Doc-partitioned windows only. */
+  private def mergeIntervals(spans: DataFrame, idCol: String): DataFrame = {
     val w = Window.partitionBy(col("__id")).orderBy(col("__s"), col("__e"))
-    // interval union-merge: a span opens a new group iff it starts past the
-    // running max end of everything before it (adjacency merges harmlessly)
     val runMax = max(col("__e")).over(w.rowsBetween(Window.unboundedPreceding, -1))
-    val grouped = sp
+    spans.select(col(idCol).as("__id"), col("span_start").as("__s"), col("span_end").as("__e"))
       .withColumn("__new",
         when(runMax.isNull || col("__s") > runMax + 1, 1L).otherwise(0L))
       .withColumn("__grp", sum(col("__new")).over(w))
       .groupBy(col("__id"), col("__grp"))
       .agg(min(col("__s")).as("__s"), max(col("__e")).as("__e"))
-    val packs = grouped.groupBy(col("__id"))
+  }
+
+  /** Union-merge span char intervals per doc ([[mergeIntervals]]) and splice
+    * them OUT of the text (code-point positions; 1-based inclusive spans) —
+    * the shared cut stage of [[removeDuplicateSpans]] /
+    * [[Decontaminate.removeContaminatedSpans]]. Docs absent from `spans`
+    * pass through (removed_chars = 0).
+    * @param spans (idCol, span_start, span_end)
+    * @return (idCol, clean_text, removed_chars) */
+  private[operators] def cutSpans(
+      df: DataFrame, idCol: String, textCol: String, spans: DataFrame): DataFrame = {
+    val packs = mergeIntervals(spans, idCol).groupBy(col("__id"))
       .agg(sort_array(collect_list(struct(col("__s"), col("__e")))).as("__ivs"),
         sum(col("__e") - col("__s") + 1).as("__removed"))
     val cutUdf = udf { (s: String, ivs: Seq[org.apache.spark.sql.Row]) =>
@@ -1085,18 +1093,7 @@ object Dedup {
   def spanDuplicationStats(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 20, minDocs: Long = 2L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val sp = duplicateSpans(df, idCol, textCol, k, minDocs)
-      .select(col(idCol).as("__id"),
-        col("span_start").as("__s"), col("span_end").as("__e"))
-    val w = Window.partitionBy(col("__id")).orderBy(col("__s"), col("__e"))
-    val runMax = max(col("__e")).over(w.rowsBetween(Window.unboundedPreceding, -1))
-    val merged = sp
-      .withColumn("__new",
-        when(runMax.isNull || col("__s") > runMax + 1, 1L).otherwise(0L))
-      .withColumn("__grp", sum(col("__new")).over(w))
-      .groupBy(col("__id"), col("__grp"))
-      .agg(min(col("__s")).as("__s"), max(col("__e")).as("__e"))
+    val merged = mergeIntervals(duplicateSpans(df, idCol, textCol, k, minDocs), idCol)
       .groupBy(col("__id"))
       .agg(sum(col("__e") - col("__s") + 1).as("__dup"))
     df.select(col(idCol), length(col(textCol)).cast("long").as("total_chars"))
@@ -1118,10 +1115,10 @@ object Dedup {
    * before cutting; the cut itself is a code-point splice. Documents with
    * no duplicated span pass through unchanged (removed_chars = 0).
    *
-   * Scale shape: [[duplicateSpans]]'s aggregate-only duplication decision,
-   * plus one groupBy(doc) to pack merged intervals (≤ spans-per-doc rows),
-   * plus a join of the interval packs back to the text — all keyed on the
-   * doc id; no pair joins anywhere.
+   * Scale shape: [[duplicateSpans]]'s window duplication decision, plus
+   * one groupBy(doc) to pack merged intervals (≤ spans-per-doc rows), plus
+   * a join of the interval packs back to the text — all keyed on the doc
+   * id; no pair joins anywhere.
    *
    * @return (idCol, clean_text, removed_chars)
    */
@@ -1134,17 +1131,17 @@ object Dedup {
     * maximal `[a-z]` run of `lower(text)`, exactly
     * [[graft.functions.TextFunctions.wordsCol]]'s `regexp_extract_all`
     * definition, so word INDICES from [[duplicateSpansWords]] line up with
-    * these intervals 1:1. Fully relational: posexplode of the lowered chars,
-    * gaps-and-islands on letter positions (doc-partitioned windows only — the
-    * same O(len)-rows-per-doc shape as the gram relation). Positions are
-    * computed on `lower(text)` and applied to the original text, so the two
-    * must have the SAME code-point length — guaranteed for ASCII, violated by
-    * e.g. 'İ' (lowers to "i̇", two code points). A runtime guard fails fast on
-    * any such doc instead of silently excising shifted offsets.
+    * these intervals 1:1. Fully relational: the [[gramPositions]] of the
+    * lowered chars, letter runs by [[spansFromMarked]] (doc-partitioned
+    * windows only — the same O(len)-rows-per-doc shape as the gram
+    * relation). Positions are computed on `lower(text)` and applied to the
+    * original text, so the two must have the SAME code-point length —
+    * guaranteed for ASCII, violated by e.g. 'İ' (lowers to "i̇", two code
+    * points). A runtime guard fails fast on any such doc instead of
+    * silently excising shifted offsets.
     * @return (__id, __wi word index, __cs char start, __ce char end) */
   private[operators] def wordCharIntervals(
       df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val lowered = when(col(textCol).isNull ||
         length(lower(col(textCol))) === length(col(textCol)), lower(col(textCol)))
       .otherwise(raise_error(concat(
@@ -1152,18 +1149,13 @@ object Dedup {
         col(idCol).cast("string"),
         lit(" — word char intervals would misalign with the original text; " +
           "normalize such documents before word-span removal"))))
-    val chars = df.select(col(idCol).as("__id"),
-        posexplode(split(lowered, "")).as(Seq("__i", "__ch")))
-      .select(col("__id"), (col("__i") + 1).cast("long").as("__p"), col("__ch"))
-      .filter(ascii(col("__ch")).between(97, 122))
-    val w = Window.partitionBy(col("__id")).orderBy(col("__p"))
-    val runs = chars.withColumn("__isl", col("__p") - row_number().over(w))
-      .groupBy(col("__id"), col("__isl"))
-      .agg(min(col("__p")).as("__cs"), max(col("__p")).as("__ce"))
-    runs.select(col("__id"),
-      row_number().over(Window.partitionBy(col("__id")).orderBy(col("__cs")))
-        .cast("long").as("__wi"),
-      col("__cs"), col("__ce"))
+    val letters = gramPositions(df, idCol, split(lowered, ""))
+      .filter(ascii(col("__h")).between(97, 122))
+    spansFromMarked(letters, 1, "__id")
+      .select(col("__id"),
+        row_number().over(Window.partitionBy(col("__id")).orderBy(col("span_start")))
+          .cast("long").as("__wi"),
+        col("span_start").as("__cs"), col("span_end").as("__ce"))
   }
 
   /**
@@ -1507,10 +1499,11 @@ object Dedup {
    * Boilerplate headers/footers/nav text — which align on real paragraph
    * boundaries, not word-window boundaries — disappear corpus-wide.
    *
-   * Plan shape: the dup verdict is ONE aggregate on the line digest (no
-   * pair join — the [[duplicateSpans]] stance); the line relation carries
-   * (id, pos, line) once through a digest-keyed left join and one doc-key
-   * reassembly exchange. Empty lines are never dup-cut (they are document
+   * Plan shape: the dup verdict is windows over ONE exchange on the line
+   * digest ([[withDistinctIdCount]]; no pair join — the [[duplicateSpans]]
+   * stance); the line relation ([[lineRows]]) carries (id, pos, line) once
+   * through that exchange and once through the doc-key reassembly
+   * ([[rejoinLines]]). Empty lines are never dup-cut (they are document
    * structure, kept verbatim). Null-text docs are absent; every other doc
    * gets a verdict row — a doc whose EVERY line was cut rejoins to the
    * empty string (clean_md5 = md5('')), mirrored identically in the oracle.
@@ -1529,24 +1522,14 @@ object Dedup {
     // landed in the single md5('') window partition, which AQE cannot split
     // — a serialized one-task sort on blank-heavy corpora. Their __nd is
     // computed against the salted key and never read.
-    val lines = df
-      .where(col(textCol).isNotNull)
-      .select(col(idCol).as("__id"),
-        posexplode(split(col(textCol), "\n")).as(Seq("__p", "__ln")))
+    val lines = lineRows(df, idCol, textCol)
       .withColumn("__h",
         when(length(col("__ln")) > 0, md5(col("__ln")))
           .otherwise(concat(lit("\u0000"), col("__id").cast("string"))))
     val flagged = withDistinctIdCount(lines, "__h", "__id", "__nd", skewSafe)
       .withColumn("__dup",
         when(length(col("__ln")) > 0 && col("__nd") >= minDocs, 1L))
-    flagged
-      .groupBy(col("__id"))
-      .agg(count(lit(1)).as("n_lines"),
-        sum(coalesce(col("__dup"), lit(0L))).as("n_cut"),
-        md5(expr("array_join(transform(sort_array(collect_list(" +
-          "CASE WHEN __dup IS NULL THEN struct(__p, __ln) END)), x -> x.__ln), '\n')"))
-          .as("clean_md5"))
-      .select(col("__id").as(idCol), col("n_lines"), col("n_cut"), col("clean_md5"))
+    rejoinLines(flagged, idCol, sum(coalesce(col("__dup"), lit(0L))).as("n_cut"), "__dup IS NULL")
   }
 
   /**
@@ -1559,13 +1542,13 @@ object Dedup {
    * DISTINCT documents; the cleaned text is the space-join of the surviving
    * chunks in original order.
    *
-   * Scale shape: the duplicated-chunk decision is ONE aggregation keyed by
-   * the chunk's md5 digest — the exchange carries (16-byte digest, doc id)
-   * pairs, never chunk text twice — and reassembly is doc-keyed. No pair
-   * join anywhere, so cost is linear in corpus size (the same argument as
-   * [[exact]], applied per chunk). At 100 TB both shuffles are slim:
-   * digests+ids for the verdict, and each chunk's text exactly once for the
-   * doc-side regroup.
+   * Scale shape: the duplicated-chunk decision is windows over ONE exchange
+   * keyed by the chunk's md5 digest ([[withDistinctIdCount]]), and
+   * reassembly is doc-keyed. No pair join anywhere, so cost is linear in
+   * corpus size (the same argument as [[exact]], applied per chunk). Each
+   * chunk row crosses two exchanges: the digest-keyed verdict and the
+   * doc-keyed regroup (`skewSafe`'s aggregate ships only digests + ids into
+   * its verdict, at the price of a join-back).
    *
    * Determinism: md5 of exact chunk text; counts are integers; reassembly
    * sorts by chunk index. 1:1 DuckDB oracle (`Oracles.chunkDedupSql`).
@@ -1601,7 +1584,7 @@ object Dedup {
     // then min chunk index within that doc) — SURVIVES; all other copies cut.
     // (CCNet removes every copy, RefinedWeb-style pipelines keep one; both
     // semantics are one flag apart on the same machinery.)
-    val byCk = org.apache.spark.sql.expressions.Window.partitionBy(col("__ck"))
+    val byCk = Window.partitionBy(col("__ck"))
     // skewSafe (r18 — see [[withDistinctIdCount]]): ALL per-key facts come
     // from one aggregate + join-back, including keepFirst's canonical
     // occurrence as min(struct(id, ci)) — the lexicographic struct minimum
@@ -1883,23 +1866,12 @@ object Dedup {
    *         (idCol, n_lines, n_cut, clean_md5 — md5 of the rejoined text)
    */
   def lineDedupWithinDoc(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__id"), col("__h")).orderBy(col("__p"))
-    val lines = df
-      .where(col(textCol).isNotNull)
-      .select(col(idCol).as("__id"),
-        posexplode(split(col(textCol), "\n")).as(Seq("__p", "__ln")))
-    val flagged = lines
+    val w = Window.partitionBy(col("__id"), col("__h")).orderBy(col("__p"))
+    val flagged = lineRows(df, idCol, textCol)
       .withColumn("__h",
         when(length(col("__ln")) > 0, md5(col("__ln"))).otherwise(concat(lit("e:"), col("__p"))))
       .withColumn("__cut", when(row_number().over(w) > 1, 1L).otherwise(0L))
-    flagged.groupBy(col("__id"))
-      .agg(count(lit(1)).as("n_lines"),
-        sum(col("__cut")).as("n_cut"),
-        md5(expr("array_join(transform(sort_array(collect_list(" +
-          "CASE WHEN __cut = 0 THEN struct(__p, __ln) END)), x -> x.__ln), '\n')"))
-          .as("clean_md5"))
-      .select(col("__id").as(idCol), col("n_lines"), col("n_cut"), col("clean_md5"))
+    rejoinLines(flagged, idCol, sum(col("__cut")).as("n_cut"), "__cut = 0")
   }
 
   /**
@@ -1918,9 +1890,9 @@ object Dedup {
    * < 1.3e11, the w-term sum < 2⁶³ — exact BIGINT in both engines.
    *
    * Scale shape: boundary detection is a per-row codegen'd HOF pass (zero
-   * shuffles); the cross-doc dup verdict is ONE aggregation keyed by the
-   * chunk md5 (digests + ids ride the exchange, chunk text ships exactly
-   * once on the doc-side regroup) — the [[chunkDedup]] plan shape on
+   * shuffles); the cross-doc dup verdict is windows over ONE exchange keyed
+   * by the chunk md5 ([[withDistinctIdCount]]; digests, ids and offsets
+   * ride it, no chunk text) — the [[chunkDedup]] verdict on
    * content-defined units.
    *
    * @return one row per chunk: (idCol, chunk_idx, chunk_start 1-based,
@@ -2028,25 +2000,41 @@ object Dedup {
       skewSafe: Boolean = false): DataFrame = {
     require(minWords >= 0, s"minWords must be >= 0, got $minWords")
     require(maxLineDf >= 1, s"maxLineDf must be >= 1, got $maxLineDf")
-    val lines = df.where(col(textCol).isNotNull)
-      .select(col(idCol).as("__id"),
-        posexplode(split(col(textCol), "\n")).as(Seq("__p", "__ln")))
+    val lines = lineRows(df, idCol, textCol)
       .where(length(col("__ln")) > 0)
       .withColumn("__h", md5(col("__ln")))
     // Exact COUNT(DISTINCT __id) per digest — the shared window form (one
     // hash(__h) exchange) with the hot-key skewSafe fallback; see
     // [[withDistinctIdCount]] for the measured trade.
-    withDistinctIdCount(lines, "__h", "__id", "__df", skewSafe)
+    val flagged = withDistinctIdCount(lines, "__h", "__id", "__df", skewSafe)
       .withColumn("__keep",
         when(size(wordsCol(col("__ln"))) >= minWords && col("__df") < maxLineDf, 1L)
           .otherwise(0L))
-      .groupBy(col("__id"))
-      .agg(count(lit(1)).as("n_lines"), sum(col("__keep")).as("kept_lines"),
-        md5(expr("array_join(transform(sort_array(collect_list(" +
-          "CASE WHEN __keep = 1 THEN struct(__p, __ln) END)), x -> x.__ln), '\n')"))
-          .as("clean_md5"))
-      .select(col("__id").as(idCol), col("n_lines"), col("kept_lines"), col("clean_md5"))
+    rejoinLines(flagged, idCol, sum(col("__keep")).as("kept_lines"), "__keep = 1")
   }
+
+  /** THE line relation of [[paragraphDedup]], [[lineDedupWithinDoc]] and
+    * [[lineRuleClean]]: `(__id, __p, __ln)`, one row per '\n'-separated line
+    * of each non-null text (empty and trailing lines included), `__p` its
+    * 0-based index. */
+  private def lineRows(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.where(col(textCol).isNotNull)
+      .select(col(idCol).as("__id"),
+        posexplode(split(col(textCol), "\n")).as(Seq("__p", "__ln")))
+
+  /** THE per-doc rejoin of the line family over a flagged [[lineRows]]
+    * relation: `(idCol, n_lines, counted, clean_md5)`, where clean_md5 is the
+    * md5 of the lines satisfying the SQL predicate `kept`, rejoined with
+    * '\n' in original order (the empty string when none is kept). One
+    * doc-keyed regroup. */
+  private def rejoinLines(
+      flagged: DataFrame, idCol: String, counted: Column, kept: String): DataFrame =
+    flagged.groupBy(col("__id"))
+      .agg(count(lit(1)).as("n_lines"), counted,
+        md5(expr("array_join(transform(sort_array(collect_list(" +
+          s"CASE WHEN $kept THEN struct(__p, __ln) END)), x -> x.__ln), '\n')"))
+          .as("clean_md5"))
+      .withColumnRenamed("__id", idCol)
 
   /**
    * GROUP-LEVEL MinHash similarity matrix — which corpus slices (sources,

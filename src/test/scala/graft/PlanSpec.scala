@@ -932,4 +932,64 @@ class PlanSpec extends AnyFunSuite with LocalSpark {
     try assert(built.map(_.count()) == Seq(50L, 10L, 50L))
     finally spark.sharedState.cacheManager.clearCache()
   }
+
+  test("winnowPairs and winnowSpans reject k or w <= 0 before any job, on any input") {
+    val s = spark
+    import s.implicits._
+    val docs = Seq((1L, "alpha beta gamma delta"), (2L, "alpha beta gamma epsilon"))
+      .toDF("doc_id", "text")
+    import graft.operators.Dedup
+    withJobCounter { jobs =>
+      for (in <- Seq(docs, docs.limit(0)); (k, w) <- Seq((0, 4), (8, 0))) {
+        intercept[IllegalArgumentException](Dedup.winnowPairs(in, "doc_id", "text", 1L, k, w))
+        intercept[IllegalArgumentException](Dedup.winnowSpans(in, "doc_id", "text", k, w))
+        assert(jobs() == 0, s"k = $k, w = $w checked after a Spark job")
+      }
+    }
+  }
+
+  test("span and line dedup faces run a pinned number of jobs while the frame is built") {
+    import graft.operators.{Decontaminate, Dedup}
+    val s = spark
+    import s.implicits._
+    val docs = Seq.tabulate(40)(i => (i.toLong,
+        s"shared header line on every page\nbody ${i % 4} alpha beta gamma delta epsilon\n\n" +
+          s"footer of page $i, shared header line on every page"))
+      .toDF("doc_id", "text")
+    val corpus = docs.filter(col("doc_id") >= 5)
+    val bench = docs.filter(col("doc_id") < 5)
+    val faces: Seq[(String, () => DataFrame)] = Seq(
+      "duplicateSpans" -> (() => Dedup.duplicateSpans(docs, "doc_id", "text")),
+      "duplicateSpansAll" -> (() => Dedup.duplicateSpansAll(docs, "doc_id", "text")),
+      "duplicateSpansWords" -> (() => Dedup.duplicateSpansWords(docs, "doc_id", "text")),
+      "removeDuplicateSpans" -> (() => Dedup.removeDuplicateSpans(docs, "doc_id", "text")),
+      "removeDuplicateSpansAll" -> (() => Dedup.removeDuplicateSpansAll(docs, "doc_id", "text")),
+      "removeDuplicateSpansWords" -> (() => Dedup.removeDuplicateSpansWords(docs, "doc_id", "text")),
+      "spanDuplicationStats" -> (() => Dedup.spanDuplicationStats(docs, "doc_id", "text")),
+      "winnowPairs" -> (() => Dedup.winnowPairs(docs, "doc_id", "text", 5L, maxDocFrequency = 100L)),
+      "winnowSpans" -> (() => Dedup.winnowSpans(docs, "doc_id", "text", maxDocFrequency = 100L)),
+      "contaminatedSpans" -> (() =>
+        Decontaminate.contaminatedSpans(corpus, "doc_id", "text", bench, "text")),
+      "contaminatedSpansBloom" -> (() =>
+        Decontaminate.contaminatedSpansBloom(corpus, "doc_id", "text", bench, "text")),
+      "removeContaminatedSpans" -> (() =>
+        Decontaminate.removeContaminatedSpans(corpus, "doc_id", "text", bench, "text")),
+      "benchCoverage" -> (() => Decontaminate.benchCoverage(corpus, "text", bench, "text")),
+      "leakReport" -> (() => Decontaminate.leakReport(corpus, "text", bench, "doc_id", "text")),
+      "paragraphDedup" -> (() => Dedup.paragraphDedup(docs, "doc_id", "text")),
+      "lineDedupWithinDoc" -> (() => Dedup.lineDedupWithinDoc(docs, "doc_id", "text")),
+      "lineRuleClean" -> (() => Dedup.lineRuleClean(docs, "doc_id", "text")))
+    // pinned, so a rewrite that adds an eager job shows here. Only the
+    // checkpoints (winnow's fingerprints, benchCoverage's bench grams) and
+    // the Bloom filter's count and build run jobs; the Bloom face persists
+    // its bench grams, so start from an empty cache.
+    val expected = faces.map(_._1 -> 0).toMap ++ Map(
+      "winnowPairs" -> 1, "winnowSpans" -> 1, "benchCoverage" -> 2, "contaminatedSpansBloom" -> 6)
+    spark.sharedState.cacheManager.clearCache()
+    val counts = withJobCounter { jobs =>
+      faces.map { case (name, build) => build(); name -> jobs() }.toMap
+    }
+    try assert(counts == expected, counts.toSeq.sortBy(_._1).mkString(", "))
+    finally spark.sharedState.cacheManager.clearCache()
+  }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.scalacheck.{Gen, Properties, Test => SCTest}
 import org.scalacheck.Prop.forAllNoShrink
 
-import graft.operators.Dedup
+import graft.operators.{Decontaminate, Dedup}
 
 /**
  * ScalaCheck property suite for the exact-substring span-dedup family on
@@ -14,6 +14,14 @@ import graft.operators.Dedup
  *   - maximality: the gram just left/right of a span does NOT qualify
  *   - conservation: removed_chars = len(text) − len(clean_text), and docs
  *     without spans pass through byte-identical
+ *   - exactness against a brute-force span reference, at 1 and 7 shuffle
+ *     partitions: the occurrence rule of `duplicateSpansAll` (within-doc
+ *     repeats count), the distinct-doc rule above 2, bench membership for
+ *     `contaminatedSpans` and its Bloom form
+ *   - agreement between faces: `spanDuplicationStats` and
+ *     `removeDuplicateSpans`, `winnowPairs` and `winnowSpans`
+ *   - a bench with no k-gram: no contaminated span on either face, and
+ *     `benchCoverage` reports 0
  */
 object SpanProps extends Properties("SpanDedup") with LocalSpark {
 
@@ -49,6 +57,112 @@ object SpanProps extends Properties("SpanDedup") with LocalSpark {
         val rightOk = e0 - K + 1 >= docs(id).length - K + 1 ||
           !dupGram(docs, id, e0 - K + 2)
         inside && leftOk && rightOk
+      }
+    }
+
+  private def atEachPartitioning(body: => Boolean): Boolean =
+    Seq(1, 7).forall(p => withConf("spark.sql.shuffle.partitions" -> p.toString)(body))
+
+  private def gramAt(doc: String, p: Int): String = doc.substring(p - 1, p - 1 + K)
+
+  /** Brute span reference: per doc, maximal runs of consecutive 1-based gram
+    * positions satisfying `marked`, as (id, span_start, span_end, n_grams). */
+  private def refSpans(docs: List[String])(marked: (Int, Int) => Boolean): Set[(Long, Long, Long, Long)] =
+    docs.indices.flatMap { id =>
+      val ps = (1 to docs(id).length - K + 1).filter(p => marked(id, p))
+      ps.foldLeft(List.empty[(Int, Int)]) {
+        case ((s0, e0) :: rest, p) if p == e0 + 1 => (s0, p) :: rest
+        case (acc, p) => (p, p) :: acc
+      }.map { case (s0, e0) => (id.toLong, s0.toLong, (e0 + K - 1).toLong, (e0 - s0 + 1).toLong) }
+    }.toSet
+
+  private def occurrences(docs: List[String], g: String): Int =
+    docs.map(d => (0 to d.length - K).count(q => d.regionMatches(q, g, 0, K))).sum
+
+  private def spanSet(spans: DataFrame): Set[(Long, Long, Long, Long)] =
+    spans.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+
+  property("duplicateSpansAll equals the brute occurrence rule (within-doc repeats count)") =
+    forAllNoShrink(docsGen) { docs =>
+      val ref = refSpans(docs)((id, p) => occurrences(docs, gramAt(docs(id), p)) >= 2)
+      atEachPartitioning(spanSet(Dedup.duplicateSpansAll(df(docs), "doc_id", "text", k = K)) == ref)
+    }
+
+  property("duplicateSpans at minDocs = 3 equals the brute distinct-doc rule") =
+    forAllNoShrink(docsGen) { docs =>
+      val ref = refSpans(docs) { (id, p) =>
+        val g = gramAt(docs(id), p)
+        docs.count(_.contains(g)) >= 3
+      }
+      atEachPartitioning(
+        spanSet(Dedup.duplicateSpans(df(docs), "doc_id", "text", k = K, minDocs = 3)) == ref)
+    }
+
+  property("spanDuplicationStats.dup_chars equals removeDuplicateSpans.removed_chars per doc") =
+    forAllNoShrink(docsGen) { docs =>
+      atEachPartitioning {
+        val stats = Dedup.spanDuplicationStats(df(docs), "doc_id", "text", k = K)
+          .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+        val removed = Dedup.removeDuplicateSpans(df(docs), "doc_id", "text", k = K)
+          .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+        stats.keySet == removed.keySet && stats.forall { case (id, (total, dup)) =>
+          total == docs(id.toInt).length && dup == removed(id)
+        }
+      }
+    }
+
+  property("contaminatedSpansBloom equals contaminatedSpans equals the brute bench rule; the cut conserves length") =
+    forAllNoShrink(docsGen, docsGen) { (corpus, bench) =>
+      val ref = refSpans(corpus)((id, p) => bench.exists(_.contains(gramAt(corpus(id), p))))
+      atEachPartitioning {
+        val exact = spanSet(Decontaminate.contaminatedSpans(df(corpus), "doc_id", "text",
+          df(bench), "text", k = K))
+        val bloom = spanSet(Decontaminate.contaminatedSpansBloom(df(corpus), "doc_id", "text",
+          df(bench), "text", k = K))
+        val cut = Decontaminate.removeContaminatedSpans(df(corpus), "doc_id", "text",
+            df(bench), "text", k = K)
+          .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
+        exact == ref && bloom == ref && cut.size == corpus.length &&
+          cut.forall { case (id, (clean, removed)) =>
+            removed == corpus(id.toInt).length - clean.length
+          }
+      }
+    }
+
+  // a bench in which no doc has K code points: it has no gram at all
+  private val gramlessBenchGen: Gen[List[String]] = Gen.choose(1, 3).flatMap(n =>
+    Gen.listOfN(n, Gen.choose(0, K - 1)
+      .flatMap(m => Gen.listOfN(m, Gen.oneOf('a', 'b', ' '))).map(_.mkString)))
+
+  property("a bench without a k-gram marks no span, exact or Bloom-screened") =
+    forAllNoShrink(docsGen, gramlessBenchGen) { (corpus, bench) =>
+      atEachPartitioning {
+        Decontaminate.contaminatedSpans(df(corpus), "doc_id", "text", df(bench), "text", k = K)
+          .isEmpty &&
+          Decontaminate.contaminatedSpansBloom(df(corpus), "doc_id", "text", df(bench), "text",
+            k = K).isEmpty
+      }
+    }
+
+  property("benchCoverage over a bench without a k-gram reports coverage 0") =
+    forAllNoShrink(docsGen, gramlessBenchGen) { (corpus, bench) =>
+      atEachPartitioning {
+        val r = Decontaminate.benchCoverage(df(corpus), "text", df(bench), "text", K).collect()
+        r.length == 1 && r(0).getLong(0) == 0L && r(0).getLong(1) == 0L && r(0).getLong(2) == 0L
+      }
+    }
+
+  property("winnowPairs(minShared = 1) counts winnowSpans per pair, capped and uncapped") =
+    forAllNoShrink(docsGen, Gen.oneOf(0L, 2L, 3L)) { (docs, cap) =>
+      atEachPartitioning {
+        val pairs = Dedup.winnowPairs(df(docs), "doc_id", "text", minShared = 1L, k = 5, w = 3,
+            maxDocFrequency = cap)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+        val spans = Dedup.winnowSpans(df(docs), "doc_id", "text", k = 5, w = 3,
+            maxDocFrequency = cap)
+          .collect().map(r => (r.getLong(0), r.getLong(1)))
+        val counted = spans.groupBy(identity).map { case ((a, b), rs) => (a, b, rs.length.toLong) }.toSet
+        pairs == counted && pairs.forall { case (a, b, _) => a < b }
       }
     }
 
